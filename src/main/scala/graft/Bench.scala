@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Bench harness: one JSON line `{"metric":"total","value":N,...}` on stdout
@@ -24,28 +23,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Sort-based shuffle writer for EVERY shuffle, not just R > 200:
-      // with R = cpus = 32 reduce partitions, every no-map-side-agg
-      // exchange (joins, windows, repartitions, distincts) took the
-      // bypass-merge writer, which opens R files + R compression streams
-      // PER MAP TASK — M×R file opens per exchange of KB-scale data, the
-      // dominant fixed cost this bench measures (round-17 scaling block:
-      // 8 cores beat 32 by 1.8× at sf0.1). The sort writer opens ONE
-      // spill file per map task regardless of R. Scale-neutral by
-      // construction: at production partition counts (R > 200) the bypass
-      // writer is already disqualified and this setting changes nothing —
-      // it only removes the small-R penalty the default threshold (200)
-      // re-introduces on exactly the sub-MB shuffles AQE coalescing
-      // cannot help (the cost is map-side). Measured (round 18, 20-query
-      // subset, ABA): 30.5 / 22.5 / 29.6 s — a 26% subset win.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores.toString
+    val spark = GraftSession.local("graft-bench")
 
     // Per-query WATCHDOG: one bench run hung forever in
     // AdaptiveSparkPlanExec.withFinalPlanUpdate (main parked on the stage
@@ -179,7 +158,7 @@ object Bench {
     // a real plan regression moves one query's min while the rest hold.
     // Round-9's driver run flagged d9/d10 floors (min 0.72→4.46, 2.18→
     // 10.84) on the regenerated corpus. Round-10 stage-level re-measurement
-    // (graft.Prof, quiesced machine, fresh plan per trial so shuffle-output
+    // (quiesced machine, fresh plan per trial so shuffle-output
     // reuse can't flatter): d10 floor 2.05s — UNCHANGED vs r8's committed
     // 2.18 — and d9 floor 1.10s (1.5×, the corpus's chunk population grew:
     // 19218 chunk rows / 1762 dup-mass at sf0.1). Connected components

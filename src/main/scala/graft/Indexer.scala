@@ -198,16 +198,14 @@ object Indexer {
     Wiring(query, metrics, feed, server, store)
   }
 
+  /** The session `main` builds: `cfg.master`, shuffle partitions = cores. */
+  def sessionSettings(cfg: Config): Map[String, String] =
+    GraftSession.settings("graft-indexer", cfg.master, Runtime.getRuntime.availableProcessors)
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Indexer <config.yaml>")
     val cfg = parseConfig(Files.readString(Paths.get(args(0))))
-    val spark = SparkSession.builder()
-      .master(cfg.master)
-      .appName("graft-indexer")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sessionSettings(cfg))
     val wiring = start(spark, cfg)
     sys.addShutdownHook(wiring.close()) // the reference's SIGTERM path
     wiring.query.awaitTermination()

@@ -45,13 +45,7 @@ object IngestBench {
     * fragment in bench_out.json.
     */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-ingest-bench")
     println("{" + run(spark) + "}")
     spark.stop()
   }
@@ -127,31 +121,6 @@ object IngestBench {
     })
   }
 
-  /** Run both cases `trials` times; returns the JSON fragment for the
-    * bench file artifact. The histogram reported is head-follow's —
-    * per-block insert latencies, the reference's metric shape.
-    */
-  /** Spark-job counter for attribution: scheduling overhead, not data
-    * volume, is what bounds the per-block bracket (dozens of sub-second
-    * jobs per block), so the floor is only explainable WITH the job count.
-    */
-  private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-  }
-
-  private def countingJobs(spark: SparkSession)(f: => Unit): Long = {
-    val c = new JobCounter
-    spark.sparkContext.addSparkListener(c)
-    // the listener bus is async; a beat before detaching lets the tail of
-    // the event queue drain (counts are attribution telemetry — a ±1 race
-    // would not change what they attribute)
-    try { f; Thread.sleep(500) }
-    finally spark.sparkContext.removeSparkListener(c)
-    c.jobs.get
-  }
-
   /** Backfill→head-follow HANDOFF — the deployment-shaped scenario the two
     * isolated modes above don't cover: a real indexer starts months behind
     * tip (the reference's `syncTo` 50-block stepping,
@@ -199,6 +168,10 @@ object IngestBench {
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
 
+  /** Run both cases `trials` times; returns the JSON fragment for the
+    * bench file artifact. The histogram reported is head-follow's —
+    * per-block insert latencies, the reference's metric shape.
+    */
   def run(spark: SparkSession,
           spanBlocks: Long = sys.env.get("SPARK_GRAFT_INGEST_SPAN").map(_.toLong).getOrElse(240L),
           perBlockBlocks: Long = sys.env.get("SPARK_GRAFT_INGEST_PERBLOCK").map(_.toLong).getOrElse(6L),
@@ -208,20 +181,18 @@ object IngestBench {
     catchUp(spark, 4L, client, new IngestMetrics)
     headFollow(spark, 2L, client, new IngestMetrics)
 
-    val spanTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val spanJobs = countingJobs(spark) {
-      (1 to trials).foreach(_ =>
-        spanTimes += catchUp(spark, spanBlocks, client, new IngestMetrics))
-    }
+    // job counts attribute the floor: scheduling overhead, not data
+    // volume, bounds the per-block bracket (dozens of sub-second jobs)
+    val (spanTimes, spanCounts) = Profile.measure(spark)(_ =>
+      (1 to trials).map(_ => catchUp(spark, spanBlocks, client, new IngestMetrics)))
+    val spanJobs = spanCounts.jobs.get
     val histogram = new IngestMetrics // per-block latencies accumulate across trials
-    val blockTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val blockJobs = countingJobs(spark) {
-      (1 to trials).foreach(_ =>
-        blockTimes += headFollow(spark, perBlockBlocks, client, histogram))
-    }
+    val (blockTimes, blockCounts) = Profile.measure(spark)(_ =>
+      (1 to trials).map(_ => headFollow(spark, perBlockBlocks, client, histogram)))
+    val blockJobs = blockCounts.jobs.get
 
-    val spanRate  = spanBlocks / median(spanTimes.toSeq)
-    val blockRate = perBlockBlocks / median(blockTimes.toSeq)
+    val spanRate  = spanBlocks / median(spanTimes)
+    val blockRate = perBlockBlocks / median(blockTimes)
     val jobsPerBlock = blockJobs.toDouble / (trials * perBlockBlocks)
     val h = histogram.insertBlock
     def f(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)

@@ -537,16 +537,14 @@ object PipelineRunner {
     Wiring(query, metrics, server, store, sessionQuery, ivfQuery)
   }
 
+  /** The session `main` builds: `cfg.master`, shuffle partitions = cores. */
+  def sessionSettings(cfg: Config): Map[String, String] =
+    GraftSession.settings("graft-pipeline", cfg.master, Runtime.getRuntime.availableProcessors)
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.PipelineRunner <config.yaml>")
     val cfg = parseConfig(Files.readString(Paths.get(args(0))))
-    val spark = SparkSession.builder()
-      .master(cfg.master)
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors.toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sessionSettings(cfg))
     if (cfg.faces == Seq("release")) {
       // one-shot batch job: run the composed DAG and exit
       val n = runRelease(spark, cfg)

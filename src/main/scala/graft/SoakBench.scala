@@ -27,21 +27,9 @@ import graft.chain.TableStore
 object SoakBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-soak")
     println("{" + run(spark) + "}")
     spark.stop()
-  }
-
-  private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet(): Unit
   }
 
   /** All data files under the table dir (any nesting), hidden components
@@ -101,11 +89,9 @@ object SoakBench {
     val samplePoints = math.max(1, batches / 10)
     val samples = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Map[String, (Long, Long)], Double, Double)]
-    val counter = new JobCounter
-    spark.sparkContext.addSparkListener(counter)
-    var windowJobs0 = 0L
-    var windowT0 = System.nanoTime()
-    try {
+    Profile.measure(spark) { counter =>
+      var windowJobs0 = 0L
+      var windowT0 = System.nanoTime()
       (0 until batches).foreach { b =>
         PipelineRunner.processBatch(store, cfg)(batchDf(spark, b.toLong, docsPer), b.toLong)
         if ((b + 1) % samplePoints == 0) {
@@ -123,7 +109,7 @@ object SoakBench {
             f"sec/batch $secPerBatch%.2f  files ${stats.map { case (t, v) => s"$t=${v._1}" }.mkString(" ")}")
         }
       }
-    } finally spark.sparkContext.removeSparkListener(counter)
+    }
     def arr(f: ((Int, Map[String, (Long, Long)], Double, Double)) => String) =
       samples.map(f).mkString("[", ",", "]")
     def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)

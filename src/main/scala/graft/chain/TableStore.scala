@@ -471,26 +471,36 @@ final case class TableStore(spark: SparkSession, root: String,
   // empty DataFrame, or a retraction that emptied it — then still reads
   // as a TYPED empty DataFrame instead of crashing schema inference or
   // forcing every caller to carry a fallback StructType.
+  // The file is rewritten only when the schema changes: a reader beside
+  // the writer parses it on every open, and an in-place rewrite of the
+  // same bytes would hand that reader a truncated file for nothing.
 
-  private def schemaPath(table: String): Path = new Path(dir(table), ".schema.json")
+  private val SchemaFile = ".schema.json"
+
+  private def schemaPath(table: String): Path = new Path(dir(table), SchemaFile)
 
   private def rememberSchema(table: String, schema: StructType): Unit = {
-    fs.mkdirs(dir(table))
-    val out = fs.create(schemaPath(table), true)
-    try out.write(schema.json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val json = schema.json
+    if (!rememberedJson(table).contains(json)) {
+      fs.mkdirs(dir(table))
+      val out = fs.create(schemaPath(table), true)
+      try out.write(json.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+    }
   }
 
-  private def rememberedSchema(table: String): Option[StructType] = {
+  private def rememberedJson(table: String): Option[String] = {
     val p = schemaPath(table)
     if (fs.exists(p)) {
       val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
       val in  = fs.open(p)
       try in.readFully(buf) finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(
-        new String(buf, StandardCharsets.UTF_8)).asInstanceOf[StructType])
+      Some(new String(buf, StandardCharsets.UTF_8))
     } else None
   }
+
+  private def rememberedSchema(table: String): Option[StructType] =
+    rememberedJson(table).map(org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
 
   private def emptyOf(schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -1040,11 +1050,16 @@ final case class TableStore(spark: SparkSession, root: String,
     * a crash between the two renames converges: the table reads as absent
     * (tmp and `_old` are hidden), and the next replace/swap of the table
     * re-stages from scratch, exactly the recovery contract the ingest
-    * ledger protocol is built on.
+    * ledger protocol is built on. A whole-table swap carries the live
+    * schema sidecar into the staged dir first, so the sidecar is moved,
+    * not rewritten, when the schema is unchanged.
     */
   private def promote(target: Path, tmp: Path): Unit = {
     val old = sibling(target, "_old")
     deleteRecursive(old)
+    val sidecar = new Path(target, SchemaFile)
+    if (fs.exists(sidecar)) require(fs.rename(sidecar, new Path(tmp, SchemaFile)),
+      s"rename $sidecar into $tmp failed")
     if (fs.exists(target)) require(fs.rename(target, old),
       s"rename $target -> $old failed")
     require(fs.rename(tmp, target), s"rename $tmp -> $target failed")

@@ -124,6 +124,36 @@ class TableStoreSpec extends SparkSpec {
     assert(!Files.exists(root.resolve(".t_tmp")), "stale staging must be cleared")
   }
 
+  test("the schema sidecar is rewritten only when the schema changes") {
+    Seq(false, true).foreach { manifest =>
+      val store = TableStore(spark, Files.createTempDirectory("graft-ts-schema").toString,
+        bucketSize = 10L, manifestCommit = manifest)
+      def sidecar(t: String) = Paths.get(store.root, t, ".schema.json")
+      def stamp(t: String) = (Files.readString(sidecar(t)), Files.getLastModifiedTime(sidecar(t)))
+      def unchanged(t: String)(write: => Unit): Unit = {
+        val before = stamp(t)
+        Thread.sleep(20) // past the FS timestamp granularity: a rewrite must show
+        write
+        assert(stamp(t) == before, s"manifest=$manifest: $t sidecar rewritten")
+      }
+      store.append("a", Seq(1L).toDF("n"))
+      unchanged("a")(store.append("a", Seq(2L).toDF("n")))
+      store.appendBucketed("b", Seq(1L).toDF("n"), "n")
+      unchanged("b")(store.appendBucketed("b", Seq(12L).toDF("n"), "n"))
+      store.replace("r", Seq(1L).toDF("n"))
+      unchanged("r")(store.replace("r", Seq(2L).toDF("n")))
+      unchanged("r")(store.replaceAll(Seq("r" -> Seq(3L).toDF("n"))))
+      assert(rows(store, "r") == Seq(3L))
+      // a schema change rewrites it; a dropped table gets a fresh one
+      store.replace("r", Seq((4L, "x")).toDF("n", "v"))
+      assert(store.read("r", null).schema.fieldNames.toSeq == Seq("n", "v"))
+      store.drop("a")
+      assert(!Files.exists(sidecar("a")))
+      store.append("a", Seq(5L).toDF("n"))
+      assert(Files.exists(sidecar("a")) && rows(store, "a") == Seq(5L))
+    }
+  }
+
   test("the store runs against a URI-scheme root (file://) through the Hadoop FS API") {
     // every path op goes through org.apache.hadoop.fs.FileSystem resolved
     // from the root's scheme, so a cluster deployment points dataDir at
