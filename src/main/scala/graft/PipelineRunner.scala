@@ -52,7 +52,6 @@ import graft.streaming._
   *                                       # chunk/LSH state prunes to the
   *                                       # last N batches (absent = exact,
   *                                       # unbounded — see the faces' docs)
-  * manifestCommit: false                 # true on object stores
   * eventsDir: /var/lib/graft/events      # sessions' event drop dir
   * eventsSchema: "user_id STRING, ts TIMESTAMP"   # optional DDL; else
   *                                       # inferred from files in eventsDir
@@ -130,7 +129,6 @@ object PipelineRunner {
       quantileIdCol: String = "doc_id",
       compactFiles: Int = 64,
       dedupRetentionBatches: Option[Long] = None,
-      manifestCommit: Boolean = false,
       eventsDir: Option[String] = None,
       eventsSchema: Option[String] = None,
       sessionGap: String = "30 minutes",
@@ -172,7 +170,7 @@ object PipelineRunner {
       "metricsPort", "master", "triggerSeconds", "chunkTokens", "shingleSize",
       "numHashes", "bands", "simThreshold", "hllM", "hllGroupCol",
       "hllValueCol", "quantileK", "quantileGroupCol", "quantileValueCol",
-      "quantileIdCol", "compactFiles", "dedupRetentionBatches", "manifestCommit",
+      "quantileIdCol", "compactFiles", "dedupRetentionBatches",
       "eventsDir", "eventsSchema", "sessionGap", "sessionWatermark",
       "sessionUserCol", "sessionTsCol", "embeddingsDir", "embeddingsSchema",
       "centroidsPath", "ivfIdCol", "ivfVecCol", "retrainThreshold",
@@ -231,7 +229,6 @@ object PipelineRunner {
       compactFiles     = opt("compactFiles", _.toInt, base.compactFiles),
       dedupRetentionBatches = m.get("dedupRetentionBatches")
         .map(v => String.valueOf(v).toLong),
-      manifestCommit   = opt("manifestCommit", _.toBoolean, base.manifestCommit),
       eventsDir        = m.get("eventsDir").map(String.valueOf),
       eventsSchema     = m.get("eventsSchema").map(String.valueOf),
       sessionGap       = opt("sessionGap", identity, base.sessionGap),
@@ -272,7 +269,7 @@ object PipelineRunner {
     * shard partitioning is the write shape downstream consumers prune on.
     */
   def runRelease(spark: SparkSession, cfg: Config): Long = {
-    val store = TableStore(spark, cfg.dataDir, manifestCommit = cfg.manifestCommit)
+    val store = TableStore(spark, cfg.dataDir)
     val docs = spark.read.parquet(cfg.inputDir)
     val out = graft.operators.Release.releasePipeline(docs,
       cfg.releaseIdCol, cfg.releaseTextCol, cfg.releaseSourceCol,
@@ -419,7 +416,7 @@ object PipelineRunner {
   def start(spark: SparkSession, cfg: Config): Wiring = {
     require(!cfg.faces.contains("release"),
       "the 'release' face is a one-shot batch job — use runRelease, not start")
-    val store = TableStore(spark, cfg.dataDir, manifestCommit = cfg.manifestCommit)
+    val store = TableStore(spark, cfg.dataDir)
     // fail-fast validation BEFORE any query or server starts — a type
     // mismatch discovered inside the sessions branch would leak the
     // already-running document query. An EXISTING sessions table written

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * The caller divides by the (constant) signature width and rounds, both
   * already-codegen'd built-ins, so the estimator
   * `round(sig_eq_count(a,b) / numHashes, 6)` is bit-identical to the HOF
-  * form. SigEqCountSpec pins these fixtures; KernelBench carries the A/B.
+  * form. SigEqCountSpec pins these fixtures.
   */
 case class SigEqCountExpr(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -168,7 +168,7 @@ object TextOps {
     * hot paths: passing the raw `tokens(text)` expression here would
     * re-evaluate the regexp split per array element (quadratic per row).
     * (A native doGenCode kernel for this chain was built and MEASURED in
-    * round 17 — graft.KernelBench: 0.036 s declarative vs 0.049 s native
+    * round 17: 0.036 s declarative vs 0.049 s native
     * per corpus pass at sf0.1 — the interpreted-HOF overhead is smaller
     * than the byte-copying a JVM-side md5 loop pays, so the declarative
     * form stays.)

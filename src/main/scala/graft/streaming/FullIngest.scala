@@ -113,9 +113,10 @@ object FullIngest {
       mirror: Option[JdbcMirror] = None): Unit = {
     val t0 = System.nanoTime()
     // Head-follow steady state delivers ONE block per micro-batch, and the
-    // per-block bracket is job-launch-bound, not data-bound: JobDump
+    // per-block bracket is job-launch-bound, not data-bound: per-job
     // attribution showed 36 of 64 jobs on a quiet single-block batch were
-    // AQE stage-materialization submissions — runtime re-planning buys
+    // AQE stage-materialization submissions (perfbench's traced
+    // head-follow run re-measures this) — runtime re-planning buys
     // nothing on a 2-row batch and pays a scheduling round-trip per
     // shuffle stage. Scope AQE off for single-block batches only (the
     // limit-2 probe costs one bounded job); catch-up spans keep AQE for
@@ -147,7 +148,7 @@ object FullIngest {
       // the static setting must say so)
       spark.conf.set(shufKey, "1")
       // every BroadcastExchange materializes through a SEPARATE Spark job
-      // (the CompletableFuture submissions JobDump attributes): on a
+      // (the CompletableFuture submissions a traced run attributes): on a
       // single-digit-row batch a 1-partition shuffle join is stages inside
       // the SAME job, so planner-chosen broadcasts only add job launches.
       // Explicit broadcast() hints in operator code are unaffected.

@@ -5,12 +5,12 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The object-store (rename-free) commit mode: data lands in immutable
+/** The store's rename-free commit protocol: data lands in immutable
   * hidden dirs, an immutable per-version manifest lists the live ones,
   * and the commit point is one overwrite of the tiny `.gen` marker. These
-  * tests pin the crash windows that mode exists for — no directory is
-  * ever renamed, so every interrupted mutation must leave the previous
-  * generation fully readable and converge on the next commit.
+  * tests pin its crash windows — no directory is ever renamed, so every
+  * interrupted mutation must leave the previous generation fully readable
+  * and converge on the next commit.
   */
 class ManifestStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -21,7 +21,7 @@ class ManifestStoreSpec extends SparkSpec {
   // dedicated grace test
   private def fresh(bucketSize: Long = 10L, retain: Int = 0): TableStore =
     TableStore(spark, Files.createTempDirectory("graft-man").toString,
-      bucketSize, manifestCommit = true, manifestRetain = retain)
+      bucketSize, manifestRetain = retain)
 
   /** Version token of the marker — since the writer fence the marker
     * carries "version epoch writerId", and readers take the first token.
@@ -66,7 +66,7 @@ class ManifestStoreSpec extends SparkSpec {
     // a reader (fresh store instance = fresh caches, as after a restart)
     // still sees the OLD generation — the staged dir is invisible
     val reader = TableStore(spark, store.root, store.bucketSize,
-      manifestCommit = true, manifestRetain = 0)
+      manifestRetain = 0)
     assert(rows(reader, "t") == Seq(1L, 2L), "uncommitted stage must stay invisible")
     // the recovery replay re-stages and promotes; the orphan dir is GC'd
     reader.replace("t", Seq(7L, 8L).toDF("n"))
@@ -89,7 +89,7 @@ class ManifestStoreSpec extends SparkSpec {
     Files.deleteIfExists(Paths.get(store.root, "t", "..gen.crc"))
     // version 1's manifest was GC'd at commit 2; readers must NOT
     // resurrect generation 1 — they probe .manifest.2 and roll forward
-    val reader = TableStore(spark, store.root, store.bucketSize, manifestCommit = true)
+    val reader = TableStore(spark, store.root, store.bucketSize)
     assert(rows(reader, "t") == Seq(2L),
       "reader must roll forward over a crashed marker write")
     // and the next commit heals the marker
@@ -111,18 +111,18 @@ class ManifestStoreSpec extends SparkSpec {
     // torn NEXT manifest (crash mid-write, marker untouched): truncated
     // entry line, no terminator
     Files.writeString(tdir.resolve(".manifest.3"), "\t.d-absent-dir\n\u0000trunc")
-    val r1 = TableStore(spark, store.root, store.bucketSize, manifestCommit = true)
+    val r1 = TableStore(spark, store.root, store.bucketSize)
     assert(rows(r1, "t") == Seq(2L), "torn successor manifest must not roll forward")
     // torn manifest truncated to EMPTY is equally invalid
     Files.writeString(tdir.resolve(".manifest.3"), "")
-    val r2 = TableStore(spark, store.root, store.bucketSize, manifestCommit = true)
+    val r2 = TableStore(spark, store.root, store.bucketSize)
     assert(rows(r2, "t") == Seq(2L), "empty torn manifest must not read as absent")
     Files.delete(tdir.resolve(".manifest.3"))
     // torn MARKER (crash mid-overwrite): unparsable content falls back to
     // the highest valid manifest on disk
     Files.writeString(tdir.resolve(".gen"), "")
     Files.deleteIfExists(tdir.resolve("..gen.crc"))
-    val r3 = TableStore(spark, store.root, store.bucketSize, manifestCommit = true)
+    val r3 = TableStore(spark, store.root, store.bucketSize)
     assert(rows(r3, "t") == Seq(2L), "torn marker must recover from the manifest listing")
     // and the next commit heals everything
     r3.append("t", Seq(3L).toDF("n"))
@@ -132,17 +132,23 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("category partitions rebuild their typed column and compact by manifest swap") {
     val store = fresh()
+    // 48 keys × 5 appends = 240 physical dirs: past Spark's 32-path
+    // threshold, so the one relation lists them in a parallel job, whose
+    // returned paths the partition paths must match exactly
+    val expected = for (i <- 1 to 5; s <- 0 until 48) yield (i * 100L + s, s)
     (1 to 5).foreach { i =>
-      store.appendPartitioned("p", Seq((i.toLong, i % 2)).toDF("n", "shard"), "shard")
+      store.appendPartitioned("p", expected.filter(_._1 / 100 == i).toDF("n", "shard"), "shard")
     }
+    def got(): Set[(Long, Int)] = store.readOr("p", null).select("n", "shard").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
     val df = store.readOr("p", null)
+    assert(df.columns.toSeq == Seq("n", "shard"), "columns come back in sidecar order")
     assert(df.schema("shard").dataType == org.apache.spark.sql.types.IntegerType,
       "partition column must come back with its sidecar type")
-    assert(df.select("n", "shard").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet ==
-      (1 to 5).map(i => (i.toLong, i % 2)).toSet)
-    assert(store.compactPartitions("p", "shard", maxFiles = 1) > 0)
-    assert(store.readOr("p", null).count() == 5L)
+    assert(got() == expected.toSet)
+    assert(store.compactPartitions("p", "shard", maxFiles = 1) == 48)
+    assert(store.fileCounts("p").values.toSet == Set(1L))
+    assert(got() == expected.toSet)
   }
 
   test("empty appends stay absent but typed; replace-from-self reads old files") {
@@ -198,7 +204,7 @@ class ManifestStoreSpec extends SparkSpec {
     val a = fresh()
     a.replace("t", Seq(1L, 2L).toDF("n")) // a claims epoch 1
     val b = TableStore(spark, a.root, a.bucketSize,
-      manifestCommit = true, manifestRetain = 0)
+      manifestRetain = 0)
     b.replace("t", Seq(9L).toDF("n")) // b observes epoch 1, claims 2
     assert(rows(b, "t") == Seq(9L))
     // a's next commit observes b's newer epoch and must refuse — BEFORE
@@ -208,7 +214,7 @@ class ManifestStoreSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("fenced"))
     // the table still serves b's generation to a fresh reader
-    val reader = TableStore(spark, a.root, a.bucketSize, manifestCommit = true)
+    val reader = TableStore(spark, a.root, a.bucketSize)
     assert(rows(reader, "t") == Seq(9L), "the winner's generation must survive")
     // b keeps committing unharmed
     b.append("t", Seq(10L).toDF("n"))
@@ -216,7 +222,7 @@ class ManifestStoreSpec extends SparkSpec {
     // and a restart of the dead writer (a NEW instance) claims epoch 3
     // and supersedes back — latest writer wins, always loudly
     val a2 = TableStore(spark, a.root, a.bucketSize,
-      manifestCommit = true, manifestRetain = 0)
+      manifestRetain = 0)
     a2.replace("t", Seq(42L).toDF("n"))
     assert(rows(a2, "t") == Seq(42L))
     intercept[TableStore.WriterSupersededException] {

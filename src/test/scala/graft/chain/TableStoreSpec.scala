@@ -5,15 +5,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Bucketed-layout invariants of the table store: range deletes touch only
-  * overlapping buckets, edge buckets rewrite, covered buckets drop as
-  * directory deletes.
+  * overlapping buckets, edge buckets rewrite, covered buckets drop out of
+  * the manifest.
   */
 class TableStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  // honors GRAFT_STORE_MANIFEST=1, so the whole suite re-runs against the
-  // object-store (manifest) commit path; layout assertions that are
-  // rename-mode-specific guard on store.manifestCommit
   private def fresh(bucketSize: Long = 10L): TableStore =
     TableStore(spark, Files.createTempDirectory("graft-ts").toString, bucketSize)
 
@@ -26,12 +23,8 @@ class TableStoreSpec extends SparkSpec {
     // [15, 74]: bucket 1 partial, buckets 2-6 fully covered, bucket 7 partial
     store.deleteRange("t", "n", 15L, 74L)
     assert(rows(store, "t") == ((0L to 14L) ++ (75L to 99L)))
-    // fully-covered bucket dirs are gone (no rewrite), edge buckets remain
-    assert(!Files.exists(Paths.get(store.root, "t", "bucket=3")))
-    if (!store.manifestCommit) {
-      assert(Files.exists(Paths.get(store.root, "t", "bucket=1")))
-      assert(Files.exists(Paths.get(store.root, "t", "bucket=7")))
-    }
+    // fully-covered buckets are gone (no rewrite), edge buckets remain
+    assert(store.fileCounts("t").keySet == Set(0, 1, 7, 8, 9).map(b => s"bucket=$b"))
   }
 
   test("deleteRange aligned exactly on bucket boundaries") {
@@ -39,8 +32,7 @@ class TableStoreSpec extends SparkSpec {
     store.appendBucketed("t", (0L until 40L).toDF("n"), "n")
     store.deleteRange("t", "n", 10L, 29L) // buckets 1-2 exactly
     assert(rows(store, "t") == ((0L to 9L) ++ (30L to 39L)))
-    assert(!Files.exists(Paths.get(store.root, "t", "bucket=1")))
-    assert(!Files.exists(Paths.get(store.root, "t", "bucket=2")))
+    assert(store.fileCounts("t").keySet == Set("bucket=0", "bucket=3"))
   }
 
   test("deleteRange beyond the data and on missing tables is a no-op") {
@@ -56,16 +48,10 @@ class TableStoreSpec extends SparkSpec {
     store.appendBucketed("t", (0L until 100L).toDF("n"), "n")
     val got = store.readRange("t", "n", 35L, 44L, null)
     assert(got.select("n").collect().map(_.getLong(0)).sorted.toSeq == (35L to 44L))
-    if (store.manifestCommit) {
-      // manifest mode prunes at PATH level: only the in-range bucket
-      // keys' physical dirs are ever listed
-      assert(got.inputFiles.nonEmpty &&
-        got.inputFiles.forall(f => f.contains("/bucket=3/") || f.contains("/bucket=4/")))
-    } else {
-      // the physical scan carries a partition filter on bucket
-      val plan = got.queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") || plan.contains("bucket"))
-    }
+    // pruned at PATH level: only the in-range bucket keys' physical dirs
+    // are ever listed
+    assert(got.inputFiles.nonEmpty &&
+      got.inputFiles.forall(f => f.contains("/bucket=3/") || f.contains("/bucket=4/")))
   }
 
   test("exists requires a data file: empty appends and hidden leftovers don't count") {
@@ -79,8 +65,9 @@ class TableStoreSpec extends SparkSpec {
     assert(empty != null && empty.columns.sameElements(Array("n")) && empty.count() == 0L)
     assert(store.read("e", null).schema.fieldNames.sameElements(Array("n")))
 
-    // hidden swap leftovers (.bucket=N_old) alone must not count either
-    val leftover = Paths.get(store.root, "l", ".bucket=0_old")
+    // hidden leftovers (a crashed stage's .d-* dir, _SUCCESS) alone must
+    // not count either, nor read as the legacy layout
+    val leftover = Paths.get(store.root, "l", ".d-crashed")
     Files.createDirectories(leftover)
     Files.writeString(leftover.resolve("part-0.parquet"), "junk")
     Files.writeString(Paths.get(store.root, "l", "_SUCCESS"), "")
@@ -100,58 +87,31 @@ class TableStoreSpec extends SparkSpec {
     assert(rows(store, "t") == ((0L to 9L) ++ (1010L to 1019L)))
   }
 
-  test("a crash between the promote renames converges on the next replace") {
-    // promote order: park target as .t_old, rename .t_tmp into place,
-    // drop .t_old. A crash between the renames leaves: no target dir,
-    // a fully-staged .t_tmp, a parked .t_old. The table must read as
-    // ABSENT (both siblings are hidden), and the next replace must
-    // converge from scratch - staging starts with a tmp delete, and the
-    // old-parking starts with an old delete, so neither leftover wedges.
-    import spark.implicits._
-    val store = fresh()
-    assume(!store.manifestCommit,
-      "rename-promote crash windows don't exist in manifest mode (see ManifestStoreSpec)")
-    store.replace("t", Seq(1L).toDF("n"))
-    val root = Paths.get(store.root)
-    // simulate the crash state by hand: park target, leave tmp staged
-    Files.move(root.resolve("t"), root.resolve(".t_old"))
-    Files.createDirectories(root.resolve(".t_tmp"))
-    Files.writeString(root.resolve(".t_tmp").resolve("part-junk.parquet"), "stale")
-    assert(!store.exists("t"), "mid-promote state must read as absent")
-    store.replace("t", Seq(2L).toDF("n"))
-    assert(rows(store, "t") == Seq(2L))
-    assert(!Files.exists(root.resolve(".t_old")), "parked dir must be cleared")
-    assert(!Files.exists(root.resolve(".t_tmp")), "stale staging must be cleared")
-  }
-
   test("the schema sidecar is rewritten only when the schema changes") {
-    Seq(false, true).foreach { manifest =>
-      val store = TableStore(spark, Files.createTempDirectory("graft-ts-schema").toString,
-        bucketSize = 10L, manifestCommit = manifest)
-      def sidecar(t: String) = Paths.get(store.root, t, ".schema.json")
-      def stamp(t: String) = (Files.readString(sidecar(t)), Files.getLastModifiedTime(sidecar(t)))
-      def unchanged(t: String)(write: => Unit): Unit = {
-        val before = stamp(t)
-        Thread.sleep(20) // past the FS timestamp granularity: a rewrite must show
-        write
-        assert(stamp(t) == before, s"manifest=$manifest: $t sidecar rewritten")
-      }
-      store.append("a", Seq(1L).toDF("n"))
-      unchanged("a")(store.append("a", Seq(2L).toDF("n")))
-      store.appendBucketed("b", Seq(1L).toDF("n"), "n")
-      unchanged("b")(store.appendBucketed("b", Seq(12L).toDF("n"), "n"))
-      store.replace("r", Seq(1L).toDF("n"))
-      unchanged("r")(store.replace("r", Seq(2L).toDF("n")))
-      unchanged("r")(store.replaceAll(Seq("r" -> Seq(3L).toDF("n"))))
-      assert(rows(store, "r") == Seq(3L))
-      // a schema change rewrites it; a dropped table gets a fresh one
-      store.replace("r", Seq((4L, "x")).toDF("n", "v"))
-      assert(store.read("r", null).schema.fieldNames.toSeq == Seq("n", "v"))
-      store.drop("a")
-      assert(!Files.exists(sidecar("a")))
-      store.append("a", Seq(5L).toDF("n"))
-      assert(Files.exists(sidecar("a")) && rows(store, "a") == Seq(5L))
+    val store = fresh()
+    def sidecar(t: String) = Paths.get(store.root, t, ".schema.json")
+    def stamp(t: String) = (Files.readString(sidecar(t)), Files.getLastModifiedTime(sidecar(t)))
+    def unchanged(t: String)(write: => Unit): Unit = {
+      val before = stamp(t)
+      Thread.sleep(20) // past the FS timestamp granularity: a rewrite must show
+      write
+      assert(stamp(t) == before, s"$t sidecar rewritten")
     }
+    store.append("a", Seq(1L).toDF("n"))
+    unchanged("a")(store.append("a", Seq(2L).toDF("n")))
+    store.appendBucketed("b", Seq(1L).toDF("n"), "n")
+    unchanged("b")(store.appendBucketed("b", Seq(12L).toDF("n"), "n"))
+    store.replace("r", Seq(1L).toDF("n"))
+    unchanged("r")(store.replace("r", Seq(2L).toDF("n")))
+    unchanged("r")(store.replaceAll(Seq("r" -> Seq(3L).toDF("n"))))
+    assert(rows(store, "r") == Seq(3L))
+    // a schema change rewrites it; a dropped table gets a fresh one
+    store.replace("r", Seq((4L, "x")).toDF("n", "v"))
+    assert(store.read("r", null).schema.fieldNames.toSeq == Seq("n", "v"))
+    store.drop("a")
+    assert(!Files.exists(sidecar("a")))
+    store.append("a", Seq(5L).toDF("n"))
+    assert(Files.exists(sidecar("a")) && rows(store, "a") == Seq(5L))
   }
 
   test("the store runs against a URI-scheme root (file://) through the Hadoop FS API") {
@@ -163,7 +123,7 @@ class TableStoreSpec extends SparkSpec {
     store.appendBucketed("t", (0L until 40L).toDF("n"), "n")
     store.deleteRange("t", "n", 5L, 24L) // bucket 0/2 partial, bucket 1 covered
     assert(rows(store, "t") == ((0L to 4L) ++ (25L to 39L)))
-    // swap-based whole-table replace (tmp + _old rename promote)
+    // whole-table replace reading its own previous generation
     store.replace("s", Seq((1L, "a"), (2L, "b")).toDF("n", "v"))
     store.replace("s", store.readOr("s", null).filter(col("n") === 2L))
     assert(store.readOr("s", null).collect().map(_.getLong(0)).toSeq == Seq(2L))
@@ -177,5 +137,64 @@ class TableStoreSpec extends SparkSpec {
     }
     assert(store.compactPartitions("p", "shard", maxFiles = 1) > 0)
     assert(store.readOr("p", null).count() == 5L)
+  }
+
+  test("a table in the rename-era layout fails loudly instead of reading as absent") {
+    // stores written before the manifest protocol hold visible parquet
+    // files and no manifest; reading one as absent would make ingest
+    // restart from scratch beside the old rows
+    val store = fresh()
+    Seq(1L, 2L).toDF("n").write.parquet(Paths.get(store.root, "t").toString)
+    Seq(1L, 2L).toDF("n").withColumn("bucket", lit(0L))
+      .write.partitionBy("bucket").parquet(Paths.get(store.root, "b").toString)
+    Seq("t", "b").foreach { t =>
+      val ex = intercept[IllegalStateException](store.exists(t))
+      assert(ex.getMessage.contains(s"'$t'") && ex.getMessage.contains("rename"))
+    }
+  }
+
+  test("a reader beside the writer sees only committed generations") {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
+    val store = fresh()
+    // every (table, count) a generation can hold is registered BEFORE the
+    // mutation that commits it, so a read of any committed generation
+    // matches and a torn or mixed read does not
+    val committed = ConcurrentHashMap.newKeySet[(String, Long)]()
+    val stop    = new AtomicBoolean(false)
+    val failure = new AtomicReference[Throwable]()
+    val reads   = new AtomicInteger()
+    val reader = new Thread(() =>
+      try while (!stop.get) {
+        Seq("b", "s").foreach { t =>
+          if (store.exists(t)) {
+            val c = store.readOr(t, null).count()
+            if (!committed.contains((t, c)))
+              throw new AssertionError(s"read $c rows of '$t', no committed generation holds that")
+          }
+        }
+        reads.incrementAndGet()
+      } catch { case e: Throwable => failure.set(e) })
+    reader.start()
+    var n = 0L // rows of "b"
+    try (0 until 30).foreach { i =>
+      val lo = 10L * (i / 3 * 3)
+      i % 3 match {
+        case 0 => // five fresh rows in their own bucket
+          committed.add(("b", n + 5))
+          store.appendBucketed("b", (lo until lo + 5).toDF("n"), "n")
+          n += 5
+        case 1 => // retract three of them: an edge-bucket rewrite
+          committed.add(("b", n - 3))
+          store.deleteRange("b", "n", lo, lo + 2)
+          n -= 3
+        case _ =>
+          committed.add(("s", i.toLong))
+          store.replace("s", (0L until i.toLong).toDF("n"))
+      }
+    } finally { stop.set(true); reader.join() }
+    Option(failure.get).foreach(e => fail(s"reader failed beside the writer: $e", e))
+    assert(reads.get > 0)
+    assert(store.readOr("b", null).count() == n && rows(store, "s") == (0L until 29L))
   }
 }

@@ -21,9 +21,8 @@ object RestartProbe {
 class ChainIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshStore(manifest: Boolean = TableStore.ManifestDefault): TableStore =
-    TableStore(spark, Files.createTempDirectory("graft-ingest").toString,
-      bucketSize = 4L, manifestCommit = manifest)
+  private def freshStore(): TableStore =
+    TableStore(spark, Files.createTempDirectory("graft-ingest").toString, bucketSize = 4L)
 
   private val noTokens = Seq.empty[(Array[Byte], Long)].toDF("address", "block_number")
 
@@ -137,12 +136,10 @@ class ChainIngestSpec extends SparkSpec {
   }
 
   test("reorg + retraction + idempotent replay hold under the manifest commit mode") {
-    // the same T5/S12/T6 flow against the object-store commit path: every
-    // retraction is a manifest-entry drop or swap, every promote is one
-    // marker overwrite, and no rename happens anywhere (this test runs
-    // manifest mode unconditionally; GRAFT_STORE_MANIFEST=1 forces the
-    // whole suite onto it)
-    val store = freshStore(manifest = true)
+    // the T5/S12/T6 flow against the manifest commit protocol (the store's
+    // only one): every retraction is a manifest-entry drop or swap, every
+    // promote is one marker overwrite, and no rename happens anywhere
+    val store = freshStore()
     val txs   = Map(8L -> Seq(tx(1, alice, bob, 500), tx(2, bob, carol, 700)))
     val main  = chain(1, 10, hash32(0), txsAt = txs)
     ingest(store, main)

@@ -213,16 +213,30 @@ class StreamingDedupSpec extends SparkSpec {
     StreamingDedup.processLshBatch(store)(
       Seq(1L -> baseA, 2L -> baseC).toDF("doc_id", "text"), 0L)
     // the state table is partitioned by bp: a probe carrying an isin(bp)
-    // predicate must show as a PartitionFilter, pruned before file opens
+    // predicate must plan as ONE scan with a PartitionFilter, pruned
+    // before file opens
+    val probed = store.fileCounts(StreamingDedup.PostingsTable).keys
+      .map(_.stripPrefix("bp=").toInt).toSeq.sorted.take(3).toSet
     val probe = store.read(StreamingDedup.PostingsTable, StreamingDedup.postingsSchema)
-      .filter(col("bp").isin(Seq(1, 2, 3).map(Integer.valueOf): _*))
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bp"),
+      .filter(col("bp").isin(probed.toSeq.map(Integer.valueOf): _*))
+    val plan = probe.queryExecution.executedPlan
+    val scans = plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    assert(scans.size == 1, s"one scan over every live key expected:\n$plan")
+    assert(plan.toString.contains("PartitionFilters") && plan.toString.contains("bp"),
       s"postings scan must carry a bp partition filter:\n$plan")
+    // the files the scan reads lie only under the probed keys' dirs
+    val read = scans.head.inputRDD.partitions.toSeq.flatMap {
+      case p: org.apache.spark.sql.execution.datasources.FilePartition => p.files.map(_.toPath)
+    }
+    assert(read.nonEmpty && read.forall(f => probed.map(b => s"bp=$b").contains(f.getParent.getName)),
+      s"scan read outside the probed keys: $read")
+    assert(probe.count() == store.readOr(StreamingDedup.PostingsTable, null).collect()
+      .count(r => probed(r.getAs[Int]("bp"))))
   }
 
   test("50 batches keep bounded file counts per partition; verdicts stay correct",
       graft.Slow) {
+    import scala.jdk.CollectionConverters._
     val store = mkStore()
     val threshold = 6
     // every batch: one FRESH doc (kept, id ≡ 0 mod 256 so all sigs land in
@@ -252,64 +266,14 @@ class StreamingDedupSpec extends SparkSpec {
           s"batch $b near-dup must resolve to the batch-0 canonical: $v")
       }
     }
-    // bounded: every partition dir of both index tables holds at most
-    // threshold+2 data files (grows ~1/batch, compacts back to 1 whenever
-    // the post-append count exceeds the threshold)
-    def maxFiles(table: String): (String, Long) = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(store.root, table)
-      val parts = Files.list(root).iterator().asScala
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
-        .toSeq
-      parts.map { pd =>
-        val s = Files.list(pd)
-        try pd.getFileName.toString -> s.iterator().asScala.count { p =>
-          val n = p.getFileName.toString
-          Files.isRegularFile(p) && !n.startsWith(".") && !n.startsWith("_")
-        }.toLong
-        finally s.close()
-      }.maxBy(_._2)
-    }
-    val (sigPart, sigMax) = maxFiles(StreamingDedup.SigsTable)
-    val (postPart, postMax) = maxFiles(StreamingDedup.PostingsTable)
-    assert(sigMax <= threshold + 2, s"sigs partition $sigPart grew to $sigMax files")
-    assert(postMax <= threshold + 2, s"postings partition $postPart grew to $postMax files")
     // the index still holds exactly the canonicals (one per batch)
     assert(store.readOr(StreamingDedup.SigsTable, null).count() == 50L)
-  }
-
-  test("manifest mode at duration: 40 batches, GC leaves no orphans, manifests stay minimal",
-      graft.Slow) {
-    import scala.jdk.CollectionConverters._
-    // the rename-mode 50-batch contract bounds FILE counts; this is the
-    // same drive in MANIFEST commit mode, asserting the properties that
-    // keep an object-store deployment bounded at duration: superseded
-    // manifests are GC'd, every physical .d- dir is still referenced by
-    // the live manifest (orphans would otherwise accumulate one per
-    // append forever), and per-key entry counts stay under the
-    // compaction threshold.
-    val store = TableStore(spark,
-      Files.createTempDirectory("graft-lsh-manifest").toString,
-      manifestCommit = true)
-    val threshold = 6
-    val canonId = 256L
-    (0 until 40).foreach { b =>
-      val fresh = (0 until 60).map(i => s"w${b}_$i").mkString(" ")
-      val editAt = 10 + (b % 40)
-      val nearDup = (0 until 60)
-        .map(i => if (i == editAt) s"edited$b" else s"alpha$i").mkString(" ")
-      val docs =
-        if (b == 0) Seq(canonId -> baseA)
-        else Seq((512L * b + 256) -> fresh, (512L * b + 257) -> nearDup)
-      StreamingDedup.processLshBatch(store, compactFiles = threshold)(
-        docs.toDF("doc_id", "text"), b.toLong)
-    }
-    // cross-batch resolution still correct after 40 manifest generations
-    val v = verdicts(store, 39L)
-    assert(v(512L * 39 + 257) == ((0, Some(canonId))),
-      s"near-dup must still resolve through the manifest-mode index: $v")
-    assert(store.readOr(StreamingDedup.SigsTable, null).count() == 40L)
     def audit(table: String): Unit = {
+      // bounded: every partition key holds at most threshold+2 live data
+      // files (grows ~1/batch, compacts back to 1 whenever the
+      // post-append count exceeds the threshold)
+      val (key, worst) = store.fileCounts(table).maxBy(_._2)
+      assert(worst <= threshold + 2, s"$table partition $key grew to $worst files")
       val root = java.nio.file.Paths.get(store.root, table)
       val names = Files.list(root).iterator().asScala
         .map(_.getFileName.toString).toSeq
@@ -317,11 +281,6 @@ class StreamingDedupSpec extends SparkSpec {
       // current generation + ≤ manifestRetain stale ones (reader grace)
       assert(manifests.size <= 1 + store.manifestRetain,
         s"$table superseded manifests not GC'd: $manifests")
-      // first marker token: the fence extended the marker to
-      // "version epoch writerId"
-      val gen = Files.readString(root.resolve(".gen")).trim.split("\\s+")(0).toLong
-      val live = Files.readString(root.resolve(s".manifest.$gen")).linesIterator
-        .filter(l => l.nonEmpty && l != "#end").toSeq
       // every physical dir is referenced by SOME retained manifest (rel
       // paths look like ".d-x/sp=3"); anything else is an orphan that
       // would accumulate one per append forever
@@ -332,11 +291,6 @@ class StreamingDedupSpec extends SparkSpec {
       val physical = names.filter(_.startsWith(".d-")).toSet
       assert(physical == referenced,
         s"$table orphan dirs survive GC: ${physical -- referenced}")
-      // compaction bound holds at the manifest level too
-      val perKey = live.groupBy(_.split('\t')(0)).view.mapValues(_.size)
-      val worst = perKey.maxBy(_._2)
-      assert(worst._2 <= threshold + 2,
-        s"$table key ${worst._1} holds ${worst._2} manifest entries")
     }
     audit(StreamingDedup.SigsTable)
     audit(StreamingDedup.PostingsTable)
