@@ -176,13 +176,14 @@ object Indexer {
     val client = new JsonRpcAccountClient(cfg.endpoints)
     subscribeErc20Tokens(spark, store, cfg.erc20, client)
 
+    val metrics = new IngestMetrics
     val feed = new JsonRpcWsFeed(cfg.endpoints, cfg.wsUrls, cfg.fromBlock,
       httpTimeoutMs = 30000, reconnectMs = 200L)
+    feed.reportTo(metrics)
     val subId = s"indexer-${java.util.UUID.randomUUID()}"
     HeadSubscriptions.register(subId, feed)
     feed.startSubscription()
 
-    val metrics = new IngestMetrics
     val server =
       if (cfg.metricsPort < 0) None
       else Some(MetricsServer.start(metrics, cfg.metricsPort))

@@ -82,12 +82,11 @@ case class BoundedSortedSetAgg(child: Expression,
     b
   }
 
+  @transient private lazy val ordering = TypeUtils.getInterpretedOrdering(child.dataType)
+
   override def eval(b: BoundedSortedSetAgg.Buffer): Any =
     if (b.poisoned || b.set.size < minSize) null
-    else {
-      val ord = TypeUtils.getInterpretedOrdering(child.dataType)
-      new GenericArrayData(b.set.toArray.sorted(ord))
-    }
+    else new GenericArrayData(b.set.toArray.sorted(ordering))
 
   // serialization mirrors Spark's Collect: each element through an
   // UnsafeProjection, length-prefixed

@@ -79,19 +79,17 @@ final class JsonRpcAccountClient(endpoints: Seq[String], timeoutMs: Int = 30000)
   private def rpcReq(id: Int, method: String, params: String): String =
     s"""{"jsonrpc":"2.0","id":$id,"method":"$method","params":[$params]}"""
 
-  /** POST the batch array, return responses ORDERED BY ID (the server may
-    * reorder; ids are the request index). Fails over across endpoints.
+  /** POST the batch array, return responses in request order (ids are the
+    * request index; [[JsonRpcBatch.inOrder]] matches them strictly). Any
+    * failure, a malformed reply included, fails over to the next endpoint.
     */
   private def batch(reqs: Seq[String]): IndexedSeq[JsonNode] = {
     if (reqs.isEmpty) return IndexedSeq.empty
     val body = reqs.mkString("[", ",", "]").getBytes("UTF-8")
     var last: Throwable = null
     endpoints.foreach { ep =>
-      try {
-        val arr = post(ep, body)
-        val byId = (0 until arr.size).map(arr.get).map(n => n.get("id").asInt -> n).toMap
-        return reqs.indices.map(byId(_))
-      } catch { case e: Exception => last = e }
+      try return JsonRpcBatch.inOrder(post(ep, body), reqs.size)
+      catch { case e: Exception => last = e }
     }
     throw new RuntimeException(s"all ${endpoints.size} endpoints failed", last)
   }
@@ -105,10 +103,7 @@ final class JsonRpcAccountClient(endpoints: Seq[String], timeoutMs: Int = 30000)
     conn.setDoOutput(true)
     try {
       conn.getOutputStream.write(body)
-      val mapper = new ObjectMapper
-      val node = mapper.readTree(conn.getInputStream)
-      require(node.isArray, s"expected a JSON-RPC batch array, got ${node.getNodeType}")
-      node
+      new ObjectMapper().readTree(conn.getInputStream)
     } finally conn.disconnect()
   }
 

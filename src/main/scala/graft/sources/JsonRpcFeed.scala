@@ -4,8 +4,10 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.chain.BalanceResolver
 import graft.chain.Schemas._
-import graft.streaming.HeadSubscription
+import graft.streaming.{HeadSubscription, IngestMetrics}
 
 /** S1/S2's production face: a polling JSON-RPC adapter behind the
   * [[HeadSubscription]] seam — the reference's WS `newHeads` subscription +
@@ -28,13 +30,17 @@ import graft.streaming.HeadSubscription
   *
   * Per new height the adapter issues the same per-block side-fetches the
   * reference's indexer does before inserting
-  * (service/indexer/indexer.go:443-467):
-  * `eth_getBlockByNumber(n, full)`, one `eth_getTransactionReceipt` per tx,
+  * (service/indexer/indexer.go:443-467): `eth_getUncleByBlockHashAndIndex`
+  * per uncle ref, one `eth_getTransactionReceipt` per tx and
   * `debug_getTransferLogs(blockHash)` (the modified-geth call,
-  * client/client.go:150-155), and `eth_getUncleByBlockHashAndIndex` per
-  * uncle ref. Assembled [[Bundle]]s append to the same in-order queue the
-  * DSv2 source reads, so offsets/replay semantics are identical to the
-  * in-memory feed.
+  * client/client.go:150-155). The reference sends them one request at a
+  * time; here they go out as ONE JSON-RPC batch array after
+  * `eth_getBlockByNumber(n, full)`, so a block costs two round trips
+  * whatever its tx count (arrays are split at
+  * [[graft.chain.BalanceResolver.DefaultChunkSize]] elements, geth's
+  * default batch limit). Assembled [[Bundle]]s append to the same in-order
+  * queue the DSv2 source reads, so offsets/replay semantics are identical
+  * to the in-memory feed.
   *
   * `byHash` serves the ingest fold's ancestor fetch-back
   * (`getBlockByHash`, indexer.go:370-406) — first from bundles already
@@ -69,6 +75,14 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
   protected def rebindTo(i: Int): Unit =
     if (i >= 0 && i < endpoints.size) affinity = i
 
+  /** Where fetch time and failovers are counted; set by [[reportTo]]. */
+  @volatile private var metrics: Option[IngestMetrics] = None
+
+  /** Count this feed's fetches (`fetch_block`) and failovers
+    * (`rpc_failover`) in `m`.
+    */
+  def reportTo(m: IngestMetrics): Unit = metrics = Some(m)
+
   private val mapper = new ObjectMapper
   private val buf = mutable.ArrayBuffer.empty[Bundle]
   private val idx = mutable.Map.empty[Seq[Byte], Bundle]
@@ -89,8 +103,8 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
     synchronized(buf.slice(fromSeq.toInt, toSeq.toInt).toVector)
 
   override def byHash(hash: Seq[Byte]): Option[Bundle] =
-    synchronized(idx.get(hash)).orElse(bundleOf(
-      call("eth_getBlockByHash", js(hex(hash.toArray)), js(true))))
+    synchronized(idx.get(hash)).orElse(
+      fetchBundle("eth_getBlockByHash", js(hex(hash.toArray)), js(true)))
 
   // ---- polling ---------------------------------------------------------
 
@@ -117,7 +131,7 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
     var pulled = 0
     var serving = true
     while (serving && polled < latest) {
-      bundleOf(call("eth_getBlockByNumber", js(hexNum(polled + 1)), js(true))) match {
+      fetchBundle("eth_getBlockByNumber", js(hexNum(polled + 1)), js(true)) match {
         case Some(b) =>
           synchronized { buf += b; idx(b.block.hash.toSeq) = b }
           polled += 1
@@ -155,27 +169,62 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
 
   // ---- RPC transport ---------------------------------------------------
 
-  /** One RPC with failover: try the affinity endpoint, then the others in
-    * ring order. A transport failure (connect/read — the node is down or
-    * unreachable) moves on and, on success elsewhere, REBINDS affinity to
-    * the survivor so subsequent calls skip the dead node; when every
-    * endpoint fails the last transport error propagates. An RPC-level
-    * `error` response throws immediately without failover (see class doc).
+  /** One RPC; an RPC-level `error` throws (see class doc). */
+  private def call(method: String, params: JsonNode*): JsonNode =
+    withFailover(mapper.writeValueAsBytes(request(0, method, params)))(resultOf(method, _))
+
+  /** `calls` as JSON-RPC batch arrays of at most
+    * [[BalanceResolver.DefaultChunkSize]] elements, one POST each; returns
+    * the `result`s in request order, whatever order the node answers in.
+    * Same rules as [[call]] per POST: a transport failure fails over, an
+    * `error` in any element throws without failover.
     */
-  private def call(method: String, params: JsonNode*): JsonNode = {
+  private def batch(calls: Seq[(String, Seq[JsonNode])]): IndexedSeq[JsonNode] =
+    calls.grouped(BalanceResolver.DefaultChunkSize).flatMap { chunk =>
+      val arr = mapper.createArrayNode()
+      chunk.zipWithIndex.foreach { case ((method, params), id) => arr.add(request(id, method, params)) }
+      withFailover(mapper.writeValueAsBytes(arr)) { reply =>
+        JsonRpcBatch.inOrder(reply, chunk.size).zip(chunk).map { case (resp, (method, _)) =>
+          resultOf(method, resp)
+        }
+      }
+    }.toIndexedSeq
+
+  private def resultOf(method: String, resp: JsonNode): JsonNode = {
+    val err = resp.get("error")
+    if (err != null && !err.isNull)
+      throw new RuntimeException(s"rpc error for $method: $err")
+    resp.get("result")
+  }
+
+  private def request(id: Int, method: String, params: Seq[JsonNode]): ObjectNode = {
     val req = mapper.createObjectNode()
-    req.put("jsonrpc", "2.0").put("id", 1).put("method", method)
+    req.put("jsonrpc", "2.0").put("id", id).put("method", method)
     val arr = req.putArray("params")
     params.foreach(arr.add)
-    val body = mapper.writeValueAsBytes(req)
+    req
+  }
+
+  /** POST `body` with failover and `decode` the reply: try the affinity
+    * endpoint, then the others in ring order. A transport failure
+    * (connect/read — the node is down or unreachable — or a reply that is
+    * not JSON-RPC) moves on and, on success elsewhere, REBINDS affinity to
+    * the survivor so subsequent calls skip the dead node; when every
+    * endpoint fails the last transport error propagates. Anything else
+    * `decode` throws propagates at once.
+    */
+  private def withFailover[A](body: Array[Byte])(decode: JsonNode => A): A = {
     val start = affinity
     var lastTransport: java.io.IOException = null
     var attempt = 0
     while (attempt < endpoints.size) {
       val i = (start + attempt) % endpoints.size
       try {
-        val result = callOne(endpoints(i), method, body)
-        if (i != affinity) affinity = i
+        val result = decode(post(endpoints(i), body))
+        if (attempt > 0) {
+          affinity = i
+          metrics.foreach(_.rpcFailover.incrementAndGet())
+        }
         return result
       } catch {
         case e: java.io.IOException => lastTransport = e // dead node: next
@@ -185,7 +234,7 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
     throw lastTransport
   }
 
-  private def callOne(endpoint: String, method: String, body: Array[Byte]): JsonNode = {
+  private def post(endpoint: String, body: Array[Byte]): JsonNode = {
     val conn = URI.create(endpoint).toURL.openConnection().asInstanceOf[HttpURLConnection]
     try {
       conn.setRequestMethod("POST")
@@ -196,11 +245,7 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
       conn.setReadTimeout(httpTimeoutMs)
       conn.setDoOutput(true)
       conn.getOutputStream.write(body)
-      val resp = mapper.readTree(conn.getInputStream)
-      val err = resp.get("error")
-      if (err != null && !err.isNull)
-        throw new RuntimeException(s"rpc error for $method: $err")
-      resp.get("result")
+      mapper.readTree(conn.getInputStream)
     } finally conn.disconnect()
   }
 
@@ -260,23 +305,42 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
     value       = hexBig(l.get("value")),
     blockNumber = hexLong(l.get("blockNumber")))
 
-  /** Block JSON (+ its side-fetches) → one ingest bundle; None when the
-    * node doesn't have the block.
+  /** Fetch a block by `method` and assemble its bundle, timing the whole
+    * fetch into `fetch_block` when it lands.
+    */
+  private def fetchBundle(method: String, params: JsonNode*): Option[Bundle] = {
+    val t0 = System.nanoTime()
+    val bundle = bundleOf(call(method, params: _*))
+    if (bundle.isDefined) metrics.foreach(_.fetchBlock.observe((System.nanoTime() - t0) / 1e9))
+    bundle
+  }
+
+  /** Block JSON (+ its side-fetches, one batch) → one ingest bundle; None
+    * when the node doesn't have the block.
     */
   private def bundleOf(node: JsonNode): Option[Bundle] = opt(node).map { b =>
     val blockHash = hexBytes(b.get("hash"))
     val txs = elems(b.get("transactions")).map(parseTx)
+    val nUncles = elems(b.get("uncles")).size
     // side-fetch results must exist: a null (the node reorganized between
     // the block fetch and this call) fails the height LOUDLY — pollOnce
     // retries it next tick; landing a bundle with silently-missing
     // receipts/uncles would corrupt the ingested tables
     def required(n: JsonNode, what: String): JsonNode = opt(n).getOrElse(
       throw new IllegalStateException(s"node no longer serves $what of block ${hex(blockHash)}"))
-    val uncles = elems(b.get("uncles")).zipWithIndex.map { case (_, i) =>
-      val u = required(
-        call("eth_getUncleByBlockHashAndIndex", js(hex(blockHash)), js(hexNum(i))), s"uncle $i")
+    val side = batch(
+      (0 until nUncles).map(i =>
+        "eth_getUncleByBlockHashAndIndex" -> Seq(js(hex(blockHash)), js(hexNum(i)))) ++
+      txs.map(t => "eth_getTransactionReceipt" -> Seq(js(hex(t.hash)))) :+
+      ("debug_getTransferLogs" -> Seq(js(hex(blockHash)))))
+    val uncles = (0 until nUncles).map { i =>
+      val u = required(side(i), s"uncle $i")
       UncleRef(hexBytes(u.get("hash")), hexBytes(u.get("miner")), hexLong(u.get("number")))
     }
+    val receipts = txs.zipWithIndex.map { case (t, i) =>
+      parseReceipt(required(side(nUncles + i), s"receipt of tx ${hex(t.hash)}"))
+    }
+    val transferLogs = elems(side.last).map(parseTransferLog)
     val block = Block(
       number      = hexLong(b.get("number")),
       hash        = blockHash,
@@ -295,10 +359,6 @@ class JsonRpcFeed(endpoints: Seq[String], startBlock: Long,
       nonce       = opt(b.get("nonce")).map(hexBytes).getOrElse(Array.empty),
       transactions = txs,
       uncles       = uncles)
-    val receipts = txs.map(t => parseReceipt(required(
-      call("eth_getTransactionReceipt", js(hex(t.hash))), s"receipt of tx ${hex(t.hash)}")))
-    val transferLogs = elems(call("debug_getTransferLogs", js(hex(blockHash))))
-      .map(parseTransferLog)
     Bundle(block, receipts, transferLogs)
   }
 }

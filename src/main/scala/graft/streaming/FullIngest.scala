@@ -122,13 +122,20 @@ object FullIngest {
     // limit-2 probe costs one bounded job); catch-up spans keep AQE for
     // its skew/coalesce value on real backfill volumes.
     //
-    // CONTRACT: these are SESSION-scoped conf flips (the batch DataFrame is
-    // bound to `spark`, so a cloned newSession() cannot plan it) — the
-    // ingest session must not run concurrent queries while a batch is in
-    // flight. That holds by construction here: ChainIngest's micro-batch
-    // loop is strictly sequential and FullIngest owns its session; serve
-    // ad-hoc queries from a separate SparkSession (newSession()) sharing
-    // the SparkContext, never from the ingest session.
+    // CONTRACT: these are SESSION-scoped conf flips on `spark`, the session
+    // the batch DataFrame is bound to, and they reach only the plans that
+    // session runs. Under `start` that is the streaming query's clone of
+    // the session, while TableStore opens every table on the session it was
+    // built with: a plan rooted in the batch (or made on `spark`) runs under
+    // the scope, a plan rooted in a store-opened table (state and range
+    // reads, and what is derived from them) runs under the store session's
+    // own conf and never sees it. Only a caller that passes the store's own session (the
+    // specs' direct processBatch calls) scopes both. The session must not
+    // run concurrent queries while a batch is in flight. That holds by
+    // construction here: ChainIngest's micro-batch loop is strictly
+    // sequential and FullIngest owns its session; serve ad-hoc queries from
+    // a separate SparkSession (newSession()) sharing the SparkContext,
+    // never from the ingest session.
     // take(2) instead of limit(2).count(): executeTake short-circuits (a
     // LocalRelation batch — the specs' and bench's shape — answers with
     // NO job; a source batch pays one bounded job, same as before)

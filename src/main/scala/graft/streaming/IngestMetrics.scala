@@ -45,7 +45,9 @@ final class LatencyHistogram extends Serializable {
   * via [[toDF]] as a queryable `metrics` table or [[logLine]] per batch.
   * Updates are driver-side set/inc on numbers the batch already computed —
   * no extra Spark jobs in the quiet path, one small count per EVENT block
-  * (bounded by the 990 admission cap and the block's touched set).
+  * (bounded by the 990 admission cap and the block's touched set). The
+  * RPC feed adds its own two (`fetch_block`, `rpc_failover`) once handed
+  * an instance through `JsonRpcFeed.reportTo`.
   */
 final class IngestMetrics extends Serializable {
   /** Counter: canonical blocks landed (new_block, indexer.go:146). */
@@ -66,6 +68,14 @@ final class IngestMetrics extends Serializable {
   val changedAccountPerBlock = new AtomicLong
   /** Histogram: end-to-end batch ingest latency (insert_block). */
   val insertBlock = new LatencyHistogram
+  /** Histogram: seconds the RPC feed takes to fetch and assemble one
+    * block's bundle, head pulls and reorg fetch-backs alike (fetch_block).
+    */
+  val fetchBlock = new LatencyHistogram
+  /** Counter: transport failures that moved the feed's RPC affinity to
+    * another node (rpc_failover).
+    */
+  val rpcFailover = new AtomicLong
 
   def snapshot: Seq[(String, Double)] = {
     val base = Seq(
@@ -77,17 +87,23 @@ final class IngestMetrics extends Serializable {
       "insert_block_count"        -> insertBlock.count.toDouble,
       "insert_block_sum_sec"      -> insertBlock.sumSeconds,
       "insert_block_min_sec"      -> insertBlock.minSeconds,
-      "insert_block_max_sec"      -> insertBlock.maxSeconds)
+      "insert_block_max_sec"      -> insertBlock.maxSeconds,
+      "fetch_block_count"         -> fetchBlock.count.toDouble,
+      "fetch_block_sum_sec"       -> fetchBlock.sumSeconds,
+      "fetch_block_min_sec"       -> fetchBlock.minSeconds,
+      "fetch_block_max_sec"       -> fetchBlock.maxSeconds,
+      "rpc_failover"              -> rpcFailover.get().toDouble)
     // `le`-named buckets follow the Prometheus cumulative convention: each
     // carries the count of observations ≤ its bound, and le_inf is the
     // total — a scraper reading these as histogram buckets sees the true
     // distribution, not per-bucket increments.
-    val counts = insertBlock.bucketCounts
-    val cumulative = counts.scanLeft(0L)(_ + _).tail
-    val hist = insertBlock.bounds.zip(cumulative).map { case (b, c) =>
-      s"insert_block_le_$b" -> c.toDouble
-    } :+ ("insert_block_le_inf" -> cumulative.last.toDouble)
-    base ++ hist
+    def hist(name: String, h: LatencyHistogram): Seq[(String, Double)] = {
+      val cumulative = h.bucketCounts.scanLeft(0L)(_ + _).tail
+      h.bounds.zip(cumulative).map { case (b, c) =>
+        s"${name}_le_$b" -> c.toDouble
+      }.toSeq :+ (s"${name}_le_inf" -> cumulative.last.toDouble)
+    }
+    base ++ hist("insert_block", insertBlock) ++ hist("fetch_block", fetchBlock)
   }
 
   /** The metrics as a tiny queryable table (metric, value). */
@@ -103,6 +119,10 @@ final class IngestMetrics extends Serializable {
     f"ingest new_block=${newBlock.get()} reorg=${reorg.get()} " +
       f"retracted=${retractedBlocks.get()} new_subscription=${newSubscription.get()} " +
       f"changed_accounts=${changedAccountPerBlock.get()} " +
-      f"insert_block_count=${insertBlock.count} insert_block_avg_sec=" +
-      f"${if (insertBlock.count == 0) 0.0 else insertBlock.sumSeconds / insertBlock.count}%.3f"
+      f"insert_block_count=${insertBlock.count} insert_block_avg_sec=${avg(insertBlock)}%.3f " +
+      f"fetch_block_count=${fetchBlock.count} fetch_block_avg_sec=${avg(fetchBlock)}%.3f " +
+      f"rpc_failover=${rpcFailover.get()}"
+
+  private def avg(h: LatencyHistogram): Double =
+    if (h.count == 0) 0.0 else h.sumSeconds / h.count
 }

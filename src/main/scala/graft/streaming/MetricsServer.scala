@@ -56,7 +56,8 @@ object MetricsServer {
   }
 
   /** The Prometheus text form: `graft_`-prefixed counters/gauges plus the
-    * `insert_block` latency histogram with cumulative `le` buckets — the
+    * `insert_block` and `fetch_block` latency histograms with cumulative
+    * `le` buckets — the
     * shape every scraper ingests natively. Kept in lockstep with
     * [[IngestMetrics.snapshot]] (the queryable-DataFrame face of the same
     * numbers).
@@ -76,7 +77,9 @@ object MetricsServer {
     metric("graft_new_subscription", "counter", m.newSubscription.get().toDouble)
     metric("graft_changed_account_per_block", "gauge",
       m.changedAccountPerBlock.get().toDouble)
+    metric("graft_rpc_failover", "counter", m.rpcFailover.get().toDouble)
     renderHistogram(sb, "graft_insert_block_seconds", m.insertBlock)
+    renderHistogram(sb, "graft_fetch_block_seconds", m.fetchBlock)
     sb.toString
   }
 

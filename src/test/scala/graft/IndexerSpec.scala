@@ -180,6 +180,11 @@ class IndexerSpec extends SparkSpec {
       assert(scraped.contains("graft_new_block 6"), // 4 + the 2 fork blocks
         s"expected 6 inserted blocks:\n$scraped")
       assert(scraped.contains("graft_insert_block_seconds_count"))
+      // the feed is wired to the same registry: 5 pulls + the 4' fetch-back
+      val fetched = scraped.linesIterator
+        .find(_.startsWith("graft_fetch_block_seconds_count ")).map(_.split(' ')(1).toLong)
+      assert(fetched.exists(_ >= 6L), s"expected >= 6 fetched bundles:\n$scraped")
+      assert(scraped.contains("graft_rpc_failover 0"))
     } finally {
       wiring.close()
       ws.stop()

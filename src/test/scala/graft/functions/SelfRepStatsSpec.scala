@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The native d16 kernel vs the declarative in-row chain it replaced
@@ -14,18 +15,26 @@ class SelfRepStatsSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def ref(k: Int) = {
+  /** The declarative chain over `df`'s `__txt`, as columns `rn`
+    * (n_repeat_grams) and `rc` (covered_chars). The sorted gram array and
+    * the repeat positions are staged as columns so each is computed once
+    * per row: the filter lambda and the two outputs read them by reference
+    * (the optimizer keeps a non-cheap column that is read more than once
+    * instead of inlining it), where inlined text would re-sort the grams
+    * for every element the lambda visits.
+    */
+  private def ref(df: DataFrame, k: Int): DataFrame = {
     val grams =
       s"""CASE WHEN length(__txt) >= $k THEN
          |  array_sort(transform(sequence(1, length(__txt) - ${k - 1}),
          |    i -> named_struct('h', xxhash64(substring(__txt, i, $k)), 'p', i)))
          |ELSE CAST(array() AS ARRAY<STRUCT<h: BIGINT, p: INT>>) END""".stripMargin
     val repeats =
-      s"""array_sort(transform(
-         |  filter($grams, (x, i) -> i > 0 AND x.h = element_at($grams, i).h),
-         |  x -> x.p))""".stripMargin
+      """array_sort(transform(
+        |  filter(__grams, (x, i) -> i > 0 AND x.h = element_at(__grams, i).h),
+        |  x -> x.p))""".stripMargin
     val covered =
-      s"""aggregate($repeats,
+      s"""aggregate(__repeats,
          |  named_struct('st', -1, 'en', -1, 'cov', CAST(0 AS BIGINT)),
          |  (a, p) -> CASE
          |    WHEN a.st = -1 THEN named_struct('st', p, 'en', p + $k, 'cov', a.cov)
@@ -35,7 +44,11 @@ class SelfRepStatsSpec extends SparkSpec {
          |  END,
          |  a -> CASE WHEN a.st = -1 THEN CAST(0 AS BIGINT)
          |            ELSE a.cov + CAST(a.en - a.st AS BIGINT) END)""".stripMargin
-    (expr(s"CAST(size($repeats) AS BIGINT)"), expr(covered))
+    df.withColumn("__grams", expr(grams))
+      .withColumn("__repeats", expr(repeats))
+      .withColumn("rn", expr("CAST(size(__repeats) AS BIGINT)"))
+      .withColumn("rc", expr(covered))
+      .drop("__grams", "__repeats")
   }
 
   test("kernel matches the declarative chain on every fixture class") {
@@ -52,10 +65,8 @@ class SelfRepStatsSpec extends SparkSpec {
       "世界世界世界世界", // CJK 3-byte chars
       "x" * 200 + "y" + "x" * 200) // long tail islands
     val df = texts.toDF("__txt")
-    val (rn, rc) = ref(k)
-    val rows = df.select(
-      SelfRepStats(col("__txt"), k).as("s"),
-      rn.as("rn"), rc.as("rc")).collect()
+    val rows = ref(df, k).select(
+      SelfRepStats(col("__txt"), k).as("s"), col("rn"), col("rc")).collect()
     rows.zip(texts).foreach { case (r, t) =>
       val s = r.getStruct(0)
       assert(s.getLong(0) == r.getLong(1),
@@ -77,9 +88,8 @@ class SelfRepStatsSpec extends SparkSpec {
     val got = graft.operators.Dedup
       .selfRepetitionCoverage(docs, "doc_id", "text", k = 20)
       .select(col("doc_id"), col("n_repeat_grams"), col("covered_chars"))
-    val (rn, rc) = ref(20)
-    val want = docs.select(col("doc_id"), col("text").as("__txt"))
-      .select(col("doc_id"), rn.as("n_repeat_grams"), rc.as("covered_chars"))
+    val want = ref(docs.select(col("doc_id"), col("text").as("__txt")), 20)
+      .select(col("doc_id"), col("rn").as("n_repeat_grams"), col("rc").as("covered_chars"))
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "operator output diverged from the declarative chain on corpus text")
   }

@@ -13,9 +13,11 @@ import graft.chain.Schemas._
 import graft.streaming._
 
 /** Geth-shaped JSON-RPC stub over fixture bundles — a local HTTP server
-  * (no real network) speaking the five calls the adapter issues. The
-  * canonical chain is swappable mid-test to emulate the node reorganizing
-  * between polls.
+  * (no real network) speaking the calls the adapter issues, single and in
+  * batch arrays. The canonical chain is swappable mid-test to emulate the
+  * node reorganizing between polls; the `var` switches below make it
+  * answer batches out of order, withhold or fail a method, or mangle a
+  * batch reply outright.
   */
 final class RpcStub {
   private val mapper = new ObjectMapper
@@ -24,7 +26,23 @@ final class RpcStub {
   @volatile private var receipts  = Map.empty[String, Receipt]
   private val blockNumberCalls = new java.util.concurrent.atomic.AtomicInteger
   private val blockByNumberCalls = new java.util.concurrent.atomic.AtomicInteger
+  private val posts = new java.util.concurrent.atomic.AtomicInteger
+  private val batchSizes = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
   @volatile private var subscribers = List.empty[java.io.OutputStream]
+
+  /** Answer batch arrays in reverse order (the spec lets a server reorder). */
+  @volatile var reverseBatches = false
+  /** Methods answered with a null `result` (the node no longer has it). */
+  @volatile var withheld = Set.empty[String]
+  /** Methods answered with an `error` member instead of a result. */
+  @volatile var failing = Set.empty[String]
+  /** Rewrites every batch reply before it is sent — a hostile node. */
+  @volatile var mangleBatch: Option[ArrayNode => JsonNode] = None
+
+  /** HTTP POSTs to the RPC endpoint — round trips, whatever each carried. */
+  def postCount: Int = posts.get
+  /** The element count of every batch array received, in arrival order. */
+  def batchSizesSeen: Seq[Int] = batchSizes.toArray.toSeq.map(_.asInstanceOf[Integer].toInt)
 
   /** How often the client asked for the head by polling — the push-face
     * test asserts this stays ZERO.
@@ -82,9 +100,14 @@ final class RpcStub {
       .put("nonce", hx(k.nonce))
     val txs = o.putArray("transactions")
     k.transactions.foreach(t => txs.add(txJson(t)))
-    o.putArray("uncles") // fixtures carry no uncles
+    val uncles = o.putArray("uncles")
+    k.uncles.foreach(u => uncles.add(hx(u.hash)))
     o
   }
+
+  private def uncleJson(u: UncleRef): ObjectNode =
+    mapper.createObjectNode()
+      .put("hash", hx(u.hash)).put("miner", hx(u.coinbase)).put("number", hxNum(u.number))
 
   private def receiptJson(r: Receipt): ObjectNode = {
     val o = mapper.createObjectNode()
@@ -167,6 +190,10 @@ final class RpcStub {
       receipts.get(params.get(0).asText).map(receiptJson).getOrElse(mapper.nullNode())
     case "debug_getTransferLogs" =>
       byHash.get(params.get(0).asText).map(transferLogsJson).getOrElse(mapper.createArrayNode())
+    case "eth_getUncleByBlockHashAndIndex" =>
+      val i = java.lang.Integer.parseInt(params.get(1).asText.stripPrefix("0x"), 16)
+      byHash.get(params.get(0).asText).flatMap(_.block.uncles.lift(i)).map(uncleJson)
+        .getOrElse(mapper.nullNode())
     case other => throw new IllegalArgumentException(s"unexpected rpc method $other")
   }
 
@@ -174,20 +201,27 @@ final class RpcStub {
   def start(): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", (x: HttpExchange) => {
+      posts.incrementAndGet()
       val req = mapper.readTree(x.getRequestBody)
       def one(r: JsonNode): ObjectNode = {
         val resp = mapper.createObjectNode()
         resp.put("jsonrpc", "2.0").put("id", r.path("id").asInt(1))
-        resp.set[ObjectNode]("result",
-          dispatch(r.get("method").asText, r.get("params").asInstanceOf[ArrayNode]))
+        val method = r.get("method").asText
+        if (failing(method))
+          resp.putObject("error").put("code", -32000).put("message", s"$method failed")
+        else resp.set[ObjectNode]("result",
+          if (withheld(method)) mapper.nullNode()
+          else dispatch(method, r.get("params").asInstanceOf[ArrayNode]))
         resp
       }
-      // the batched array form (JsonRpcAccountClient's one-POST chunks)
+      // the batched array form (the clients' one-POST arrays)
       val body = mapper.writeValueAsBytes(
         if (req.isArray) {
+          batchSizes.add(req.size)
           val arr = mapper.createArrayNode()
-          req.forEach(r => { arr.add(one(r)); () })
-          arr
+          val elems = (0 until req.size).map(req.get)
+          (if (reverseBatches) elems.reverse else elems).foreach(r => arr.add(one(r)))
+          mangleBatch.fold[JsonNode](arr)(_(arr))
         } else one(req))
       x.getResponseHeaders.add("Content-Type", "application/json")
       x.sendResponseHeaders(200, body.length.toLong)
@@ -312,6 +346,110 @@ class JsonRpcFeedSpec extends SparkSpec {
     } finally {
       feed.stopSubscription()
       stub.stop()
+    }
+  }
+
+  /** A bundle as plain values (byte arrays compare by content). */
+  private def deep(x: Any): Any = x match {
+    case a: Array[Byte] => a.toSeq
+    case s: Seq[_]      => s.map(deep)
+    case o: Option[_]   => o.map(deep)
+    case p: Product     => p.productIterator.map(deep).toList
+    case other          => other
+  }
+
+  private def withStub[A](chain: Seq[Bundle])(body: (RpcStub, String) => A): A = {
+    val stub = new RpcStub
+    stub.setCanonical(chain)
+    val port = stub.start()
+    try body(stub, s"http://127.0.0.1:$port/") finally stub.stop()
+  }
+
+  test("a block costs two POSTs: the block, then one batch of its side-fetches") {
+    val main = bundleChain(1, 2, hash32(0), withTransferLogs = true, txsAt = Map(
+      1L -> Seq(tx(1, alice, carol, 5), tx(2, bob, carol, 6)),
+      2L -> Seq(tx(3, carol, alice, 7))))
+    val fork = bundleChain(2, 2, main.head.block.hash, hashSeedBase = 500,
+      withTransferLogs = true, txsAt = Map(2L -> Seq(tx(4, alice, bob, 8))))
+    withStub(main) { (stub, url) =>
+      val feed = new JsonRpcFeed(url)
+      assert(feed.pollOnce() == 2)
+      assert(stub.postCount == 1 + 2 * 2, "one head poll, then two POSTs per block")
+      // receipts + transfer logs; the transfer-log call ends each batch
+      assert(stub.batchSizesSeen == Seq(3, 2))
+      assert(feed.range(0, 2).map(_.receipts.map(_.txHash.toSeq)) ==
+        main.map(_.receipts.map(_.txHash.toSeq)))
+
+      // an ancestor never pulled by number: the fetch-back costs two as well
+      stub.setCanonical(main.take(1) ++ fork)
+      val before = stub.postCount
+      val got = feed.byHash(fork.head.block.hash.toSeq)
+      assert(stub.postCount - before == 2)
+      assert(got.map(_.block.hash.toSeq).contains(fork.head.block.hash.toSeq))
+      assert(got.get.receipts.map(_.txHash.toSeq) == fork.head.receipts.map(_.txHash.toSeq))
+      assert(got.get.transferLogs.size == 1)
+    }
+  }
+
+  test("a batch answered in reverse order yields the identical bundle") {
+    val txs = (1 to 3).map(i => tx(i, alice, carol, 10 * i))
+    val uncles = Seq(UncleRef(hash32(71), addr20(72), 1L), UncleRef(hash32(73), addr20(74), 1L))
+    val b0 = bundleChain(2, 2, hash32(0), txsAt = Map(2L -> txs), withTransferLogs = true).head
+    val b = b0.copy(block = b0.block.copy(uncles = uncles))
+    def fetched(reverse: Boolean): Bundle = withStub(Seq(b)) { (stub, url) =>
+      stub.reverseBatches = reverse
+      val feed = new JsonRpcFeed(url, startBlock = 2L)
+      assert(feed.pollOnce() == 1)
+      assert(stub.batchSizesSeen == Seq(uncles.size + txs.size + 1))
+      feed.range(0, 1).head
+    }
+    val (inOrder, reversed) = (fetched(reverse = false), fetched(reverse = true))
+    assert(deep(reversed) == deep(inOrder))
+    assert(reversed.block.uncles.map(_.hash.toSeq) == uncles.map(_.hash.toSeq))
+    assert(reversed.receipts.map(_.txHash.toSeq) == txs.map(_.hash.toSeq))
+    assert(reversed.transferLogs.map(_.value) == txs.map(_.amount))
+  }
+
+  test("a null receipt or an error element fails the height; the next tick lands it") {
+    val main = bundleChain(1, 1, hash32(0), withTransferLogs = true,
+      txsAt = Map(1L -> Seq(tx(1, alice, carol, 5), tx(2, bob, carol, 6))))
+    withStub(main) { (stub, url) =>
+      withStub(main) { (spare, spareUrl) =>
+        val feed = new JsonRpcFeed(Seq(url, spareUrl), startBlock = 1L, httpTimeoutMs = 5000)
+
+        stub.withheld = Set("eth_getTransactionReceipt")
+        val gone = intercept[IllegalStateException](feed.pollOnce())
+        assert(gone.getMessage.contains("receipt of tx"))
+        assert(feed.latestSeq == 0L, "nothing may land with a receipt missing")
+
+        stub.withheld = Set.empty
+        stub.failing = Set("debug_getTransferLogs")
+        val err = intercept[RuntimeException](feed.pollOnce())
+        assert(err.getMessage.contains("rpc error for debug_getTransferLogs"))
+        assert(feed.latestSeq == 0L)
+        // an RPC error is the request's fault, not the node's: no failover
+        assert(feed.activeEndpoint == url && spare.postCount == 0)
+
+        stub.failing = Set.empty
+        assert(feed.pollOnce() == 1, "the cursor stayed, so the next tick lands the height")
+        assert(feed.range(0, 1).head.receipts.size == 2)
+      }
+    }
+  }
+
+  test("a 1,001-tx block goes out in batches of at most 1000 elements and lands whole") {
+    val txs = (1 to 1001).map { i =>
+      tx(i, alice, carol, i).copy(hash = java.nio.ByteBuffer.allocate(32).putInt(28, i).array())
+    }
+    val main = bundleChain(1, 1, hash32(0), txsAt = Map(1L -> txs), withTransferLogs = true)
+    withStub(main) { (stub, url) =>
+      val feed = new JsonRpcFeed(url)
+      assert(feed.pollOnce() == 1)
+      assert(stub.batchSizesSeen == Seq(1000, 2), "1001 receipts + the transfer-log call")
+      assert(stub.postCount == 1 + 1 + 2)
+      val got = feed.range(0, 1).head
+      assert(got.receipts.map(_.txHash.toSeq) == txs.map(_.hash.toSeq))
+      assert(got.transferLogs.map(_.txHash.toSeq) == txs.map(_.hash.toSeq))
     }
   }
 }

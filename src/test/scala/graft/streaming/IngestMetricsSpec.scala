@@ -61,4 +61,36 @@ class IngestMetricsSpec extends SparkSpec {
     assert(table.keys.exists(_.startsWith("insert_block_le_")))
     assert(m.logLine.contains("new_block=10"))
   }
+
+  test("the RPC feed reports fetch time per bundle and failovers") {
+    val main = bundleChain(1, 3, hash32(0), withTransferLogs = true,
+      txsAt = Map(2L -> Seq(tx(1, alice, carol, 5))))
+    val fork = bundleChain(3, 3, main(1).block.hash, hashSeedBase = 300, withTransferLogs = true)
+    val live = new graft.sources.RpcStub
+    live.setCanonical(main)
+    val port = live.start()
+    // a port with nothing listening: its connects are refused
+    val dead = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    try {
+      val m = new IngestMetrics
+      val feed = new graft.sources.JsonRpcFeed(
+        Seq(s"http://127.0.0.1:$dead/", s"http://127.0.0.1:$port/"), 1L, 2000)
+      feed.reportTo(m)
+      assert(feed.pollOnce() == 3)
+      assert(m.rpcFailover.get() == 1L, "one move off the dead node, then affinity sticks")
+      assert(m.fetchBlock.count == 3L)
+      live.setCanonical(main.take(2) ++ fork)
+      assert(feed.byHash(fork.head.block.hash.toSeq).isDefined)
+      assert(feed.byHash(main.head.block.hash.toSeq).isDefined) // already pulled: no fetch
+      assert(m.fetchBlock.count == 4L, "fetch-backs count, cached bundles don't")
+      assert(m.fetchBlock.sumSeconds > 0.0 && m.fetchBlock.maxSeconds < 60.0)
+
+      val table = m.snapshot.toMap
+      assert(table("fetch_block_count") == 4.0)
+      assert(table("fetch_block_le_inf") == 4.0)
+      assert(table("rpc_failover") == 1.0)
+      assert(m.logLine.contains("fetch_block_count=4"))
+      assert(m.logLine.contains("rpc_failover=1"))
+    } finally live.stop()
+  }
 }

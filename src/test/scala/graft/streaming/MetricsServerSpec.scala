@@ -83,9 +83,30 @@ class MetricsServerSpec extends SparkSpec {
     assert(s.contains("# TYPE graft_new_block counter"))
     assert(s.contains("graft_new_block 0"))
     assert(s.contains("graft_insert_block_seconds_count 0"))
+    assert(s.contains("# TYPE graft_rpc_failover counter"))
+    assert(s.contains("graft_rpc_failover 0"))
+    assert(s.contains("# TYPE graft_fetch_block_seconds histogram"))
+    assert(s.contains("graft_fetch_block_seconds_count 0"))
     // every non-comment line is `name[{labels}] value`
     s.linesIterator.filterNot(_.startsWith("#")).foreach { l =>
       assert(l.split(' ').length == 2, s"malformed line: $l")
     }
+  }
+
+  test("render carries the feed's fetch histogram and failover counter") {
+    val m = new IngestMetrics
+    m.fetchBlock.observe(0.05)
+    m.fetchBlock.observe(0.7)
+    m.rpcFailover.incrementAndGet()
+    val s = MetricsServer.render(m)
+    assert(s.contains("graft_rpc_failover 1"))
+    assert(s.contains("graft_fetch_block_seconds_bucket{le=\"0.01\"} 0"))
+    assert(s.contains("graft_fetch_block_seconds_bucket{le=\"0.1\"} 1"))
+    assert(s.contains("graft_fetch_block_seconds_bucket{le=\"1.0\"} 2"))
+    assert(s.contains("graft_fetch_block_seconds_bucket{le=\"+Inf\"} 2"))
+    assert(s.contains("graft_fetch_block_seconds_sum 0.750000"))
+    assert(s.contains("graft_fetch_block_seconds_count 2"))
+    // the insert_block histogram is its own series, untouched
+    assert(s.contains("graft_insert_block_seconds_count 0"))
   }
 }
