@@ -27,8 +27,8 @@ import graft.operators.Relational
   * dimension) — by the PLANNER's size estimate or AQE's runtime
   * conversion, never an explicit broadcast() hint: a hint would force a
   * per-exchange broadcast JOB even inside the single-block ingest bracket,
-  * which disables auto-broadcast precisely because job launches (not data)
-  * dominate a single-digit-row batch. Transfers/accounts shuffle once on
+  * where job launches (not data) dominate a single-digit-row batch.
+  * Transfers/accounts shuffle once on
   * address; totals aggregate with map-side combine on (group, token).
   */
 object BalancePipeline {

@@ -489,7 +489,7 @@ object Jpeg {
     var pred = 0
     levels.foreach { level =>
       val qdc = level - 128 // DC of a flat block is 8·(level−128); Q=8
-      var diff = qdc - pred
+      val diff = qdc - pred
       pred = qdc
       var size = 0
       var a = math.abs(diff)

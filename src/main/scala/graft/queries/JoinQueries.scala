@@ -1,14 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
 import graft.sources.Tables
 
 /** SURVEY.md §2.3 joins + §2.7 set ops over the driver testdata. */
 object JoinQueries {
-  private val dec = DecimalType(38, 6)
-
   /** lineitem has no unique key ((l_orderkey, l_linenumber) repeats), so a
     * deterministic full-row output needs a total order over every column.
     */

@@ -80,43 +80,30 @@ object BalanceIngest {
       LatestAccounts -> state.latestAccounts,
       LatestTotals   -> state.latestTotals))
 
-  /** State swap for a processed block/span: the `ledger_block` marker is
-    * FIRST in the seq, so it promotes before the state dirs — a crash
+  /** State and watermark swap for a processed quiet block/span, as
+    * staging thunks and an ordered promote, so the quiet bracket can
+    * overlap the state staging with its history appends in ONE Par.run.
+    * The `ledger_block` marker is FIRST in the seq, so it promotes before
+    * the state dirs, and the balance watermark promotes LAST — a crash
     * anywhere inside the swap leaves the marker ahead of the watermark and
     * the recovery path rolls the partial swap back.
     */
-  private def commitState(spark: SparkSession, store: TableStore,
-                          state: BalanceLedger.State, through: Long): Unit = {
-    val (stage, promote) = commitStateStaged(spark, store, state, through)
-    Par.run(stage)
-    promote()
-  }
-
-  /** [[commitState]] split into its staging thunks and ordered promote, so
-    * the quiet-span bracket can overlap the state staging with its history
-    * appends in ONE Par.run. With `advanceHead` the balance watermark
-    * swap rides the same bracket as the LAST promote — crash between the
-    * state promotes and the head promote leaves marker > watermark, which
-    * the recovery path already rolls back, exactly as the separate
-    * replaceSmall did.
-    */
   private def commitStateStaged(spark: SparkSession, store: TableStore,
-                                state: BalanceLedger.State, through: Long,
-                                advanceHead: Boolean = false)
+                                state: BalanceLedger.State, through: Long)
       : (Seq[() => Unit], () => Unit) = {
     import spark.implicits._
     val marker = Seq(Tuple1(through)).toDF("number")
     val (stage, promoteAll) = store.stageReplaceAll(Seq(
       LedgerBlockTable -> marker,
       LatestAccounts   -> state.latestAccounts,
-      LatestTotals     -> state.latestTotals) ++
-      (if (advanceHead) Seq(BalanceHeadTable -> marker) else Nil))
+      LatestTotals     -> state.latestTotals,
+      BalanceHeadTable -> marker))
     (stage, () => {
       promoteAll()
       // driver-local markers: prime the cache so the next batch's ledger /
       // watermark reads cost no Spark job (promote order was owned above)
       store.primeSmall(LedgerBlockTable, marker)
-      if (advanceHead) store.primeSmall(BalanceHeadTable, marker)
+      store.primeSmall(BalanceHeadTable, marker)
     })
   }
 
@@ -226,8 +213,8 @@ object BalanceIngest {
           else processQuietSpan(spark, store, n, hi, client, state, metrics)
           stateCache = null // the span bracket always swaps state
           // the span's commit bracket already swapped the watermark (the
-          // head rides the state promote, advanceHead) — only the loop
-          // variable needs the advance
+          // head rides the state promote) — only the loop variable needs
+          // the advance
           wm = math.max(wm, hi)
           n = hi + 1
       }
@@ -248,7 +235,7 @@ object BalanceIngest {
       newSubLimit: Int,
       state0: BalanceLedger.State,
       advance: Long => Unit,
-      metrics: Option[IngestMetrics] = None): Boolean = {
+      metrics: Option[IngestMetrics]): Boolean = {
     import spark.implicits._
     val state = state0
     val transfers = store.readRange(ChainIngest.TransfersTable, "block_number", n, n, null)
@@ -407,12 +394,12 @@ object BalanceIngest {
     * a single-stage job (the tiny sides broadcast job-free from
     * LocalTableScan) instead of the span DAG's serialized shuffle chains.
     *
-    * Semantics are EXACTLY [[processQuietSpan]] at lo == hi — same touched
-    * set, same resolver request set, same coalesce/`< n` base contracts,
-    * same commit bracket and crash protocol (deleteRange probe, staged
-    * promote order, watermark rides the last promote). The span/per-block
-    * equivalence property spec and the full-lifecycle specs gate the two
-    * paths against each other.
+    * Semantics are [[processQuietSpan]]'s, applied to one block: same
+    * touched set, same resolver request set, same coalesce/`< n` base
+    * contracts, same commit bracket and crash protocol (deleteRange probe,
+    * staged promote order, watermark rides the last promote). The
+    * span/per-block equivalence property spec and the full-lifecycle specs
+    * gate the two paths against each other.
     */
   private def processSingleQuietBlock(
       spark: SparkSession,
@@ -420,7 +407,7 @@ object BalanceIngest {
       n: Long,
       client: BalanceClient,
       state0: BalanceLedger.State,
-      metrics: Option[IngestMetrics] = None): Unit = {
+      metrics: Option[IngestMetrics]): Unit = {
     import scala.collection.immutable.ArraySeq
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -625,7 +612,7 @@ object BalanceIngest {
     store.deleteRangeAll(
       Seq(AccountsTable, TotalsTable, MatchedTable).map(_ -> "block_number"), n, n)
     val (commitStage, promoteCommit) =
-      commitStateStaged(spark, store, next, n, advanceHead = true)
+      commitStateStaged(spark, store, next, n)
     metrics.foreach(_.changedAccountPerBlock.set(
       snaps.map(_._2).distinct.size.toLong)) // driver-known, zero jobs
     Par.run(Seq(
@@ -657,7 +644,7 @@ object BalanceIngest {
       hi: Long,
       client: BalanceClient,
       state0: BalanceLedger.State,
-      metrics: Option[IngestMetrics] = None): Unit = {
+      metrics: Option[IngestMetrics]): Unit = {
     val subs      = store.readOr(SubsTable, null)
     val transfers = store.readRange(ChainIngest.TransfersTable, "block_number", lo, hi, null)
     val txs       = store.readRange(ChainIngest.TxTable, "block_number", lo, hi, null)
@@ -669,14 +656,9 @@ object BalanceIngest {
     // EXPLICITLY: this span DAG is the backfill hot path, and the hint
     // pins the broadcast in the static plan (no AQE conversion round,
     // futures overlap the span scan)
-    // ... except on a SINGLE-block span (the head-follow steady state,
-    // declared below): there every shuffle is one task inside the same
-    // job, while each broadcast hint materializes through a SEPARATE job
-    // PER CONSUMING ACTION — measured as 6-8 extra job launches per block
-    val hintB: DataFrame => DataFrame = if (lo == hi) identity else broadcast
     val active    = subs.filter(col("block_number") > 0L)
-    val subAddrs  = hintB(active.select("address").distinct())
-    val subGroups = hintB(active.select("address", "group").dropDuplicates("address"))
+    val subAddrs  = broadcast(active.select("address").distinct())
+    val subGroups = broadcast(active.select("address", "group").dropDuplicates("address"))
 
     // per-block changed ∩ subscribed (BalancePipeline.changedAddresses with
     // block_number kept)
@@ -713,36 +695,21 @@ object BalanceIngest {
     // below the span), and on a replay below the watermark both paths
     // identically treat the key as having no prior, instead of this one
     // silently diffing against future state.
-    //
-    // A SINGLE-block span (the head-follow steady state) has exactly one
-    // row per (token, address), so the in-span lag is identically null —
-    // elide the window and its shuffle instead of planning a no-op stage.
-    val single = lo == hi
     val base = state0.latestAccounts
       .filter(col("block_number") < lo)
       .select(col("token"), col("address"), col("balance").as("__base"))
     val wKey = Window.partitionBy("token", "address").orderBy("block_number")
-    // checkpointed: snaps feeds FOUR downstream actions (accounts append,
-    // totals via deltas, both state folds) — without the checkpoint each
-    // one re-runs the resolver pass and the base/group joins
-    val joined = resolved
+    // checkpointed eagerly: snaps feeds FOUR downstream actions (accounts
+    // append, totals via deltas, both state folds) — materializing the
+    // windowed span once, before anything fans out, keeps each of them
+    // from re-running the resolver pass and the base/group joins
+    val snaps = resolved
       .join(base, Seq("token", "address"), "left_outer")
       .join(subGroups, Seq("address"))
-    // Eager on multi-block spans (materialize the windowed span once,
-    // before anything fans out). LAZY on a single block: the first
-    // consumer task in the concurrent commit bracket computes it and the
-    // block-manager's per-partition cache lock makes every concurrent
-    // sibling WAIT and read the cached rows — compute-once (and the
-    // resolver client called once per triple) without paying a serialized
-    // materialization job + plan round-trip before the bracket.
-    val snaps = (if (single)
-        joined.withColumn("delta",
-          (col("balance") - coalesce(col("__base"), zeroWei)).cast(wei))
-      else joined
-        .withColumn("__prev", lag(col("balance"), 1).over(wKey))
-        .withColumn("delta",
-          (col("balance") - coalesce(col("__prev"), col("__base"), zeroWei)).cast(wei)))
-      .localCheckpoint(eager = !single)
+      .withColumn("__prev", lag(col("balance"), 1).over(wKey))
+      .withColumn("delta",
+        (col("balance") - coalesce(col("__prev"), col("__base"), zeroWei)).cast(wei))
+      .localCheckpoint(eager = true)
 
     // matched transfers over the whole span (J2), landed heights only
     val matched = Relational.semiJoinAny(
@@ -788,36 +755,30 @@ object BalanceIngest {
       .select(col("group"), col("token"), col("balance").as("__tbase"))
     val wTot = Window.partitionBy("group", "token").orderBy("block_number")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // single-block spans have one row per (group, token): the running
-    // total IS the delta — elide the cumulative window and its shuffle.
-    // Same eager/lazy checkpoint split as snaps: multi-block spans
-    // materialize the cumulative window once up front; a single block
-    // computes lazily under the cache lock inside the commit bracket.
-    val totals0 = deltas
+    // checkpointed eagerly like snaps: the cumulative window materializes
+    // once, up front
+    val totals = deltas
       .join(feeByGroup, Seq("block_number", "group", "token"), "full_outer")
       .join(rewardByGroup, Seq("block_number", "group", "token"), "full_outer")
       .join(totBase, Seq("group", "token"), "left_outer")
       .select(
         col("block_number"), col("token"), col("group"),
         (coalesce(col("__tbase"), zeroWei) +
-          (if (single) coalesce(col("delta"), zeroWei)
-           else sum(coalesce(col("delta"), zeroWei)).over(wTot))).cast(wei).as("balance"),
+          sum(coalesce(col("delta"), zeroWei)).over(wTot)).cast(wei).as("balance"),
         coalesce(col("tx_fee"), zeroWei).cast(wei).as("tx_fee"),
         coalesce(col("miner_reward"), zeroWei).cast(wei).as("miner_reward"),
         coalesce(col("uncles_reward"), zeroWei).cast(wei).as("uncles_reward"))
-    val totals = totals0.localCheckpoint(eager = !single)
+      .localCheckpoint(eager = true)
 
-    // the span's latest row per key; for a single block every key appears
-    // once, so the rank window collapses to the rows themselves
-    def latest(df: DataFrame, keys: Seq[String]): DataFrame =
-      if (single) df else Relational.latestPerKey(df, keys, Seq(col("block_number")))
+    // the span's latest row per key
+    val last = Seq(col("block_number"))
     val next = BalanceLedger.State(
       latestAccounts = BalanceLedger.upsert(state0.latestAccounts,
-        latest(snaps.select("token", "address", "block_number", "balance"),
-          Seq("token", "address")),
+        Relational.latestPerKey(snaps.select("token", "address", "block_number", "balance"),
+          Seq("token", "address"), last),
         Seq("token", "address")),
       latestTotals = BalanceLedger.upsert(state0.latestTotals,
-        latest(totals, Seq("group", "token")),
+        Relational.latestPerKey(totals, Seq("group", "token"), last),
         Seq("group", "token")))
 
     // replay-idempotent bracket over the whole span: one union probe over
@@ -831,7 +792,7 @@ object BalanceIngest {
     store.deleteRangeAll(
       Seq(AccountsTable, TotalsTable, MatchedTable).map(_ -> "block_number"), lo, hi)
     val (commitStage, promoteCommit) =
-      commitStateStaged(spark, store, next, hi, advanceHead = true)
+      commitStateStaged(spark, store, next, hi)
     val gauge = metrics.toSeq.map { m => () =>
       m.changedAccountPerBlock.set(
         snaps.select("block_number", "address").distinct().count() / (hi - lo + 1))

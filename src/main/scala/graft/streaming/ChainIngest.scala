@@ -11,8 +11,9 @@ import graft.chain._
   *
   *   - source: an unbounded stream of block bundles (block + receipts +
   *     transfer logs — the per-block RPC fetches of indexer.go:443-467 made
-  *     columnar). Tests drive a memory/file stream; production would plug a
-  *     custom MicroBatchStream over the WS subscription.
+  *     columnar). Tests drive a memory/file stream or a queue subscription;
+  *     production reads the DSv2 `BundleStreamProvider` source over the
+  *     RPC/WebSocket feed.
   *   - admission (T2): a sequential fold with the reference's exact rules —
   *     heads at ≤ the current height are ignored (indexer.go:141-144); a
   *     non-contiguous head is admitted only when its total difficulty beats

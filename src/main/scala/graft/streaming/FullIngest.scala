@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, min}
+import org.apache.spark.sql.functions.{col, min}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.chain._
 
@@ -98,6 +98,7 @@ object FullIngest {
     * blocks, and a newly-landed height turns a cached negative lookup
     * stale (the reference's indexer evicts its ARC caches the same way on
     * both the write and the rewind path, store/block_header/cache.go).
+    * The batch sets no SQL conf: it runs under `spark`'s conf as built.
     */
   def processBatch(
       spark: SparkSession,
@@ -112,84 +113,6 @@ object FullIngest {
       metrics: Option[IngestMetrics] = None,
       mirror: Option[JdbcMirror] = None): Unit = {
     val t0 = System.nanoTime()
-    // Head-follow steady state delivers ONE block per micro-batch, and the
-    // per-block bracket is job-launch-bound, not data-bound: per-job
-    // attribution showed 36 of 64 jobs on a quiet single-block batch were
-    // AQE stage-materialization submissions (perfbench's traced
-    // head-follow run re-measures this) — runtime re-planning buys
-    // nothing on a 2-row batch and pays a scheduling round-trip per
-    // shuffle stage. Scope AQE off for single-block batches only (the
-    // limit-2 probe costs one bounded job); catch-up spans keep AQE for
-    // its skew/coalesce value on real backfill volumes.
-    //
-    // CONTRACT: these are SESSION-scoped conf flips on `spark`, the session
-    // the batch DataFrame is bound to, and they reach only the plans that
-    // session runs. Under `start` that is the streaming query's clone of
-    // the session, while TableStore opens every table on the session it was
-    // built with: a plan rooted in the batch (or made on `spark`) runs under
-    // the scope, a plan rooted in a store-opened table (state and range
-    // reads, and what is derived from them) runs under the store session's
-    // own conf and never sees it. Only a caller that passes the store's own session (the
-    // specs' direct processBatch calls) scopes both. The session must not
-    // run concurrent queries while a batch is in flight. That holds by
-    // construction here: ChainIngest's micro-batch loop is strictly
-    // sequential and FullIngest owns its session; serve ad-hoc queries from
-    // a separate SparkSession (newSession()) sharing the SparkContext,
-    // never from the ingest session.
-    // take(2) instead of limit(2).count(): executeTake short-circuits (a
-    // LocalRelation batch — the specs' and bench's shape — answers with
-    // NO job; a source batch pays one bounded job, same as before)
-    val singleBlock = batch.select(lit(1)).take(2).length < 2
-    val aqeKey   = "spark.sql.adaptive.enabled"
-    val shufKey  = "spark.sql.shuffle.partitions"
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val wscgKey  = "spark.sql.codegen.wholeStage"
-    val aqePrev   = spark.conf.get(aqeKey, "true")
-    val shufPrev  = spark.conf.get(shufKey, "200")
-    val bcastPrev = spark.conf.get(bcastKey, "10485760")
-    val wscgPrev  = spark.conf.get(wscgKey, "true")
-    if (singleBlock) {
-      spark.conf.set(aqeKey, "false")
-      // one block ≈ single-digit rows per relation: every static shuffle
-      // should be ONE task (AQE would have coalesced to this; with it off
-      // the static setting must say so)
-      spark.conf.set(shufKey, "1")
-      // every BroadcastExchange materializes through a SEPARATE Spark job
-      // (the CompletableFuture submissions a traced run attributes): on a
-      // single-digit-row batch a 1-partition shuffle join is stages inside
-      // the SAME job, so planner-chosen broadcasts only add job launches.
-      // Explicit broadcast() hints in operator code are unaffected.
-      spark.conf.set(bcastKey, "-1")
-      // whole-stage codegen compiles a fresh class per distinct stage
-      // shape (~50-300 ms of Janino each) to speed up row THROUGHPUT the
-      // single-digit-row bracket never has; interpreted execution skips
-      // the compile entirely. Catch-up spans keep codegen — there the
-      // row volume pays for it.
-      spark.conf.set(wscgKey, "false")
-    }
-    try processBatchInner(spark, store, batch, client, maxBlocksPerChunk,
-      reorgWindow, newSubLimit, cache, fetchBack, metrics, mirror, t0)
-    finally if (singleBlock) {
-      spark.conf.set(aqeKey, aqePrev)
-      spark.conf.set(shufKey, shufPrev)
-      spark.conf.set(bcastKey, bcastPrev)
-      spark.conf.set(wscgKey, wscgPrev)
-    }
-  }
-
-  private def processBatchInner(
-      spark: SparkSession,
-      store: TableStore,
-      batch: DataFrame,
-      client: BalanceClient,
-      maxBlocksPerChunk: Int,
-      reorgWindow: Long,
-      newSubLimit: Int,
-      cache: Option[CachedChainStore],
-      fetchBack: Seq[Byte] => Option[Schemas.Bundle],
-      metrics: Option[IngestMetrics],
-      mirror: Option[JdbcMirror],
-      t0: Long): Unit = {
     // Downstream retraction runs as ChainIngest's onRetract hook — INSIDE
     // the reorg transaction, before the chain deletes — not after the
     // batch: a crash anywhere then converges on the checkpoint replay

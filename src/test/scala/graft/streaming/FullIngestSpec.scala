@@ -157,6 +157,70 @@ class FullIngestSpec extends SparkSpec {
     } finally if (q.isActive) q.stop()
   }
 
+  test("head-follow shape: one head per trigger through a 2-deep reorg lands the winning chain") {
+    // the live indexer's shape: one block per micro-batch, every
+    // subscription active (so each plain head is a quiet single block),
+    // and a reorg head whose two retracted ancestors arrive by fetch-back
+    val store = TableStore(spark, Files.createTempDirectory("graft-follow").toString, bucketSize = 4L)
+    val subs = Seq((1L, 1L, 1L, alice), (2L, 1L, 2L, bob))
+      .toDF("id", "block_number", "group", "address")
+    store.replace(BalanceIngest.SubsTable, subs)
+    val main = mkChain(1, 6, hash32(0), txsAt = Map(
+      2L -> Seq(tx(1, alice, carol, 500, gasPrice = 100L)),
+      5L -> Seq(tx(2, bob, alice, 300, gasPrice = 150L))))
+    // 5'..7' on top of 4 and heavier: the head 7' retracts 5 and 6
+    val fork = mkChain(5, 7, main(3).block.hash, difficulty = 5000L, hashSeedBase = 9000,
+      txsAt = Map(6L -> Seq(tx(3, alice, bob, 700, gasPrice = 200L))))
+    val forkByHash = fork.map(b => b.block.hash.toSeq -> b).toMap
+
+    val subId = "full-follow"
+    val sub   = new QueueHeadSubscription
+    HeadSubscriptions.register(subId, sub)
+    val bundles = spark.readStream
+      .format(classOf[BundleStreamProvider].getName)
+      .option(BundleStream.SubscriptionOption, subId)
+      .option(BundleStream.MaxBlocksOption, "1")
+      .load()
+    val checkpoint = Files.createTempDirectory("graft-follow-ckpt").toString
+    val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("follow"))
+    val q = FullIngest.start(bundles, store, client, checkpoint,
+      fetchBack = h => sub.byHash(h).orElse(forkByHash.get(h)))
+    try {
+      (main :+ fork.last).foreach { b =>
+        sub.push(b)
+        q.processAllAvailable()
+        assert(ChainIngest.loadHead(store).exists(_.number == b.block.number))
+        assert(BalanceIngest.processedThrough(store).contains(b.block.number))
+      }
+      assert(q.recentProgress.count(_.numInputRows > 0) == main.length + 1,
+        "one micro-batch per pushed head")
+    } finally q.stop()
+    val reorgs = store.readOr(ChainIngest.ReorgsTable, null).collect()
+    assert(reorgs.length == 1 && reorgs(0).getAs[Long]("from") == 5L)
+
+    // one direct batch of the winning chain on a fresh store
+    val direct = TableStore(spark, Files.createTempDirectory("graft-follow-direct").toString,
+      bucketSize = 4L)
+    direct.replace(BalanceIngest.SubsTable, subs)
+    FullIngest.processBatch(spark, direct, (main.take(4) ++ fork).toDS().toDF(),
+      BlockAwareBalanceClient(spark.sparkContext.longAccumulator("follow-direct")))
+
+    def rows(s: TableStore, t: String): Seq[String] =
+      s.readOr(t, null).collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.map("%02x".format(_)).mkString
+        case x => String.valueOf(x)
+      }.mkString("|")).toSeq.sorted
+    Seq(ChainIngest.HeadersTable, ChainIngest.TxTable, ChainIngest.ReceiptsTable,
+        ChainIngest.LogsTable, ChainIngest.TdTable, ChainIngest.TransfersTable,
+        ChainIngest.HeadTable, BalanceIngest.AccountsTable, BalanceIngest.TotalsTable,
+        BalanceIngest.MatchedTable, BalanceIngest.SubsTable, BalanceIngest.LatestAccounts,
+        BalanceIngest.LatestTotals, BalanceIngest.BalanceHeadTable,
+        BalanceIngest.LedgerBlockTable).foreach { t =>
+      assert(rows(store, t) == rows(direct, t), s"table $t diverged from the direct batch")
+    }
+    assert(rows(store, BalanceIngest.AccountsTable).nonEmpty)
+  }
+
   test("a reorg invalidates the serving cache through the composed pipeline") {
     val store = TableStore(spark, Files.createTempDirectory("graft-cache-e2e").toString, bucketSize = 4L)
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("cache-e2e"))

@@ -93,4 +93,22 @@ class IngestMetricsSpec extends SparkSpec {
       assert(m.logLine.contains("rpc_failover=1"))
     } finally live.stop()
   }
+
+  test("histogram buckets split plain heads from reorg heads") {
+    val m = new IngestMetrics
+    // a plain head lands near 6 s, a reorg head near 16 s
+    Seq(6.0, 9.0, 12.0, 18.0).foreach(m.insertBlock.observe)
+    assert(m.insertBlock.bucketCounts.count(_ == 1L) == 4, "each in a bucket of its own")
+    val table = m.snapshot.toMap
+    assert(table("insert_block_le_5.0") == 0.0)
+    assert(table("insert_block_le_7.5") == 1.0)
+    assert(table("insert_block_le_10.0") == 2.0)
+    assert(table("insert_block_le_15.0") == 3.0)
+    assert(table("insert_block_le_20.0") == 4.0)
+    assert(table("insert_block_le_inf") == 4.0)
+    // the earlier bounds stay, so their scraped series continue
+    Seq(0.01, 0.1, 0.5, 1.0, 5.0, 10.0, 60.0).foreach { b =>
+      assert(m.insertBlock.bounds.contains(b), s"bound $b")
+    }
+  }
 }
