@@ -107,6 +107,14 @@ object PipelineRunner {
     */
   val FaceNames: Seq[String] = BatchFaceNames ++ Seq("sessions", "ivfIndex", "retrain", "release")
 
+  /** The category-partitioned state tables of each face that keeps any:
+    * their live file counts are exported after every batch.
+    */
+  private val StateTables: Map[String, Seq[String]] = Map(
+    "chunkDedup" -> Seq("chunk_hashes"),
+    "lshDedup"   -> Seq(StreamingDedup.SigsTable, StreamingDedup.PostingsTable),
+    "ivfIndex"   -> Seq("ivf_postings"))
+
   final case class Config(
       inputDir: String,
       dataDir: String,
@@ -316,6 +324,15 @@ object PipelineRunner {
     val vectors  = new AtomicLong
     val retrains = new AtomicLong
     val batchSeconds = new LatencyHistogram
+    /** Live data files per category state table, as of its face's last batch. */
+    val stateFiles = new scala.collection.concurrent.TrieMap[String, Long]
+
+    /** Set `stateFiles` for `tables` from the store's file counts, which
+      * come from its seeded status cache: no listing, no Spark job.
+      */
+    def recordStateFiles(store: TableStore, tables: Seq[String]): Unit =
+      tables.foreach(t => stateFiles.put(t, store.fileCounts(t).values.sum))
+
     def render(): String = {
       val sb = new StringBuilder
       def metric(name: String, kind: String, v: Long): Unit = {
@@ -328,6 +345,13 @@ object PipelineRunner {
       metric("graft_pipeline_vectors", "counter", vectors.get())
       metric("graft_pipeline_retrains", "counter", retrains.get())
       MetricsServer.renderHistogram(sb, "graft_pipeline_batch_seconds", batchSeconds)
+      if (stateFiles.nonEmpty) {
+        sb.append("# TYPE graft_pipeline_state_files gauge\n")
+        stateFiles.toSeq.sortBy(_._1).foreach { case (t, n) =>
+          sb.append("graft_pipeline_state_files{table=\"").append(t).append("\"} ")
+            .append(n).append('\n')
+        }
+      }
       sb.toString
     }
   }
@@ -382,6 +406,8 @@ object PipelineRunner {
       pm.batches.incrementAndGet()
       pm.docs.addAndGet(b.count())
       pm.batchSeconds.observe((System.nanoTime() - t0) / 1e9)
+      pm.recordStateFiles(store,
+        cfg.faces.filter(BatchFaceNames.contains).flatMap(StateTables.getOrElse(_, Nil)))
     }
   }
 
@@ -527,7 +553,7 @@ object PipelineRunner {
               if (rep.swapped) { metrics.retrains.incrementAndGet(); () }
             }
             metrics.vectors.addAndGet(b.count())
-            ()
+            metrics.recordStateFiles(store, StateTables("ivfIndex"))
           }
           .start())
       }

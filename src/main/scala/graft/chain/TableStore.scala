@@ -1,7 +1,8 @@
 package graft.chain
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
+import org.apache.hadoop.hdfs.DistributedFileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
@@ -121,6 +122,16 @@ final case class TableStore(spark: SparkSession, root: String,
   /** Driver-side manifest cache — same single-writer contract. */
   private val manCache =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[String]]]()
+
+  /** This store's own namespace in Spark's shared file-status cache, held
+    * for the store's lifetime: every `getOrCreate` returns a fresh, empty
+    * client, so one per open would re-list every dir it opens (as a
+    * Spark job past the 32-path parallel-listing threshold). Committed
+    * dirs are UUID-named and immutable, and a current manifest never
+    * names a GC'd dir, so an entry never goes stale; every commit seeds
+    * the dirs it adds (see [[seed]]), and nothing is ever invalidated.
+    */
+  private val statusCache = FileStatusCache.getOrCreate(spark)
 
   /** Drop every cached layer of `table`, in dependency order: a relation
     * is built from the manifest and a row-cache entry from the relation,
@@ -351,8 +362,50 @@ final case class TableStore(spark: SparkSession, root: String,
     rel
   }
 
-  private def hasDataFiles(p: Path): Boolean =
-    fs.exists(p) && fs.listStatus(p).exists(st => st.isFile && !hidden(st.getPath.getName))
+  /** The data files directly under `p`, as the statuses Spark's own
+    * leaf listing returns (`HadoopFSUtils`): located statuses from one
+    * `listLocatedStatus` on HDFS, block locations added per file
+    * elsewhere, so a scan over a seeded dir keeps its locality.
+    */
+  private def dataFiles(p: Path): Array[FileStatus] = fs match {
+    case _: DistributedFileSystem =>
+      val it = fs.listLocatedStatus(p)
+      val out = Array.newBuilder[FileStatus]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile && !hidden(st.getPath.getName)) out += st
+      }
+      out.result()
+    case _ =>
+      fs.listStatus(p).filter(st => st.isFile && !hidden(st.getPath.getName)).map { f =>
+        new LocatedFileStatus(f.getLen, false, f.getReplication, f.getBlockSize,
+          f.getModificationTime, 0L, null, null, null, null, f.getPath,
+          false, false, false, fs.getFileBlockLocations(f, 0L, f.getLen))
+      }
+  }
+
+  /** List a freshly staged leaf dir once and seed [[statusCache]] with its
+    * data files, so no later open or file count lists it again; false
+    * (nothing seeded) when it holds no data file.
+    */
+  private def seed(p: Path): Boolean = fs.exists(p) && {
+    val files = dataFiles(p)
+    if (files.nonEmpty) statusCache.putLeafFiles(fs.makeQualified(p), files)
+    files.nonEmpty
+  }
+
+  /** The data files of a committed rel-dir: from [[statusCache]], or
+    * listed and seeded once when this store did not write it (a dir
+    * committed before a restart, or an evicted entry).
+    */
+  private def leafFiles(table: String, rel: String): Array[FileStatus] = {
+    val p = fs.makeQualified(new Path(dir(table), rel))
+    statusCache.getLeafFiles(p).getOrElse {
+      val files = dataFiles(p)
+      statusCache.putLeafFiles(p, files)
+      files
+    }
+  }
 
   /** The `<key>=<v>` subdirs of a freshly staged partitioned write that
     * hold data files, as "<rel>/<key>=<v>" rel-dirs keyed by their
@@ -364,7 +417,7 @@ final case class TableStore(spark: SparkSession, root: String,
     if (!fs.exists(top)) Map.empty
     else fs.listStatus(top).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.contains('=') &&
-        hasDataFiles(st.getPath))
+        seed(st.getPath))
       .map(st => st.getPath.getName -> s"$rel/${st.getPath.getName}")
       .toMap
   }
@@ -403,11 +456,13 @@ final case class TableStore(spark: SparkSession, root: String,
     * key, not data). Paths are qualified because the index matches
     * partition paths against the qualified paths its listing returns —
     * an unqualified one matches no file and silently reads empty.
-    * Listings go through the session's shared file-status cache: a
-    * committed dir never changes, so each dir is listed once, and an
-    * open after a commit lists only the dirs that commit added (a
-    * category table holds one dir per key per append until compaction).
-    * For the same reason nothing re-lists an opened relation (no
+    * Listings go through the store's own seeded [[statusCache]]: every
+    * dir this store commits was listed once at commit and seeded there,
+    * so an open lists nothing it wrote (a category table holds one dir
+    * per key per append until compaction — 256 keys would otherwise be
+    * a listing job per open), and a dir committed before this store was
+    * built is listed once, at its first open. A committed dir never
+    * changes, so nothing re-lists an opened relation (no
     * `refreshByPath`): a plan over generation N stays a plan over N, and
     * re-listing it after GC would read its dirs as silently empty.
     */
@@ -429,7 +484,7 @@ final case class TableStore(spark: SparkSession, root: String,
       })
     }
     val index = new InMemoryFileIndex(spark, dirs.map(_._2), Map.empty, Some(dataSchema),
-      FileStatusCache.getOrCreate(spark), Some(spec))
+      statusCache, Some(spec))
     val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema, dataSchema,
       None, new ParquetFileFormat, Map.empty)(spark))
     if (catName.isEmpty) df else df.select(schema.fieldNames.map(col).toSeq: _*)
@@ -455,15 +510,14 @@ final case class TableStore(spark: SparkSession, root: String,
   private def hidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
-  /** Data files across a logical key's physical dirs. */
+  /** Data files across a logical key's physical dirs, from the cache. */
   private def physFileCount(table: String, rels: Seq[String]): Long =
-    rels.map { r =>
-      fs.listStatus(new Path(dir(table), r)).count(st => st.isFile && !hidden(st.getPath.getName))
-    }.sum.toLong
+    rels.map(leafFiles(table, _).length.toLong).sum
 
   /** Live data files per logical key ("" for a plain table, "bucket=N",
     * "<col>=<v>") of the current generation — the state-table file counts
-    * an operator watches; empty when the table is absent.
+    * an operator watches; empty when the table is absent. Served from the
+    * seeded status cache: no listing of a dir this store committed.
     */
   def fileCounts(table: String): Map[String, Long] =
     manEntries(table).map { case (k, ds) => k -> physFileCount(table, ds) }
@@ -525,7 +579,7 @@ final case class TableStore(spark: SparkSession, root: String,
   def append(table: String, df: DataFrame): Unit = {
     val rel = stagePhys(table, df)
     rememberSchema(table, df.schema)
-    if (hasDataFiles(new Path(dir(table), rel))) {
+    if (seed(new Path(dir(table), rel))) {
       val m = manEntries(table)
       commitManifest(table, m.updated("", m.getOrElse("", Seq.empty) :+ rel))
     }
@@ -550,14 +604,26 @@ final case class TableStore(spark: SparkSession, root: String,
     * value is its own manifest key, so a read carrying an `isin`
     * predicate on `partCol` prunes to exactly the probed partitions before
     * any file opens. Unlike `appendBucketed` the column survives the read
-    * — it IS data, not a derived bucket.
+    * — it IS data, not a derived bucket. The write is spread over every
+    * core by [[byKey]], one file per key per append.
     */
   def appendPartitioned(table: String, df: DataFrame, partCol: String): Unit = {
-    val rel = stagePhys(table, df, partitionBy = Some(partCol))
+    val rel = stagePhys(table, byKey(df, partCol), partitionBy = Some(partCol))
     rememberSchema(table, df.schema)
     registerStagedPartitions(table, rel)
     invalidate(table) // after the mutation — see append
   }
+
+  /** `df` hash-partitioned on `partCol` into the session's shuffle
+    * partition count (= cores), so a partitioned write runs one task per
+    * core and each key lands in exactly one task: one file per key. The
+    * count is explicit so AQE cannot coalesce the write back to one task
+    * (which would write every key's file serially). Bucketed appends
+    * stay unshuffled: head-follow writes one bucket per append, and a
+    * shuffle there would add a stage to every head write.
+    */
+  private def byKey(df: DataFrame, partCol: String): DataFrame =
+    df.repartition(spark.sessionState.conf.numShufflePartitions, col(partCol))
 
   /** Add every data-holding `<key>=<v>` subdir of a freshly staged
     * partitioned write under its logical key and commit once.
@@ -630,10 +696,13 @@ final case class TableStore(spark: SparkSession, root: String,
         if (dirty((t, key))) {
           val rel = stagePhys(t, bucket(t, key).filter(!col(rc).between(from, to)))
           state(t) =
-            if (hasDataFiles(new Path(dir(t), rel))) state(t).updated(key, Seq(rel))
+            if (seed(new Path(dir(t), rel))) state(t).updated(key, Seq(rel))
             else state(t) - key
-        } else if (physFileCount(t, manEntries(t)(key)) > CompactFiles)
-          state(t) = state(t).updated(key, Seq(stagePhys(t, bucket(t, key).coalesce(1))))
+        } else if (physFileCount(t, manEntries(t)(key)) > CompactFiles) {
+          val rel = stagePhys(t, bucket(t, key).coalesce(1))
+          seed(new Path(dir(t), rel))
+          state(t) = state(t).updated(key, Seq(rel))
+        }
       }
     }
     touched.foreach { case (t, _) =>
@@ -692,7 +761,7 @@ final case class TableStore(spark: SparkSession, root: String,
         rememberSchema(t, df.schema)
         val entries: Map[String, Seq[String]] =
           if (partitionBy.contains(t)) stagedKeys(t, rel).map { case (k, d) => k -> Seq(d) }
-          else if (hasDataFiles(new Path(dir(t), rel))) Map("" -> Seq(rel))
+          else if (seed(new Path(dir(t), rel))) Map("" -> Seq(rel))
           else Map.empty
         commitManifest(t, entries)
       }
@@ -727,14 +796,16 @@ final case class TableStore(spark: SparkSession, root: String,
     * `chunk_hashes`). Each micro-batch's [[appendPartitioned]] lands one
     * file-set per touched partition and nothing ever range-deletes them,
     * so after 10⁴ batches a partition-pruned probe would open 10⁴ small
-    * files: any partition in `parts` (default: all) whose data-file count
-    * exceeds `maxFiles` is rewritten to one file in a fresh dir swapped in
-    * by one manifest commit. Rows (including their batch_id replay tags)
-    * are byte-identical, so every replay and probe invariant is
-    * untouched. The partition column lives in the key, not the files —
-    * the rewrite drops it and writes the file shape back. Callers trigger
-    * with the batch's TOUCHED partitions so the listing cost scales with
-    * the batch, not the table. Returns the number of partitions rewritten.
+    * files: every partition in `parts` (default: all) whose data-file
+    * count exceeds `maxFiles` is rewritten to one file per key, ALL of
+    * them in ONE partitioned staged write ([[byKey]]: one job spread over
+    * every core, however many keys cross the threshold together — and a
+    * batch that touches every key makes them all cross together) swapped
+    * in by one manifest commit. Rows (including their batch_id replay
+    * tags) are byte-identical, so every replay and probe invariant is
+    * untouched. File counts come from the seeded status cache, so the
+    * threshold check lists nothing. Returns the number of partitions
+    * rewritten.
     */
   def compactPartitions(table: String, partCol: String,
                         parts: Option[Seq[Any]] = None,
@@ -747,9 +818,16 @@ final case class TableStore(spark: SparkSession, root: String,
     }
     val fat = keys.distinct.filter(k => m.get(k).exists(physFileCount(table, _) > maxFiles))
     if (fat.nonEmpty) {
-      commitManifest(table, fat.foldLeft(m) { (acc, k) =>
-        acc.updated(k, Seq(stagePhys(table, open(table, Map(k -> m(k))).drop(partCol).coalesce(1))))
-      })
+      val rel = stagePhys(table, byKey(open(table, m.view.filterKeys(fat.toSet).toMap), partCol),
+        partitionBy = Some(partCol))
+      val subs = stagedKeys(table, rel)
+      // each key's rows were read back through its typed partition value;
+      // a value whose rewritten dir name differs would drop the key's rows
+      if (subs.keySet != fat.toSet)
+        throw new IllegalStateException(s"table '$table': compaction of ${fat.size} keys " +
+          s"staged keys ${subs.keySet.diff(fat.toSet).take(3).mkString(", ")} outside them " +
+          s"or missed ${fat.toSet.diff(subs.keySet).take(3).mkString(", ")}; nothing committed")
+      commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) => acc.updated(k, Seq(d)) })
       invalidate(table)
     }
     fat.size

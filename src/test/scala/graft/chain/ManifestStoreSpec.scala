@@ -151,6 +151,36 @@ class ManifestStoreSpec extends SparkSpec {
     assert(got() == expected.toSet)
   }
 
+  test("compaction rewrites every fat key in one staged dir and one commit") {
+    val store = fresh()
+    // 3 appends over 40 keys put every key at 3 files, past maxFiles = 2
+    // in the same call, as a batch touching every hash prefix does
+    val expected = for (i <- 1 to 3; s <- 0 until 40) yield (i * 100L + s, s)
+    (1 to 3).foreach { i =>
+      store.appendPartitioned("p", expected.filter(_._1 / 100 == i).toDF("n", "shard"), "shard")
+    }
+    def got(): Set[(Long, Int)] = store.readOr("p", null).select("n", "shard").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    def entries(): Seq[(String, String)] = {
+      val tdir = Paths.get(store.root, "p")
+      Files.readString(tdir.resolve(s".manifest.${genVersion(tdir.resolve(".gen"))}"))
+        .linesIterator.filter(l => l.nonEmpty && l != "#end")
+        .map { l => val Array(k, d) = l.split('\t'); (k, d) }.toSeq
+    }
+    val before = entries().map(_._2.takeWhile(_ != '/')).toSet
+    assert(store.fileCounts("p").values.toSet == Set(3L))
+    assert(store.compactPartitions("p", "shard", maxFiles = 2) == 40)
+    val after = entries()
+    assert(after.map(_._1).toSet == (0 until 40).map(s => s"shard=$s").toSet)
+    assert(after.size == 40, "one dir per key after compaction")
+    val tops = after.map(_._2.takeWhile(_ != '/')).toSet
+    assert(tops.size == 1 && tops.head.startsWith(".d-") && !before.contains(tops.head),
+      s"every key must lie under one new staged dir, saw $tops")
+    assert(after.forall { case (k, d) => d == s"${tops.head}/$k" })
+    assert(store.fileCounts("p").values.toSet == Set(1L), "one file per key")
+    assert(got() == expected.toSet)
+  }
+
   test("empty appends stay absent but typed; replace-from-self reads old files") {
     val store = fresh()
     store.appendBucketed("e", Seq.empty[Long].toDF("n"), "n")

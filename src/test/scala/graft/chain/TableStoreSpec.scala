@@ -139,6 +139,46 @@ class TableStoreSpec extends SparkSpec {
     assert(store.readOr("p", null).count() == 5L)
   }
 
+  test("an open after a commit lists nothing the store wrote, past the parallel threshold") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val store = fresh()
+    // 48 keys: more paths than Spark's 32-path threshold, past which an
+    // unseeded open lists them in a Spark job
+    store.appendPartitioned("p", (0L until 480L).map(n => (n, (n % 48).toInt))
+      .toDF("n", "shard"), "shard")
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files")).foreach(listings.add)
+    }
+    Thread.sleep(300)
+    spark.sparkContext.addSparkListener(listener)
+    val discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    try {
+      assert(store.read("p", null).count() == 480L)
+      assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount == discovered,
+        "the open must take every committed dir's files from the store's cache")
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(listings.isEmpty, s"listing jobs ran: $listings")
+  }
+
+  test("a partitioned append writes one file per key from a many-partition input") {
+    val store = fresh()
+    val in = (0L until 400L).map(n => (n, (n % 20).toInt))
+    (1 to 2).foreach { i =>
+      store.appendPartitioned("p", in.toDF("n", "shard").repartition(8), "shard")
+      val counts = store.fileCounts("p")
+      assert(counts.keySet == (0 until 20).map(s => s"shard=$s").toSet)
+      assert(counts.values.toSet == Set(i.toLong), s"one file per key per append: $counts")
+    }
+    val got = store.readOr("p", null).select("n", "shard").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(got.sorted == (in ++ in).sorted)
+  }
+
   test("a table in the rename-era layout fails loudly instead of reading as absent") {
     // stores written before the manifest protocol hold visible parquet
     // files and no manifest; reading one as absent would make ingest

@@ -159,6 +159,13 @@ class PipelineRunnerSpec extends SparkSpec {
       val body = scala.io.Source.fromURL(s"http://127.0.0.1:$port/metrics").mkString
       assert(body.contains("graft_pipeline_batches") &&
         body.contains("graft_pipeline_batch_seconds_count"))
+      // and every document face's category state tables' live file counts
+      Seq("chunk_hashes", "lsh_sigs", "lsh_postings").foreach { t =>
+        val files = store.fileCounts(t).values.sum
+        assert(files > 0L)
+        assert(body.linesIterator.contains(s"""graft_pipeline_state_files{table="$t"} $files"""),
+          s"the scrape must carry $t's $files state files")
+      }
     } finally w.close()
   }
 
@@ -314,6 +321,8 @@ class PipelineRunnerSpec extends SparkSpec {
       assert(w.store.read("ivf_postings", StreamingSimilarity.postingsSchema)
         .count() == 10L)
       assert(w.metrics.vectors.get() == 10L)
+      assert(w.metrics.stateFiles.get("ivf_postings")
+        .contains(w.store.fileCounts("ivf_postings").values.sum))
       // and the maintained index answers queries through the query face
       val probes = Seq(v(0L)).toDF("vec_id", "embedding")
       val res = StreamingSimilarity.ivfTopKFromPostings(w.store, probes,
