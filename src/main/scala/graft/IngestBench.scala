@@ -63,8 +63,7 @@ object IngestBench {
   }
 
   private def mkStore(spark: SparkSession): TableStore =
-    TableStore(spark, Files.createTempDirectory("graft-ingest-bench").toString,
-      bucketSize = 64L)
+    TableStore(spark, Files.createTempDirectory("graft-ingest-bench").toString)
 
   /** N blocks, each carrying two subscribed-address txs mirrored as eth
     * transfer logs — every block does real balance work (changed-set,

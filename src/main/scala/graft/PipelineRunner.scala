@@ -345,13 +345,7 @@ object PipelineRunner {
       metric("graft_pipeline_vectors", "counter", vectors.get())
       metric("graft_pipeline_retrains", "counter", retrains.get())
       MetricsServer.renderHistogram(sb, "graft_pipeline_batch_seconds", batchSeconds)
-      if (stateFiles.nonEmpty) {
-        sb.append("# TYPE graft_pipeline_state_files gauge\n")
-        stateFiles.toSeq.sortBy(_._1).foreach { case (t, n) =>
-          sb.append("graft_pipeline_state_files{table=\"").append(t).append("\"} ")
-            .append(n).append('\n')
-        }
-      }
+      MetricsServer.renderTableGauge(sb, "graft_pipeline_state_files", stateFiles)
       sb.toString
     }
   }

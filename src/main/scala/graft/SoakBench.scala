@@ -13,6 +13,8 @@ import graft.chain.TableStore
   *   - the state tables' DATA-FILE counts (threshold compaction must hold
   *     them flat — an append-only face would grow one file set per batch
   *     and every later probe would pay per-file listing/footer costs),
+  *   - the live DIR counts of the per-batch range tables (size-tiered
+  *     compaction must hold them near 64 + 8 per tier),
   *   - their ROW counts (the algebra-idempotent states — hll_regs ≤
   *     groups×m, bk_sample ≤ groups×k — must plateau; chunk_hashes grows
   *     only with DISTINCT chunks),
@@ -50,8 +52,7 @@ object SoakBench {
   def run(spark: SparkSession): String = {
     val batches = sys.env.get("SPARK_GRAFT_SOAK_BATCHES").map(_.toInt).getOrElse(500)
     val docsPer = sys.env.get("SPARK_GRAFT_SOAK_DOCS").map(_.toInt).getOrElse(24)
-    val store = TableStore(spark,
-      Files.createTempDirectory("graft-soak").toString, bucketSize = 64L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-soak").toString)
     // compactFiles is LOW here on purpose: the soak's job is to show the
     // file-count curves SATURATING inside the run — at the production
     // default (64) the chunk face's per-partition touch rate (~1/15
@@ -64,9 +65,10 @@ object SoakBench {
       quantileK = 32, hllM = 256, compactFiles = compact)
     val tables = Seq("chunk_hashes", "lsh_postings", "lsh_sigs",
       "hll_regs", "bk_sample")
+    val rangeTables = Seq("chunk_dedup", "near_dups", "hll_cardinality", "bk_quantiles")
     val samplePoints = math.max(1, batches / 10)
     val samples = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Map[String, (Long, Long)], Double, Double)]
+      .empty[(Int, Map[String, (Long, Long)], Double, Double, Map[String, Int])]
     Profile.measure(spark) { counter =>
       var windowJobs0 = 0L
       var windowT0 = System.nanoTime()
@@ -82,13 +84,14 @@ object SoakBench {
           val jobsPerBatch = (jobs - windowJobs0).toDouble / samplePoints
           val secPerBatch  = (now - windowT0) / 1e9 / samplePoints
           windowJobs0 = jobs; windowT0 = now
-          samples += ((b + 1, stats, jobsPerBatch, secPerBatch))
+          samples += ((b + 1, stats, jobsPerBatch, secPerBatch,
+            rangeTables.map(t => t -> store.rangeDirs(t).size).toMap))
           Console.err.println(f"[soak] batch ${b + 1}%4d  jobs/batch $jobsPerBatch%.1f  " +
             f"sec/batch $secPerBatch%.2f  files ${stats.map { case (t, v) => s"$t=${v._1}" }.mkString(" ")}")
         }
       }
     }
-    def arr(f: ((Int, Map[String, (Long, Long)], Double, Double)) => String) =
+    def arr(f: ((Int, Map[String, (Long, Long)], Double, Double, Map[String, Int])) => String) =
       samples.map(f).mkString("[", ",", "]")
     def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     s""""soak_source":"live run","soak_batches":$batches,"soak_docs_per_batch":$docsPer,""" +
@@ -97,6 +100,7 @@ object SoakBench {
         s""""soak_files_$t":${arr(_._2(t)._1.toString)},""" +
           s""""soak_rows_$t":${arr(_._2(t)._2.toString)}"""
       }.mkString(",") + "," +
+      rangeTables.map(t => s""""soak_dirs_$t":${arr(_._5(t).toString)},""").mkString +
       s""""soak_jobs_per_batch":${arr(s => f2(s._3))},""" +
       s""""soak_sec_per_batch":${arr(s => f2(s._4))}"""
   }

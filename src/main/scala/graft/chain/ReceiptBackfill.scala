@@ -70,7 +70,7 @@ object ReceiptBackfill {
       ChainIngest.TransfersTable -> transfers
     ).foreach { case (table, df) =>
       store.deleteRange(table, "block_number", from, to)
-      store.appendBucketed(table, df, "block_number")
+      store.appendRange(table, df, "block_number", from, to)
     }
   }
 }

@@ -3,6 +3,8 @@ package graft.chain
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
 import org.apache.hadoop.hdfs.DistributedFileSystem
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
@@ -15,11 +17,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 /** Transactional-enough table store over parquet directories.
   *
   * All path operations go through the Hadoop `FileSystem` API resolved
-  * from `root`'s scheme — `root` may be a local path, `file://`,
-  * `hdfs://`, or any other filesystem Spark's Hadoop configuration knows
-  * (`s3a://`, `abfs://`, …). A store "designed for 100 TB" whose listings
-  * and swaps ran through `java.nio.file` could never point at a cluster
-  * filesystem; this one can.
+  * from `root`'s scheme: a local path, `file://`, `hdfs://`, or any
+  * filesystem Spark's Hadoop configuration knows (`s3a://`, `abfs://`, …).
   *
   * ONE COMMIT PROTOCOL, rename-free, so it holds where rename is
   * copy+delete (object stores) as well as on local/HDFS. On disk, per
@@ -28,7 +27,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *   - `.d-<uuid>[/<key>=<v>]` — immutable physical data dirs (parquet
   *     part files), written once by a staged write and never renamed;
   *   - `.manifest.N` — immutable: one `<logicalKey>\t<relDir>` line per
-  *     live physical dir, closed by an `#end` line;
+  *     live physical dir (plus `\t<lo>\t<hi>` for a range table's dir),
+  *     closed by an `#end` line;
   *   - `.gen` — the generation marker "version epoch writerId", THE
   *     commit point;
   *   - `.schema.json` — the table's logical schema.
@@ -38,90 +38,78 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * a crashed marker write by probing for the next manifest version.
   * Every crash window leaves only unreferenced staging dirs,
   * garbage-collected on the next commit. GC retains a
-  * `manifestRetain`-generation reader-grace window, so EXTERNAL READER
-  * PROCESSES off the same root are safe (an ingest-writer +
-  * query-readers deployment). Single-WRITER is still the contract, and
-  * it is ENFORCED by a writer-epoch fence in the marker: each store
-  * instance claims epoch = (observed + 1) at its first commit to a
-  * table, every commit re-reads the marker first and FAILS LOUDLY
-  * ([[TableStore.WriterSupersededException]]) when a newer epoch (or a
-  * same-epoch foreign writer id, via post-write read-back) is observed —
-  * so a misconfigured second ingest job crashes instead of silently
-  * interleaving generations (the reference's duplicate-key-as-benign-
-  * concurrency-signal discipline, common/errors.go:48-57,
-  * service/indexer/indexer.go:151-163, translated to object stores:
-  * latest writer wins, superseded writers die). The residual window —
-  * two writers claiming the same epoch and committing within one
-  * read-back round-trip — needs a conditional PUT (Delta/Iceberg log) to
-  * close; every longer interleaving is detected.
+  * `manifestRetain`-generation reader-grace window, so reader processes
+  * off the same root are safe. Single-WRITER is the contract, ENFORCED
+  * by a writer-epoch fence in the marker: each store instance claims
+  * epoch = (observed + 1) at its first commit to a table, and every
+  * commit FAILS LOUDLY ([[TableStore.WriterSupersededException]]) on a
+  * newer epoch (or a same-epoch foreign writer id, via post-write
+  * read-back), so a misconfigured second ingest job crashes instead of
+  * interleaving generations (latest writer wins, as in the reference's
+  * common/errors.go:48-57, service/indexer/indexer.go:151-163). Two
+  * writers claiming one epoch within one read-back round-trip would need
+  * a conditional PUT to detect; every longer interleaving is detected.
   *
   * A table dir that holds visible parquet files but no manifest was
   * written by the directory-rename layout this store used before; every
   * access to it throws instead of reading the table as absent (an absent
   * chain table would restart ingest from scratch beside the old rows).
   *
-  * Range-keyed tables (everything keyed by block number) keep one
-  * manifest key per fixed-width block BUCKET (`bucket=N`), so that
+  * A RANGE table (everything keyed by block number or batch id) is a
+  * flat list of immutable dirs, and each dir's manifest line carries the
+  * range column's bounds over it (`<key>\t<relDir>\t<lo>\t<hi>`): the
+  * span the caller's append declares, checked inside its write. So
   *   - retraction (the reference's `DELETE WHERE block_number BETWEEN f AND
-  *     t`, store/store.go:319-378) rewrites ONLY the buckets overlapping
-  *     the range: fully-covered buckets drop out of the manifest, the ≤2
-  *     partially-covered edge buckets rewrite into a fresh dir swapped in
-  *     for the old one. Cost is O(retraction range), never O(table) — at
-  *     100 TB a 20-block reorg must not rewrite years of history;
-  *   - bounded tip reads (`readRange`) open only the in-range buckets'
-  *     dirs, so no non-tip dir is even listed.
+  *     t`, store/store.go:319-378) is decided from the manifest alone:
+  *     dirs inside the range drop out, disjoint dirs stay, and only a dir
+  *     that straddles it is rewritten. With per-block dirs a shallow reorg
+  *     and the delete-then-append bracket's happy path run no Spark job;
+  *   - bounded tip reads (`readRange`) open only the dirs whose bounds
+  *     intersect the range, so no other dir is even listed;
+  *   - compaction is size-tiered and rides on the append commit, never
+  *     touching the newest dirs a reorg retracts (see [[appendRange]]).
   * Category-partitioned tables keep one `<col>=<v>` key per value, and
   * reads rebuild the column as a partition value, so an `isin` predicate
   * on it prunes to the probed keys' dirs before any file opens.
   *
-  * A full production deployment may still prefer a Delta/Iceberg table
-  * here — their logs add snapshot isolation for CONCURRENT writers,
-  * which this single-writer store does not need; the manifest protocol
-  * implements the same commit discipline at this store's scope, so
-  * "runs at 100 TB" does not presume a rename-atomic filesystem.
-  * Idempotency (T6) comes from the admission fold in ChainIngest,
-  * mirroring the reference's duplicate-key tolerance
-  * (common/errors.go:48-57).
+  * A Delta/Iceberg log would add snapshot isolation for CONCURRENT
+  * writers, which this single-writer store does not need. Idempotency
+  * (T6) comes from the admission fold in ChainIngest, mirroring the
+  * reference's duplicate-key tolerance (common/errors.go:48-57).
   */
 final case class TableStore(spark: SparkSession, root: String,
-                            bucketSize: Long = 100000L,
                             manifestRetain: Int = TableStore.ManifestRetainDefault) {
+
+  import TableStore.Dir
 
   private val rootPath = new Path(root)
   // one FileSystem per store, resolved from the root's scheme against the
   // session's Hadoop conf (core-site/spark.hadoop.* — where s3a keys etc.
   // live). FileSystem.get caches per (scheme, authority, ugi), so this is
   // also what every other Spark component talks to.
-  private val fs: FileSystem =
-    rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private val fs: FileSystem = rootPath.getFileSystem(hadoopConf)
 
   /** Driver-side row cache for TINY single-row state tables (head_state,
-    * balance_head, ledger_block): the ingest loop consults them several
-    * times per micro-batch, and each consult is otherwise a full Spark
-    * job over a one-row parquet file. Any write to the table through
-    * THIS store invalidates its entry, so the cache is exactly the
-    * persisted value — the reference holds the same state in memory for
-    * the same reason (its Listen loop's currentHeader). A table written
-    * by another process is out of scope, as it is for every store
-    * mutation (single-writer is the store's contract).
+    * balance_head, ledger_block), which the ingest loop consults several
+    * times per micro-batch; each consult is otherwise a Spark job. Every
+    * write through THIS store invalidates its entry, so the cache is the
+    * persisted value (the reference keeps its Listen loop's
+    * currentHeader in memory the same way).
     */
   private val rowCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Array[org.apache.spark.sql.Row]]]()
 
-  /** Driver-side RESOLVED-RELATION cache: building a relation lists its
-    * dirs (one object-store LIST round per dir at deployment scale), and
-    * the per-block ingest bracket opens the same handful of tables many
-    * times per block. The store is single-writer, and every mutation path
-    * ends in [[invalidate]], so a cached relation is exactly the
-    * persisted file set. Only whole-table opens cache; range and per-key
-    * opens are one-shot by nature.
+  /** Driver-side cache of whole-table relations, which the per-block
+    * bracket opens many times per block. Every mutation path ends in
+    * [[invalidate]], so a cached relation is the persisted file set.
     */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Driver-side manifest cache — same single-writer contract. */
   private val manCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[String]]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[Dir]]]()
 
   /** This store's own namespace in Spark's shared file-status cache, held
     * for the store's lifetime: every `getOrCreate` returns a fresh, empty
@@ -193,40 +181,45 @@ final case class TableStore(spark: SparkSession, root: String,
   }
 
   /** A manifest file is valid iff FULLY written: its last line is the
-    * `#end` terminator [[commitManifest]] appends and every entry line
-    * carries the key/dir tab. Validation is what makes the resolution
-    * below safe on filesystems where small writes are NOT atomic (local,
-    * HDFS): a torn `.manifest.(v+1)` from a crash mid-write — truncated
-    * entries, or truncated to empty — must never be rolled forward onto
-    * (commit order writes it BEFORE touching the marker, so the previous
-    * generation is still fully intact), and a torn marker must never
-    * wedge the table.
+    * `#end` terminator [[commitManifest]] appends and every other line
+    * parses as an entry. Where small writes are NOT atomic (local, HDFS),
+    * this keeps resolution from rolling forward onto a torn
+    * `.manifest.(v+1)` (the previous generation is still intact: the
+    * manifest is written before the marker) and a torn marker from
+    * wedging the table.
     */
   private val ManifestEnd = "#end"
 
-  private def manifestLines(s: String): Seq[String] =
-    s.linesIterator.filter(l => l.nonEmpty && l != ManifestEnd && l.contains('\t')).toSeq
+  /** THE one parser of a manifest line, `<key>\t<relDir>` or
+    * `<key>\t<relDir>\t<lo>\t<hi>`; None for anything else (`#end`, a
+    * torn line). Resolution and GC both read entries through it, so GC
+    * can never take a range dir's bounds for part of its name.
+    */
+  private def parseLine(line: String): Option[(String, Dir)] = line.split('\t') match {
+    case Array(k, rel) => Some(k -> Dir(rel))
+    case Array(k, rel, lo, hi) =>
+      for (l <- lo.toLongOption; h <- hi.toLongOption) yield k -> Dir(rel, l, h)
+    case _ => None
+  }
+
+  private def manifestLines(s: String): Seq[(String, Dir)] =
+    s.linesIterator.flatMap(parseLine).toSeq
 
   private def validManifest(p: Path): Boolean =
     readSmallFile(p).exists { s =>
       val lines = s.linesIterator.filter(_.nonEmpty).toSeq
-      lines.lastOption.contains(ManifestEnd) &&
-        lines.init.forall(_.contains('\t'))
+      lines.lastOption.contains(ManifestEnd) && lines.init.forall(parseLine(_).nonEmpty)
     }
 
-  /** Current committed version, given the marker as already read.
-    * Resolution, torn-write-safe:
-    *   - marker parses → start there; else (absent OR torn mid-overwrite)
-    *     fall back to the highest VALID manifest on disk — at a torn
-    *     marker the new manifest is fully written and its predecessors
-    *     are not yet GC'd (GC runs after the marker), so the listing
-    *     recovers the true commit;
+  /** Current committed version, given the marker as already read,
+    * torn-write-safe:
+    *   - marker parses → start there; else (absent or torn) fall back to
+    *     the highest VALID manifest on disk, which GC (run after the
+    *     marker) has not yet touched;
     *   - then roll FORWARD while the next manifest exists AND validates:
     *     a crash between the manifest write and the marker overwrite must
     *     not resurrect the previous generation (the successor's data is
-    *     fully staged by construction, and the stageReplaceAll commit
-    *     order stays monotone under roll-forward — a later table's
-    *     manifest exists only if every earlier table's marker landed).
+    *     fully staged, and the stageReplaceAll commit order stays monotone).
     */
   private def currentVersion(table: String,
                              marker: Option[(Long, Long, String)]): Long = {
@@ -244,18 +237,24 @@ final case class TableStore(spark: SparkSession, root: String,
     v
   }
 
-  /** The live (logicalKey → physical rel-dirs) map; empty when absent. */
-  private def manEntries(table: String): Map[String, Seq[String]] =
+  /** The live (logicalKey → physical dirs) map; empty when absent. A
+    * `bucket=N` key is the fixed-width bucket layout of stores from before
+    * ranged dirs; its dirs carry no bounds, so it is refused loudly, as
+    * the rename-era layout is.
+    */
+  private def manEntries(table: String): Map[String, Seq[Dir]] =
     manCache.computeIfAbsent(table, t => {
       val v = currentVersion(t, readMarkerParts(t))
-      if (v == 0L) { rejectLegacyLayout(t); Map.empty[String, Seq[String]] }
+      if (v == 0L) { rejectLegacyLayout(t); Map.empty[String, Seq[Dir]] }
       else {
         val body = readSmallFile(manPath(t, v)).getOrElse(throw new IllegalStateException(
           s"table '$t': manifest $v was garbage-collected while being resolved"))
-        manifestLines(body).map { line =>
-          val i = line.indexOf('\t')
-          (line.substring(0, i), line.substring(i + 1))
-        }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        val m = manifestLines(body).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        if (m.keys.exists(_.startsWith("bucket=")))
+          throw new IllegalStateException(s"table '$t' at ${dir(t)} is in the bucket layout " +
+            "(bucket=N manifest keys) of stores from before ranged dirs, which this store " +
+            "does not read; re-ingest into a fresh dataDir")
+        m
       }
     })
 
@@ -280,25 +279,18 @@ final case class TableStore(spark: SparkSession, root: String,
     * overwrite is the entire commit — no rename anywhere.
     *
     * GC keeps a READER-GRACE window: the newest `manifestRetain` stale
-    * generations — manifest files AND every physical dir any retained
-    * manifest references — survive this commit, so an external reader
-    * that resolved generation G off the same root keeps reading G's dirs
-    * successfully until `manifestRetain` further commits have landed
-    * (the MVCC the reference gets for free from MySQL transactions,
-    * store/sqldb/db.go:63-91, priced here as ≤retain stale generations
-    * of garbage per table). `manifestRetain = 0` is immediate GC.
+    * generations, manifests and every dir they reference, survive, so an
+    * external reader of generation G keeps reading G's dirs until that
+    * many further commits land (the MVCC the reference gets from MySQL,
+    * store/sqldb/db.go:63-91). `manifestRetain = 0` is immediate GC.
     *
-    * WRITER FENCE (see the class doc): the marker is re-read at the top of
-    * every commit — a newer epoch than this instance's claim, or the same
-    * epoch under a foreign writer id, means another writer has taken the
-    * table and THIS writer must die loudly instead of overwriting its
-    * generations. After the marker lands it is read BACK and must carry
-    * exactly (version, epoch, writerId) — a concurrent overwrite between
-    * the write and the read-back is a detected loss, not a silent one —
-    * and GC runs only after the read-back verifies, so a fenced writer
-    * never deletes a winner's dirs.
+    * WRITER FENCE (see the class doc): the marker is re-read first — a
+    * newer epoch, or this epoch under a foreign writer id, means another
+    * writer has the table and this one dies loudly. The written marker is
+    * read BACK and must match exactly, and GC runs only after that, so a
+    * fenced writer never deletes a winner's dirs.
     */
-  private def commitManifest(table: String, next: Map[String, Seq[String]]): Unit = {
+  private def commitManifest(table: String, next: Map[String, Seq[Dir]]): Unit = {
     val observed = readMarkerParts(table)
     val observedEpoch = observed.map(_._2).getOrElse(0L)
     val myEpoch: Long = claimedEpochs.computeIfAbsent(table, _ => observedEpoch + 1L)
@@ -311,8 +303,9 @@ final case class TableStore(spark: SparkSession, root: String,
         " — another writer has taken the table; refusing to commit")
     val v = currentVersion(table, observed)
     fs.mkdirs(dir(table))
-    val body = (next.toSeq.sortBy(_._1)
-      .flatMap { case (k, ds) => ds.map(d => s"$k\t$d") } :+ ManifestEnd).mkString("\n")
+    val body = (next.toSeq.sortBy(_._1).flatMap { case (k, ds) =>
+      ds.sortBy(_.lo).map(d => if (d.ranged) s"$k\t${d.rel}\t${d.lo}\t${d.hi}" else s"$k\t${d.rel}")
+    } :+ ManifestEnd).mkString("\n")
     writeSmallFile(manPath(table, v + 1), body)
     writeSmallFile(genPath(table), s"${v + 1} $myEpoch $writerId")
     val back = readMarkerParts(table)
@@ -324,7 +317,7 @@ final case class TableStore(spark: SparkSession, root: String,
     // GC: manifests older than the grace window, then physical dirs no
     // REMAINING manifest references. Referenced rel-paths are either a
     // whole .d-* dir or ".d-*/<sub>" leaf dirs; an unreferenced subtree
-    // of a partially-referenced staging dir (a retracted bucket) is
+    // of a partially-referenced staging dir (a compacted category key) is
     // deleted at the leaf level.
     val keepFrom = (v + 1) - math.max(0, manifestRetain)
     val (manifests, others) = fs.listStatus(dir(table)).toSeq
@@ -336,8 +329,7 @@ final case class TableStore(spark: SparkSession, root: String,
     // their dirs alive; a torn manifest's parseable lines only ever
     // over-retain (never delete), which is the safe direction
     val referenced: Set[String] = kept.flatMap(st =>
-      readSmallFile(st.getPath).toSeq.flatMap(manifestLines)
-        .map(l => l.substring(l.indexOf('\t') + 1))).toSet
+      readSmallFile(st.getPath).toSeq.flatMap(manifestLines).map(_._2.rel)).toSet
     others.foreach { st =>
       val top = st.getPath.getName
       if (st.isDirectory && top.startsWith(".d-") && !referenced.contains(top)) {
@@ -352,7 +344,7 @@ final case class TableStore(spark: SparkSession, root: String,
   }
 
   /** Stage `df` into a fresh immutable physical dir; returns its rel name.
-    * Optionally partitioned (appendBucketed/appendPartitioned staging).
+    * Optionally partitioned (appendPartitioned/compactPartitions staging).
     */
   private def stagePhys(table: String, df: DataFrame,
                         partitionBy: Option[String] = None): String = {
@@ -385,13 +377,24 @@ final case class TableStore(spark: SparkSession, root: String,
   }
 
   /** List a freshly staged leaf dir once and seed [[statusCache]] with its
-    * data files, so no later open or file count lists it again; false
-    * (nothing seeded) when it holds no data file.
+    * data files, so no later open or file count lists it again; returns
+    * them (none seeded when there are none).
     */
-  private def seed(p: Path): Boolean = fs.exists(p) && {
-    val files = dataFiles(p)
+  private def seed(p: Path): Array[FileStatus] = {
+    val files = if (fs.exists(p)) dataFiles(p) else Array.empty[FileStatus]
     if (files.nonEmpty) statusCache.putLeafFiles(fs.makeQualified(p), files)
-    files.nonEmpty
+    files
+  }
+
+  /** [[seed]] for an unpartitioned stage that must hold rows: a write of
+    * no rows still leaves task 0's empty parquet file, so a lone file
+    * with no rows in its footer (one small read) counts as no data.
+    */
+  private def seedRows(p: Path): Boolean = seed(p) match {
+    case Array(f) =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf))
+      try r.getRecordCount > 0 finally r.close()
+    case files => files.nonEmpty
   }
 
   /** The data files of a committed rel-dir: from [[statusCache]], or
@@ -417,7 +420,7 @@ final case class TableStore(spark: SparkSession, root: String,
     if (!fs.exists(top)) Map.empty
     else fs.listStatus(top).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.contains('=') &&
-        seed(st.getPath))
+        seed(st.getPath).nonEmpty)
       .map(st => st.getPath.getName -> s"$rel/${st.getPath.getName}")
       .toMap
   }
@@ -446,27 +449,19 @@ final case class TableStore(spark: SparkSession, root: String,
 
   /** THE one way the store opens data: any set of manifest entries as ONE
     * `HadoopFsRelation` over exactly their dirs, with the remembered
-    * schema (no footer-inference job, no listing of anything else). A
-    * CATEGORY table (its keys name a sidecar column) gets an explicit
-    * partition spec — one partition path per live dir, its value cast
-    * from the key to the sidecar type — so a predicate on the column
-    * plans as a `PartitionFilters` on one scan and prunes dirs before any
-    * file opens; its columns come back in sidecar order. Plain and
-    * bucketed tables carry no partition column (the bucket is a manifest
-    * key, not data). Paths are qualified because the index matches
-    * partition paths against the qualified paths its listing returns —
-    * an unqualified one matches no file and silently reads empty.
-    * Listings go through the store's own seeded [[statusCache]]: every
-    * dir this store commits was listed once at commit and seeded there,
-    * so an open lists nothing it wrote (a category table holds one dir
-    * per key per append until compaction — 256 keys would otherwise be
-    * a listing job per open), and a dir committed before this store was
-    * built is listed once, at its first open. A committed dir never
-    * changes, so nothing re-lists an opened relation (no
-    * `refreshByPath`): a plan over generation N stays a plan over N, and
-    * re-listing it after GC would read its dirs as silently empty.
+    * schema (no footer-inference job, no other listing). A CATEGORY table
+    * (its keys name a sidecar column) gets an explicit partition spec —
+    * one partition path per live dir, its value cast from the key to the
+    * sidecar type — so a predicate on the column prunes dirs before any
+    * file opens; its columns come back in sidecar order. Paths are
+    * qualified: the index matches partition paths against the qualified
+    * paths its listing returns, and an unqualified one reads empty.
+    * Listings go through the seeded [[statusCache]], so an open lists no
+    * dir this store wrote, and a dir committed before it was built once.
+    * A committed dir never changes, so nothing re-lists an opened
+    * relation (no `refreshByPath`): a plan over generation N stays one.
     */
-  private def open(table: String, entries: Map[String, Seq[String]]): DataFrame = {
+  private def open(table: String, entries: Map[String, Seq[Dir]]): DataFrame = {
     val schema = rememberedSchema(table).map(asNullable(_).asInstanceOf[StructType])
       .getOrElse(throw new IllegalStateException(s"no schema known for table '$table'"))
     val catName = entries.keys.find(_.contains('=')).map(_.takeWhile(_ != '='))
@@ -474,7 +469,7 @@ final case class TableStore(spark: SparkSession, root: String,
     val partSchema = StructType(catName.map(schema(_)).toSeq)
     val dataSchema = StructType(schema.filterNot(f => catName.contains(f.name)))
     val dirs = entries.toSeq.sortBy(_._1).flatMap { case (k, ds) =>
-      ds.map(d => k -> fs.makeQualified(new Path(dir(table), d)))
+      ds.map(d => k -> fs.makeQualified(new Path(dir(table), d.rel)))
     }
     val spec = catName.fold(PartitionSpec.emptySpec) { name =>
       val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
@@ -497,24 +492,23 @@ final case class TableStore(spark: SparkSession, root: String,
   def collectSmall(table: String): Option[Array[org.apache.spark.sql.Row]] =
     rowCache.computeIfAbsent(table, t => Option(readOr(t, null)).map(_.collect()))
 
-  def bucketOf(v: Long): Long = Math.floorDiv(v, bucketSize)
-
-  /** File-count threshold above which a clean deleteRange probe compacts
-    * the partial bucket anyway (see deleteRangeAll). 64 balances rewrite
-    * amortization against listing/footer cost growth; coalesce(1) is safe
-    * because a single bucket is by construction a bounded slice of the
-    * table.
+  /** The newest dirs of a range table that compaction never merges, so a
+    * reorg up to that deep only drops dirs; also [[compactPartitions]]'
+    * default per-key file threshold.
     */
   private val CompactFiles = 64
+
+  /** Dirs per size-tiered merge, and the span ratio between tiers. */
+  private val MergeFanIn = 8
 
   private def hidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
   /** Data files across a logical key's physical dirs, from the cache. */
-  private def physFileCount(table: String, rels: Seq[String]): Long =
-    rels.map(leafFiles(table, _).length.toLong).sum
+  private def physFileCount(table: String, ds: Seq[Dir]): Long =
+    ds.map(d => leafFiles(table, d.rel).length.toLong).sum
 
-  /** Live data files per logical key ("" for a plain table, "bucket=N",
+  /** Live data files per logical key ("" for a plain or range table,
     * "<col>=<v>") of the current generation — the state-table file counts
     * an operator watches; empty when the table is absent. Served from the
     * seeded status cache: no listing of a dir this store committed.
@@ -527,6 +521,12 @@ final case class TableStore(spark: SparkSession, root: String,
     * manifest IS the data-file guarantee (one marker read, no listing).
     */
   def exists(table: String): Boolean = manEntries(table).nonEmpty
+
+  /** The `[lo, hi]` of every live dir of a range table, in range order;
+    * empty when the table is absent. From the manifest: no listing.
+    */
+  def rangeDirs(table: String): Seq[(Long, Long)] =
+    manEntries(table).values.flatten.filter(_.ranged).map(d => (d.lo, d.hi)).toSeq.sorted
 
   // ---- schema sidecar ----------------------------------------------------
   // Every write records the table's logical schema in a hidden
@@ -563,25 +563,24 @@ final case class TableStore(spark: SparkSession, root: String,
     if (exists(table)) relCache.computeIfAbsent(table, t => open(t, manEntries(t)))
     else rememberedSchema(table).map(emptyOf).getOrElse(fallback)
 
-  /** Bounded read of a bucketed table: only the bucket keys inside the
-    * range are opened (zero LIST rounds for non-tip buckets), and the
-    * range predicate prunes row groups within them.
+  /** Bounded read of a range table: only the dirs whose bounds intersect
+    * [from, to] are opened (no other dir is listed), and the range
+    * predicate prunes row groups within them.
     */
   def readRange(table: String, rangeCol: String, from: Long, to: Long,
                 schema: StructType): DataFrame =
     if (!exists(table)) read(table, schema)
-    else open(table, manEntries(table).filter { case (k, _) =>
-      !k.startsWith("bucket=") || k.drop("bucket=".length).toLongOption
-        .forall(b => b >= bucketOf(from) && b <= bucketOf(to))
+    else open(table, manEntries(table).map { case (k, ds) =>
+      k -> ds.filter(d => d.lo <= to && from <= d.hi)
     }).filter(col(rangeCol).between(from, to))
 
   /** Plain append for small non-range tables (reorg audit, head state). */
   def append(table: String, df: DataFrame): Unit = {
     val rel = stagePhys(table, df)
     rememberSchema(table, df.schema)
-    if (seed(new Path(dir(table), rel))) {
+    if (seed(new Path(dir(table), rel)).nonEmpty) {
       val m = manEntries(table)
-      commitManifest(table, m.updated("", m.getOrElse("", Seq.empty) :+ rel))
+      commitManifest(table, m.updated("", m.getOrElse("", Seq.empty) :+ Dir(rel)))
     }
     // invalidate AFTER the mutation: invalidating first leaves a window
     // where a concurrent collectSmall (Par runs store actions on pool
@@ -589,23 +588,62 @@ final case class TableStore(spark: SparkSession, root: String,
     invalidate(table)
   }
 
-  /** Append into the bucketed layout, bucketed on `rangeCol`. */
-  def appendBucketed(table: String, df: DataFrame, rangeCol: String): Unit = {
-    val rel = stagePhys(table,
-      df.withColumn("bucket", floor(col(rangeCol) / bucketSize).cast("long")),
-      partitionBy = Some("bucket"))
-    rememberSchema(table, df.schema) // pre-bucket shape — the bucket is a key
-    registerStagedPartitions(table, rel)
+  /** Append `df`, whose `rangeCol` values all lie in [lo, hi] (the span
+    * the caller's bracket just retracted), as one ranged dir. The write
+    * checks the span with a `raise_error` projection, no extra job: a row
+    * outside fails the append loudly and commits nothing.
+    *
+    * Size-tiered compaction (O'Neil et al., 1996) rides on the commit:
+    * outside the newest [[CompactFiles]] dirs, the oldest run of
+    * [[MergeFanIn]] adjacent dirs of one tier (tier k spans [8^k, 8^(k+1))
+    * range values) whose bytes fit in the session's
+    * `spark.sql.files.maxPartitionBytes` merges into one file, staged
+    * before the append (a failed append leaves only garbage for the next
+    * commit's GC). A merge lands a tier higher, so a row is rewritten
+    * O(log span) times and live dirs stay near CompactFiles + MergeFanIn
+    * per tier, plus the dirs the cap holds apart. Tiers go by span, not
+    * bytes: a merge of tiny parquet files, mostly footer, can come out no
+    * bigger than one input, so a byte tier could re-merge rows forever.
+    */
+  def appendRange(table: String, df: DataFrame, rangeCol: String, lo: Long, hi: Long): Unit = {
+    val m = manEntries(table)
+    val old = m.getOrElse("", Seq.empty)
+    val merged = mergeRun(table, old)
+    val rel = stagePhys(table, df.withColumn(rangeCol,
+      when(col(rangeCol).between(lo, hi), col(rangeCol)).otherwise(raise_error(concat(
+        lit(s"table '$table': $rangeCol "), col(rangeCol).cast("string"),
+        lit(s" lies outside the appended span [$lo, $hi]"))))))
+    rememberSchema(table, df.schema)
+    val next = merged.fold(old) { case (in, out) => old.filterNot(in.contains) :+ out } ++
+      Option.when(seedRows(new Path(dir(table), rel)))(Dir(rel, lo, hi))
+    if (next != old) commitManifest(table, m.updated("", next))
     invalidate(table) // after the mutation — see append
+  }
+
+  /** The run [[appendRange]] merges, if any: its input dirs and the
+    * staged, seeded merged dir covering their bounds.
+    */
+  private def mergeRun(table: String, dirs: Seq[Dir]): Option[(Seq[Dir], Dir)] = {
+    def tier(d: Dir): Int =
+      Iterator.iterate(d.hi - d.lo + 1)(_ / MergeFanIn).takeWhile(_ >= MergeFanIn).size
+    def bytes(d: Dir): Long = leafFiles(table, d.rel).map(_.getLen).sum
+    val cap = spark.sessionState.conf.filesMaxPartitionBytes
+    dirs.filter(_.ranged).sortBy(_.lo).dropRight(CompactFiles).sliding(MergeFanIn)
+      .find(run => run.size == MergeFanIn && run.forall(tier(_) == tier(run.head)) &&
+        run.map(bytes).sum <= cap)
+      .map { run =>
+        val rel = stagePhys(table, open(table, Map("" -> run)).coalesce(1))
+        seed(new Path(dir(table), rel))
+        run -> Dir(rel, run.map(_.lo).min, run.map(_.hi).max)
+      }
   }
 
   /** Append into a layout partitioned by a discrete CATEGORY column (hash
     * prefix, shard id) rather than a block-number range: each distinct
     * value is its own manifest key, so a read carrying an `isin`
     * predicate on `partCol` prunes to exactly the probed partitions before
-    * any file opens. Unlike `appendBucketed` the column survives the read
-    * — it IS data, not a derived bucket. The write is spread over every
-    * core by [[byKey]], one file per key per append.
+    * any file opens; the column survives the read as data. The write is
+    * spread over every core by [[byKey]], one file per key per append.
     */
   def appendPartitioned(table: String, df: DataFrame, partCol: String): Unit = {
     val rel = stagePhys(table, byKey(df, partCol), partitionBy = Some(partCol))
@@ -618,9 +656,9 @@ final case class TableStore(spark: SparkSession, root: String,
     * partition count (= cores), so a partitioned write runs one task per
     * core and each key lands in exactly one task: one file per key. The
     * count is explicit so AQE cannot coalesce the write back to one task
-    * (which would write every key's file serially). Bucketed appends
-    * stay unshuffled: head-follow writes one bucket per append, and a
-    * shuffle there would add a stage to every head write.
+    * (which would write every key's file serially). Range appends stay
+    * unshuffled: each writes one dir, and a shuffle there would add a
+    * stage to every head write.
     */
   private def byKey(df: DataFrame, partCol: String): DataFrame =
     df.repartition(spark.sessionState.conf.numShufflePartitions, col(partCol))
@@ -633,83 +671,41 @@ final case class TableStore(spark: SparkSession, root: String,
     if (subs.nonEmpty) {
       val m = manEntries(table)
       commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) =>
-        acc.updated(k, acc.getOrElse(k, Seq.empty) :+ d)
+        acc.updated(k, acc.getOrElse(k, Seq.empty) :+ Dir(d))
       })
     }
   }
 
-  /** Delete rows with rangeCol ∈ [from, to]: drop fully-covered bucket
-    * keys, rewrite the partial edge buckets. O(range), not O(table).
-    */
+  /** Delete rows with rangeCol ∈ [from, to]; see [[deleteRangeAll]]. */
   def deleteRange(table: String, rangeCol: String, from: Long, to: Long): Unit =
     deleteRangeAll(Seq(table -> rangeCol), from, to)
 
-  /** [[deleteRange]] over several tables sharing one [from, to]:
-    * fully-covered buckets drop out of the manifest (no job), and the
-    * partial EDGE buckets of ALL tables probe in ONE union job instead of
-    * one job per table — the per-block ingest bracket runs this
-    * delete-then-append idempotency sweep over 6–9 tables per
-    * micro-batch, and on the happy path (no replay, no reorg) every probe
-    * comes back clean, so per-table probing pays 6–9 Spark-job launches
-    * per block for nothing (the reference's analogue is ONE DB
-    * transaction per chunk, store/store.go:129-147).
-    *
-    * Probe before rewriting: the replay-idempotent delete-then-append
-    * bracket deletes a range that on the HAPPY path has no rows yet, and
-    * unconditionally rewriting would copy the whole (growing) edge bucket
-    * once per block — O(bucket) per block, quadratic over a bucket's
-    * lifetime. Only an actual replay/reorg pays the rewrite, which lands
-    * in a fresh dir swapped in for the old ones — or drops the KEY when
-    * the rewrite filtered to zero rows (committed entries hold data).
-    * Skipping every clean rewrite would let per-block appends accumulate
-    * one part-file set per block, so a clean bucket still compacts once
-    * its file count crosses `CompactFiles` — amortized O(1/CompactFiles)
-    * rewrites per block, bounded file counts forever. One manifest commit
-    * per changed table, in caller order.
+  /** [[deleteRange]] over several tables sharing one [from, to], decided
+    * from the manifests' dir bounds: a dir inside the range drops out, a
+    * disjoint dir stays, and only a dir straddling it (an unranged dir
+    * always does) is rewritten, filtered, with narrowed bounds, or
+    * dropped when no row survives. The ingest bracket's happy path (all
+    * dirs disjoint) and a reorg of per-block dirs (all inside) run no
+    * Spark job (the reference: ONE DB transaction per chunk,
+    * store/store.go:129-147). One commit per changed table, in order.
     */
-  def deleteRangeAll(tables: Seq[(String, String)], from: Long, to: Long): Unit = {
-    val touched = tables.filter { case (t, _) => exists(t) }
-    val state = scala.collection.mutable.LinkedHashMap[String, Map[String, Seq[String]]]()
-    val edges = Seq.newBuilder[(String, String, String)]
-    touched.foreach { case (t, rc) =>
+  def deleteRangeAll(tables: Seq[(String, String)], from: Long, to: Long): Unit =
+    tables.foreach { case (t, rc) =>
       val m = manEntries(t)
-      var next = m
-      (bucketOf(from) to bucketOf(to)).foreach { b =>
-        val key = s"bucket=$b"
-        if (m.contains(key)) {
-          val lo = b * bucketSize
-          val hi = lo + bucketSize - 1
-          if (from <= lo && hi <= to) next -= key else edges += ((t, rc, key))
+      val next = m.map { case (k, ds) => k -> ds.flatMap { d =>
+        if (d.hi < from || to < d.lo) Some(d)
+        else if (from <= d.lo && d.hi <= to) None
+        else {
+          val rel = stagePhys(t, open(t, Map(k -> Seq(d))).filter(!col(rc).between(from, to)))
+          Option.when(seedRows(new Path(dir(t), rel)))(
+            Dir(rel, if (from <= d.lo) to + 1 else d.lo, if (d.hi <= to) from - 1 else d.hi))
         }
-      }
-      state(t) = next
-    }
-    val es = edges.result()
-    if (es.nonEmpty) {
-      def bucket(t: String, key: String) = open(t, Map(key -> manEntries(t)(key)))
-      val dirty = es.map { case (t, rc, key) =>
-        bucket(t, key).filter(col(rc).between(from, to))
-          .select(lit(t).as("t"), lit(key).as("k")).limit(1)
-      }.reduce(_ unionByName _)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      es.foreach { case (t, rc, key) =>
-        if (dirty((t, key))) {
-          val rel = stagePhys(t, bucket(t, key).filter(!col(rc).between(from, to)))
-          state(t) =
-            if (seed(new Path(dir(t), rel))) state(t).updated(key, Seq(rel))
-            else state(t) - key
-        } else if (physFileCount(t, manEntries(t)(key)) > CompactFiles) {
-          val rel = stagePhys(t, bucket(t, key).coalesce(1))
-          seed(new Path(dir(t), rel))
-          state(t) = state(t).updated(key, Seq(rel))
-        }
+      }}.filter(_._2.nonEmpty)
+      if (next != m) {
+        commitManifest(t, next)
+        invalidate(t)
       }
     }
-    touched.foreach { case (t, _) =>
-      if (state(t) != manEntries(t)) commitManifest(t, state(t))
-      invalidate(t)
-    }
-  }
 
   /** Replace the table's whole content with `df` — for tiny state tables
     * only (head_state, ledger state, subscriptions); range tables retract
@@ -752,16 +748,15 @@ final case class TableStore(spark: SparkSession, root: String,
       (t, df, ".d-" + java.util.UUID.randomUUID().toString)
     }
     val stage = staged.map { case (t, df, rel) => () => {
-      val w = df.write.mode(SaveMode.Overwrite)
-      partitionBy.get(t).fold(w)(w.partitionBy(_))
-        .parquet(new Path(dir(t), rel).toString)
+      partitionBy.get(t).fold(df.write)(c => byKey(df, c).write.partitionBy(c))
+        .mode(SaveMode.Overwrite).parquet(new Path(dir(t), rel).toString)
     }}
     val commitAll = () => {
       staged.foreach { case (t, df, rel) =>
         rememberSchema(t, df.schema)
-        val entries: Map[String, Seq[String]] =
-          if (partitionBy.contains(t)) stagedKeys(t, rel).map { case (k, d) => k -> Seq(d) }
-          else if (seed(new Path(dir(t), rel))) Map("" -> Seq(rel))
+        val entries: Map[String, Seq[Dir]] =
+          if (partitionBy.contains(t)) stagedKeys(t, rel).map { case (k, d) => k -> Seq(Dir(d)) }
+          else if (seed(new Path(dir(t), rel)).nonEmpty) Map("" -> Seq(Dir(rel)))
           else Map.empty
         commitManifest(t, entries)
       }
@@ -770,12 +765,9 @@ final case class TableStore(spark: SparkSession, root: String,
     (stage, commitAll)
   }
 
-  /** [[replace]] for a DRIVER-LOCAL tiny state table (the df must be built
-    * from a local Seq — a LocalTableScan), priming the row cache with the
-    * written rows: the `collect()` here is job-free (LocalTableScanExec
-    * returns its rows without submitting a job), and the read-back Spark
-    * job a later [[collectSmall]] would otherwise pay — one per state
-    * table per micro-batch in the ingest loop — never happens.
+  /** [[replace]] for a DRIVER-LOCAL tiny state table (built from a local
+    * Seq — a LocalTableScan, whose `collect()` submits no job), priming
+    * the row cache so a later [[collectSmall]] needs no read-back job.
     */
   def replaceSmall(table: String, df: DataFrame): Unit = {
     val rows = df.collect()
@@ -792,20 +784,12 @@ final case class TableStore(spark: SparkSession, root: String,
     rowCache.put(table, Some(df.collect()))
 
   /** Threshold-triggered compaction for CATEGORY-partitioned tables (the
-    * streaming index tables: `lsh_postings`/`lsh_sigs`/`ivf_postings`/
-    * `chunk_hashes`). Each micro-batch's [[appendPartitioned]] lands one
-    * file-set per touched partition and nothing ever range-deletes them,
-    * so after 10⁴ batches a partition-pruned probe would open 10⁴ small
-    * files: every partition in `parts` (default: all) whose data-file
-    * count exceeds `maxFiles` is rewritten to one file per key, ALL of
-    * them in ONE partitioned staged write ([[byKey]]: one job spread over
-    * every core, however many keys cross the threshold together — and a
-    * batch that touches every key makes them all cross together) swapped
-    * in by one manifest commit. Rows (including their batch_id replay
-    * tags) are byte-identical, so every replay and probe invariant is
-    * untouched. File counts come from the seeded status cache, so the
-    * threshold check lists nothing. Returns the number of partitions
-    * rewritten.
+    * streaming index tables), whose [[appendPartitioned]] lands one file
+    * per touched key per batch: every key in `parts` (default: all) with
+    * more than `maxFiles` data files (counted from the status cache) is
+    * rewritten to one file, ALL of them in ONE partitioned staged write
+    * ([[byKey]]) and one manifest commit. Rows, batch_id replay tags
+    * included, are unchanged. Returns the number of keys rewritten.
     */
   def compactPartitions(table: String, partCol: String,
                         parts: Option[Seq[Any]] = None,
@@ -827,23 +811,19 @@ final case class TableStore(spark: SparkSession, root: String,
         throw new IllegalStateException(s"table '$table': compaction of ${fat.size} keys " +
           s"staged keys ${subs.keySet.diff(fat.toSet).take(3).mkString(", ")} outside them " +
           s"or missed ${fat.toSet.diff(subs.keySet).take(3).mkString(", ")}; nothing committed")
-      commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) => acc.updated(k, Seq(d)) })
+      commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) => acc.updated(k, Seq(Dir(d))) })
       invalidate(table)
     }
     fat.size
   }
 
   /** Retention prune for a CATEGORY-partitioned state table: rewrite it
-    * keeping only rows with `rangeCol >= keepFrom`, atomically (staged
-    * write, one commit — a crash leaves the un-pruned generation live).
-    * The streaming dedup state tables (`chunk_hashes`, `lsh_sigs`,
-    * `lsh_postings`) grow one row per distinct chunk/canonical FOREVER —
-    * inherent to exact dedup — and this is the knob that bounds them when
-    * a deployment accepts sliding-window semantics (dedup against the
-    * last N batches) instead: callers invoke it once per retention window,
-    * so the amortized per-batch cost is O(state / window). Rows keep their
-    * batch_id replay tags; a replayed prune recomputes the identical
-    * result. No-op when the table is absent.
+    * keeping only rows with `rangeCol >= keepFrom`, one file per key, in
+    * one staged write and commit (a crash leaves the un-pruned generation
+    * live). It bounds the dedup state tables, which grow one row per
+    * distinct chunk forever, when a deployment accepts sliding-window
+    * dedup; a replayed prune recomputes the identical result. No-op when
+    * the table is absent.
     */
   def retainFrom(table: String, rangeCol: String, keepFrom: Long,
                  partCol: String): Unit =
@@ -866,6 +846,14 @@ final case class TableStore(spark: SparkSession, root: String,
 }
 
 object TableStore {
+  /** One live physical dir of a manifest: `rel` under the table dir and,
+    * for a range table's dir, the range column's [lo, hi] over its rows
+    * (an unranged dir spans every value).
+    */
+  private final case class Dir(rel: String, lo: Long = Long.MinValue, hi: Long = Long.MaxValue) {
+    def ranged: Boolean = lo != Long.MinValue || hi != Long.MaxValue
+  }
+
   /** Thrown by a commit when another writer has taken the table (newer
     * epoch, foreign same-epoch writer id, or a lost marker read-back).
     * The store that threw must be treated as dead for the table —
@@ -874,13 +862,10 @@ object TableStore {
   final class WriterSupersededException(msg: String) extends IllegalStateException(msg)
 
   /** Default reader-grace window for GC: how many STALE generations
-    * (manifests + the physical dirs only they reference) survive past
-    * each commit, so a second cluster serving reads off the same root —
-    * the obvious deployment: one ingest writer, N query readers — can
-    * resolve generation N and finish scanning N's dirs while the writer
-    * commits up to `retain` further generations. 0 restores immediate GC
-    * (single-process deployments). `GRAFT_STORE_MANIFEST_RETAIN`
-    * overrides.
+    * (manifests + the dirs only they reference) survive each commit, so a
+    * reader process off the same root can finish scanning generation N
+    * while the writer commits `retain` more. 0 is immediate GC.
+    * `GRAFT_STORE_MANIFEST_RETAIN` overrides.
     */
   def ManifestRetainDefault: Int =
     sys.env.get("GRAFT_STORE_MANIFEST_RETAIN").flatMap(_.toIntOption).getOrElse(2)

@@ -316,7 +316,7 @@ object BalanceIngest {
 
       // replay-idempotent bracket (same as ChainIngest.appendChunk): a
       // reprocessed block rewrites its rows instead of duplicating them;
-      // one union probe over all three tables' edge buckets
+      // decided from the manifests' dir bounds, no job on the happy path
       store.deleteRangeAll(
         Seq(AccountsTable, TotalsTable, MatchedTable).map(_ -> "block_number"), n, n)
 
@@ -362,14 +362,14 @@ object BalanceIngest {
       val accRows = out.newAccounts
         .select("token", "address", "block_number", "balance", "group")
       Par.run(Seq(
-        () => store.appendBucketed(AccountsTable,
-          seeds.fold(accRows)(s => accRows.unionByName(s._1)), "block_number"),
-        () => store.appendBucketed(TotalsTable,
+        () => store.appendRange(AccountsTable,
+          seeds.fold(accRows)(s => accRows.unionByName(s._1)), "block_number", n, n),
+        () => store.appendRange(TotalsTable,
           seeds.fold(out.totalBalances)(s => out.totalBalances.unionByName(s._2)),
-          "block_number"),
-        () => store.appendBucketed(MatchedTable,
+          "block_number", n, n),
+        () => store.appendRange(MatchedTable,
           out.matchedTransfers.select("token", "from", "to", "value", "block_number"),
-          "block_number"))
+          "block_number", n, n))
         ++ stage ++ gauges)
       promoteAll()
       store.primeSmall(LedgerBlockTable, marker)
@@ -396,7 +396,7 @@ object BalanceIngest {
     *
     * Semantics are [[processQuietSpan]]'s, applied to one block: same
     * touched set, same resolver request set, same coalesce/`< n` base
-    * contracts, same commit bracket and crash protocol (deleteRange probe,
+    * contracts, same commit bracket and crash protocol (deleteRange sweep,
     * staged promote order, watermark rides the last promote). The
     * span/per-block equivalence property spec and the full-lifecycle specs
     * gate the two paths against each other.
@@ -425,7 +425,7 @@ object BalanceIngest {
     val nulL = lit(null).cast(LongType)
 
     // ONE union job collects the whole block slice (transfers, txs,
-    // receipts, header) — the per-table reads are single-bucket-pruned
+    // receipts, header) — the per-table reads open only block n's dirs
     val slice = store.readRange(ChainIngest.TransfersTable, "block_number", n, n, null)
         .select(lit("t").as("kind"), col("token").as("b1"), col("from").as("b2"),
           col("to").as("b3"), col("value").cast(wei).as("d"), nulL.as("l"))
@@ -533,7 +533,7 @@ object BalanceIngest {
       t.from.exists(subsMap.contains) || t.to.exists(subsMap.contains))
 
     // fees per group: Σ gas_price × gas_used over subscribed senders' txs
-    // (inner receipt join on hash, block-scoped by the single-bucket read)
+    // (inner receipt join on hash, block-scoped by the ranged read)
     val feeByGroup: Map[Long, java.math.BigDecimal] = txRows
       .flatMap { case (hash, from, gasPrice) =>
         for (f <- from; g <- subsMap.get(f); gu <- gasUsed.get(hash))
@@ -616,9 +616,9 @@ object BalanceIngest {
     metrics.foreach(_.changedAccountPerBlock.set(
       snaps.map(_._2).distinct.size.toLong)) // driver-known, zero jobs
     Par.run(Seq(
-      () => store.appendBucketed(AccountsTable, accountsDf, "block_number"),
-      () => store.appendBucketed(TotalsTable, totalsDf, "block_number"),
-      () => store.appendBucketed(MatchedTable, matchedDf, "block_number"))
+      () => store.appendRange(AccountsTable, accountsDf, "block_number", n, n),
+      () => store.appendRange(TotalsTable, totalsDf, "block_number", n, n),
+      () => store.appendRange(MatchedTable, matchedDf, "block_number", n, n))
       ++ commitStage)
     promoteCommit()
   }
@@ -781,8 +781,8 @@ object BalanceIngest {
         Relational.latestPerKey(totals, Seq("group", "token"), last),
         Seq("group", "token")))
 
-    // replay-idempotent bracket over the whole span: one union probe over
-    // all three tables' edge buckets, then ONE concurrent bracket carrying
+    // replay-idempotent bracket over the whole span: deletes decided from
+    // the manifests' dir bounds, then ONE concurrent bracket carrying
     // the history appends, the state+watermark staging, AND the span gauge
     // (the state plans read only OLD files until the ordered promote below
     // — marker first, state dirs, balance watermark last, same crash
@@ -798,11 +798,11 @@ object BalanceIngest {
         snaps.select("block_number", "address").distinct().count() / (hi - lo + 1))
     }
     Par.run(Seq(
-      () => store.appendBucketed(AccountsTable,
-        snaps.select("token", "address", "block_number", "balance", "group"), "block_number"),
-      () => store.appendBucketed(TotalsTable, totals, "block_number"),
-      () => store.appendBucketed(MatchedTable,
-        matched.select("token", "from", "to", "value", "block_number"), "block_number"))
+      () => store.appendRange(AccountsTable, snaps.select("token", "address",
+        "block_number", "balance", "group"), "block_number", lo, hi),
+      () => store.appendRange(TotalsTable, totals, "block_number", lo, hi),
+      () => store.appendRange(MatchedTable,
+        matched.select("token", "from", "to", "value", "block_number"), "block_number", lo, hi))
       ++ commitStage ++ gauge)
     promoteCommit()
     // successor state is in the store; the caller reloads lazily

@@ -21,7 +21,7 @@ import graft.chain._
   *     decides);
   *   - reorg (T5): the winning branch is traced parent-by-parent to its
   *     branch point (indexer.go:370-406); [lowest contradicted height, old
-  *     tip] retracts from every table as an O(range) bucket delete plus a
+  *     tip] retracts from every table as an O(range) ranged-dir delete plus a
   *     reorg audit row (store/reorg/reorg.go:50-54), then the new branch
   *     inserts;
   *   - catch-up (T3): inserts proceed in ≤ `maxBlocksPerChunk` slices
@@ -44,10 +44,10 @@ import graft.chain._
   * Scale invariants (the 100 TB lens):
   *   - driver traffic per batch is O(batch + reorgWindow) tiny header rows
   *     — the stored chain is read ONLY in [min(incoming) − reorgWindow,
-  *     head], a partition-pruned bucket read; payload tables never reach
+  *     head], a read of only the dirs in range; payload tables never reach
   *     the driver;
-  *   - retraction rewrites only the buckets overlapping the retracted
-  *     range (TableStore.deleteRange), not the table;
+  *   - retraction drops the dirs inside the retracted range and rewrites
+  *     only a dir straddling it (TableStore.deleteRange), not the table;
   *   - TD is O(batch) new rows per batch, O(1) state — not a global window
   *     over all history.
   *
@@ -429,7 +429,7 @@ object ChainIngest {
   }
 
   /** Retraction (T5/S12): delete [from, to] from every derived table as an
-    * O(range) bucket delete (store/store.go:175-212,319-378), plus the
+    * O(range) ranged-dir delete (store/store.go:175-212,319-378), plus the
     * audit row (store/reorg/reorg.go:50-54) carrying the OLD chain's
     * hashes at the range ends.
     *
@@ -481,8 +481,9 @@ object ChainIngest {
     * head_state update rewrites the same rows instead of duplicating them —
     * the parquet-store equivalent of the reference's per-chunk transaction
     * with duplicate-key tolerance (store/store.go:129-147,
-    * common/errors.go:48-57). On the happy path the deletes hit empty
-    * tip buckets and cost nothing.
+    * common/errors.go:48-57). On the happy path the deletes are decided
+    * from the manifests' dir bounds and cost no Spark job; every append
+    * declares the same [lo, hi] as its dir's bounds.
     */
   private def appendChunk(
       spark: SparkSession,
@@ -493,9 +494,8 @@ object ChainIngest {
     import spark.implicits._
     val lo = tds.map(_._1).min
     val hi = tds.map(_._1).max
-    // only the per-table delete-before-append order matters; the six
-    // deletes probe their edge buckets in ONE union job (happy path: all
-    // clean) instead of six per-table isEmpty jobs per chunk
+    // only the per-table delete-before-append order matters; on the happy
+    // path every dir is disjoint from [lo, hi], so the sweep runs no job
     store.deleteRangeAll(
       (HeadersTable -> "number") +:
       Seq(TxTable, ReceiptsTable, LogsTable, TransfersTable).map(_ -> "block_number") :+
@@ -514,14 +514,14 @@ object ChainIngest {
       .select(col("block"), col("hash"), col("td").cast(Rewards.wei).as("td"))
 
     Par.run(Seq(
-      () => store.appendBucketed(HeadersTable, Transforms.blockHeaders(blocks), "number"),
-      () => store.appendBucketed(TxTable, Transforms.transactions(blocks), "block_number"),
-      () => store.appendBucketed(ReceiptsTable, Transforms.transactionReceipts(receipts),
-        "block_number"),
-      () => store.appendBucketed(LogsTable, logs, "block_number"),
-      () => store.appendBucketed(TransfersTable, Transforms.allTransfers(eth, erc20, rewards),
-        "block_number"),
-      () => store.appendBucketed(TdTable, tdDf, "block")))
+      () => store.appendRange(HeadersTable, Transforms.blockHeaders(blocks), "number", lo, hi),
+      () => store.appendRange(TxTable, Transforms.transactions(blocks), "block_number", lo, hi),
+      () => store.appendRange(ReceiptsTable, Transforms.transactionReceipts(receipts),
+        "block_number", lo, hi),
+      () => store.appendRange(LogsTable, logs, "block_number", lo, hi),
+      () => store.appendRange(TransfersTable, Transforms.allTransfers(eth, erc20, rewards),
+        "block_number", lo, hi),
+      () => store.appendRange(TdTable, tdDf, "block", lo, hi)))
   }
 
   /** Wire the ingest DAG as a streaming query over a bundle stream.

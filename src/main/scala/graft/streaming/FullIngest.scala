@@ -35,12 +35,13 @@ import graft.chain._
   */
 object FullIngest {
 
-  /** Range-keyed tables the JDBC mirror tracks, with their range column —
+  /** The chain and balance range tables, with their range column — the
+    * set the JDBC mirror tracks and whose file counts the metrics export;
     * the same set the reference writes to MySQL inside the per-block
     * transaction (store/store.go:215-316 for the chain tables, the
     * transfer processor's inserts for the balance tables).
     */
-  private val MirroredTables: Seq[(String, String)] = Seq(
+  private val RangeTables: Seq[(String, String)] = Seq(
     ChainIngest.HeadersTable   -> "number",
     ChainIngest.TxTable        -> "block_number",
     ChainIngest.ReceiptsTable  -> "block_number",
@@ -76,7 +77,7 @@ object FullIngest {
     */
   private def mirrorRange(spark: SparkSession, store: TableStore,
                           db: JdbcMirror, from: Long, to: Long): Unit = {
-    MirroredTables.foreach { case (t, rangeCol) =>
+    RangeTables.foreach { case (t, rangeCol) =>
       if (store.exists(t))
         db.appendRange(t, store.readRange(t, rangeCol, from, to, null), rangeCol, from, to)
     }
@@ -132,7 +133,7 @@ object FullIngest {
         // reference's single-transaction DELETEs (store/store.go:319-378);
         // the lowered mirror watermark makes the winning branch re-mirror
         mirror.foreach { db =>
-          MirroredTables.foreach { case (t, rangeCol) =>
+          RangeTables.foreach { case (t, rangeCol) =>
             if (db.exists(t)) db.deleteRange(t, rangeCol, lo, hi)
           }
           if (mirrorThrough(db) >= lo) advanceMirror(spark, db, lo - 1)
@@ -179,6 +180,7 @@ object FullIngest {
     // after the balance pipeline: this batch's full lifecycle cost
     metrics.foreach { m =>
       m.insertBlock.observe((System.nanoTime() - t0) / 1e9)
+      RangeTables.foreach { case (t, _) => m.tableFiles.put(t, store.fileCounts(t).values.sum) }
       // stderr, not stdout: Bench's contract is that the one JSON result
       // line is the last thing on stdout, and a per-batch metrics line
       // here would flood past it (the driver's parser reads a bounded

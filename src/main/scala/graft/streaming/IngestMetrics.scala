@@ -78,6 +78,10 @@ final class IngestMetrics extends Serializable {
     * another node (rpc_failover).
     */
   val rpcFailover = new AtomicLong
+  /** Gauge: live data files per range table after the last batch, from
+    * the store's cache-backed `fileCounts` (no listing, no job).
+    */
+  val tableFiles = new scala.collection.concurrent.TrieMap[String, Long]
 
   def snapshot: Seq[(String, Double)] = {
     val base = Seq(

@@ -57,10 +57,10 @@ object MetricsServer {
 
   /** The Prometheus text form: `graft_`-prefixed counters/gauges plus the
     * `insert_block` and `fetch_block` latency histograms with cumulative
-    * `le` buckets — the
-    * shape every scraper ingests natively. Kept in lockstep with
-    * [[IngestMetrics.snapshot]] (the queryable-DataFrame face of the same
-    * numbers).
+    * `le` buckets — the shape every scraper ingests natively — and the
+    * per-table `graft_table_files` gauge. The scalars and histograms are
+    * kept in lockstep with [[IngestMetrics.snapshot]] (the
+    * queryable-DataFrame face of the same numbers).
     */
   def render(m: IngestMetrics): String = {
     val sb = new StringBuilder
@@ -80,8 +80,18 @@ object MetricsServer {
     metric("graft_rpc_failover", "counter", m.rpcFailover.get().toDouble)
     renderHistogram(sb, "graft_insert_block_seconds", m.insertBlock)
     renderHistogram(sb, "graft_fetch_block_seconds", m.fetchBlock)
+    renderTableGauge(sb, "graft_table_files", m.tableFiles)
     sb.toString
   }
+
+  /** One gauge labelled by table, in table order; nothing when empty. */
+  def renderTableGauge(sb: StringBuilder, name: String, v: collection.Map[String, Long]): Unit =
+    if (v.nonEmpty) {
+      sb.append("# TYPE ").append(name).append(" gauge\n")
+      v.toSeq.sorted.foreach { case (t, n) =>
+        sb.append(name).append("{table=\"").append(t).append("\"} ").append(n).append('\n')
+      }
+    }
 
   /** One Prometheus histogram block (TYPE, cumulative `le` buckets incl.
     * +Inf, _sum, _count) — shared by every metrics face so the exposition

@@ -197,9 +197,9 @@ object StreamingDedup {
       .localCheckpoint(true)
 
     store.deleteRange(VerdictTable, "batch_id", bid, bid)
-    store.appendBucketed(VerdictTable,
+    store.appendRange(VerdictTable,
       verdicts.select("batch_id", "doc_id", "is_new", "dup_of", "est_jaccard"),
-      "batch_id")
+      "batch_id", bid, bid)
 
     // 6. index growth: canonicals only, append-only-missing under replay.
     //    EACH table gates its append on ITS OWN already-landed rows: a

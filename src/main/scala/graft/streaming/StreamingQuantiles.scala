@@ -91,6 +91,6 @@ object StreamingQuantiles {
       .withColumn("batch_rows", coalesce(col("batch_rows"), lit(0L)))
       .withColumn("batch_id", lit(bid))
     store.deleteRange(QuantilesTable, "batch_id", bid, bid)
-    store.appendBucketed(QuantilesTable, snapshot, "batch_id")
+    store.appendRange(QuantilesTable, snapshot, "batch_id", bid, bid)
   }
 }

@@ -76,6 +76,6 @@ object StreamingSessions {
         col("session_start"), col("session_end"),
         col("n_events"), col("last_ts"))
     store.deleteRange(SessionsTable, "batch_id", bid, bid)
-    store.appendBucketed(SessionsTable, tagged, "batch_id")
+    store.appendRange(SessionsTable, tagged, "batch_id", bid, bid)
   }
 }

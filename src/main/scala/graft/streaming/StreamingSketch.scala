@@ -67,6 +67,6 @@ object StreamingSketch {
       .withColumn("batch_id", lit(bid))
       .select("batch_id", "g", "m", "n_zero", "harmonic", "hll_est")
     store.deleteRange(CardinalityTable, "batch_id", bid, bid)
-    store.appendBucketed(CardinalityTable, snapshot, "batch_id")
+    store.appendRange(CardinalityTable, snapshot, "batch_id", bid, bid)
   }
 }

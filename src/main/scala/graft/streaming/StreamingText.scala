@@ -94,7 +94,7 @@ object StreamingText {
     *      from an EARLIER batch (left-semi probe; the batch side is
     *      small) or earlier in THIS batch (the d9 min(struct) rule);
     *   3. per-doc counts land in `chunk_dedup` by delete-then-append on
-    *      the batch-id bucket (replays overwrite, never duplicate);
+    *      the batch id (replays overwrite, never duplicate);
     *   4. the batch's distinct hashes append to `chunk_hashes` TAGGED
     *      with bid — which is what makes the crash window safe: a
     *      replayed batch filters its own half-written hashes out of the
@@ -172,7 +172,7 @@ object StreamingText {
       .withColumn("dup_fraction",
         round(col("dup_chunks").cast("double") / col("n_chunks").cast("double"), 6))
     store.deleteRange("chunk_dedup", "batch_id", bid, bid)
-    store.appendBucketed("chunk_dedup", counts, "batch_id")
+    store.appendRange("chunk_dedup", counts, "batch_id", bid, bid)
     // only store-fresh hashes append, and of those only the ones a crashed
     // attempt at this SAME bid didn't already land (the pruned scan again):
     // the state table stays O(distinct chunks) even under a crash LOOP on

@@ -185,6 +185,14 @@ class IndexerSpec extends SparkSpec {
         .find(_.startsWith("graft_fetch_block_seconds_count ")).map(_.split(' ')(1).toLong)
       assert(fetched.exists(_ >= 6L), s"expected >= 6 fetched bundles:\n$scraped")
       assert(scraped.contains("graft_rpc_failover 0"))
+      // the range tables' live file counts, from the store's fileCounts
+      Seq(ChainIngest.HeadersTable, BalanceIngest.AccountsTable).foreach { t =>
+        val files = scraped.linesIterator.collectFirst {
+          case l if l.startsWith(s"""graft_table_files{table="$t"} """) => l.split(' ')(1).toLong
+        }
+        assert(files.contains(wiring.store.fileCounts(t).values.sum) && files.exists(_ > 0),
+          s"expected graft_table_files for $t:\n$scraped")
+      }
     } finally {
       wiring.close()
       ws.stop()

@@ -19,9 +19,8 @@ class ManifestStoreSpec extends SparkSpec {
   // they keep asserting the MINIMAL-garbage contract; the deployment
   // default (retain = 2 reader-grace generations) is covered by the
   // dedicated grace test
-  private def fresh(bucketSize: Long = 10L, retain: Int = 0): TableStore =
-    TableStore(spark, Files.createTempDirectory("graft-man").toString,
-      bucketSize, manifestRetain = retain)
+  private def fresh(retain: Int = 0): TableStore =
+    TableStore(spark, Files.createTempDirectory("graft-man").toString, manifestRetain = retain)
 
   /** Version token of the marker — since the writer fence the marker
     * carries "version epoch writerId", and readers take the first token.
@@ -36,25 +35,56 @@ class ManifestStoreSpec extends SparkSpec {
     Files.list(Paths.get(store.root, table)).iterator().asScala
       .map(_.getFileName.toString).toSeq.sorted
 
+  /** The current manifest's entries as (key, rel dir, bounds) rows. */
+  private def entries(store: TableStore, table: String): Seq[Array[String]] = {
+    val tdir = Paths.get(store.root, table)
+    Files.readString(tdir.resolve(s".manifest.${genVersion(tdir.resolve(".gen"))}"))
+      .linesIterator.filter(l => l.nonEmpty && l != "#end").map(_.split('\t')).toSeq
+  }
+
   test("bucketed append / range delete / range read semantics match rename mode") {
     val store = fresh()
-    store.appendBucketed("t", (0L until 100L).toDF("n"), "n")
+    (0L until 10L).foreach(i =>
+      store.appendRange("t", (10 * i until 10 * i + 10).toDF("n"), "n", 10 * i, 10 * i + 9))
     store.deleteRange("t", "n", 15L, 74L)
     assert(rows(store, "t") == ((0L to 14L) ++ (75L to 99L)))
     val got = store.readRange("t", "n", 5L, 9L, null)
     assert(got.select("n").collect().map(_.getLong(0)).sorted.toSeq == (5L to 9L))
     // append after delete composes
-    store.appendBucketed("t", Seq(1000L).toDF("n"), "n")
+    store.appendRange("t", Seq(1000L).toDF("n"), "n", 1000L, 1000L)
     assert(rows(store, "t") == ((0L to 14L) ++ (75L to 99L) :+ 1000L))
-    // and the fully-retracted buckets' physical dirs were GC'd: all
-    // remaining data dirs hold only live buckets
-    val liveBuckets = Set(0L, 1L, 7L, 8L, 9L, 100L)
-    Files.walk(Paths.get(store.root, "t")).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("bucket="))
-      .foreach { p =>
-        val b = p.getFileName.toString.stripPrefix("bucket=").toLong
-        assert(liveBuckets.contains(b), s"retracted bucket dir $p must be GC'd")
-      }
+    // every manifest line carries its dir's bounds, and the dirs the
+    // delete dropped or replaced were GC'd: the data dirs on disk are
+    // exactly the live ones
+    val live = entries(store, "t")
+    assert(live.map(e => (e(2).toLong, e(3).toLong)).sorted == Seq((0L, 9L), (10L, 14L),
+      (75L, 79L), (80L, 89L), (90L, 99L), (1000L, 1000L)))
+    assert(ls(store, "t").filter(_.startsWith(".d-")).toSet == live.map(_(1)).toSet,
+      "retracted dirs must be GC'd")
+  }
+
+  test("a crash between a merge's stage and its commit leaves the pre-merge rows") {
+    // 72 per-block dirs: the 73rd append finds 8 dirs outside the newest
+    // 64 and stages their merge before its own write, which then fails on
+    // a row outside its span — the crash window between stage and commit
+    val store = fresh()
+    (0L until 72L).foreach(n => store.appendRange("t", Seq(n).toDF("n"), "n", n, n))
+    val before = ls(store, "t").filter(_.startsWith(".d-")).toSet
+    intercept[Exception](store.appendRange("t", Seq(72L, 500L).toDF("n"), "n", 72L, 72L))
+    val orphans = ls(store, "t").filter(_.startsWith(".d-")).toSet -- before
+    assert(orphans.exists(d => Files.walk(Paths.get(store.root, "t", d)).iterator().asScala
+      .exists(_.getFileName.toString.endsWith(".parquet"))), s"no merged dir staged: $orphans")
+    // a fresh store (as after a restart) reads the pre-merge generation
+    val reader = TableStore(spark, store.root, manifestRetain = 0)
+    assert(rows(reader, "t") == (0L until 72L))
+    assert(reader.rangeDirs("t") == (0L until 72L).map(n => (n, n)))
+    // its next commit merges anew and collects the orphans
+    reader.appendRange("t", Seq(72L).toDF("n"), "n", 72L, 72L)
+    assert(rows(reader, "t") == (0L to 72L))
+    assert(reader.rangeDirs("t").head == ((0L, 7L)))
+    val onDisk = ls(reader, "t").filter(_.startsWith(".d-")).toSet
+    assert(onDisk.intersect(orphans).isEmpty, s"orphans survived the commit: $orphans")
+    assert(onDisk == entries(reader, "t").map(_(1)).toSet)
   }
 
   test("a crash between stage and promote leaves the old generation live; replay converges") {
@@ -65,8 +95,7 @@ class ManifestStoreSpec extends SparkSpec {
     stage.foreach(_.apply())
     // a reader (fresh store instance = fresh caches, as after a restart)
     // still sees the OLD generation — the staged dir is invisible
-    val reader = TableStore(spark, store.root, store.bucketSize,
-      manifestRetain = 0)
+    val reader = TableStore(spark, store.root, manifestRetain = 0)
     assert(rows(reader, "t") == Seq(1L, 2L), "uncommitted stage must stay invisible")
     // the recovery replay re-stages and promotes; the orphan dir is GC'd
     reader.replace("t", Seq(7L, 8L).toDF("n"))
@@ -89,7 +118,7 @@ class ManifestStoreSpec extends SparkSpec {
     Files.deleteIfExists(Paths.get(store.root, "t", "..gen.crc"))
     // version 1's manifest was GC'd at commit 2; readers must NOT
     // resurrect generation 1 — they probe .manifest.2 and roll forward
-    val reader = TableStore(spark, store.root, store.bucketSize)
+    val reader = TableStore(spark, store.root)
     assert(rows(reader, "t") == Seq(2L),
       "reader must roll forward over a crashed marker write")
     // and the next commit heals the marker
@@ -111,18 +140,18 @@ class ManifestStoreSpec extends SparkSpec {
     // torn NEXT manifest (crash mid-write, marker untouched): truncated
     // entry line, no terminator
     Files.writeString(tdir.resolve(".manifest.3"), "\t.d-absent-dir\n\u0000trunc")
-    val r1 = TableStore(spark, store.root, store.bucketSize)
+    val r1 = TableStore(spark, store.root)
     assert(rows(r1, "t") == Seq(2L), "torn successor manifest must not roll forward")
     // torn manifest truncated to EMPTY is equally invalid
     Files.writeString(tdir.resolve(".manifest.3"), "")
-    val r2 = TableStore(spark, store.root, store.bucketSize)
+    val r2 = TableStore(spark, store.root)
     assert(rows(r2, "t") == Seq(2L), "empty torn manifest must not read as absent")
     Files.delete(tdir.resolve(".manifest.3"))
     // torn MARKER (crash mid-overwrite): unparsable content falls back to
     // the highest valid manifest on disk
     Files.writeString(tdir.resolve(".gen"), "")
     Files.deleteIfExists(tdir.resolve("..gen.crc"))
-    val r3 = TableStore(spark, store.root, store.bucketSize)
+    val r3 = TableStore(spark, store.root)
     assert(rows(r3, "t") == Seq(2L), "torn marker must recover from the manifest listing")
     // and the next commit heals everything
     r3.append("t", Seq(3L).toDF("n"))
@@ -161,12 +190,8 @@ class ManifestStoreSpec extends SparkSpec {
     }
     def got(): Set[(Long, Int)] = store.readOr("p", null).select("n", "shard").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
-    def entries(): Seq[(String, String)] = {
-      val tdir = Paths.get(store.root, "p")
-      Files.readString(tdir.resolve(s".manifest.${genVersion(tdir.resolve(".gen"))}"))
-        .linesIterator.filter(l => l.nonEmpty && l != "#end")
-        .map { l => val Array(k, d) = l.split('\t'); (k, d) }.toSeq
-    }
+    def entries(): Seq[(String, String)] =
+      this.entries(store, "p").map { case Array(k, d) => (k, d) }
     val before = entries().map(_._2.takeWhile(_ != '/')).toSet
     assert(store.fileCounts("p").values.toSet == Set(3L))
     assert(store.compactPartitions("p", "shard", maxFiles = 2) == 40)
@@ -183,7 +208,7 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("empty appends stay absent but typed; replace-from-self reads old files") {
     val store = fresh()
-    store.appendBucketed("e", Seq.empty[Long].toDF("n"), "n")
+    store.appendRange("e", Seq.empty[Long].toDF("n"), "n", 0L, 0L)
     assert(!store.exists("e"))
     assert(store.read("e", null).schema.fieldNames.sameElements(Array("n")))
     store.replace("s", Seq((1L, "a"), (2L, "b")).toDF("n", "v"))
@@ -233,8 +258,7 @@ class ManifestStoreSpec extends SparkSpec {
     // table serves exactly the winner's generation.
     val a = fresh()
     a.replace("t", Seq(1L, 2L).toDF("n")) // a claims epoch 1
-    val b = TableStore(spark, a.root, a.bucketSize,
-      manifestRetain = 0)
+    val b = TableStore(spark, a.root, manifestRetain = 0)
     b.replace("t", Seq(9L).toDF("n")) // b observes epoch 1, claims 2
     assert(rows(b, "t") == Seq(9L))
     // a's next commit observes b's newer epoch and must refuse — BEFORE
@@ -244,15 +268,14 @@ class ManifestStoreSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("fenced"))
     // the table still serves b's generation to a fresh reader
-    val reader = TableStore(spark, a.root, a.bucketSize)
+    val reader = TableStore(spark, a.root)
     assert(rows(reader, "t") == Seq(9L), "the winner's generation must survive")
     // b keeps committing unharmed
     b.append("t", Seq(10L).toDF("n"))
     assert(rows(b, "t") == Seq(9L, 10L))
     // and a restart of the dead writer (a NEW instance) claims epoch 3
     // and supersedes back — latest writer wins, always loudly
-    val a2 = TableStore(spark, a.root, a.bucketSize,
-      manifestRetain = 0)
+    val a2 = TableStore(spark, a.root, manifestRetain = 0)
     a2.replace("t", Seq(42L).toDF("n"))
     assert(rows(a2, "t") == Seq(42L))
     intercept[TableStore.WriterSupersededException] {
@@ -282,15 +305,14 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("no rename is ever issued: physical dirs are immutable once committed") {
     val store = fresh()
-    store.appendBucketed("t", (0L until 30L).toDF("n"), "n")
+    store.appendRange("t", (0L until 30L).toDF("n"), "n", 0L, 29L)
     val before = ls(store, "t").filter(_.startsWith(".d-")).toSet
-    store.deleteRange("t", "n", 3L, 7L) // edge rewrite of bucket 0
+    store.deleteRange("t", "n", 3L, 7L) // the one dir straddles: rewritten
     val after = ls(store, "t").filter(_.startsWith(".d-")).toSet
-    // the rewrite created a NEW dir; the original top dir survives only
-    // while its other buckets are still referenced — nothing was renamed
-    // (every surviving name from `before` is still a prefix-stable dir)
-    assert(after.nonEmpty)
-    assert((after -- before).nonEmpty, "edge rewrite must land in a fresh immutable dir")
+    // the rewrite created a NEW dir and the original, no longer
+    // referenced, was GC'd whole — nothing was renamed
+    assert(after.size == 1 && before.size == 1)
+    assert(after != before, "a straddle rewrite must land in a fresh immutable dir")
     assert(rows(store, "t") == ((0L to 2L) ++ (8L to 29L)))
   }
 }

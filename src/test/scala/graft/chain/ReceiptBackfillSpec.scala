@@ -23,7 +23,7 @@ class ReceiptBackfillSpec extends SparkSpec {
   import spark.implicits._
 
   test("backfillRange rebuilds receipt-derived tables identically, preserving reward rows (S3/S4)") {
-    val store = TableStore(spark, Files.createTempDirectory("graft-bf").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-bf").toString)
     val registered = Seq((tokenX, 1L)).toDF("address", "block_number")
 
     // chain 1..3: block 2 carries a tx with an ETH transfer + an ERC20 log

@@ -1,64 +1,208 @@
 package graft.chain
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Bucketed-layout invariants of the table store: range deletes touch only
-  * overlapping buckets, edge buckets rewrite, covered buckets drop out of
-  * the manifest.
+/** Range-table invariants of the table store: each dir carries its
+  * [lo, hi], range deletes drop the dirs inside the range and rewrite only
+  * a dir straddling it, range reads open only intersecting dirs, and
+  * compaction stays off the newest dirs.
   */
 class TableStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fresh(bucketSize: Long = 10L): TableStore =
-    TableStore(spark, Files.createTempDirectory("graft-ts").toString, bucketSize)
+  private def fresh(): TableStore =
+    TableStore(spark, Files.createTempDirectory("graft-ts").toString)
 
   private def rows(store: TableStore, table: String): Seq[Long] =
     store.readOr(table, null).select("n").collect().map(_.getLong(0)).sorted.toSeq
 
+  /** `dirs` appends of ten rows each, [10i, 10i + 9] per dir. */
+  private def tens(store: TableStore, table: String, dirs: Int): Unit =
+    (0L until dirs).foreach(i =>
+      store.appendRange(table, (10 * i until 10 * i + 10).toDF("n"), "n", 10 * i, 10 * i + 9))
+
+  /** The current manifest's range dirs on disk: [lo, hi] → rel dir. */
+  private def liveDirs(store: TableStore, table: String): Map[(Long, Long), String] = {
+    val tdir = Paths.get(store.root, table)
+    val v = Files.readString(tdir.resolve(".gen")).trim.split("\\s+")(0)
+    Files.readString(tdir.resolve(s".manifest.$v")).linesIterator.map(_.split('\t'))
+      .collect { case Array(_, rel, lo, hi) => (lo.toLong, hi.toLong) -> rel }.toMap
+  }
+
+  private def dataDirs(store: TableStore, table: String): Set[String] =
+    Files.list(Paths.get(store.root, table)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith(".d-")).toSet
+
   test("deleteRange removes exactly the range across bucket kinds") {
     val store = fresh()
-    store.appendBucketed("t", (0L until 100L).toDF("n"), "n")
-    // [15, 74]: bucket 1 partial, buckets 2-6 fully covered, bucket 7 partial
+    tens(store, "t", 10)
+    // [15, 74]: dir [10, 19] straddles, dirs [20, 29]..[60, 69] lie inside,
+    // dir [70, 79] straddles
     store.deleteRange("t", "n", 15L, 74L)
     assert(rows(store, "t") == ((0L to 14L) ++ (75L to 99L)))
-    // fully-covered buckets are gone (no rewrite), edge buckets remain
-    assert(store.fileCounts("t").keySet == Set(0, 1, 7, 8, 9).map(b => s"bucket=$b"))
+    // inside dirs are gone (no rewrite), straddlers keep narrowed bounds
+    assert(store.rangeDirs("t") == Seq((0L, 9L), (10L, 14L), (75L, 79L), (80L, 89L), (90L, 99L)))
   }
 
   test("deleteRange aligned exactly on bucket boundaries") {
     val store = fresh()
-    store.appendBucketed("t", (0L until 40L).toDF("n"), "n")
-    store.deleteRange("t", "n", 10L, 29L) // buckets 1-2 exactly
+    tens(store, "t", 4)
+    val before = dataDirs(store, "t")
+    store.deleteRange("t", "n", 10L, 29L) // dirs [10, 19] and [20, 29] exactly
     assert(rows(store, "t") == ((0L to 9L) ++ (30L to 39L)))
-    assert(store.fileCounts("t").keySet == Set("bucket=0", "bucket=3"))
+    assert(store.rangeDirs("t") == Seq((0L, 9L), (30L, 39L)))
+    assert(dataDirs(store, "t").subsetOf(before), "an aligned delete only drops dirs")
   }
 
   test("deleteRange beyond the data and on missing tables is a no-op") {
     val store = fresh()
     store.deleteRange("absent", "n", 0L, 100L) // missing table
-    store.appendBucketed("t", (0L until 5L).toDF("n"), "n")
+    store.appendRange("t", (0L until 5L).toDF("n"), "n", 0L, 4L)
     store.deleteRange("t", "n", 50L, 90L) // empty overlap
     assert(rows(store, "t") == (0L to 4L))
   }
 
   test("readRange prunes to the requested bucket span") {
     val store = fresh()
-    store.appendBucketed("t", (0L until 100L).toDF("n"), "n")
+    tens(store, "t", 10)
     val got = store.readRange("t", "n", 35L, 44L, null)
     assert(got.select("n").collect().map(_.getLong(0)).sorted.toSeq == (35L to 44L))
-    // pruned at PATH level: only the in-range bucket keys' physical dirs
+    // pruned at PATH level: only the dirs whose bounds intersect the range
     // are ever listed
+    val in = Seq((30L, 39L), (40L, 49L)).map(liveDirs(store, "t"))
     assert(got.inputFiles.nonEmpty &&
-      got.inputFiles.forall(f => f.contains("/bucket=3/") || f.contains("/bucket=4/")))
+      got.inputFiles.forall(f => in.exists(d => f.contains(s"/$d/"))))
+  }
+
+  test("after 100 per-block appends a one-block read opens only that block's dir") {
+    val store = fresh()
+    (0L until 100L).foreach(n => store.appendRange("t", Seq(n).toDF("n"), "n", n, n))
+    Seq(40L, 90L, 99L).foreach { n =>
+      val got = store.readRange("t", "n", n, n, null)
+      assert(got.select("n").collect().map(_.getLong(0)).toSeq == Seq(n))
+      val own = liveDirs(store, "t")((n, n))
+      assert(got.inputFiles.nonEmpty && got.inputFiles.forall(_.contains(s"/$own/")),
+        s"block $n read ${got.inputFiles.mkString(", ")}")
+    }
+  }
+
+  test("a range append fails loudly on a row outside its declared span") {
+    val store = fresh()
+    store.appendRange("t", Seq(1L).toDF("n"), "n", 0L, 9L)
+    val ex = intercept[Exception](store.appendRange("t", Seq(5L, 12L).toDF("n"), "n", 0L, 9L))
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("outside the appended span")))
+    assert(rows(store, "t") == Seq(1L), "a failed append commits nothing")
+  }
+
+  test("the happy-path bracket and a 2-block retraction run no job and write no dir") {
+    // "a" holds 200 per-block dirs, merged tiers included; "b" a few
+    val store = fresh()
+    val tables = Seq("a", "b")
+    (0L until 200L).foreach(n => store.appendRange("a", Seq(n, n).toDF("n"), "n", n, n))
+    (190L until 200L).foreach(n => store.appendRange("b", Seq(n, n).toDF("n"), "n", n, n))
+    def gen(t: String) = Files.readString(Paths.get(store.root, t, ".gen"))
+    val gens = tables.map(gen)
+    // the next span has no rows yet: nothing to drop, nothing to commit
+    val (_, happy) = graft.Profile.measure(spark)(_ =>
+      store.deleteRangeAll(tables.map(_ -> "n"), 200L, 200L))
+    assert(happy.jobs.get == 0L, s"happy-path bracket ran ${happy.jobs.get} jobs")
+    assert(tables.map(gen) == gens, "happy-path bracket committed")
+    val before = tables.map(dataDirs(store, _))
+    val (_, reorg) = graft.Profile.measure(spark)(_ =>
+      store.deleteRangeAll(tables.map(_ -> "n"), 198L, 199L))
+    assert(reorg.jobs.get == 0L, s"2-block retraction ran ${reorg.jobs.get} jobs")
+    tables.zip(before).foreach { case (t, b) =>
+      assert(dataDirs(store, t).subsetOf(b), s"$t: a retraction of per-block dirs wrote a dir")
+      val from = if (t == "a") 0L else 190L
+      assert(rows(store, t) == (from to 197L).flatMap(n => Seq(n, n)))
+    }
+  }
+
+  test("size-tiered compaction over 1,000 per-block appends keeps dirs bounded") {
+    // live dirs stay under 64 + 8 per tier (4 tiers below 8^4 blocks), the
+    // newest 64 dirs are never merged, and each row is rewritten at most
+    // once per tier climb (3 times below 8^4 blocks)
+    val store = fresh()
+    val n = 1000L
+    var seen = Set.empty[(Long, Long)]
+    var rewritten = 0L
+    (0L until n).foreach { b =>
+      store.appendRange("t", Seq(b).toDF("n"), "n", b, b)
+      val dirs = store.rangeDirs("t")
+      assert(dirs.size <= 64 + 8 * 4, s"${dirs.size} live dirs after block $b")
+      assert(dirs.takeRight(64).forall { case (lo, hi) => lo == hi },
+        s"a newest-64 dir was merged after block $b")
+      rewritten += dirs.filterNot(seen).collect { case (lo, hi) if lo < hi => hi - lo + 1 }.sum
+      seen ++= dirs
+    }
+    assert(rewritten > 0 && rewritten <= 3 * n, s"rows rewritten: $rewritten")
+    assert(rows(store, "t") == (0L until n))
+  }
+
+  test("a merged dir never exceeds maxPartitionBytes") {
+    val store = fresh()
+    val cap = 16L * 1024
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, cap.toString)
+    // blocks alternate 8 thin and 8 fat (incompressible 3 KB payloads), so
+    // a run of thin blocks fits under the cap and a run of fat ones does not
+    val rnd = new scala.util.Random(7)
+    try (0L until 120L).foreach { b =>
+      val pay = if (b / 8 % 2 == 0) "x" else rnd.alphanumeric.take(3000).mkString
+      store.appendRange("t", Seq((b, pay)).toDF("n", "pay"), "n", b, b)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val tdir = Paths.get(store.root, "t")
+    def bytes(rel: String): Long = Files.walk(tdir.resolve(rel)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+      .map(Files.size).sum
+    val merged = liveDirs(store, "t").filter { case ((lo, hi), _) => lo < hi }
+    assert(merged.nonEmpty, "no run merged")
+    merged.foreach { case (span, rel) =>
+      assert(bytes(rel) <= cap, s"merged dir $span holds ${bytes(rel)} bytes") }
+    // the fat runs were held apart: some old fat blocks are still one dir each
+    assert(store.rangeDirs("t").dropRight(64).exists { case (lo, hi) => lo == hi && lo / 8 % 2 == 1 })
+    assert(rows(store, "t") == (0L until 120L))
+  }
+
+  test("retainFrom over an 8-partition table leaves one file per key and the same rows") {
+    // eight appends of growing size: the prune's scan packs files by size,
+    // so each key's eight files land in several scan partitions
+    val store = fresh()
+    val in = (1 to 8).flatMap(i => (0L until 100L * i).map(n => (n, (n % 20).toInt)))
+    (1 to 8).foreach(i => store.appendPartitioned("p",
+      (0L until 100L * i).map(n => (n, (n % 20).toInt)).toDF("n", "shard"), "shard"))
+    assert(store.fileCounts("p").values.toSet == Set(8L))
+    store.retainFrom("p", "n", 100L, "shard")
+    val counts = store.fileCounts("p")
+    assert(counts.keySet == (0 until 20).map(s => s"shard=$s").toSet)
+    assert(counts.values.toSet == Set(1L), s"one file per key after the prune: $counts")
+    val got = store.readOr("p", null).select("n", "shard").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(got.sorted == in.filter(_._1 >= 100L).sorted)
+  }
+
+  test("a manifest in the bucket layout fails loudly, naming the table") {
+    val store = fresh()
+    store.append("t", Seq(1L).toDF("n"))
+    val tdir = Paths.get(store.root, "t")
+    val v = Files.readString(tdir.resolve(".gen")).trim.split("\\s+")(0)
+    val man = tdir.resolve(s".manifest.$v")
+    Files.writeString(man, Files.readString(man).replace("\t.d-", "bucket=0\t.d-"))
+    Files.deleteIfExists(tdir.resolve(s"..manifest.$v.crc"))
+    val ex = intercept[IllegalStateException](TableStore(spark, store.root).exists("t"))
+    assert(ex.getMessage.contains("'t'") && ex.getMessage.contains("bucket"))
   }
 
   test("exists requires a data file: empty appends and hidden leftovers don't count") {
     val store = fresh()
     // an append of an EMPTY DataFrame writes only _SUCCESS — the table must
     // still read as absent or spark.read.parquet dies on schema inference
-    store.appendBucketed("e", Seq.empty[Long].toDF("n"), "n")
+    store.appendRange("e", Seq.empty[Long].toDF("n"), "n", 0L, 0L)
     assert(!store.exists("e"))
     // …but the schema sidecar still yields a TYPED empty frame
     val empty = store.readOr("e", null)
@@ -74,17 +218,18 @@ class TableStoreSpec extends SparkSpec {
     assert(!store.exists("l"))
 
     // a real data file flips it
-    store.appendBucketed("l", Seq(1L).toDF("n"), "n")
+    store.appendRange("l", Seq(1L).toDF("n"), "n", 1L, 1L)
     assert(store.exists("l"))
     assert(rows(store, "l") == Seq(1L))
   }
 
   test("append after a range delete lands in fresh bucket files") {
     val store = fresh()
-    store.appendBucketed("t", (0L until 20L).toDF("n"), "n")
-    store.deleteRange("t", "n", 10L, 19L)
-    store.appendBucketed("t", (10L until 20L).map(n => n + 1000).toDF("n"), "n")
+    store.appendRange("t", (0L until 20L).toDF("n"), "n", 0L, 19L)
+    store.deleteRange("t", "n", 10L, 19L) // straddles the one dir: rewritten as [0, 9]
+    store.appendRange("t", (10L until 20L).map(n => n + 1000).toDF("n"), "n", 1010L, 1019L)
     assert(rows(store, "t") == ((0L to 9L) ++ (1010L to 1019L)))
+    assert(store.rangeDirs("t") == Seq((0L, 9L), (1010L, 1019L)))
   }
 
   test("the schema sidecar is rewritten only when the schema changes") {
@@ -99,8 +244,8 @@ class TableStoreSpec extends SparkSpec {
     }
     store.append("a", Seq(1L).toDF("n"))
     unchanged("a")(store.append("a", Seq(2L).toDF("n")))
-    store.appendBucketed("b", Seq(1L).toDF("n"), "n")
-    unchanged("b")(store.appendBucketed("b", Seq(12L).toDF("n"), "n"))
+    store.appendRange("b", Seq(1L).toDF("n"), "n", 1L, 1L)
+    unchanged("b")(store.appendRange("b", Seq(12L).toDF("n"), "n", 12L, 12L))
     store.replace("r", Seq(1L).toDF("n"))
     unchanged("r")(store.replace("r", Seq(2L).toDF("n")))
     unchanged("r")(store.replaceAll(Seq("r" -> Seq(3L).toDF("n"))))
@@ -119,9 +264,9 @@ class TableStoreSpec extends SparkSpec {
     // from the root's scheme, so a cluster deployment points dataDir at
     // hdfs://… — this exercises the same dispatch with the local scheme
     val store = TableStore(spark,
-      "file://" + Files.createTempDirectory("graft-ts-uri").toString, bucketSize = 10L)
-    store.appendBucketed("t", (0L until 40L).toDF("n"), "n")
-    store.deleteRange("t", "n", 5L, 24L) // bucket 0/2 partial, bucket 1 covered
+      "file://" + Files.createTempDirectory("graft-ts-uri").toString)
+    tens(store, "t", 4)
+    store.deleteRange("t", "n", 5L, 24L) // dirs [0, 9]/[20, 29] straddle, [10, 19] inside
     assert(rows(store, "t") == ((0L to 4L) ++ (25L to 39L)))
     // whole-table replace reading its own previous generation
     store.replace("s", Seq((1L, "a"), (2L, "b")).toDF("n", "v"))
@@ -220,11 +365,11 @@ class TableStoreSpec extends SparkSpec {
     try (0 until 30).foreach { i =>
       val lo = 10L * (i / 3 * 3)
       i % 3 match {
-        case 0 => // five fresh rows in their own bucket
+        case 0 => // five fresh rows in their own dir
           committed.add(("b", n + 5))
-          store.appendBucketed("b", (lo until lo + 5).toDF("n"), "n")
+          store.appendRange("b", (lo until lo + 5).toDF("n"), "n", lo, lo + 4)
           n += 5
-        case 1 => // retract three of them: an edge-bucket rewrite
+        case 1 => // retract three of them: a straddling dir's rewrite
           committed.add(("b", n - 3))
           store.deleteRange("b", "n", lo, lo + 2)
           n -= 3

@@ -270,7 +270,7 @@ class JsonRpcFeedSpec extends SparkSpec {
 
       val subId = "rpc-feed"
       HeadSubscriptions.register(subId, feed)
-      val store = TableStore(spark, Files.createTempDirectory("graft-rpc").toString, bucketSize = 4L)
+      val store = TableStore(spark, Files.createTempDirectory("graft-rpc").toString)
       store.replace(BalanceIngest.SubsTable,
         Seq((1L, 1L, 1L, alice)).toDF("id", "block_number", "group", "address"))
       val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("rpc"))

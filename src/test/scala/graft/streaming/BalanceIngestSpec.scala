@@ -42,7 +42,7 @@ class BalanceIngestSpec extends SparkSpec {
     // zero transactions, so transactions/receipts/logs land as
     // _SUCCESS-only dirs — exists() must read them as absent and the
     // balance pass must run to completion
-    val store = TableStore(spark, Files.createTempDirectory("graft-bi0").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-bi0").toString)
     var parent = hash32(0)
     val bundles = (1L to 2L).map { n =>
       val b = block(n, parent); parent = b.hash; Bundle(b, Nil, Nil)
@@ -67,7 +67,7 @@ class BalanceIngestSpec extends SparkSpec {
     // carry miner rewards (and fees) to a subscribed coinbase identically
     def mk(): TableStore = {
       val store = TableStore(spark,
-        Files.createTempDirectory("graft-bi-miner").toString, bucketSize = 4L)
+        Files.createTempDirectory("graft-bi-miner").toString)
       var parent = hash32(0)
       val bundles = (1L to 3L).map { n =>
         val t = tx(n.toInt, alice, carol, 500, gasPrice = 100L)
@@ -113,7 +113,7 @@ class BalanceIngestSpec extends SparkSpec {
   }
 
   test("new-token admission: pending registry rows seed active subs and flip to n+1") {
-    val store = TableStore(spark, Files.createTempDirectory("graft-bi2").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-bi2").toString)
     var parent = hash32(0)
     val bundles = (1L to 2L).map { n =>
       val b = block(n, parent); parent = b.hash; Bundle(b, Nil, Nil)
@@ -169,7 +169,7 @@ class BalanceIngestSpec extends SparkSpec {
   }
 
   test("ingest → per-block balance processing → totals, fees, flips, reorg") {
-    val store = TableStore(spark, Files.createTempDirectory("graft-bi").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-bi").toString)
 
     // chain 1..3: block 2 carries alice→carol (tx + eth transfer log)
     val t2 = tx(1, alice, carol, 500, gasPrice = 100L)
@@ -289,7 +289,7 @@ class BalanceIngestSpec extends SparkSpec {
 
   test("quiet catch-up span runs as one DAG: Spark job count is O(1) in span length") {
     def countJobs(n: Long): (TableStore, Int) = {
-      val store = TableStore(spark, Files.createTempDirectory("graft-bi-vec").toString, bucketSize = 4L)
+      val store = TableStore(spark, Files.createTempDirectory("graft-bi-vec").toString)
       ingestActiveChain(store, n)
       // alice active since genesis — no pending subs, no registry: all quiet
       store.replace(BalanceIngest.SubsTable,
@@ -307,7 +307,7 @@ class BalanceIngestSpec extends SparkSpec {
     }
     // per-block processing launches ~a dozen Spark actions per block (the
     // round-7 scale bottleneck) — tripling the span must NOT triple the
-    // jobs; the only span-dependent cost is deleteRange's bucket count
+    // jobs; deleteRange decides from dir bounds and adds none per span
     val (_, jobs4)      = countJobs(4L)
     val (store, jobs12) = countJobs(12L)
     assert(jobs12 < 90, s"expected a bounded job count, got $jobs12")
@@ -328,7 +328,7 @@ class BalanceIngestSpec extends SparkSpec {
 
   test("vectorized span is row-identical to block-at-a-time processing") {
     def build(): TableStore = {
-      val s = TableStore(spark, Files.createTempDirectory("graft-bi-eq").toString, bucketSize = 4L)
+      val s = TableStore(spark, Files.createTempDirectory("graft-bi-eq").toString)
       ingestActiveChain(s, 8L)
       // alice active from the start, bob PENDING → block 1 is an event
       // block (per-block bracket), 2..8 are quiet (vectorized in store A)
@@ -357,7 +357,7 @@ class BalanceIngestSpec extends SparkSpec {
 
   test("crash between state swap and watermark advance rolls back and replays clean") {
     def build(): TableStore = {
-      val s = TableStore(spark, Files.createTempDirectory("graft-bi-crash").toString, bucketSize = 4L)
+      val s = TableStore(spark, Files.createTempDirectory("graft-bi-crash").toString)
       ingestActiveChain(s, 3L)
       s.replace(BalanceIngest.SubsTable,
         Seq((1L, 1L, 1L, alice)).toDF("id", "block_number", "group", "address"))

@@ -15,7 +15,7 @@ class BundleStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): TableStore =
-    TableStore(spark, Files.createTempDirectory("graft-s1").toString, bucketSize = 4L)
+    TableStore(spark, Files.createTempDirectory("graft-s1").toString)
 
   private val noTokens = Seq.empty[(Array[Byte], Long)].toDF("address", "block_number")
 

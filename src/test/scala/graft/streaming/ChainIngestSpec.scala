@@ -22,7 +22,7 @@ class ChainIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): TableStore =
-    TableStore(spark, Files.createTempDirectory("graft-ingest").toString, bucketSize = 4L)
+    TableStore(spark, Files.createTempDirectory("graft-ingest").toString)
 
   private val noTokens = Seq.empty[(Array[Byte], Long)].toDF("address", "block_number")
 

@@ -28,7 +28,7 @@ class Erc20FlowSpec extends SparkSpec {
   import spark.implicits._
 
   test("registered-token transfers flow from log decode to per-token totals") {
-    val store  = TableStore(spark, Files.createTempDirectory("graft-erc20").toString, bucketSize = 4L)
+    val store  = TableStore(spark, Files.createTempDirectory("graft-erc20").toString)
     val tokens = Seq((tokenX, 1L)).toDF("address", "block_number")
 
     // block 1: alice sends 1000 units of tokenX to bob (an ERC20 Transfer

@@ -45,7 +45,7 @@ class FullIngestSpec extends SparkSpec {
     tokens = store.readOr(BalanceIngest.RegistryTable, null))
 
   test("full lifecycle: DSv2 source → ingest → balances through a mid-stream reorg and restart") {
-    val store = TableStore(spark, Files.createTempDirectory("graft-full").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-full").toString)
     val subId = "full-e2e"
     val sub   = new QueueHeadSubscription
     HeadSubscriptions.register(subId, sub)
@@ -161,7 +161,7 @@ class FullIngestSpec extends SparkSpec {
     // the live indexer's shape: one block per micro-batch, every
     // subscription active (so each plain head is a quiet single block),
     // and a reorg head whose two retracted ancestors arrive by fetch-back
-    val store = TableStore(spark, Files.createTempDirectory("graft-follow").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-follow").toString)
     val subs = Seq((1L, 1L, 1L, alice), (2L, 1L, 2L, bob))
       .toDF("id", "block_number", "group", "address")
     store.replace(BalanceIngest.SubsTable, subs)
@@ -199,8 +199,7 @@ class FullIngestSpec extends SparkSpec {
     assert(reorgs.length == 1 && reorgs(0).getAs[Long]("from") == 5L)
 
     // one direct batch of the winning chain on a fresh store
-    val direct = TableStore(spark, Files.createTempDirectory("graft-follow-direct").toString,
-      bucketSize = 4L)
+    val direct = TableStore(spark, Files.createTempDirectory("graft-follow-direct").toString)
     direct.replace(BalanceIngest.SubsTable, subs)
     FullIngest.processBatch(spark, direct, (main.take(4) ++ fork).toDS().toDF(),
       BlockAwareBalanceClient(spark.sparkContext.longAccumulator("follow-direct")))
@@ -222,7 +221,7 @@ class FullIngestSpec extends SparkSpec {
   }
 
   test("a reorg invalidates the serving cache through the composed pipeline") {
-    val store = TableStore(spark, Files.createTempDirectory("graft-cache-e2e").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-cache-e2e").toString)
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("cache-e2e"))
     FullIngest.processBatch(spark, store, mkChain(1, 8, hash32(0)).toDS().toDF(), client)
 
@@ -247,7 +246,7 @@ class FullIngestSpec extends SparkSpec {
     // clean start at height 100 (the reference's loadLocalState-from-empty
     // path): the balance pipeline must begin at 100, not iterate absent
     // heights 0..99
-    val store = TableStore(spark, Files.createTempDirectory("graft-midchain").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-midchain").toString)
     store.replace(BalanceIngest.SubsTable,
       Seq((1L, 0L, 1L, bob)).toDF("id", "block_number", "group", "address"))
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("midchain"))
@@ -266,7 +265,7 @@ class FullIngestSpec extends SparkSpec {
     // retraction but before the chain deletes — on the checkpoint replay
     // the chain is intact, the reorg re-detects from scratch, the hook
     // re-runs idempotently, and everything converges
-    val store = TableStore(spark, Files.createTempDirectory("graft-crash2").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-crash2").toString)
     store.replace(BalanceIngest.SubsTable,
       Seq((1L, 1L, 1L, alice)).toDF("id", "block_number", "group", "address"))
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("crash2"))
@@ -315,7 +314,7 @@ class FullIngestSpec extends SparkSpec {
     // but BEFORE balance processing re-delivers; admission ignores every
     // already-landed head (summary None) yet the balance watermark still
     // drives the interrupted work to the chain head
-    val store = TableStore(spark, Files.createTempDirectory("graft-crash").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-crash").toString)
     store.replace(BalanceIngest.SubsTable,
       Seq((1L, 1L, 1L, alice)).toDF("id", "block_number", "group", "address"))
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("crash"))

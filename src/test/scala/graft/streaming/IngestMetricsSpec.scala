@@ -15,7 +15,7 @@ class IngestMetricsSpec extends SparkSpec {
   import spark.implicits._
 
   test("counters and gauges advance across a batch, an admission, and a reorg") {
-    val store = TableStore(spark, Files.createTempDirectory("graft-metrics").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-metrics").toString)
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("metrics"))
     val m = new IngestMetrics
 

@@ -50,7 +50,7 @@ class LifecyclePropertySpec extends SparkSpec {
     */
   private def runScript(seed: Long): Unit = {
     val store = TableStore(spark,
-      Files.createTempDirectory(s"graft-prop-$seed").toString, bucketSize = 4L)
+      Files.createTempDirectory(s"graft-prop-$seed").toString)
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator(s"prop-$seed"))
     val cache = CachedChainStore.live(() => ChainStore(
       headers = store.readOr(ChainIngest.HeadersTable, null),

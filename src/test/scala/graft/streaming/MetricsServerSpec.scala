@@ -26,7 +26,7 @@ class MetricsServerSpec extends SparkSpec {
 
   test("FullIngest counters serve over HTTP while the stream runs") {
     val store = TableStore(spark,
-      Files.createTempDirectory("graft-msrv").toString, bucketSize = 4L)
+      Files.createTempDirectory("graft-msrv").toString)
     val subId = "metrics-http"
     val sub   = new QueueHeadSubscription
     HeadSubscriptions.register(subId, sub)

@@ -41,7 +41,7 @@ class MirroredIngestSpec extends SparkSpec {
     }
 
   test("chain and balance tables mirror-match through catch-up, reorg, and replay") {
-    val store = TableStore(spark, Files.createTempDirectory("graft-mirror").toString, bucketSize = 4L)
+    val store = TableStore(spark, Files.createTempDirectory("graft-mirror").toString)
     val db = JdbcMirror(spark, s"jdbc:derby:memory:graftm${System.nanoTime()};create=true")
     val client = BlockAwareBalanceClient(spark.sparkContext.longAccumulator("mirror"))
     store.replace(BalanceIngest.SubsTable,

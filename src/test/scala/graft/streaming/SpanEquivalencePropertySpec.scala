@@ -41,7 +41,7 @@ class SpanEquivalencePropertySpec extends SparkSpec {
     */
   private def build(n: Long): TableStore = {
     val store = TableStore(spark,
-      Files.createTempDirectory("graft-span-eq").toString, bucketSize = 4L)
+      Files.createTempDirectory("graft-span-eq").toString)
     var parent = hash32(0)
     val bundles = (1L to n).map { i =>
       val t = tx(i.toInt, alice, carol, 500, gasPrice = 100L)

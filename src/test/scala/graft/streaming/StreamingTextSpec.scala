@@ -79,7 +79,7 @@ class StreamingTextSpec extends SparkSpec {
   test("chunk dedup holds across batches and replays idempotently") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft-chunkdedup").toString
-    val store = graft.chain.TableStore(spark, dir, bucketSize = 1L)
+    val store = graft.chain.TableStore(spark, dir)
     val proc = StreamingText.processChunkBatch(store, chunkTokens = 2) _
     def results() = store.readOr("chunk_dedup", null)
       .collect().map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("doc_id")) ->
@@ -120,7 +120,7 @@ class StreamingTextSpec extends SparkSpec {
   test("retentionBatches bounds chunk_hashes to a sliding window (documented semantics)") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft-chunkret").toString
-    val store = graft.chain.TableStore(spark, dir, bucketSize = 1L)
+    val store = graft.chain.TableStore(spark, dir)
     val proc = StreamingText.processChunkBatch(store, chunkTokens = 2,
       retentionBatches = Some(2L)) _
     proc(Seq((1L, "a b c d")).toDF("doc_id", "text"), 0L)
@@ -150,7 +150,7 @@ class StreamingTextSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.execution.FileSourceScanExec
     val dir = java.nio.file.Files.createTempDirectory("graft-chunkprune").toString
-    val store = graft.chain.TableStore(spark, dir, bucketSize = 1L)
+    val store = graft.chain.TableStore(spark, dir)
     val proc = StreamingText.processChunkBatch(store, chunkTokens = 1) _
     // 64 one-token docs → 64 distinct chunk hashes spread over many prefixes
     proc((1L to 64L).map(i => (i, s"tok$i")).toDF("doc_id", "text"), 0L)
