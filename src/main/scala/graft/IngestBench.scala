@@ -107,17 +107,22 @@ object IngestBench {
     timed(FullIngest.processBatch(spark, store, batch, client, metrics = Some(m)))
   }
 
-  /** One full head-follow run: fresh store, one micro-batch per block. */
+  /** One full head-follow run: fresh store, one micro-batch per block.
+    * Returns each block's seconds and the bytes that range-table
+    * compaction merged during it (0 on a block that merged no run).
+    */
   private def headFollow(spark: SparkSession, n: Long, client: BalanceClient,
-                         m: IngestMetrics): Double = {
+                         m: IngestMetrics): Seq[(Double, Long)] = {
     import spark.implicits._
     val store = mkStore(spark)
     seedWorld(spark, store, n)
-    val bundles = mkChain(n)
-    timed(bundles.foreach { b =>
-      FullIngest.processBatch(spark, store, Seq(b).toDS().toDF(), client,
-        metrics = Some(m))
-    })
+    val tables = FullIngest.RangeTables.map(_._1)
+    mkChain(n).map { b =>
+      val before = tables.map(store.rangeDirs)
+      val sec = timed(FullIngest.processBatch(spark, store, Seq(b).toDS().toDF(), client,
+        metrics = Some(m)))
+      (sec, tables.zip(before).map { case (t, d) => SoakBench.mergedBytes(d, store.rangeDirs(t)) }.sum)
+    }
   }
 
   /** Backfill→head-follow HANDOFF — the deployment-shaped scenario the two
@@ -186,8 +191,9 @@ object IngestBench {
       (1 to trials).map(_ => catchUp(spark, spanBlocks, client, new IngestMetrics)))
     val spanJobs = spanCounts.jobs.get
     val histogram = new IngestMetrics // per-block latencies accumulate across trials
-    val (blockTimes, blockCounts) = Profile.measure(spark)(_ =>
+    val (blockRuns, blockCounts) = Profile.measure(spark)(_ =>
       (1 to trials).map(_ => headFollow(spark, perBlockBlocks, client, histogram)))
+    val blockTimes = blockRuns.map(_.map(_._1).sum)
     val blockJobs = blockCounts.jobs.get
 
     val spanRate  = spanBlocks / median(spanTimes)
@@ -208,6 +214,7 @@ object IngestBench {
       s""""ingest_perblock_sec":[${blockTimes.sorted.map(f).mkString(",")}],""" +
       s""""ingest_span_jobs":$spanJobs,""" +
       s""""ingest_perblock_jobs_per_block":${f(jobsPerBlock)},""" +
+      SoakBench.mergeCost("ingest_perblock", blockRuns.flatten) + "," +
       s""""ingest_catchup_to_tip_sec":${f(tipSec)},""" +
       s""""ingest_catchup_behind_blocks":$behind,""" +
       s""""ingest_catchup_chunks":$tipChunks,""" +

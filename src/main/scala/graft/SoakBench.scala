@@ -14,7 +14,9 @@ import graft.chain.TableStore
   *     them flat — an append-only face would grow one file set per batch
   *     and every later probe would pay per-file listing/footer costs),
   *   - the live DIR counts of the per-batch range tables (size-tiered
-  *     compaction must hold them near 64 + 8 per tier),
+  *     compaction must hold them under 64 + 8 per tier), and the cost of
+  *     that compaction: seconds on the batches that merged a run against
+  *     those that did not, and the bytes merged,
   *   - their ROW counts (the algebra-idempotent states — hll_regs ≤
   *     groups×m, bk_sample ≤ groups×k — must plateau; chunk_hashes grows
   *     only with DISTINCT chunks),
@@ -49,6 +51,29 @@ object SoakBench {
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
   }
 
+  /** Bytes in the dirs that compaction wrote between two
+    * [[TableStore.rangeDirs]] snapshots of one table whose appends each
+    * cover one range value: the new dirs spanning more than one.
+    */
+  private[graft] def mergedBytes(before: Seq[(Long, Long, Long)],
+                                 after: Seq[(Long, Long, Long)]): Long =
+    after.filterNot(before.toSet).collect { case (lo, hi, b) if lo < hi => b }.sum
+
+  /** `"<prefix>_merge_batches"` and friends from (seconds, merged bytes)
+    * per batch: how many batches merged, the median and max seconds of
+    * merging and of plain batches, and the bytes merged.
+    */
+  private[graft] def mergeCost(prefix: String, perBatch: Seq[(Double, Long)]): String = {
+    val (merging, plain) = perBatch.partition(_._2 > 0)
+    def f2(xs: Seq[Double], pick: Seq[Double] => Double) =
+      if (xs.isEmpty) "null" else "%.2f".formatLocal(java.util.Locale.ROOT, pick(xs.sorted))
+    def secs(kind: String, xs: Seq[Double]) =
+      s""""${prefix}_${kind}_sec_p50":${f2(xs, s => s(s.size / 2))},""" +
+        s""""${prefix}_${kind}_sec_max":${f2(xs, _.last)},"""
+    s""""${prefix}_merge_batches":${merging.size},""" + secs("merge", merging.map(_._1)) +
+      secs("plain", plain.map(_._1)) + s""""${prefix}_merged_bytes":${perBatch.map(_._2).sum}"""
+  }
+
   def run(spark: SparkSession): String = {
     val batches = sys.env.get("SPARK_GRAFT_SOAK_BATCHES").map(_.toInt).getOrElse(500)
     val docsPer = sys.env.get("SPARK_GRAFT_SOAK_DOCS").map(_.toInt).getOrElse(24)
@@ -69,11 +94,16 @@ object SoakBench {
     val samplePoints = math.max(1, batches / 10)
     val samples = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Map[String, (Long, Long)], Double, Double, Map[String, Int])]
+    val perBatch = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
     Profile.measure(spark) { counter =>
       var windowJobs0 = 0L
       var windowT0 = System.nanoTime()
       (0 until batches).foreach { b =>
+        val before = rangeTables.map(store.rangeDirs)
+        val t0 = System.nanoTime()
         PipelineRunner.processBatch(store, cfg)(batchDf(spark, b.toLong, docsPer), b.toLong)
+        perBatch += (((System.nanoTime() - t0) / 1e9,
+          rangeTables.zip(before).map { case (t, d) => mergedBytes(d, store.rangeDirs(t)) }.sum))
         if ((b + 1) % samplePoints == 0) {
           val stats = tables.map { t =>
             t -> ((store.fileCounts(t).values.sum,
@@ -101,6 +131,7 @@ object SoakBench {
           s""""soak_rows_$t":${arr(_._2(t)._2.toString)}"""
       }.mkString(",") + "," +
       rangeTables.map(t => s""""soak_dirs_$t":${arr(_._5(t).toString)},""").mkString +
+      mergeCost("soak", perBatch.toSeq) + "," +
       s""""soak_jobs_per_batch":${arr(s => f2(s._3))},""" +
       s""""soak_sec_per_batch":${arr(s => f2(s._4))}"""
   }

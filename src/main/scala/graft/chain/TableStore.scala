@@ -17,8 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 /** Transactional-enough table store over parquet directories.
   *
   * All path operations go through the Hadoop `FileSystem` API resolved
-  * from `root`'s scheme: a local path, `file://`, `hdfs://`, or any
-  * filesystem Spark's Hadoop configuration knows (`s3a://`, `abfs://`, …).
+  * from `root`'s scheme — `root` may be a local path, `file://`,
+  * `hdfs://`, or any other filesystem Spark's Hadoop configuration knows
+  * (`s3a://`, `abfs://`, …). A store "designed for 100 TB" whose listings
+  * and swaps ran through `java.nio.file` could never point at a cluster
+  * filesystem; this one can.
   *
   * ONE COMMIT PROTOCOL, rename-free, so it holds where rename is
   * copy+delete (object stores) as well as on local/HDFS. On disk, per
@@ -38,17 +41,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * a crashed marker write by probing for the next manifest version.
   * Every crash window leaves only unreferenced staging dirs,
   * garbage-collected on the next commit. GC retains a
-  * `manifestRetain`-generation reader-grace window, so reader processes
-  * off the same root are safe. Single-WRITER is the contract, ENFORCED
-  * by a writer-epoch fence in the marker: each store instance claims
-  * epoch = (observed + 1) at its first commit to a table, and every
-  * commit FAILS LOUDLY ([[TableStore.WriterSupersededException]]) on a
-  * newer epoch (or a same-epoch foreign writer id, via post-write
-  * read-back), so a misconfigured second ingest job crashes instead of
-  * interleaving generations (latest writer wins, as in the reference's
-  * common/errors.go:48-57, service/indexer/indexer.go:151-163). Two
-  * writers claiming one epoch within one read-back round-trip would need
-  * a conditional PUT to detect; every longer interleaving is detected.
+  * `manifestRetain`-generation reader-grace window, so EXTERNAL READER
+  * PROCESSES off the same root are safe (an ingest-writer +
+  * query-readers deployment). Single-WRITER is still the contract, and
+  * it is ENFORCED by a writer-epoch fence in the marker: each store
+  * instance claims epoch = (observed + 1) at its first commit to a
+  * table, every commit re-reads the marker first and FAILS LOUDLY
+  * ([[TableStore.WriterSupersededException]]) when a newer epoch (or a
+  * same-epoch foreign writer id, via post-write read-back) is observed —
+  * so a misconfigured second ingest job crashes instead of silently
+  * interleaving generations (the reference's duplicate-key-as-benign-
+  * concurrency-signal discipline, common/errors.go:48-57,
+  * service/indexer/indexer.go:151-163, translated to object stores:
+  * latest writer wins, superseded writers die). The residual window —
+  * two writers claiming the same epoch and committing within one
+  * read-back round-trip — needs a conditional PUT (Delta/Iceberg log) to
+  * close; every longer interleaving is detected.
   *
   * A table dir that holds visible parquet files but no manifest was
   * written by the directory-rename layout this store used before; every
@@ -72,10 +80,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * reads rebuild the column as a partition value, so an `isin` predicate
   * on it prunes to the probed keys' dirs before any file opens.
   *
-  * A Delta/Iceberg log would add snapshot isolation for CONCURRENT
-  * writers, which this single-writer store does not need. Idempotency
-  * (T6) comes from the admission fold in ChainIngest, mirroring the
-  * reference's duplicate-key tolerance (common/errors.go:48-57).
+  * A full production deployment may still prefer a Delta/Iceberg table
+  * here — their logs add snapshot isolation for CONCURRENT writers,
+  * which this single-writer store does not need; the manifest protocol
+  * implements the same commit discipline at this store's scope, so
+  * "runs at 100 TB" does not presume a rename-atomic filesystem.
+  * Idempotency (T6) comes from the admission fold in ChainIngest,
+  * mirroring the reference's duplicate-key tolerance
+  * (common/errors.go:48-57).
   */
 final case class TableStore(spark: SparkSession, root: String,
                             manifestRetain: Int = TableStore.ManifestRetainDefault) {
@@ -91,18 +103,25 @@ final case class TableStore(spark: SparkSession, root: String,
   private val fs: FileSystem = rootPath.getFileSystem(hadoopConf)
 
   /** Driver-side row cache for TINY single-row state tables (head_state,
-    * balance_head, ledger_block), which the ingest loop consults several
-    * times per micro-batch; each consult is otherwise a Spark job. Every
-    * write through THIS store invalidates its entry, so the cache is the
-    * persisted value (the reference keeps its Listen loop's
-    * currentHeader in memory the same way).
+    * balance_head, ledger_block): the ingest loop consults them several
+    * times per micro-batch, and each consult is otherwise a full Spark
+    * job over a one-row parquet file. Any write to the table through
+    * THIS store invalidates its entry, so the cache is exactly the
+    * persisted value — the reference holds the same state in memory for
+    * the same reason (its Listen loop's currentHeader). A table written
+    * by another process is out of scope, as it is for every store
+    * mutation (single-writer is the store's contract).
     */
   private val rowCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Array[org.apache.spark.sql.Row]]]()
 
-  /** Driver-side cache of whole-table relations, which the per-block
-    * bracket opens many times per block. Every mutation path ends in
-    * [[invalidate]], so a cached relation is the persisted file set.
+  /** Driver-side RESOLVED-RELATION cache: building a relation lists its
+    * dirs (one object-store LIST round per dir at deployment scale), and
+    * the per-block ingest bracket opens the same handful of tables many
+    * times per block. The store is single-writer, and every mutation path
+    * ends in [[invalidate]], so a cached relation is exactly the
+    * persisted file set. Only whole-table opens cache; range and per-key
+    * opens are one-shot by nature.
     */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
@@ -182,11 +201,13 @@ final case class TableStore(spark: SparkSession, root: String,
 
   /** A manifest file is valid iff FULLY written: its last line is the
     * `#end` terminator [[commitManifest]] appends and every other line
-    * parses as an entry. Where small writes are NOT atomic (local, HDFS),
-    * this keeps resolution from rolling forward onto a torn
-    * `.manifest.(v+1)` (the previous generation is still intact: the
-    * manifest is written before the marker) and a torn marker from
-    * wedging the table.
+    * parses as an entry ([[parseLine]]). Validation is what makes the
+    * resolution below safe on filesystems where small writes are NOT
+    * atomic (local, HDFS): a torn `.manifest.(v+1)` from a crash mid-write
+    * — truncated entries, or truncated to empty — must never be rolled
+    * forward onto (commit order writes it BEFORE touching the marker, so
+    * the previous generation is still fully intact), and a torn marker
+    * must never wedge the table.
     */
   private val ManifestEnd = "#end"
 
@@ -211,15 +232,19 @@ final case class TableStore(spark: SparkSession, root: String,
       lines.lastOption.contains(ManifestEnd) && lines.init.forall(parseLine(_).nonEmpty)
     }
 
-  /** Current committed version, given the marker as already read,
-    * torn-write-safe:
-    *   - marker parses → start there; else (absent or torn) fall back to
-    *     the highest VALID manifest on disk, which GC (run after the
-    *     marker) has not yet touched;
+  /** Current committed version, given the marker as already read.
+    * Resolution, torn-write-safe:
+    *   - marker parses → start there; else (absent OR torn mid-overwrite)
+    *     fall back to the highest VALID manifest on disk — at a torn
+    *     marker the new manifest is fully written and its predecessors
+    *     are not yet GC'd (GC runs after the marker), so the listing
+    *     recovers the true commit;
     *   - then roll FORWARD while the next manifest exists AND validates:
     *     a crash between the manifest write and the marker overwrite must
     *     not resurrect the previous generation (the successor's data is
-    *     fully staged, and the stageReplaceAll commit order stays monotone).
+    *     fully staged by construction, and the stageReplaceAll commit
+    *     order stays monotone under roll-forward — a later table's
+    *     manifest exists only if every earlier table's marker landed).
     */
   private def currentVersion(table: String,
                              marker: Option[(Long, Long, String)]): Long = {
@@ -279,16 +304,23 @@ final case class TableStore(spark: SparkSession, root: String,
     * overwrite is the entire commit — no rename anywhere.
     *
     * GC keeps a READER-GRACE window: the newest `manifestRetain` stale
-    * generations, manifests and every dir they reference, survive, so an
-    * external reader of generation G keeps reading G's dirs until that
-    * many further commits land (the MVCC the reference gets from MySQL,
-    * store/sqldb/db.go:63-91). `manifestRetain = 0` is immediate GC.
+    * generations — manifest files AND every physical dir any retained
+    * manifest references — survive this commit, so an external reader
+    * that resolved generation G off the same root keeps reading G's dirs
+    * successfully until `manifestRetain` further commits have landed
+    * (the MVCC the reference gets for free from MySQL transactions,
+    * store/sqldb/db.go:63-91, priced here as ≤retain stale generations
+    * of garbage per table). `manifestRetain = 0` is immediate GC.
     *
-    * WRITER FENCE (see the class doc): the marker is re-read first — a
-    * newer epoch, or this epoch under a foreign writer id, means another
-    * writer has the table and this one dies loudly. The written marker is
-    * read BACK and must match exactly, and GC runs only after that, so a
-    * fenced writer never deletes a winner's dirs.
+    * WRITER FENCE (see the class doc): the marker is re-read at the top of
+    * every commit — a newer epoch than this instance's claim, or the same
+    * epoch under a foreign writer id, means another writer has taken the
+    * table and THIS writer must die loudly instead of overwriting its
+    * generations. After the marker lands it is read BACK and must carry
+    * exactly (version, epoch, writerId) — a concurrent overwrite between
+    * the write and the read-back is a detected loss, not a silent one —
+    * and GC runs only after the read-back verifies, so a fenced writer
+    * never deletes a winner's dirs.
     */
   private def commitManifest(table: String, next: Map[String, Seq[Dir]]): Unit = {
     val observed = readMarkerParts(table)
@@ -386,14 +418,21 @@ final case class TableStore(spark: SparkSession, root: String,
     files
   }
 
-  /** [[seed]] for an unpartitioned stage that must hold rows: a write of
-    * no rows still leaves task 0's empty parquet file, so a lone file
-    * with no rows in its footer (one small read) counts as no data.
+  /** Rows in `files`, summed from their parquet footers (one small read
+    * each, no Spark job).
+    */
+  private def footerRows(files: Array[FileStatus]): Long = files.map { f =>
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf))
+    try r.getRecordCount finally r.close()
+  }.sum
+
+  /** [[seed]] for an unpartitioned stage, which every commit path holds
+    * to rows: a write of no rows still leaves task 0's empty parquet
+    * file, so a lone file with no rows in its footer counts as no data
+    * (a task with no rows writes no file, so two files hold rows).
     */
   private def seedRows(p: Path): Boolean = seed(p) match {
-    case Array(f) =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf))
-      try r.getRecordCount > 0 finally r.close()
+    case files @ Array(_) => footerRows(files) > 0
     case files => files.nonEmpty
   }
 
@@ -449,17 +488,25 @@ final case class TableStore(spark: SparkSession, root: String,
 
   /** THE one way the store opens data: any set of manifest entries as ONE
     * `HadoopFsRelation` over exactly their dirs, with the remembered
-    * schema (no footer-inference job, no other listing). A CATEGORY table
-    * (its keys name a sidecar column) gets an explicit partition spec —
-    * one partition path per live dir, its value cast from the key to the
-    * sidecar type — so a predicate on the column prunes dirs before any
-    * file opens; its columns come back in sidecar order. Paths are
-    * qualified: the index matches partition paths against the qualified
-    * paths its listing returns, and an unqualified one reads empty.
-    * Listings go through the seeded [[statusCache]], so an open lists no
-    * dir this store wrote, and a dir committed before it was built once.
-    * A committed dir never changes, so nothing re-lists an opened
-    * relation (no `refreshByPath`): a plan over generation N stays one.
+    * schema (no footer-inference job, no listing of anything else). A
+    * CATEGORY table (its keys name a sidecar column) gets an explicit
+    * partition spec — one partition path per live dir, its value cast
+    * from the key to the sidecar type — so a predicate on the column
+    * plans as a `PartitionFilters` on one scan and prunes dirs before any
+    * file opens; its columns come back in sidecar order. Plain and range
+    * tables carry no partition column (a range dir's bounds live in the
+    * manifest, not in the data). Paths are qualified because the index
+    * matches partition paths against the qualified paths its listing
+    * returns — an unqualified one matches no file and silently reads
+    * empty. Listings go through the store's own seeded [[statusCache]]:
+    * every dir this store commits was listed once at commit and seeded
+    * there, so an open lists nothing it wrote (a category table holds one
+    * dir per key per append until compaction — 256 keys would otherwise
+    * be a listing job per open), and a dir committed before this store
+    * was built is listed once, at its first open. A committed dir never
+    * changes, so nothing re-lists an opened relation (no
+    * `refreshByPath`): a plan over generation N stays a plan over N, and
+    * re-listing it after GC would read its dirs as silently empty.
     */
   private def open(table: String, entries: Map[String, Seq[Dir]]): DataFrame = {
     val schema = rememberedSchema(table).map(asNullable(_).asInstanceOf[StructType])
@@ -516,17 +563,21 @@ final case class TableStore(spark: SparkSession, root: String,
   def fileCounts(table: String): Map[String, Long] =
     manEntries(table).map { case (k, ds) => k -> physFileCount(table, ds) }
 
-  /** A table exists only if it holds at least one DATA file: only staged
-    * dirs that contained a data file are ever committed, so a non-empty
-    * manifest IS the data-file guarantee (one marker read, no listing).
+  /** A table exists only if it holds at least one row: only staged dirs
+    * that hold rows are ever committed ([[seedRows]], [[stagedKeys]]), so
+    * a non-empty manifest IS that guarantee (one marker read, no listing).
     */
   def exists(table: String): Boolean = manEntries(table).nonEmpty
 
-  /** The `[lo, hi]` of every live dir of a range table, in range order;
-    * empty when the table is absent. From the manifest: no listing.
+  /** The `[lo, hi]` and data bytes of every live dir of a range table, in
+    * range order; empty when the table is absent. From the manifest and
+    * the status cache: no listing of a dir this store committed.
     */
-  def rangeDirs(table: String): Seq[(Long, Long)] =
-    manEntries(table).values.flatten.filter(_.ranged).map(d => (d.lo, d.hi)).toSeq.sorted
+  def rangeDirs(table: String): Seq[(Long, Long, Long)] =
+    manEntries(table).values.flatten.filter(_.ranged)
+      .map(d => (d.lo, d.hi, dirBytes(table, d))).toSeq.sorted
+
+  private def dirBytes(table: String, d: Dir): Long = leafFiles(table, d.rel).map(_.getLen).sum
 
   // ---- schema sidecar ----------------------------------------------------
   // Every write records the table's logical schema in a hidden
@@ -578,7 +629,7 @@ final case class TableStore(spark: SparkSession, root: String,
   def append(table: String, df: DataFrame): Unit = {
     val rel = stagePhys(table, df)
     rememberSchema(table, df.schema)
-    if (seed(new Path(dir(table), rel)).nonEmpty) {
+    if (seedRows(new Path(dir(table), rel))) {
       val m = manEntries(table)
       commitManifest(table, m.updated("", m.getOrElse("", Seq.empty) :+ Dir(rel)))
     }
@@ -596,14 +647,16 @@ final case class TableStore(spark: SparkSession, root: String,
     * Size-tiered compaction (O'Neil et al., 1996) rides on the commit:
     * outside the newest [[CompactFiles]] dirs, the oldest run of
     * [[MergeFanIn]] adjacent dirs of one tier (tier k spans [8^k, 8^(k+1))
-    * range values) whose bytes fit in the session's
-    * `spark.sql.files.maxPartitionBytes` merges into one file, staged
-    * before the append (a failed append leaves only garbage for the next
-    * commit's GC). A merge lands a tier higher, so a row is rewritten
-    * O(log span) times and live dirs stay near CompactFiles + MergeFanIn
-    * per tier, plus the dirs the cap holds apart. Tiers go by span, not
-    * bytes: a merge of tiny parquet files, mostly footer, can come out no
-    * bigger than one input, so a byte tier could re-merge rows forever.
+    * range values) merges into one dir of ceil(bytes / the session's
+    * `spark.sql.files.maxPartitionBytes`) files, staged before the append
+    * (a failed append leaves only garbage for the next commit's GC). A
+    * merge lands a tier higher, so a row is rewritten O(log span) times
+    * and live dirs stay under CompactFiles + 8 per tier whatever their
+    * size; the cap bounds each file, not the dir, so the merge into tier
+    * k rewrites at least 8^k range values' rows on one append. Tiers go
+    * by span, not bytes: a merge of tiny parquet files, mostly footer, can
+    * come out no bigger than one input, so a byte tier could re-merge
+    * rows forever.
     */
   def appendRange(table: String, df: DataFrame, rangeCol: String, lo: Long, hi: Long): Unit = {
     val m = manEntries(table)
@@ -626,13 +679,14 @@ final case class TableStore(spark: SparkSession, root: String,
   private def mergeRun(table: String, dirs: Seq[Dir]): Option[(Seq[Dir], Dir)] = {
     def tier(d: Dir): Int =
       Iterator.iterate(d.hi - d.lo + 1)(_ / MergeFanIn).takeWhile(_ >= MergeFanIn).size
-    def bytes(d: Dir): Long = leafFiles(table, d.rel).map(_.getLen).sum
-    val cap = spark.sessionState.conf.filesMaxPartitionBytes
     dirs.filter(_.ranged).sortBy(_.lo).dropRight(CompactFiles).sliding(MergeFanIn)
-      .find(run => run.size == MergeFanIn && run.forall(tier(_) == tier(run.head)) &&
-        run.map(bytes).sum <= cap)
+      .find(run => run.size == MergeFanIn && run.forall(tier(_) == tier(run.head)))
       .map { run =>
-        val rel = stagePhys(table, open(table, Map("" -> run)).coalesce(1))
+        val bytes = run.map(dirBytes(table, _)).sum
+        val files = ((bytes - 1) / spark.sessionState.conf.filesMaxPartitionBytes + 1).toInt
+        val in = open(table, Map("" -> run))
+        // round-robin: equal rows per file, so each file stays near bytes / files
+        val rel = stagePhys(table, if (files <= 1) in.coalesce(1) else in.repartition(files))
         seed(new Path(dir(table), rel))
         run -> Dir(rel, run.map(_.lo).min, run.map(_.hi).max)
       }
@@ -642,8 +696,9 @@ final case class TableStore(spark: SparkSession, root: String,
     * prefix, shard id) rather than a block-number range: each distinct
     * value is its own manifest key, so a read carrying an `isin`
     * predicate on `partCol` prunes to exactly the probed partitions before
-    * any file opens; the column survives the read as data. The write is
-    * spread over every core by [[byKey]], one file per key per append.
+    * any file opens. Unlike a range table's dirs, whose bounds live in
+    * the manifest, the column survives the read — it IS data. The write
+    * is spread over every core by [[byKey]], one file per key per append.
     */
   def appendPartitioned(table: String, df: DataFrame, partCol: String): Unit = {
     val rel = stagePhys(table, byKey(df, partCol), partitionBy = Some(partCol))
@@ -684,10 +739,12 @@ final case class TableStore(spark: SparkSession, root: String,
     * from the manifests' dir bounds: a dir inside the range drops out, a
     * disjoint dir stays, and only a dir straddling it (an unranged dir
     * always does) is rewritten, filtered, with narrowed bounds, or
-    * dropped when no row survives. The ingest bracket's happy path (all
-    * dirs disjoint) and a reorg of per-block dirs (all inside) run no
-    * Spark job (the reference: ONE DB transaction per chunk,
-    * store/store.go:129-147). One commit per changed table, in order.
+    * dropped when no row survives. A straddler with no row in the range
+    * (the footers' row counts match) keeps its dir, with narrowed bounds.
+    * The ingest bracket's happy path (all dirs disjoint) and a reorg of
+    * per-block dirs (all inside) run no Spark job (the reference: ONE DB
+    * transaction per chunk, store/store.go:129-147). One commit per
+    * changed table, in order.
     */
   def deleteRangeAll(tables: Seq[(String, String)], from: Long, to: Long): Unit =
     tables.foreach { case (t, rc) =>
@@ -697,8 +754,11 @@ final case class TableStore(spark: SparkSession, root: String,
         else if (from <= d.lo && d.hi <= to) None
         else {
           val rel = stagePhys(t, open(t, Map(k -> Seq(d))).filter(!col(rc).between(from, to)))
-          Option.when(seedRows(new Path(dir(t), rel)))(
-            Dir(rel, if (from <= d.lo) to + 1 else d.lo, if (d.hi <= to) from - 1 else d.hi))
+          val kept = footerRows(seed(new Path(dir(t), rel)))
+          val narrowed = d.copy(lo = if (from <= d.lo) to + 1 else d.lo,
+                                hi = if (d.hi <= to) from - 1 else d.hi)
+          if (kept == footerRows(leafFiles(t, d.rel))) Some(narrowed)
+          else Option.when(kept > 0)(narrowed.copy(rel = rel))
         }
       }}.filter(_._2.nonEmpty)
       if (next != m) {
@@ -756,7 +816,7 @@ final case class TableStore(spark: SparkSession, root: String,
         rememberSchema(t, df.schema)
         val entries: Map[String, Seq[Dir]] =
           if (partitionBy.contains(t)) stagedKeys(t, rel).map { case (k, d) => k -> Seq(Dir(d)) }
-          else if (seed(new Path(dir(t), rel)).nonEmpty) Map("" -> Seq(Dir(rel)))
+          else if (seedRows(new Path(dir(t), rel))) Map("" -> Seq(Dir(rel)))
           else Map.empty
         commitManifest(t, entries)
       }
@@ -765,9 +825,12 @@ final case class TableStore(spark: SparkSession, root: String,
     (stage, commitAll)
   }
 
-  /** [[replace]] for a DRIVER-LOCAL tiny state table (built from a local
-    * Seq — a LocalTableScan, whose `collect()` submits no job), priming
-    * the row cache so a later [[collectSmall]] needs no read-back job.
+  /** [[replace]] for a DRIVER-LOCAL tiny state table (the df must be built
+    * from a local Seq — a LocalTableScan), priming the row cache with the
+    * written rows: the `collect()` here is job-free (LocalTableScanExec
+    * returns its rows without submitting a job), and the read-back Spark
+    * job a later [[collectSmall]] would otherwise pay — one per state
+    * table per micro-batch in the ingest loop — never happens.
     */
   def replaceSmall(table: String, df: DataFrame): Unit = {
     val rows = df.collect()
@@ -784,12 +847,20 @@ final case class TableStore(spark: SparkSession, root: String,
     rowCache.put(table, Some(df.collect()))
 
   /** Threshold-triggered compaction for CATEGORY-partitioned tables (the
-    * streaming index tables), whose [[appendPartitioned]] lands one file
-    * per touched key per batch: every key in `parts` (default: all) with
-    * more than `maxFiles` data files (counted from the status cache) is
-    * rewritten to one file, ALL of them in ONE partitioned staged write
-    * ([[byKey]]) and one manifest commit. Rows, batch_id replay tags
-    * included, are unchanged. Returns the number of keys rewritten.
+    * streaming index tables: `lsh_postings`/`lsh_sigs`/`ivf_postings`/
+    * `chunk_hashes`). Each micro-batch's [[appendPartitioned]] lands one
+    * file-set per touched partition and nothing ever range-deletes them,
+    * so after 10⁴ batches a partition-pruned probe would open 10⁴ small
+    * files: every partition in `parts` (default: all) whose data-file
+    * count exceeds `maxFiles` is rewritten to one file per key, ALL of
+    * them in ONE partitioned staged write ([[byKey]]: one job spread over
+    * every core, however many keys cross the threshold together — and a
+    * batch that touches every key makes them all cross together) swapped
+    * in by one manifest commit. Rows (including their batch_id replay
+    * tags) are byte-identical, so every replay and probe invariant is
+    * untouched. File counts come from the seeded status cache, so the
+    * threshold check lists nothing. Returns the number of partitions
+    * rewritten.
     */
   def compactPartitions(table: String, partCol: String,
                         parts: Option[Seq[Any]] = None,
@@ -818,12 +889,16 @@ final case class TableStore(spark: SparkSession, root: String,
   }
 
   /** Retention prune for a CATEGORY-partitioned state table: rewrite it
-    * keeping only rows with `rangeCol >= keepFrom`, one file per key, in
-    * one staged write and commit (a crash leaves the un-pruned generation
-    * live). It bounds the dedup state tables, which grow one row per
-    * distinct chunk forever, when a deployment accepts sliding-window
-    * dedup; a replayed prune recomputes the identical result. No-op when
-    * the table is absent.
+    * keeping only rows with `rangeCol >= keepFrom`, atomically (staged
+    * write, one commit — a crash leaves the un-pruned generation live).
+    * The streaming dedup state tables (`chunk_hashes`, `lsh_sigs`,
+    * `lsh_postings`) grow one row per distinct chunk/canonical FOREVER —
+    * inherent to exact dedup — and this is the knob that bounds them when
+    * a deployment accepts sliding-window semantics (dedup against the
+    * last N batches) instead: callers invoke it once per retention window,
+    * so the amortized per-batch cost is O(state / window). Rows keep their
+    * batch_id replay tags; a replayed prune recomputes the identical
+    * result, one file per key ([[byKey]]). No-op when the table is absent.
     */
   def retainFrom(table: String, rangeCol: String, keepFrom: Long,
                  partCol: String): Unit =
@@ -831,10 +906,10 @@ final case class TableStore(spark: SparkSession, root: String,
       replaceAll(Seq(table -> readOr(table, null).filter(col(rangeCol) >= keepFrom)),
         partitionBy = Map(table -> partCol))
 
-  /** Remove a table entirely — for state tables that drain to empty (the
-    * ingest side pool): unlike replacing with an empty DataFrame, a dropped
-    * table reads as absent, so steady-state paths that branch on `exists`
-    * pay nothing for it.
+  /** Remove a table entirely, schema sidecar included — for state tables
+    * that drain to empty (the ingest side pool): a dropped table reads as
+    * absent, so steady-state paths that branch on `exists` pay nothing for
+    * it.
     */
   def drop(table: String): Unit = {
     deleteRecursive(dir(table))
@@ -862,10 +937,13 @@ object TableStore {
   final class WriterSupersededException(msg: String) extends IllegalStateException(msg)
 
   /** Default reader-grace window for GC: how many STALE generations
-    * (manifests + the dirs only they reference) survive each commit, so a
-    * reader process off the same root can finish scanning generation N
-    * while the writer commits `retain` more. 0 is immediate GC.
-    * `GRAFT_STORE_MANIFEST_RETAIN` overrides.
+    * (manifests + the physical dirs only they reference) survive past
+    * each commit, so a second cluster serving reads off the same root —
+    * the obvious deployment: one ingest writer, N query readers — can
+    * resolve generation N and finish scanning N's dirs while the writer
+    * commits up to `retain` further generations. 0 restores immediate GC
+    * (single-process deployments). `GRAFT_STORE_MANIFEST_RETAIN`
+    * overrides.
     */
   def ManifestRetainDefault: Int =
     sys.env.get("GRAFT_STORE_MANIFEST_RETAIN").flatMap(_.toIntOption).getOrElse(2)

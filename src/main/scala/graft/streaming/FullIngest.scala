@@ -41,7 +41,7 @@ object FullIngest {
     * transaction (store/store.go:215-316 for the chain tables, the
     * transfer processor's inserts for the balance tables).
     */
-  private val RangeTables: Seq[(String, String)] = Seq(
+  private[graft] val RangeTables: Seq[(String, String)] = Seq(
     ChainIngest.HeadersTable   -> "number",
     ChainIngest.TxTable        -> "block_number",
     ChainIngest.ReceiptsTable  -> "block_number",

@@ -77,11 +77,11 @@ class ManifestStoreSpec extends SparkSpec {
     // a fresh store (as after a restart) reads the pre-merge generation
     val reader = TableStore(spark, store.root, manifestRetain = 0)
     assert(rows(reader, "t") == (0L until 72L))
-    assert(reader.rangeDirs("t") == (0L until 72L).map(n => (n, n)))
+    assert(reader.rangeDirs("t").map(d => (d._1, d._2)) == (0L until 72L).map(n => (n, n)))
     // its next commit merges anew and collects the orphans
     reader.appendRange("t", Seq(72L).toDF("n"), "n", 72L, 72L)
     assert(rows(reader, "t") == (0L to 72L))
-    assert(reader.rangeDirs("t").head == ((0L, 7L)))
+    assert(reader.rangeDirs("t").map(d => (d._1, d._2)).head == ((0L, 7L)))
     val onDisk = ls(reader, "t").filter(_.startsWith(".d-")).toSet
     assert(onDisk.intersect(orphans).isEmpty, s"orphans survived the commit: $orphans")
     assert(onDisk == entries(reader, "t").map(_(1)).toSet)

@@ -32,6 +32,9 @@ class TableStoreSpec extends SparkSpec {
       .collect { case Array(_, rel, lo, hi) => (lo.toLong, hi.toLong) -> rel }.toMap
   }
 
+  private def spans(store: TableStore, table: String): Seq[(Long, Long)] =
+    store.rangeDirs(table).map(d => (d._1, d._2))
+
   private def dataDirs(store: TableStore, table: String): Set[String] =
     Files.list(Paths.get(store.root, table)).iterator().asScala
       .map(_.getFileName.toString).filter(_.startsWith(".d-")).toSet
@@ -44,7 +47,7 @@ class TableStoreSpec extends SparkSpec {
     store.deleteRange("t", "n", 15L, 74L)
     assert(rows(store, "t") == ((0L to 14L) ++ (75L to 99L)))
     // inside dirs are gone (no rewrite), straddlers keep narrowed bounds
-    assert(store.rangeDirs("t") == Seq((0L, 9L), (10L, 14L), (75L, 79L), (80L, 89L), (90L, 99L)))
+    assert(spans(store, "t") == Seq((0L, 9L), (10L, 14L), (75L, 79L), (80L, 89L), (90L, 99L)))
   }
 
   test("deleteRange aligned exactly on bucket boundaries") {
@@ -53,7 +56,7 @@ class TableStoreSpec extends SparkSpec {
     val before = dataDirs(store, "t")
     store.deleteRange("t", "n", 10L, 29L) // dirs [10, 19] and [20, 29] exactly
     assert(rows(store, "t") == ((0L to 9L) ++ (30L to 39L)))
-    assert(store.rangeDirs("t") == Seq((0L, 9L), (30L, 39L)))
+    assert(spans(store, "t") == Seq((0L, 9L), (30L, 39L)))
     assert(dataDirs(store, "t").subsetOf(before), "an aligned delete only drops dirs")
   }
 
@@ -132,7 +135,7 @@ class TableStoreSpec extends SparkSpec {
     var rewritten = 0L
     (0L until n).foreach { b =>
       store.appendRange("t", Seq(b).toDF("n"), "n", b, b)
-      val dirs = store.rangeDirs("t")
+      val dirs = spans(store, "t")
       assert(dirs.size <= 64 + 8 * 4, s"${dirs.size} live dirs after block $b")
       assert(dirs.takeRight(64).forall { case (lo, hi) => lo == hi },
         s"a newest-64 dir was merged after block $b")
@@ -143,30 +146,65 @@ class TableStoreSpec extends SparkSpec {
     assert(rows(store, "t") == (0L until n))
   }
 
-  test("a merged dir never exceeds maxPartitionBytes") {
+  test("runs of fat dirs still merge, each merged file under maxPartitionBytes") {
+    // 1 KB incompressible payload per block against a 16 KB cap: a run of 8
+    // single-block dirs (~2 KB each, footer included) just overflows the
+    // cap, and a run of 8 merged ones (~65 KB) overflows it by far. Each
+    // must still merge, split into files under the cap, or such dirs would
+    // stay live for good and the dirs would grow with the table's bytes
     val store = fresh()
     val cap = 16L * 1024
     val key = "spark.sql.files.maxPartitionBytes"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, cap.toString)
-    // blocks alternate 8 thin and 8 fat (incompressible 3 KB payloads), so
-    // a run of thin blocks fits under the cap and a run of fat ones does not
     val rnd = new scala.util.Random(7)
-    try (0L until 120L).foreach { b =>
-      val pay = if (b / 8 % 2 == 0) "x" else rnd.alphanumeric.take(3000).mkString
-      store.appendRange("t", Seq((b, pay)).toDF("n", "pay"), "n", b, b)
+    val n = 300L
+    try (0L until n).foreach { b =>
+      store.appendRange("t", Seq((b, rnd.alphanumeric.take(1000).mkString)).toDF("n", "pay"),
+        "n", b, b)
+      // three tiers below 8^3 blocks
+      assert(store.rangeDirs("t").size <= 64 + 8 * 3, s"live dirs after block $b")
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     val tdir = Paths.get(store.root, "t")
-    def bytes(rel: String): Long = Files.walk(tdir.resolve(rel)).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map(Files.size).sum
+    def files(rel: String) = Files.list(tdir.resolve(rel)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     val merged = liveDirs(store, "t").filter { case ((lo, hi), _) => lo < hi }
-    assert(merged.nonEmpty, "no run merged")
-    merged.foreach { case (span, rel) =>
-      assert(bytes(rel) <= cap, s"merged dir $span holds ${bytes(rel)} bytes") }
-    // the fat runs were held apart: some old fat blocks are still one dir each
-    assert(store.rangeDirs("t").dropRight(64).exists { case (lo, hi) => lo == hi && lo / 8 % 2 == 1 })
-    assert(rows(store, "t") == (0L until 120L))
+    assert(merged.keys.exists { case (lo, hi) => hi - lo + 1 >= 64 }, "no fat run merged")
+    assert(merged.values.exists(files(_).size > 1), "no fat run was split into files")
+    merged.foreach { case (span, rel) => files(rel).foreach { f =>
+      assert(Files.size(f) <= cap, s"merged dir $span: ${f.getFileName} holds ${Files.size(f)} bytes")
+    }}
+    assert(rows(store, "t") == (0L until n))
+  }
+
+  test("a retraction that finds no row in a straddled dir keeps the dir") {
+    // one dir declared [0, 9] holding rows 0..4 and 8, as a merged balance
+    // dir spans the blocks that had no rows
+    val store = fresh()
+    store.appendRange("t", ((0L to 4L) :+ 8L).toDF("n"), "n", 0L, 9L)
+    val rel = liveDirs(store, "t")((0L, 9L))
+    def gen = Files.readString(Paths.get(store.root, "t", ".gen"))
+    val g0 = gen
+    store.deleteRange("t", "n", 5L, 7L) // inside the dir, on its gap
+    assert(gen == g0, "a clean straddle with unchanged bounds committed")
+    assert(liveDirs(store, "t") == Map((0L, 9L) -> rel))
+    store.deleteRange("t", "n", 9L, 12L) // its clean upper edge: bounds narrow
+    assert(liveDirs(store, "t") == Map((0L, 8L) -> rel))
+    store.deleteRange("t", "n", 8L, 8L) // a row in range: rewritten
+    assert(spans(store, "t") == Seq((0L, 7L)) && liveDirs(store, "t")((0L, 7L)) != rel)
+    assert(rows(store, "t") == (0L to 4L))
+  }
+
+  test("a plain append or replace of no rows leaves the table absent") {
+    val store = fresh()
+    store.append("a", Seq.empty[Long].toDF("n"))
+    assert(!store.exists("a"))
+    store.replace("r", Seq(1L).toDF("n"))
+    store.replace("r", Seq(1L).toDF("n").filter($"n" > 5L))
+    assert(!store.exists("r"))
+    assert(store.readOr("r", null).count() == 0L, "the schema sidecar still types the table")
+    store.append("a", Seq(2L).toDF("n"))
+    assert(store.exists("a") && rows(store, "a") == Seq(2L))
   }
 
   test("retainFrom over an 8-partition table leaves one file per key and the same rows") {
@@ -229,7 +267,7 @@ class TableStoreSpec extends SparkSpec {
     store.deleteRange("t", "n", 10L, 19L) // straddles the one dir: rewritten as [0, 9]
     store.appendRange("t", (10L until 20L).map(n => n + 1000).toDF("n"), "n", 1010L, 1019L)
     assert(rows(store, "t") == ((0L to 9L) ++ (1010L to 1019L)))
-    assert(store.rangeDirs("t") == Seq((0L, 9L), (1010L, 1019L)))
+    assert(spans(store, "t") == Seq((0L, 9L), (1010L, 1019L)))
   }
 
   test("the schema sidecar is rewritten only when the schema changes") {
