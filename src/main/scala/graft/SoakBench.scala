@@ -13,8 +13,8 @@ import graft.chain.TableStore
   *   - the state tables' DATA-FILE counts (threshold compaction must hold
   *     them flat — an append-only face would grow one file set per batch
   *     and every later probe would pay per-file listing/footer costs),
-  *   - the live DIR counts of the per-batch range tables (size-tiered
-  *     compaction must hold them under 64 + 8 per tier), and the cost of
+  *   - the live DIR counts of the per-batch range tables (tiered
+  *     compaction must hold them near 64 + 8 per level), and the cost of
   *     that compaction: seconds on the batches that merged a run against
   *     those that did not, and the bytes merged,
   *   - their ROW counts (the algebra-idempotent states — hll_regs ≤

@@ -74,8 +74,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *     and the delete-then-append bracket's happy path run no Spark job;
   *   - bounded tip reads (`readRange`) open only the dirs whose bounds
   *     intersect the range, so no other dir is even listed;
-  *   - compaction is size-tiered and rides on the append commit, never
-  *     touching the newest dirs a reorg retracts (see [[appendRange]]).
+  *   - compaction is tiered over aligned range blocks and rides on the
+  *     append commit, never touching the newest dirs a reorg retracts
+  *     (see [[appendRange]]).
   * Category-partitioned tables keep one `<col>=<v>` key per value, and
   * reads rebuild the column as a partition value, so an `isin` predicate
   * on it prunes to the probed keys' dirs before any file opens.
@@ -545,7 +546,7 @@ final case class TableStore(spark: SparkSession, root: String,
     */
   private val CompactFiles = 64
 
-  /** Dirs per size-tiered merge, and the span ratio between tiers. */
+  /** Least dirs a closed block merges, and the width ratio between levels. */
   private val MergeFanIn = 8
 
   private def hidden(name: String): Boolean =
@@ -644,19 +645,19 @@ final case class TableStore(spark: SparkSession, root: String,
     * checks the span with a `raise_error` projection, no extra job: a row
     * outside fails the append loudly and commits nothing.
     *
-    * Size-tiered compaction (O'Neil et al., 1996) rides on the commit:
-    * outside the newest [[CompactFiles]] dirs, the oldest run of
-    * [[MergeFanIn]] adjacent dirs of one tier (tier k spans [8^k, 8^(k+1))
-    * range values) merges into one dir of ceil(bytes / the session's
-    * `spark.sql.files.maxPartitionBytes`) files, staged before the append
-    * (a failed append leaves only garbage for the next commit's GC). A
-    * merge lands a tier higher, so a row is rewritten O(log span) times
-    * and live dirs stay under CompactFiles + 8 per tier whatever their
-    * size; the cap bounds each file, not the dir, so the merge into tier
-    * k rewrites at least 8^k range values' rows on one append. Tiers go
-    * by span, not bytes: a merge of tiny parquet files, mostly footer, can
-    * come out no bigger than one input, so a byte tier could re-merge
-    * rows forever.
+    * Tiered compaction (O'Neil et al., 1996) rides on the commit. The
+    * newest [[CompactFiles]] dirs are never merged. Below the oldest of
+    * them, once an aligned block of 8^k range values (k >= 1) lies wholly
+    * under it and holds the `lo` of [[MergeFanIn]] or more dirs, those
+    * dirs merge, lowest level first, into one dir of ceil(bytes / the
+    * session's `spark.sql.files.maxPartitionBytes`) files, staged before
+    * the append (a failed append leaves only garbage for the next commit's
+    * GC). Blocks go by range position, not by span or bytes, so catch-up
+    * chunks between per-block heads or a sparse table's gaps cannot strand
+    * dirs. A block closes once, so a row is rewritten about once per
+    * level, and live dirs stay near CompactFiles + 8 per level. The cap
+    * bounds each file, not the dir: a level-k merge rewrites up to 8^k
+    * range values' rows on one append.
     */
   def appendRange(table: String, df: DataFrame, rangeCol: String, lo: Long, hi: Long): Unit = {
     val m = manEntries(table)
@@ -677,19 +678,26 @@ final case class TableStore(spark: SparkSession, root: String,
     * staged, seeded merged dir covering their bounds.
     */
   private def mergeRun(table: String, dirs: Seq[Dir]): Option[(Seq[Dir], Dir)] = {
-    def tier(d: Dir): Int =
-      Iterator.iterate(d.hi - d.lo + 1)(_ / MergeFanIn).takeWhile(_ >= MergeFanIn).size
-    dirs.filter(_.ranged).sortBy(_.lo).dropRight(CompactFiles).sliding(MergeFanIn)
-      .find(run => run.size == MergeFanIn && run.forall(tier(_) == tier(run.head)))
-      .map { run =>
-        val bytes = run.map(dirBytes(table, _)).sum
-        val files = ((bytes - 1) / spark.sessionState.conf.filesMaxPartitionBytes + 1).toInt
-        val in = open(table, Map("" -> run))
-        // round-robin: equal rows per file, so each file stays near bytes / files
-        val rel = stagePhys(table, if (files <= 1) in.coalesce(1) else in.repartition(files))
-        seed(new Path(dir(table), rel))
-        run -> Dir(rel, run.map(_.lo).min, run.map(_.hi).max)
-      }
+    val byLo = dirs.filter(_.ranged).sortBy(_.lo)
+    val older = byLo.dropRight(CompactFiles)
+    // block widths 8, 64, ... up to the last that fits a Long
+    val widths = Iterator.iterate(MergeFanIn.toLong)(_ * MergeFanIn).takeWhile(_ > 0)
+    val picked = Option.when(older.nonEmpty)(byLo(older.size).lo).flatMap { horizon =>
+      widths.flatMap { w =>
+        older.groupBy(d => Math.floorDiv(d.lo, w)).toSeq.sortBy(_._1).collectFirst {
+          case (b, ds) if b < Math.floorDiv(horizon, w) && ds.size >= MergeFanIn => ds
+        }
+      }.nextOption()
+    }
+    picked.map { run =>
+      val bytes = run.map(dirBytes(table, _)).sum
+      val files = ((bytes - 1) / spark.sessionState.conf.filesMaxPartitionBytes + 1).toInt
+      val in = open(table, Map("" -> run))
+      // round-robin: equal rows per file, so each file stays near bytes / files
+      val rel = stagePhys(table, if (files <= 1) in.coalesce(1) else in.repartition(files))
+      seed(new Path(dir(table), rel))
+      run -> Dir(rel, run.map(_.lo).min, run.map(_.hi).max)
+    }
   }
 
   /** Append into a layout partitioned by a discrete CATEGORY column (hash

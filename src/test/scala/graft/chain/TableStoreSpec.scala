@@ -125,25 +125,48 @@ class TableStoreSpec extends SparkSpec {
     }
   }
 
-  test("size-tiered compaction over 1,000 per-block appends keeps dirs bounded") {
-    // live dirs stay under 64 + 8 per tier (4 tiers below 8^4 blocks), the
-    // newest 64 dirs are never merged, and each row is rewritten at most
-    // once per tier climb (3 times below 8^4 blocks)
+  /** Appends one row per value of each span in `appends` to a fresh
+    * table, checking after every append that at most `maxDirs` dirs are
+    * live and that the newest 64 are appended ones, never merged. Returns
+    * the rows compaction rewrote.
+    */
+  private def compactOver(appends: Seq[(Long, Long)], maxDirs: Int): Long = {
     val store = fresh()
-    val n = 1000L
-    var seen = Set.empty[(Long, Long)]
+    var own = Set.empty[(Long, Long)]  // the appended spans
+    var seen = Set.empty[(Long, Long)] // every dir ever live
     var rewritten = 0L
-    (0L until n).foreach { b =>
-      store.appendRange("t", Seq(b).toDF("n"), "n", b, b)
+    appends.zipWithIndex.foreach { case ((lo, hi), i) =>
+      store.appendRange("t", (lo to hi).toDF("n"), "n", lo, hi)
+      own += ((lo, hi))
       val dirs = spans(store, "t")
-      assert(dirs.size <= 64 + 8 * 4, s"${dirs.size} live dirs after block $b")
-      assert(dirs.takeRight(64).forall { case (lo, hi) => lo == hi },
-        s"a newest-64 dir was merged after block $b")
-      rewritten += dirs.filterNot(seen).collect { case (lo, hi) if lo < hi => hi - lo + 1 }.sum
+      assert(dirs.size <= maxDirs, s"${dirs.size} live dirs after append $i")
+      assert(dirs.takeRight(64).forall(own), s"a newest-64 dir was merged after append $i")
+      rewritten += dirs.filterNot(d => seen(d) || own(d)).map { case (l, h) => h - l + 1 }.sum
       seen ++= dirs
     }
-    assert(rewritten > 0 && rewritten <= 3 * n, s"rows rewritten: $rewritten")
-    assert(rows(store, "t") == (0L until n))
+    assert(rows(store, "t") == appends.flatMap { case (lo, hi) => lo to hi })
+    rewritten
+  }
+
+  test("tiered compaction keeps dirs bounded over per-block heads and catch-up chunks") {
+    // per-block appends: live dirs stay under 64 + 8 per level (4 levels
+    // below 8^4 blocks), and each row is rewritten at most once per closed
+    // level (3 times below 8^4 blocks)
+    val n = 1000L
+    val perBlock = compactOver((0L until n).map(b => (b, b)), 64 + 8 * 4)
+    assert(perBlock > 0 && perBlock <= 3 * n, s"rows rewritten: $perBlock of $n")
+    // every 4th append a 9-block catch-up chunk, as after a stalled node:
+    // no 8 adjacent dirs share one span, but each closed aligned block
+    // merges whatever its dirs' spans. At most 7 closed blocks per level,
+    // each left with under 8 dirs once its merges land, 4 levels: under
+    // 64 + 4 * 7 * 8 live dirs (merging only runs of one span would leave
+    // all 400 dirs live)
+    val chunks = (0 until 400).scanLeft((0L, -1L)) { case ((_, prev), i) =>
+      (prev + 1, prev + 1 + (if (i % 4 == 3) 8L else 0L))
+    }.tail
+    val values = chunks.last._2 + 1
+    val chunked = compactOver(chunks, 64 + 4 * 7 * 8)
+    assert(chunked > 0 && chunked <= 3 * values, s"rows rewritten: $chunked of $values")
   }
 
   test("runs of fat dirs still merge, each merged file under maxPartitionBytes") {
@@ -162,7 +185,7 @@ class TableStoreSpec extends SparkSpec {
     try (0L until n).foreach { b =>
       store.appendRange("t", Seq((b, rnd.alphanumeric.take(1000).mkString)).toDF("n", "pay"),
         "n", b, b)
-      // three tiers below 8^3 blocks
+      // three levels below 8^3 blocks
       assert(store.rangeDirs("t").size <= 64 + 8 * 3, s"live dirs after block $b")
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     val tdir = Paths.get(store.root, "t")
