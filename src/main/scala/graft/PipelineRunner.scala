@@ -73,10 +73,10 @@ import graft.streaming._
   * exactly as each face's spec proves in isolation.
   *
   * Scale shape: the input is whatever lands in `inputDir` per trigger;
-  * each face's per-batch work is bounded by the batch (bounded state
-  * probes by hash-prefix partition pruning, count-gated candidate
-  * stages, ≤groups×k / groups×m state relations — see each face's
-  * scaladoc). Nothing here adds a corpus-sized stage on top.
+  * each face's per-batch work is bounded by the batch or by its state's
+  * compacted dirs (state probes over batch-ranged dirs, count-gated
+  * candidate stages, ≤groups×k / groups×m state relations — see each
+  * face's scaladoc). Nothing here adds a corpus-sized stage on top.
   */
 object PipelineRunner {
 
@@ -107,8 +107,8 @@ object PipelineRunner {
     */
   val FaceNames: Seq[String] = BatchFaceNames ++ Seq("sessions", "ivfIndex", "retrain", "release")
 
-  /** The category-partitioned state tables of each face that keeps any:
-    * their live file counts are exported after every batch.
+  /** The dedup state tables of each face that keeps any: their live
+    * file counts are exported after every batch.
     */
   private val StateTables: Map[String, Seq[String]] = Map(
     "chunkDedup" -> Seq("chunk_hashes"),
@@ -324,6 +324,8 @@ object PipelineRunner {
     val vectors  = new AtomicLong
     val retrains = new AtomicLong
     val batchSeconds = new LatencyHistogram
+    /** Seconds per document face per batch, observed with `batches`. */
+    val faceSeconds = new scala.collection.concurrent.TrieMap[String, LatencyHistogram]
     /** Live data files per category state table, as of its face's last batch. */
     val stateFiles = new scala.collection.concurrent.TrieMap[String, Long]
 
@@ -345,6 +347,8 @@ object PipelineRunner {
       metric("graft_pipeline_vectors", "counter", vectors.get())
       metric("graft_pipeline_retrains", "counter", retrains.get())
       MetricsServer.renderHistogram(sb, "graft_pipeline_batch_seconds", batchSeconds)
+      MetricsServer.renderHistogram(sb, "graft_pipeline_face_seconds", "face",
+        faceSeconds.toSeq.sortBy(_._1))
       MetricsServer.renderTableGauge(sb, "graft_pipeline_state_files", stateFiles)
       sb.toString
     }
@@ -373,20 +377,26 @@ object PipelineRunner {
     // one materialization shared by every face (and the metrics count):
     // foreachBatch re-plans the source per action otherwise
     val b = batch.localCheckpoint(true)
+    // each document face's seconds, observed once the whole batch has
+    // landed, so every face's count equals `batches`
+    val faceSecs = scala.collection.concurrent.TrieMap.empty[String, Double]
+    def timed(face: String)(run: => Unit): () => Unit = () => {
+      val f0 = System.nanoTime(); run; faceSecs.put(face, (System.nanoTime() - f0) / 1e9): Unit
+    }
     val thunks: Seq[() => Unit] = cfg.faces.map {
-      case "chunkDedup" => () =>
-        StreamingText.processChunkBatch(store, cfg.chunkTokens, cfg.compactFiles,
-          cfg.dedupRetentionBatches)(b, bid)
-      case "lshDedup" => () =>
+      case f @ "chunkDedup" => timed(f)(
+        StreamingText.processChunkBatch(store, cfg.chunkTokens,
+          cfg.dedupRetentionBatches)(b, bid))
+      case f @ "lshDedup" => timed(f)(
         StreamingDedup.processLshBatch(store, cfg.shingleSize, cfg.numHashes,
           cfg.bands, cfg.simThreshold, compactFiles = cfg.compactFiles,
-          retentionBatches = cfg.dedupRetentionBatches)(b, bid)
-      case "hllSketch" => () =>
+          retentionBatches = cfg.dedupRetentionBatches)(b, bid))
+      case f @ "hllSketch" => timed(f)(
         StreamingSketch.processSketchBatch(store, cfg.hllGroupCol,
-          cfg.hllValueCol, cfg.hllM)(b, bid)
-      case "quantiles" => () =>
+          cfg.hllValueCol, cfg.hllM)(b, bid))
+      case f @ "quantiles" => timed(f)(
         StreamingQuantiles.processQuantileBatch(store, cfg.quantileGroupCol,
-          cfg.quantileValueCol, cfg.quantileIdCol, cfg.quantileK)(b, bid)
+          cfg.quantileValueCol, cfg.quantileIdCol, cfg.quantileK)(b, bid))
       case "sessions" => () =>
         () // stateful session_window face: its own query, wired in start()
       case "ivfIndex" => () =>
@@ -397,6 +407,7 @@ object PipelineRunner {
     }
     graft.chain.Par.run(thunks)
     metrics.foreach { pm =>
+      faceSecs.foreach { case (f, s) => pm.faceSeconds.getOrElseUpdate(f, new LatencyHistogram).observe(s) }
       pm.batches.incrementAndGet()
       pm.docs.addAndGet(b.count())
       pm.batchSeconds.observe((System.nanoTime() - t0) / 1e9)

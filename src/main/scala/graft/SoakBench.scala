@@ -10,10 +10,13 @@ import graft.chain.TableStore
   * pipeline faces (chunk dedup, LSH near-dup index, HLL sketch, bottom-k
   * quantiles — exactly [[PipelineRunner.processBatch]]) for hundreds of
   * micro-batches and chart, at fixed checkpoints,
-  *   - the state tables' DATA-FILE counts (threshold compaction must hold
-  *     them flat — an append-only face would grow one file set per batch
-  *     and every later probe would pay per-file listing/footer costs),
-  *   - the live DIR counts of the per-batch range tables (tiered
+  *   - the state tables' DATA-FILE counts (compaction must hold them
+  *     flat — an append-only face would grow one file set per batch and
+  *     every later probe would pay per-file listing/footer costs), and the
+  *     most files any one `lsh_sigs` key holds (threshold compaction must
+  *     cap it),
+  *   - the live DIR counts of the per-batch range tables, the dedup state
+  *     tables `chunk_hashes` and `lsh_postings` among them (tiered
   *     compaction must hold them near 64 + 8 per level), and the cost of
   *     that compaction: seconds on the batches that merged a run against
   *     those that did not, and the bytes merged,
@@ -79,21 +82,22 @@ object SoakBench {
     val docsPer = sys.env.get("SPARK_GRAFT_SOAK_DOCS").map(_.toInt).getOrElse(24)
     val store = TableStore(spark, Files.createTempDirectory("graft-soak").toString)
     // compactFiles is LOW here on purpose: the soak's job is to show the
-    // file-count curves SATURATING inside the run — at the production
-    // default (64) the chunk face's per-partition touch rate (~1/15
-    // batches at this doc mix) would not cross the threshold within 500
-    // batches and the curve would read as unbounded growth when it is
-    // actually just a far-off ceiling (256 partitions × threshold)
+    // lsh_sigs per-key file curve SATURATING inside the run — at the
+    // production default (64) a key's touch rate (~1/15 batches at this
+    // doc mix) would not cross the threshold within 500 batches and the
+    // curve would read as unbounded growth when it is actually just a
+    // far-off ceiling (256 keys × threshold)
     val compact = sys.env.get("SPARK_GRAFT_SOAK_COMPACT").map(_.toInt).getOrElse(16)
     val cfg = PipelineRunner.Config(
       inputDir = "", dataDir = store.root, checkpointDir = "",
       quantileK = 32, hllM = 256, compactFiles = compact)
     val tables = Seq("chunk_hashes", "lsh_postings", "lsh_sigs",
       "hll_regs", "bk_sample")
-    val rangeTables = Seq("chunk_dedup", "near_dups", "hll_cardinality", "bk_quantiles")
+    val rangeTables = Seq("chunk_dedup", "near_dups", "hll_cardinality", "bk_quantiles",
+      "chunk_hashes", "lsh_postings")
     val samplePoints = math.max(1, batches / 10)
-    val samples = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, Map[String, (Long, Long)], Double, Double, Map[String, Int])]
+    type Sample = (Int, Map[String, (Long, Long)], Double, Double, Map[String, Int], Long)
+    val samples = scala.collection.mutable.ArrayBuffer.empty[Sample]
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
     Profile.measure(spark) { counter =>
       var windowJobs0 = 0L
@@ -115,13 +119,14 @@ object SoakBench {
           val secPerBatch  = (now - windowT0) / 1e9 / samplePoints
           windowJobs0 = jobs; windowT0 = now
           samples += ((b + 1, stats, jobsPerBatch, secPerBatch,
-            rangeTables.map(t => t -> store.rangeDirs(t).size).toMap))
+            rangeTables.map(t => t -> store.rangeDirs(t).size).toMap,
+            store.fileCounts("lsh_sigs").values.maxOption.getOrElse(0L)))
           Console.err.println(f"[soak] batch ${b + 1}%4d  jobs/batch $jobsPerBatch%.1f  " +
             f"sec/batch $secPerBatch%.2f  files ${stats.map { case (t, v) => s"$t=${v._1}" }.mkString(" ")}")
         }
       }
     }
-    def arr(f: ((Int, Map[String, (Long, Long)], Double, Double, Map[String, Int])) => String) =
+    def arr(f: Sample => String) =
       samples.map(f).mkString("[", ",", "]")
     def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     s""""soak_source":"live run","soak_batches":$batches,"soak_docs_per_batch":$docsPer,""" +
@@ -131,6 +136,7 @@ object SoakBench {
           s""""soak_rows_$t":${arr(_._2(t)._2.toString)}"""
       }.mkString(",") + "," +
       rangeTables.map(t => s""""soak_dirs_$t":${arr(_._5(t).toString)},""").mkString +
+      s""""soak_max_key_files_lsh_sigs":${arr(_._6.toString)},""" +
       mergeCost("soak", perBatch.toSeq) + "," +
       s""""soak_jobs_per_batch":${arr(s => f2(s._3))},""" +
       s""""soak_sec_per_batch":${arr(s => f2(s._4))}"""

@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *   - `.d-<uuid>[/<key>=<v>]` — immutable physical data dirs (parquet
   *     part files), written once by a staged write and never renamed;
   *   - `.manifest.N` — immutable: one `<logicalKey>\t<relDir>` line per
-  *     live physical dir (plus `\t<lo>\t<hi>` for a range table's dir),
+  *     live physical dir (plus `\t<lo>\t<hi>` for a bounded dir),
   *     closed by an `#end` line;
   *   - `.gen` — the generation marker "version epoch writerId", THE
   *     commit point;
@@ -79,7 +79,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *     (see [[appendRange]]).
   * Category-partitioned tables keep one `<col>=<v>` key per value, and
   * reads rebuild the column as a partition value, so an `isin` predicate
-  * on it prunes to the probed keys' dirs before any file opens.
+  * on it prunes to the probed keys' dirs before any file opens. Their
+  * dirs may carry range bounds too (a batch id), and then retract and
+  * read by range exactly as a range table's do.
   *
   * A full production deployment may still prefer a Delta/Iceberg table
   * here — their logs add snapshot isolation for CONCURRENT writers,
@@ -580,6 +582,18 @@ final case class TableStore(spark: SparkSession, root: String,
 
   private def dirBytes(table: String, d: Dir): Long = leafFiles(table, d.rel).map(_.getLen).sum
 
+  /** Throws, naming the table, when a live dir of `table` records no
+    * range bounds (from the manifest alone): a [[deleteRange]] bracket
+    * would rewrite every such dir on every batch.
+    */
+  def requireRanged(table: String): Unit =
+    manEntries(table).collect { case (k, ds) if ds.exists(!_.ranged) => k }.toSeq.sorted match {
+      case Seq() => ()
+      case keys => throw new IllegalStateException(s"table '$table' at ${dir(table)} holds " +
+        s"dirs without range bounds (keys ${keys.take(3).mkString(", ")}), a layout from " +
+        "before batch-ranged state, which this store does not read; re-ingest into a fresh dataDir")
+    }
+
   // ---- schema sidecar ----------------------------------------------------
   // Every write records the table's logical schema in a hidden
   // `.schema.json`. A table whose current content is zero DATA files —
@@ -642,8 +656,8 @@ final case class TableStore(spark: SparkSession, root: String,
 
   /** Append `df`, whose `rangeCol` values all lie in [lo, hi] (the span
     * the caller's bracket just retracted), as one ranged dir. The write
-    * checks the span with a `raise_error` projection, no extra job: a row
-    * outside fails the append loudly and commits nothing.
+    * checks the span ([[inSpan]]): a row outside fails the append loudly
+    * and commits nothing.
     *
     * Tiered compaction (O'Neil et al., 1996) rides on the commit. The
     * newest [[CompactFiles]] dirs are never merged. Below the oldest of
@@ -663,16 +677,21 @@ final case class TableStore(spark: SparkSession, root: String,
     val m = manEntries(table)
     val old = m.getOrElse("", Seq.empty)
     val merged = mergeRun(table, old)
-    val rel = stagePhys(table, df.withColumn(rangeCol,
-      when(col(rangeCol).between(lo, hi), col(rangeCol)).otherwise(raise_error(concat(
-        lit(s"table '$table': $rangeCol "), col(rangeCol).cast("string"),
-        lit(s" lies outside the appended span [$lo, $hi]"))))))
+    val rel = stagePhys(table, inSpan(table, df, rangeCol, lo, hi))
     rememberSchema(table, df.schema)
     val next = merged.fold(old) { case (in, out) => old.filterNot(in.contains) :+ out } ++
       Option.when(seedRows(new Path(dir(table), rel)))(Dir(rel, lo, hi))
     if (next != old) commitManifest(table, m.updated("", next))
     invalidate(table) // after the mutation — see append
   }
+
+  /** `df` checked against [lo, hi] by a `raise_error` projection, no job. */
+  private def inSpan(table: String, df: DataFrame, rangeCol: String,
+                     lo: Long, hi: Long): DataFrame =
+    df.withColumn(rangeCol,
+      when(col(rangeCol).between(lo, hi), col(rangeCol)).otherwise(raise_error(concat(
+        lit(s"table '$table': $rangeCol "), col(rangeCol).cast("string"),
+        lit(s" lies outside the appended span [$lo, $hi]")))))
 
   /** The run [[appendRange]] merges, if any: its input dirs and the
     * staged, seeded merged dir covering their bounds.
@@ -700,19 +719,32 @@ final case class TableStore(spark: SparkSession, root: String,
     }
   }
 
-  /** Append into a layout partitioned by a discrete CATEGORY column (hash
-    * prefix, shard id) rather than a block-number range: each distinct
+  /** Append into a layout partitioned by a discrete CATEGORY column (doc
+    * prefix, centroid id) rather than a block-number range: each distinct
     * value is its own manifest key, so a read carrying an `isin`
     * predicate on `partCol` prunes to exactly the probed partitions before
     * any file opens. Unlike a range table's dirs, whose bounds live in
     * the manifest, the column survives the read — it IS data. The write
     * is spread over every core by [[byKey]], one file per key per append.
+    * A `range` (rangeCol, lo, hi) bounds every new dir as [[appendRange]]
+    * does. Returns the partition values written, for [[compactPartitions]].
     */
-  def appendPartitioned(table: String, df: DataFrame, partCol: String): Unit = {
-    val rel = stagePhys(table, byKey(df, partCol), partitionBy = Some(partCol))
+  def appendPartitioned(table: String, df: DataFrame, partCol: String,
+                        range: Option[(String, Long, Long)] = None): Seq[String] = {
+    val rel = stagePhys(table,
+      byKey(range.fold(df) { case (c, lo, hi) => inSpan(table, df, c, lo, hi) }, partCol),
+      partitionBy = Some(partCol))
     rememberSchema(table, df.schema)
-    registerStagedPartitions(table, rel)
+    val subs = stagedKeys(table, rel)
+    if (subs.nonEmpty) {
+      val bounds = range.fold(Dir(""))(r => Dir("", r._2, r._3))
+      val m = manEntries(table)
+      commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) =>
+        acc.updated(k, acc.getOrElse(k, Seq.empty) :+ bounds.copy(rel = d))
+      })
+    }
     invalidate(table) // after the mutation — see append
+    subs.keys.map(_.stripPrefix(partCol + "=")).toSeq
   }
 
   /** `df` hash-partitioned on `partCol` into the session's shuffle
@@ -726,19 +758,6 @@ final case class TableStore(spark: SparkSession, root: String,
   private def byKey(df: DataFrame, partCol: String): DataFrame =
     df.repartition(spark.sessionState.conf.numShufflePartitions, col(partCol))
 
-  /** Add every data-holding `<key>=<v>` subdir of a freshly staged
-    * partitioned write under its logical key and commit once.
-    */
-  private def registerStagedPartitions(table: String, rel: String): Unit = {
-    val subs = stagedKeys(table, rel)
-    if (subs.nonEmpty) {
-      val m = manEntries(table)
-      commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) =>
-        acc.updated(k, acc.getOrElse(k, Seq.empty) :+ Dir(d))
-      })
-    }
-  }
-
   /** Delete rows with rangeCol ∈ [from, to]; see [[deleteRangeAll]]. */
   def deleteRange(table: String, rangeCol: String, from: Long, to: Long): Unit =
     deleteRangeAll(Seq(table -> rangeCol), from, to)
@@ -747,8 +766,9 @@ final case class TableStore(spark: SparkSession, root: String,
     * from the manifests' dir bounds: a dir inside the range drops out, a
     * disjoint dir stays, and only a dir straddling it (an unranged dir
     * always does) is rewritten, filtered, with narrowed bounds, or
-    * dropped when no row survives. A straddler with no row in the range
-    * (the footers' row counts match) keeps its dir, with narrowed bounds.
+    * dropped when no row survives (a category key's column stays in the
+    * key). A straddler with no row in the range (the footers' row counts
+    * match) keeps its dir, with narrowed bounds.
     * The ingest bracket's happy path (all dirs disjoint) and a reorg of
     * per-block dirs (all inside) run no Spark job (the reference: ONE DB
     * transaction per chunk, store/store.go:129-147). One commit per
@@ -761,7 +781,8 @@ final case class TableStore(spark: SparkSession, root: String,
         if (d.hi < from || to < d.lo) Some(d)
         else if (from <= d.lo && d.hi <= to) None
         else {
-          val rel = stagePhys(t, open(t, Map(k -> Seq(d))).filter(!col(rc).between(from, to)))
+          val rest = open(t, Map(k -> Seq(d))).filter(!col(rc).between(from, to))
+          val rel = stagePhys(t, rest.drop(k.takeWhile(_ != '=')))
           val kept = footerRows(seed(new Path(dir(t), rel)))
           val narrowed = d.copy(lo = if (from <= d.lo) to + 1 else d.lo,
                                 hi = if (d.hi <= to) from - 1 else d.hi)
@@ -855,17 +876,17 @@ final case class TableStore(spark: SparkSession, root: String,
     rowCache.put(table, Some(df.collect()))
 
   /** Threshold-triggered compaction for CATEGORY-partitioned tables (the
-    * streaming index tables: `lsh_postings`/`lsh_sigs`/`ivf_postings`/
-    * `chunk_hashes`). Each micro-batch's [[appendPartitioned]] lands one
-    * file-set per touched partition and nothing ever range-deletes them,
-    * so after 10⁴ batches a partition-pruned probe would open 10⁴ small
-    * files: every partition in `parts` (default: all) whose data-file
-    * count exceeds `maxFiles` is rewritten to one file per key, ALL of
+    * streaming index tables `lsh_sigs` and `ivf_postings`). Each
+    * micro-batch's [[appendPartitioned]] lands one file-set per touched
+    * partition, so after 10⁴ batches a partition-pruned probe would open
+    * 10⁴ small files: every partition in `parts` (default: all) whose
+    * data-file count exceeds `maxFiles` is rewritten to one file per key, ALL of
     * them in ONE partitioned staged write ([[byKey]]: one job spread over
     * every core, however many keys cross the threshold together — and a
     * batch that touches every key makes them all cross together) swapped
     * in by one manifest commit. Rows (including their batch_id replay
-    * tags) are byte-identical, so every replay and probe invariant is
+    * tags) are byte-identical and each merged dir keeps [min lo, max hi]
+    * of the dirs it replaces, so every replay and probe invariant is
     * untouched. File counts come from the seeded status cache, so the
     * threshold check lists nothing. Returns the number of partitions
     * rewritten.
@@ -890,29 +911,13 @@ final case class TableStore(spark: SparkSession, root: String,
         throw new IllegalStateException(s"table '$table': compaction of ${fat.size} keys " +
           s"staged keys ${subs.keySet.diff(fat.toSet).take(3).mkString(", ")} outside them " +
           s"or missed ${fat.toSet.diff(subs.keySet).take(3).mkString(", ")}; nothing committed")
-      commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) => acc.updated(k, Seq(Dir(d))) })
+      commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) =>
+        acc.updated(k, Seq(Dir(d, m(k).map(_.lo).min, m(k).map(_.hi).max)))
+      })
       invalidate(table)
     }
     fat.size
   }
-
-  /** Retention prune for a CATEGORY-partitioned state table: rewrite it
-    * keeping only rows with `rangeCol >= keepFrom`, atomically (staged
-    * write, one commit — a crash leaves the un-pruned generation live).
-    * The streaming dedup state tables (`chunk_hashes`, `lsh_sigs`,
-    * `lsh_postings`) grow one row per distinct chunk/canonical FOREVER —
-    * inherent to exact dedup — and this is the knob that bounds them when
-    * a deployment accepts sliding-window semantics (dedup against the
-    * last N batches) instead: callers invoke it once per retention window,
-    * so the amortized per-batch cost is O(state / window). Rows keep their
-    * batch_id replay tags; a replayed prune recomputes the identical
-    * result, one file per key ([[byKey]]). No-op when the table is absent.
-    */
-  def retainFrom(table: String, rangeCol: String, keepFrom: Long,
-                 partCol: String): Unit =
-    if (exists(table))
-      replaceAll(Seq(table -> readOr(table, null).filter(col(rangeCol) >= keepFrom)),
-        partitionBy = Map(table -> partCol))
 
   /** Remove a table entirely, schema sidecar included — for state tables
     * that drain to empty (the ingest side pool): a dropped table reads as

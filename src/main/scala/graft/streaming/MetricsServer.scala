@@ -97,18 +97,30 @@ object MetricsServer {
     * +Inf, _sum, _count) — shared by every metrics face so the exposition
     * format can't drift between endpoints.
     */
-  def renderHistogram(sb: StringBuilder, name: String, h: LatencyHistogram): Unit = {
+  def renderHistogram(sb: StringBuilder, name: String, h: LatencyHistogram): Unit =
+    renderHistogram(sb, name, "", Seq("" -> h))
+
+  /** One histogram family with one series per value of `label` (no label
+    * when `label` is empty); nothing when `series` is empty.
+    */
+  def renderHistogram(sb: StringBuilder, name: String, label: String,
+                      series: Seq[(String, LatencyHistogram)]): Unit = if (series.nonEmpty) {
     def num(v: Double): String =
       if (v == v.floor && math.abs(v) < 1e15) v.toLong.toString
       else "%.6f".formatLocal(java.util.Locale.ROOT, v)
     sb.append("# TYPE ").append(name).append(" histogram\n")
-    val cumulative = h.bucketCounts.scanLeft(0L)(_ + _).tail
-    h.bounds.zip(cumulative).foreach { case (b, c) =>
-      sb.append(name).append("_bucket{le=\"").append(b)
-        .append("\"} ").append(c).append('\n')
+    series.foreach { case (v, h) =>
+      def line(suffix: String, le: Option[String], value: Any): Unit = {
+        val ls = Option.when(label.nonEmpty)(s"""$label="$v"""").toSeq ++ le.map(b => s"""le="$b"""")
+        sb.append(name).append(suffix).append(if (ls.isEmpty) "" else ls.mkString("{", ",", "}"))
+          .append(' ').append(value).append('\n'): Unit
+      }
+      val cumulative = h.bucketCounts.scanLeft(0L)(_ + _).tail
+      (h.bounds.map(_.toString) :+ "+Inf").zip(cumulative).foreach { case (b, c) =>
+        line("_bucket", Some(b), c)
+      }
+      line("_sum", None, num(h.sumSeconds))
+      line("_count", None, h.count)
     }
-    sb.append(name).append("_bucket{le=\"+Inf\"} ").append(cumulative.last).append('\n')
-    sb.append(name).append("_sum ").append(num(h.sumSeconds)).append('\n')
-    sb.append(name).append("_count ").append(h.count).append('\n'): Unit
   }
 }

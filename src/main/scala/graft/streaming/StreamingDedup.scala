@@ -16,15 +16,18 @@ import graft.operators.Dedup
   * keys, and the verdict re-aggregates by doc).
   *
   * Index layout — CANONICAL DOCS ONLY, two tables:
-  *   - `lsh_postings` (band, band_hash, doc_id, batch_id), partitioned by
-  *     the band-hash prefix `bp` (0..255): a batch's candidate probe reads
-  *     only the partitions for prefixes present in the batch — an `isin`
-  *     predicate Spark prunes before opening a file, the chunk_hashes
-  *     discipline. At corpus scale a batch touches its share of the index,
-  *     not the index.
+  *   - `lsh_postings` (band, band_hash, doc_id, batch_id), a range table
+  *     on `batch_id`: each batch appends one dir bounded [bid, bid], and
+  *     the store's tiered compaction bounds the live dir count. The
+  *     candidate probe reads every dir below `bid`. A 256-way band-hash
+  *     prefix layout barely pruned it: a batch of B documents carries 16·B
+  *     band hashes and so touches 1 − e^(−16B/256) of the prefixes (98 %
+  *     at B = 64), so it pruned only for batches under about 16 documents,
+  *     and every batch wrote one file per touched prefix.
   *   - `lsh_sigs` (doc_id, sig, batch_id), partitioned by the doc-id
-  *     prefix `sp`: signatures are fetched ONLY for the candidate set
-  *     (bounded by the bucket valve), again partition-pruned.
+  *     prefix `sp`, each dir bounded by its batch ids: signatures are
+  *     fetched ONLY for the candidate set (bounded by the bucket valve),
+  *     whose prefixes are a strict subset, so this layout does prune.
   * Keeping only canonicals in the index is what production frontiers do:
   * dups never accumulate as index mass, and a chain of near-dups all
   * resolves against the one kept representative.
@@ -40,9 +43,12 @@ import graft.operators.Dedup
   *
   * Replay idempotency: postings/sigs rows are tagged with batch_id; the
   * "earlier corpus" is `batch_id < bid`, so a replayed batch never
-  * matches its own half-landed rows, recomputes the identical verdict,
-  * and appends only the rows a crashed attempt didn't land — a crash
-  * loop converges instead of growing the index.
+  * matches its own half-landed rows and recomputes the identical
+  * verdict. Every table it writes then goes through the delete-then-
+  * append bracket on `[bid, bid]`, which drops whatever a crashed
+  * attempt landed; on the happy path no live dir's bounds meet `bid`, so
+  * the delete runs no Spark job. Each bracket is replay-safe alone, so
+  * the three run concurrently.
   */
 object StreamingDedup {
 
@@ -52,14 +58,12 @@ object StreamingDedup {
 
   val postingsSchema: StructType = StructType(Seq(
     StructField("band", IntegerType), StructField("band_hash", LongType),
-    StructField("doc_id", LongType), StructField("batch_id", LongType),
-    StructField("bp", IntegerType)))
+    StructField("doc_id", LongType), StructField("batch_id", LongType)))
 
   val sigsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("sig", ArrayType(LongType)),
     StructField("batch_id", LongType), StructField("sp", IntegerType)))
 
-  private def bandPrefix(h: org.apache.spark.sql.Column) = pmod(h, lit(256L)).cast("int")
   private def docPrefix(id: org.apache.spark.sql.Column) = pmod(id, lit(256L)).cast("int")
 
   /** Estimated Jaccard: fraction of equal MinHash components. The equal-
@@ -80,8 +84,9 @@ object StreamingDedup {
     * `bands` rows per canonical — both linear in distinct-canonical mass
     * forever, inherent to dedup-against-everything-kept. `retentionBatches`
     * trades that for SLIDING-WINDOW near-dup semantics: once per window
-    * both index tables prune to the last N batches (one atomic partitioned
-    * rewrite each, amortized O(index/N) per batch), after which a near-dup
+    * both index tables drop every batch older than the last N (a range
+    * delete: whole dirs drop from the manifest, and only a compacted dir
+    * straddling the cut is rewritten), after which a near-dup
     * of a canonical older than the window reads as NEW — the documented
     * semantic change. None (default) keeps the unbounded exact behavior.
     */
@@ -95,23 +100,23 @@ object StreamingDedup {
     val spark = batch.sparkSession
     import spark.implicits._
 
+    Seq(SigsTable, PostingsTable).foreach(store.requireRanged)
+
     // 1. one signature pass per doc; band rows derived from it
     val sigs = Dedup.minHashSignatureArray(batch, "doc_id", "text", shingleSize, numHashes)
       .localCheckpoint(true)
     val bandRows = Dedup.lshBands(sigs, "doc_id", numHashes, bands)
-      .withColumn("bp", bandPrefix(col("band_hash")))
       .localCheckpoint(true)
 
-    // 2. bounded probe of the canonical index: only this batch's band-hash
-    //    prefix partitions are read; earlier batches only (replay safety).
+    // 2. probe of the canonical index: every dir of earlier batches only
+    //    (replay safety), opened from the manifest's bounds.
     //    The old side is count-gated per bucket BEFORE the join — a band
     //    hash shared by 10⁶ distinct canonicals (boilerplate signatures)
     //    would otherwise multiply every matching batch row by the full
     //    bucket; above the valve the bucket is dropped and the other
     //    bands provide recall, the maxBucket discipline throughout Dedup.
-    val prefixes = bandRows.select("bp").distinct().collect().map(_.getInt(0)).toSeq
-    val oldPostings = store.read(PostingsTable, postingsSchema)
-      .filter(col("bp").isin(prefixes: _*) && col("batch_id") < bid)
+    val oldPostings = store.readRange(PostingsTable, "batch_id", Long.MinValue, bid - 1,
+      postingsSchema)
     val coldBuckets = oldPostings.groupBy("band", "band_hash")
       .agg(count(lit(1)).as("__cnt"))
       .filter(col("__cnt") <= maxBucket).select("band", "band_hash")
@@ -128,7 +133,8 @@ object StreamingDedup {
       .collect().map(_.getInt(0)).toSeq
     val oldSigs =
       if (oldSps.isEmpty) spark.emptyDataset[(Long, Array[Long])].toDF("old_id", "old_sig")
-      else store.read(SigsTable, sigsSchema).filter(col("sp").isin(oldSps: _*))
+      else store.readRange(SigsTable, "batch_id", Long.MinValue, bid - 1, sigsSchema)
+        .filter(col("sp").isin(oldSps: _*))
         .select(col("doc_id").as("old_id"), col("sig").as("old_sig"))
     val oldMatches = oldPairs
       .join(sigs, "doc_id")
@@ -196,63 +202,41 @@ object StreamingDedup {
       .withColumn("is_new", when(col("dup_of").isNull, 1).otherwise(0).cast("int"))
       .localCheckpoint(true)
 
-    store.deleteRange(VerdictTable, "batch_id", bid, bid)
-    store.appendRange(VerdictTable,
-      verdicts.select("batch_id", "doc_id", "is_new", "dup_of", "est_jaccard"),
-      "batch_id", bid, bid)
-
-    // 6. index growth: canonicals only, append-only-missing under replay.
-    //    EACH table gates its append on ITS OWN already-landed rows: a
-    //    crash between the two appends (sigs landed, postings not) must
-    //    leave the postings append — not nothing — for the replay to redo,
-    //    or those canonicals would be permanently invisible to later
-    //    batches' index probes. Both probes prune to the KEPT docs'
-    //    prefix partitions (bounded ≤256-int driver read); each append is
-    //    one Spark write job, so per-doc presence is the right granule.
+    // 6. verdict and index growth (canonicals only), each table through
+    //    its own delete-then-append bracket on [bid, bid]: the verdict
+    //    above read only batch_id < bid, so no bracket depends on another,
+    //    and a crash between any two leaves each one to its replay.
     val kept = verdicts.filter(col("is_new") === 1).select(col("doc_id"), col("sig"))
-    val keptSps = kept.select(docPrefix(col("doc_id")).as("sp")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val alreadySigs =
-      if (keptSps.isEmpty) kept.limit(0).select(col("doc_id"))
-      else store.read(SigsTable, sigsSchema)
-        .filter(col("sp").isin(keptSps: _*) && col("batch_id") === bid)
-        .select(col("doc_id"))
-    val freshSigs = kept.join(alreadySigs, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val keptBps = bandRows.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-      .select("bp").distinct().collect().map(_.getInt(0)).toSeq
-    val alreadyPostings =
-      if (keptBps.isEmpty) kept.limit(0).select(col("doc_id"))
-      else store.read(PostingsTable, postingsSchema)
-        .filter(col("bp").isin(keptBps: _*) && col("batch_id") === bid)
-        .select(col("doc_id")).distinct()
-    val freshPostingDocs = kept.select("doc_id")
-      .join(alreadyPostings, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    store.appendPartitioned(SigsTable,
-      freshSigs.select(col("doc_id"), col("sig"), lit(bid).as("batch_id"),
-        docPrefix(col("doc_id")).as("sp")), "sp")
-    store.appendPartitioned(PostingsTable,
-      bandRows.join(freshPostingDocs, Seq("doc_id"), "left_semi")
-        .select(col("band"), col("band_hash"), col("doc_id"),
-          lit(bid).as("batch_id"), col("bp")), "bp")
+    graft.chain.Par.run(Seq(
+      () => {
+        store.deleteRange(VerdictTable, "batch_id", bid, bid)
+        store.appendRange(VerdictTable,
+          verdicts.select("batch_id", "doc_id", "is_new", "dup_of", "est_jaccard"),
+          "batch_id", bid, bid)
+      },
+      () => {
+        store.deleteRange(SigsTable, "batch_id", bid, bid)
+        val touched = store.appendPartitioned(SigsTable,
+          kept.select(col("doc_id"), col("sig"), lit(bid).as("batch_id"),
+            docPrefix(col("doc_id")).as("sp")), "sp", Some(("batch_id", bid, bid)))
+        // bounded file counts: threshold-compact exactly the keys this
+        // batch touched; merged dirs keep their batch bounds
+        store.compactPartitions(SigsTable, "sp", Some(touched), compactFiles): Unit
+      },
+      () => {
+        store.deleteRange(PostingsTable, "batch_id", bid, bid)
+        store.appendRange(PostingsTable,
+          bandRows.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
+            .select(col("band"), col("band_hash"), col("doc_id"), lit(bid).as("batch_id")),
+          "batch_id", bid, bid)
+      }))
 
-    // 7. bounded file counts: every batch lands one file-set per touched
-    //    partition and nothing range-deletes the index, so without this
-    //    the probe's open cost grows one file per batch per partition
-    //    forever. Threshold-compact exactly the partitions this batch
-    //    touched (listing cost scales with the batch); rows and their
-    //    batch_id replay tags are unchanged, so the idempotency probes
-    //    above see the identical index.
-    store.compactPartitions(SigsTable, "sp", Some(keptSps), compactFiles)
-    store.compactPartitions(PostingsTable, "bp", Some(keptBps), compactFiles)
-    // sliding-window retention (see the scaladoc pricing note): prune once
-    // per window — idempotent under replay (same keepFrom → same result)
+    // sliding-window retention (see the scaladoc pricing note): once per
+    // window — idempotent under replay (the same cut drops the same rows)
     retentionBatches.foreach { r =>
-      if (r > 0 && bid > 0 && bid % r == 0) {
-        store.retainFrom(SigsTable, "batch_id", bid - r, "sp")
-        store.retainFrom(PostingsTable, "batch_id", bid - r, "bp")
-      }
+      if (r > 0 && bid > 0 && bid % r == 0)
+        Seq(SigsTable, PostingsTable).foreach(
+          store.deleteRange(_, "batch_id", Long.MinValue, bid - r - 1))
     }
   }
 

@@ -20,11 +20,10 @@ import graft.operators.Similarity
   * single file. At a billion vectors a probe touches nProbe/|centroids|
   * of the data, which is the entire point of IVF.
   *
-  * Replay idempotency is append-only-missing (the chunk_hashes
-  * discipline): a replayed batch re-assigns identically (deterministic
-  * centroids), probes ONLY its own centroid partitions for already-landed
-  * vec_ids, and appends the difference — a crash loop converges instead
-  * of growing the table.
+  * Replay idempotency is append-only-missing: a replayed batch
+  * re-assigns identically (deterministic centroids), probes ONLY its own
+  * centroid partitions for already-landed vec_ids, and appends the
+  * difference — a crash loop converges instead of growing the table.
   */
 object StreamingSimilarity {
 

@@ -95,68 +95,56 @@ object StreamingText {
     *      small) or earlier in THIS batch (the d9 min(struct) rule);
     *   3. per-doc counts land in `chunk_dedup` by delete-then-append on
     *      the batch id (replays overwrite, never duplicate);
-    *   4. the batch's distinct hashes append to `chunk_hashes` TAGGED
-    *      with bid — which is what makes the crash window safe: a
-    *      replayed batch filters its own half-written hashes out of the
-    *      "seen" set (batch_id < bid), so the recomputation is identical,
-    *      and re-appended hash rows are harmless to a semi join.
+    *   4. the batch's distinct fresh hashes land in `chunk_hashes` TAGGED
+    *      with bid, by the same bracket — which makes the crash window
+    *      safe: a replay reads only `batch_id < bid` as "seen", so it
+    *      recomputes identically, and its bracket replaces whatever hash
+    *      rows a crashed attempt landed. Each bracket is replay-safe on
+    *      its own, so the two run concurrently.
     *
-    * Scale notes: the state table grows one row per distinct chunk ever
-    * seen, but the per-batch probe is BOUNDED: `chunk_hashes` is
-    * partitioned by a hash-prefix category (`hp`, the first two hex
-    * chars, 256 partitions), and each batch's anti-join reads only the
-    * partitions for prefixes actually present in the batch — an `isin`
-    * partition predicate Spark prunes before opening any file. Per-batch
-    * state-scan cost is O(|batch prefix set| / 256 × state), not
-    * O(state); widen the prefix (4 chars → 65 536 partitions) when the
-    * corpus grows so a micro-batch keeps touching a strict subset.
-    * Replay idempotency is append-only-missing: the same pruned scan
-    * tells the batch which of its hashes a crashed attempt already
-    * landed, so a crash LOOP converges instead of growing the table.
+    * Scale notes: `chunk_hashes` is a range table on `batch_id` — each
+    * batch appends one dir bounded [bid, bid], and the store's tiered
+    * compaction keeps the live dirs near 64 plus 8 per level. The probe
+    * reads every dir below `bid`: O(state) rows in O(dirs) files. The
+    * 256-way hash-prefix layout it replaces read 1 − e^(−C/256) of the
+    * state for a batch of C distinct chunks (98 % at C = 1,000), so it
+    * pruned only small batches, and it wrote one file per touched prefix
+    * per batch. On the happy path the bracket's delete runs no Spark job
+    * (no live dir's bounds meet `bid`).
     *
     * State growth pricing: `chunk_hashes` holds EXACTLY one row per
     * distinct chunk ever kept — rows ≈ distinct chunks, ~(32-char md5 +
-    * long + int ≈ 50 B/row raw, ~25 B parquet-encoded) — growing linearly
+    * long ≈ 45 B/row raw, ~25 B parquet-encoded) — growing linearly
     * with distinct-chunk mass forever, which is inherent to exact dedup
     * (forgetting a hash re-admits its duplicates). `retentionBatches`
     * trades that for SLIDING-WINDOW semantics when a deployment accepts
-    * it: once per window the state table is pruned to the last N batches
-    * (one atomic partitioned rewrite, amortized O(state/N) per batch),
-    * after which a duplicate of a chunk older than the window reads as
-    * fresh — the documented semantic change, not a bug. None (default)
-    * keeps the unbounded exact behavior.
+    * it: once per window every batch older than the last N drops (a range
+    * delete: whole dirs leave the manifest, only a compacted dir
+    * straddling the cut is rewritten), after which a duplicate of a chunk
+    * older than the window reads as fresh — the documented semantic
+    * change, not a bug. None (default) keeps the unbounded exact
+    * behavior.
     */
   def processChunkBatch(store: graft.chain.TableStore, chunkTokens: Int,
-                        compactFiles: Int = 64,
                         retentionBatches: Option[Long] = None)
                        (batch: DataFrame, bid: Long): Unit = {
     import graft.operators.Dedup
-    val seenSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("h", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("batch_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("hp", org.apache.spark.sql.types.IntegerType)))
+    store.requireRanged("chunk_hashes")
     // a fresh checkpoint restarts batch ids at 0: running it against a
     // store that already holds later-batch state would hide the whole
     // accumulated history behind `batch_id < bid` and emit wrong counts
-    // for the entire catch-up — fail fast instead (limit-probed, bid=0
-    // only; same-bid rows are the legitimate crash-replay case)
-    if (bid == 0L) {
-      val stale = store.read("chunk_hashes", seenSchema)
-        .filter(col("batch_id") > 0L).limit(1).count()
-      require(stale == 0L,
+    // for the entire catch-up — fail fast instead (from the dir bounds,
+    // bid=0 only; same-bid rows are the legitimate crash-replay case)
+    if (bid == 0L)
+      require(!store.rangeDirs("chunk_hashes").exists(_._2 > 0L),
         "chunk_hashes holds later-batch state but the stream restarted at batch 0: " +
           "the checkpoint and the state store must be wiped together")
-    }
     val chunks = Dedup.chunkHashes(batch, "doc_id", "text", chunkTokens)
-      .withColumn("__hp", hashPrefix(col("__h")))
       .localCheckpoint(true) // consumed by both fresh and the doc totals
-    // the batch's prefix set: a bounded driver read (≤256 ints) that makes
-    // the state probe below prune to matching partitions only
-    val prefixes = chunks.select("__hp").distinct().collect().map(_.getInt(0)).toSeq
-    val state = seenState(store, seenSchema, prefixes)
-    val seen = state.filter(col("batch_id") < bid).select(col("h"))
+    val seen = store.readRange("chunk_hashes", "batch_id", Long.MinValue, bid - 1,
+      HashesSchema).select(col("h"))
     // checkpoint the anti-join's (small, O(batch)) result so the two
-    // consumers below don't run the pruned state scan twice
+    // consumers below don't run the state scan twice
     val fresh = chunks.join(seen, chunks("__h") === seen("h"), "left_anti")
       .localCheckpoint(true)
     // within-batch keep-first among store-fresh chunks (the d9 rule)
@@ -171,42 +159,32 @@ object StreamingText {
         (col("n_chunks") - coalesce(col("__uniq"), lit(0L))).as("dup_chunks"))
       .withColumn("dup_fraction",
         round(col("dup_chunks").cast("double") / col("n_chunks").cast("double"), 6))
-    store.deleteRange("chunk_dedup", "batch_id", bid, bid)
-    store.appendRange("chunk_dedup", counts, "batch_id", bid, bid)
-    // only store-fresh hashes append, and of those only the ones a crashed
-    // attempt at this SAME bid didn't already land (the pruned scan again):
-    // the state table stays O(distinct chunks) even under a crash LOOP on
-    // this batch (a plain append would re-add the batch's hashes once per
-    // replay — harmless to the anti-join, unbounded on disk)
-    val already = state.filter(col("batch_id") === bid).select(col("h"))
-    val toAppend = fresh.select(col("__h").as("h")).distinct()
-      .join(already, Seq("h"), "left_anti")
-      .withColumn("batch_id", lit(bid))
-      .withColumn("hp", hashPrefix(col("h")))
-    store.appendPartitioned("chunk_hashes", toAppend, "hp")
-    // bounded file counts per hash-prefix partition: threshold-compact
-    // exactly the partitions this batch touched (rows and batch_id replay
-    // tags unchanged — see TableStore.compactPartitions)
-    store.compactPartitions("chunk_hashes", "hp", Some(prefixes), compactFiles)
-    // sliding-window retention (see the scaladoc pricing note): prune once
-    // per window — idempotent under replay (same keepFrom → same result)
+    graft.chain.Par.run(Seq(
+      () => {
+        store.deleteRange("chunk_dedup", "batch_id", bid, bid)
+        store.appendRange("chunk_dedup", counts, "batch_id", bid, bid)
+      },
+      () => {
+        // the bracket keeps the state table at one row per distinct chunk
+        // even under a crash LOOP on this batch
+        store.deleteRange("chunk_hashes", "batch_id", bid, bid)
+        store.appendRange("chunk_hashes",
+          fresh.select(col("__h").as("h")).distinct().withColumn("batch_id", lit(bid)),
+          "batch_id", bid, bid)
+      }))
+    // sliding-window retention (see the scaladoc pricing note): once per
+    // window — idempotent under replay (the same cut drops the same rows)
     retentionBatches.foreach { r =>
       if (r > 0 && bid > 0 && bid % r == 0)
-        store.retainFrom("chunk_hashes", "batch_id", bid - r, "hp")
+        store.deleteRange("chunk_hashes", "batch_id", Long.MinValue, bid - r - 1)
     }
   }
 
-  /** First two hex chars of an md5 hash as the partition category 0..255. */
-  private def hashPrefix(h: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(h, 1, 2), 16, 10).cast("int")
-
-  /** The pruned state probe: only the partitions for `prefixes` are read —
-    * factored out so the plan contract can assert the pruning directly.
+  /** `chunk_hashes`: one row per distinct kept chunk hash, tagged with the
+    * batch that first kept it.
     */
-  private[graft] def seenState(store: graft.chain.TableStore,
-                               schema: org.apache.spark.sql.types.StructType,
-                               prefixes: Seq[Int]): DataFrame =
-    store.read("chunk_hashes", schema).filter(col("hp").isin(prefixes: _*))
+  val HashesSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL("h STRING, batch_id BIGINT")
 
   /** The [[processChunkBatch]] processor wired as a streaming query. */
   def chunkDedupStream(docs: Dataset[Doc], store: graft.chain.TableStore,

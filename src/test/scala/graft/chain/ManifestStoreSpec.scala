@@ -287,19 +287,22 @@ class ManifestStoreSpec extends SparkSpec {
     val store = fresh()
     (0L to 4L).foreach { b =>
       store.appendPartitioned("s",
-        Seq((b, (b % 2).toInt, b * 10)).toDF("batch_id", "sp", "v"), "sp")
+        Seq((b, (b % 2).toInt, b * 10)).toDF("batch_id", "sp", "v"), "sp",
+        Some(("batch_id", b, b)))
     }
-    store.retainFrom("s", "batch_id", 3L, "sp")
+    val before = ls(store, "s").filter(_.startsWith(".d-")).toSet
+    store.deleteRange("s", "batch_id", Long.MinValue, 2L)
     val after = store.readOr("s", null)
     assert(after.select("batch_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L),
-      "rows below keepFrom must be pruned")
-    // the partition column survives as data and the pruned layout is the
-    // single staged generation — the five per-batch staging dirs are GC'd
+      "rows below the cut must be pruned")
+    // the partition column survives as data; the dirs below the cut left
+    // the manifest whole (no rewrite) and were GC'd with it
     assert(after.schema.fieldNames.contains("sp"))
-    val dataDirs = ls(store, "s").filter(_.startsWith(".d-"))
-    assert(dataDirs.length == 1, s"superseded staging dirs must be GC'd, saw: $dataDirs")
-    // idempotent: a replayed prune recomputes the identical result
-    store.retainFrom("s", "batch_id", 3L, "sp")
+    val dataDirs = ls(store, "s").filter(_.startsWith(".d-")).toSet
+    assert(dataDirs.size == 2 && dataDirs.subsetOf(before),
+      s"the dropped batches' dirs must be GC'd, nothing rewritten, saw: $dataDirs")
+    // idempotent: a replayed prune drops nothing more
+    store.deleteRange("s", "batch_id", Long.MinValue, 2L)
     assert(store.readOr("s", null).count() == 2L)
   }
 

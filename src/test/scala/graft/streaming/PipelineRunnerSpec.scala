@@ -159,6 +159,18 @@ class PipelineRunnerSpec extends SparkSpec {
       val body = scala.io.Source.fromURL(s"http://127.0.0.1:$port/metrics").mkString
       assert(body.contains("graft_pipeline_batches") &&
         body.contains("graft_pipeline_batch_seconds_count"))
+      // one face-seconds series per configured face, counted per batch
+      val batches = body.linesIterator.collectFirst {
+        case l if l.startsWith("graft_pipeline_batches ") => l.split(' ')(1)
+      }
+      assert(body.linesIterator.count(_ == "# TYPE graft_pipeline_face_seconds histogram") == 1)
+      cfg.faces.foreach { f =>
+        assert(body.linesIterator.map(_.split(' ')).collectFirst {
+          case Array(k, v) if k == s"""graft_pipeline_face_seconds_count{face="$f"}""" => v
+        } == batches, s"face $f's histogram must count every batch")
+      }
+      assert(body.linesIterator.count(_.startsWith("graft_pipeline_face_seconds_count")) ==
+        cfg.faces.size)
       // and every document face's category state tables' live file counts
       Seq("chunk_hashes", "lsh_sigs", "lsh_postings").foreach { t =>
         val files = store.fileCounts(t).values.sum

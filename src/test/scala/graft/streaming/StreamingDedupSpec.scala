@@ -31,6 +31,25 @@ class StreamingDedupSpec extends SparkSpec {
           Option(r.getAs[java.lang.Long]("dup_of")).map(_.toLong))))
       .toMap
 
+  /** The current manifest's bounded dirs of `table`: rel dir → [lo, hi]. */
+  private def manifestBounds(store: TableStore, table: String): Map[String, (Long, Long)] = {
+    val tdir = java.nio.file.Paths.get(store.root, table)
+    val v = Files.readString(tdir.resolve(".gen")).trim.split("\\s+")(0)
+    Files.readString(tdir.resolve(s".manifest.$v")).linesIterator.map(_.split('\t'))
+      .collect { case Array(_, rel, lo, hi) => rel -> ((lo.toLong, hi.toLong)) }.toMap
+  }
+
+  /** The rel dirs (under the table dir) of every file `df`'s one scan reads. */
+  private def scannedDirs(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val scans = df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1, s"one scan expected:\n${df.queryExecution.executedPlan}")
+    scans.head.inputRDD.partitions.toSeq.flatMap {
+      case p: org.apache.spark.sql.execution.datasources.FilePartition => p.files.map(_.toPath)
+    }.map(_.getParent.getName).distinct
+  }
+
   test("near-dups resolve across batches against canonicals only; replay converges") {
     val store = mkStore()
     def proc(bid: Long, docs: Seq[(Long, String)]): Unit =
@@ -182,15 +201,17 @@ class StreamingDedupSpec extends SparkSpec {
 
     // simulate batch 1 crashing AFTER the lsh_sigs append and BEFORE the
     // lsh_postings append: land exactly the sigs rows the real batch
-    // writes for the new canonical (doc 11), nothing else
+    // writes for the new canonical (doc 11), bounded [1, 1] as its
+    // append bounds them, nothing else
     val sigs11 = graft.operators.Dedup.minHashSignatureArray(
         Seq(11L -> baseE).toDF("doc_id", "text"), "doc_id", "text", 3, 64)
       .select(col("doc_id"), col("sig"), lit(1L).as("batch_id"),
         pmod(col("doc_id"), lit(256L)).cast("int").as("sp"))
-    store.appendPartitioned(StreamingDedup.SigsTable, sigs11, "sp")
+    store.appendPartitioned(StreamingDedup.SigsTable, sigs11, "sp", Some(("batch_id", 1L, 1L)))
 
-    // replay the whole batch: the postings append must be gated on the
-    // POSTINGS table (empty for doc 11), not on the sigs table
+    // replay the whole batch: each table's own bracket must redo it —
+    // the sigs bracket replaces the landed rows, and the postings one
+    // lands what the crashed attempt lost
     proc(1L, Seq(11L -> baseE))
     val sigCount = store.readOr(StreamingDedup.SigsTable, null)
       .filter(col("doc_id") === 11L).count()
@@ -210,28 +231,40 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("the index probe prunes to the batch's band-hash prefix partitions") {
     val store = mkStore()
-    StreamingDedup.processLshBatch(store)(
-      Seq(1L -> baseA, 2L -> baseC).toDF("doc_id", "text"), 0L)
-    // the state table is partitioned by bp: a probe carrying an isin(bp)
-    // predicate must plan as ONE scan with a PartitionFilter, pruned
-    // before file opens
-    val probed = store.fileCounts(StreamingDedup.PostingsTable).keys
-      .map(_.stripPrefix("bp=").toInt).toSeq.sorted.take(3).toSet
-    val probe = store.read(StreamingDedup.PostingsTable, StreamingDedup.postingsSchema)
-      .filter(col("bp").isin(probed.toSeq.map(Integer.valueOf): _*))
-    val plan = probe.queryExecution.executedPlan
-    val scans = plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-    assert(scans.size == 1, s"one scan over every live key expected:\n$plan")
-    assert(plan.toString.contains("PartitionFilters") && plan.toString.contains("bp"),
-      s"postings scan must carry a bp partition filter:\n$plan")
-    // the files the scan reads lie only under the probed keys' dirs
-    val read = scans.head.inputRDD.partitions.toSeq.flatMap {
-      case p: org.apache.spark.sql.execution.datasources.FilePartition => p.files.map(_.toPath)
-    }
-    assert(read.nonEmpty && read.forall(f => probed.map(b => s"bp=$b").contains(f.getParent.getName)),
-      s"scan read outside the probed keys: $read")
-    assert(probe.count() == store.readOr(StreamingDedup.PostingsTable, null).collect()
-      .count(r => probed(r.getAs[Int]("bp"))))
+    // two fresh canonicals per batch: every batch lands postings
+    (0L to 2L).foreach(b => StreamingDedup.processLshBatch(store)(
+      (1L to 2L).map(i => (10 * b + i) -> (0 until 60).map(w => s"w${b}_${i}_$w").mkString(" "))
+        .toDF("doc_id", "text"), b))
+    // the probe batch 2 makes (and a replay of it): only the dirs bounded
+    // below 2 may be opened, so a crashed attempt's own rows are never read
+    val bid = 2L
+    val dirs = manifestBounds(store, StreamingDedup.PostingsTable)
+    assert(dirs.values.toSet == Set((0L, 0L), (1L, 1L), (2L, 2L)), s"one dir per batch: $dirs")
+    val probe = store.readRange(StreamingDedup.PostingsTable, "batch_id", Long.MinValue, bid - 1,
+      StreamingDedup.postingsSchema)
+    val read = scannedDirs(probe)
+    assert(read.nonEmpty && read.forall(d => dirs(d)._2 < bid),
+      s"the probe read a dir not bounded below $bid: ${read.map(dirs)}")
+    assert(probe.count() == store.readOr(StreamingDedup.PostingsTable, null)
+      .filter(col("batch_id") < bid).count())
+  }
+
+  test("an lsh_postings table in the band-prefix layout fails the first batch loudly") {
+    val store = mkStore()
+    store.appendPartitioned(StreamingDedup.PostingsTable,
+      Seq((0, 5L, 1L, 0L, 5)).toDF("band", "band_hash", "doc_id", "batch_id", "bp"), "bp")
+    val ex = intercept[IllegalStateException](StreamingDedup.processLshBatch(store)(
+      Seq(2L -> baseA).toDF("doc_id", "text"), 1L))
+    assert(ex.getMessage.contains("'lsh_postings'") && ex.getMessage.contains("bp="), ex.getMessage)
+  }
+
+  test("an lsh_sigs dir without batch bounds fails the first batch loudly") {
+    val store = mkStore()
+    store.appendPartitioned(StreamingDedup.SigsTable,
+      Seq((1L, Array(1L), 0L, 1)).toDF("doc_id", "sig", "batch_id", "sp"), "sp")
+    val ex = intercept[IllegalStateException](StreamingDedup.processLshBatch(store)(
+      Seq(2L -> baseA).toDF("doc_id", "text"), 1L))
+    assert(ex.getMessage.contains("'lsh_sigs'") && ex.getMessage.contains("bounds"), ex.getMessage)
   }
 
   test("50 batches keep bounded file counts per partition; verdicts stay correct",
@@ -268,12 +301,15 @@ class StreamingDedupSpec extends SparkSpec {
     }
     // the index still holds exactly the canonicals (one per batch)
     assert(store.readOr(StreamingDedup.SigsTable, null).count() == 50L)
+    // bounded: every lsh_sigs key holds at most threshold+2 live data
+    // files (grows ~1/batch, compacts back to 1 whenever the post-append
+    // count exceeds the threshold), and lsh_postings holds at most
+    // 64 + 8 dirs per compaction level (three levels below 8^3 batches)
+    val (key, worst) = store.fileCounts(StreamingDedup.SigsTable).maxBy(_._2)
+    assert(worst <= threshold + 2, s"lsh_sigs partition $key grew to $worst files")
+    val postingDirs = store.rangeDirs(StreamingDedup.PostingsTable).size
+    assert(postingDirs <= 64 + 8 * 3, s"lsh_postings grew to $postingDirs dirs")
     def audit(table: String): Unit = {
-      // bounded: every partition key holds at most threshold+2 live data
-      // files (grows ~1/batch, compacts back to 1 whenever the
-      // post-append count exceeds the threshold)
-      val (key, worst) = store.fileCounts(table).maxBy(_._2)
-      assert(worst <= threshold + 2, s"$table partition $key grew to $worst files")
       val root = java.nio.file.Paths.get(store.root, table)
       val names = Files.list(root).iterator().asScala
         .map(_.getFileName.toString).toSeq

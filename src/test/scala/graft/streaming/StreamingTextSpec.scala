@@ -149,28 +149,74 @@ class StreamingTextSpec extends SparkSpec {
   test("chunk-dedup state probe prunes to the batch's hash-prefix partitions") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
     val dir = java.nio.file.Files.createTempDirectory("graft-chunkprune").toString
     val store = graft.chain.TableStore(spark, dir)
     val proc = StreamingText.processChunkBatch(store, chunkTokens = 1) _
-    // 64 one-token docs → 64 distinct chunk hashes spread over many prefixes
-    proc((1L to 64L).map(i => (i, s"tok$i")).toDF("doc_id", "text"), 0L)
-    val all = store.readOr("chunk_hashes", null)
-    val nPrefixes = all.select("hp").distinct().count()
-    assert(nPrefixes > 10, s"md5 prefixes should spread, got $nPrefixes")
-    val probe = all.select("hp").head().getInt(0)
-    // AQE wraps the tree in an adaptive leaf; disable it so collect() sees
-    // the scan node (same pattern as PlanContractSpec)
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val pruned = StreamingText.seenState(store, null, Seq(probe))
-      val scans = pruned.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f
-      }
-      assert(scans.nonEmpty, "expected a parquet scan in the state probe")
-      val parts = scans.map(_.selectedPartitions.partitionCount).sum[Int]
-      assert(parts == 1,
-        s"a one-prefix probe must read exactly 1 of $nPrefixes partitions, read $parts")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    // three batches of 16 fresh one-token docs: one chunk_hashes dir each
+    (0L to 2L).foreach(b =>
+      proc((1L to 16L).map(i => (16 * b + i, s"tok${b}_$i")).toDF("doc_id", "text"), b))
+    assert(store.rangeDirs("chunk_hashes").map(d => (d._1, d._2)) ==
+      Seq((0L, 0L), (1L, 1L), (2L, 2L)))
+    // the probe batch 2 makes (and a replay of it): only the dirs bounded
+    // below 2 may be opened, so a crashed attempt's own rows are never read
+    val bid = 2L
+    val tdir = java.nio.file.Paths.get(dir, "chunk_hashes")
+    val v = java.nio.file.Files.readString(tdir.resolve(".gen")).trim.split("\\s+")(0)
+    val bounds = java.nio.file.Files.readString(tdir.resolve(s".manifest.$v")).linesIterator
+      .map(_.split('\t')).collect { case Array(_, rel, lo, hi) => rel -> ((lo.toLong, hi.toLong)) }
+      .toMap
+    val probe = store.readRange("chunk_hashes", "batch_id", Long.MinValue, bid - 1,
+      StreamingText.HashesSchema)
+    val scans = probe.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1, "expected one parquet scan in the state probe")
+    val read = scans.head.inputRDD.partitions.toSeq.flatMap {
+      case p: FilePartition => p.files.map(_.toPath.getParent.getName)
+    }.distinct
+    assert(read.nonEmpty && read.forall(d => bounds(d)._2 < bid),
+      s"the probe read a dir not bounded below $bid: ${read.map(bounds)}")
+    assert(probe.count() == 32L)
+    assert(probe.count() == store.readOr("chunk_hashes", null)
+      .filter(col("batch_id") < bid).count())
+  }
+
+  test("a crash between the chunk_dedup and chunk_hashes commits replays to the same state") {
+    import org.apache.spark.sql.functions.col
+    def fresh() = graft.chain.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-chunkcrash").toString)
+    val b0 = Seq((1L, "a b c d"), (2L, "a b x y")).toDF("doc_id", "text")
+    val b1 = Seq((3L, "c d x y q r"), (4L, "q r s t")).toDF("doc_id", "text")
+    def dedup(s: graft.chain.TableStore) = s.readOr("chunk_dedup", null).collect().toSet
+    def hashes(s: graft.chain.TableStore) = s.readOr("chunk_hashes", null)
+      .select("h", "batch_id").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // the uncrashed run
+    val ref = fresh()
+    Seq(b0 -> 0L, b1 -> 1L).foreach { case (b, bid) =>
+      StreamingText.processChunkBatch(ref, chunkTokens = 2)(b, bid)
+    }
+    // batch 1's commits, each of which a crash can leave without the other
+    val landed = Seq(
+      "chunk_hashes" -> ref.readOr("chunk_hashes", null).filter(col("batch_id") === 1L),
+      "chunk_dedup" -> ref.readOr("chunk_dedup", null).filter(col("batch_id") === 1L))
+    landed.foreach { case (table, rows) =>
+      val s = fresh()
+      StreamingText.processChunkBatch(s, chunkTokens = 2)(b0, 0L)
+      s.appendRange(table, rows, "batch_id", 1L, 1L)
+      StreamingText.processChunkBatch(s, chunkTokens = 2)(b1, 1L)
+      assert(dedup(s) == dedup(ref), s"$table landed alone: replayed chunk_dedup differs")
+      val hs = hashes(s)
+      assert(hs.map(_._1).distinct.size == hs.size, s"$table landed alone: a hash row repeats")
+      assert(hs.sorted == hashes(ref).sorted, s"$table landed alone: chunk_hashes differ")
+    }
+  }
+
+  test("a chunk_hashes table in the hash-prefix layout fails the first batch loudly") {
+    val store = graft.chain.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-chunkold").toString)
+    store.appendPartitioned("chunk_hashes",
+      Seq(("0a1b", 0L, 10)).toDF("h", "batch_id", "hp"), "hp")
+    val ex = intercept[IllegalStateException](StreamingText.processChunkBatch(
+      store, chunkTokens = 2)(Seq((1L, "a b")).toDF("doc_id", "text"), 1L))
+    assert(ex.getMessage.contains("'chunk_hashes'") && ex.getMessage.contains("hp="), ex.getMessage)
   }
 }
