@@ -107,7 +107,7 @@ object PipelineRunner {
     */
   val FaceNames: Seq[String] = BatchFaceNames ++ Seq("sessions", "ivfIndex", "retrain", "release")
 
-  /** The dedup state tables of each face that keeps any: their live
+  /** The index and state tables of each face that keeps any: their live
     * file counts are exported after every batch.
     */
   private val StateTables: Map[String, Seq[String]] = Map(
@@ -326,7 +326,7 @@ object PipelineRunner {
     val batchSeconds = new LatencyHistogram
     /** Seconds per document face per batch, observed with `batches`. */
     val faceSeconds = new scala.collection.concurrent.TrieMap[String, LatencyHistogram]
-    /** Live data files per category state table, as of its face's last batch. */
+    /** Live data files per state table, as of its face's last batch. */
     val stateFiles = new scala.collection.concurrent.TrieMap[String, Long]
 
     /** Set `stateFiles` for `tables` from the store's file counts, which
