@@ -1,614 +1,114 @@
 package graft
-import java.nio.file.{Files, Paths}
 
-/** Bench harness: one JSON line `{"metric":"total","value":N,...}` on stdout
-  * (and mirrored to SPARK_GRAFT_BENCH_OUT if set, default bench_out.json).
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Executors, FutureTask, TimeUnit, TimeoutException}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Dev-only timer of the query inventory:
   *
-  * Measurement rules:
-  *   - each query warms up at sf0.001 IMMEDIATELY before its timed run
-  *     (not one bulk pass): Spark's generated-class cache is bounded, so a
-  *     bulk warmup of 60+ queries evicts the early entries before they are
-  *     timed and the measurement silently includes multi-second Janino
-  *     compiles instead of execution;
-  *   - timing materializes the FULL physical plan via
-  *     `queryExecution.toRdd.count()` — `.count()` on the DataFrame would
-  *     let Catalyst prune every unreferenced projection and measure a
-  *     different (smaller) plan than the one users run;
-  *   - each query is timed `TRIALS` times and the MEDIAN is reported:
-  *     round 6 ran on byte-identical code and single-run times still
-  *     swung 3-9× both directions (GC, page cache, thread scheduling), so
-  *     a single sample cannot promote or demote a plan. The median of 3
-  *     discards one outlier in either direction.
+  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.Bench"
+  *
+  * For each query, in name order:
+  *   - warm its codegen on the `sf0.001` corpus beside the sf dir
+  *     ([[Profile.warmDir]]) right before timing it: Spark's
+  *     generated-class cache is bounded, so one bulk warm pass would evict
+  *     the early entries and their timings would include Janino compiles;
+  *   - time `trials` materializations of the full physical plan
+  *     (`queryExecution.toRdd.count()`; `.count()` on the DataFrame would
+  *     let Catalyst prune unreferenced projections and time a smaller plan);
+  *   - report the median of the trials.
+  *
+  * Each materialization runs under a watchdog of [[QueryTimeoutSec]]: a
+  * query that throws or runs past it records -1, its job group is
+  * cancelled, and the remaining queries are still measured.
+  *
+  * Stdout gets one line,
+  * `{"metric":"total","value":…,"unit":"sec","queries":{…},"sf":…}`:
+  * each query's median in seconds and their sum (failed queries left out
+  * of the sum). [[OutFile]] gets the same object plus `cpus` and each
+  * query's `[min, max]` over its trials under `spread`. Per-query jobs,
+  * stages and tasks are [[Profile]]'s to report.
+  *
+  * Knobs: `SPARK_GRAFT_SF_DIR` (default `/root/testdata/sf0.1`),
+  * `SPARK_GRAFT_BENCH_ONLY` (comma-separated query subset),
+  * `SPARK_GRAFT_BENCH_TRIALS` (default 3).
   */
 object Bench {
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Per materialization: one run hung in AQE's stage-event wait with the
+    * cluster idle, so the bound only has to catch hangs, not slow work.
+    */
+  val QueryTimeoutSec = 180L
+  val OutFile = "bench_out.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.cores.toString
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    val trials = sys.env.get("SPARK_GRAFT_BENCH_TRIALS").map(_.toInt).getOrElse(3)
+    val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     val spark = GraftSession.local("graft-bench")
+    try {
+      val (line, fileLine) = run(spark, sfDir, queries, trials)
+      Files.writeString(Paths.get(OutFile), fileLine + "\n")
+      println(line)
+    } finally spark.stop()
+  }
 
-    // Per-query WATCHDOG: one bench run hung forever in
-    // AdaptiveSparkPlanExec.withFinalPlanUpdate (main parked on the stage
-    // event queue with the whole cluster idle — a lost-event race inside
-    // AQE, not slow work; jstack-verified). One flaky query must not turn
-    // the round's entire BENCH artifact into "parsed: null", so each
-    // materialization runs on a daemon thread with a generous timeout
-    // (~40× the slowest query's median) and a job-group cancel on expiry;
-    // a timed-out query records -1 like any other failure and the
-    // remaining inventory still measures.
-    val watchdogPool = java.util.concurrent.Executors.newCachedThreadPool(
-      (r: Runnable) => { val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t })
-    val queryTimeoutSec =
-      sys.env.get("SPARK_GRAFT_BENCH_QUERY_TIMEOUT").map(_.toLong).getOrElse(180L)
-    def materialize(name: String, dir: String): Long = {
+  /** Time `queries` on `sfDir`; returns the stdout line and the
+    * [[OutFile]] line.
+    */
+  def run(spark: SparkSession, sfDir: String, queries: Map[String, Query],
+          trials: Int): (String, String) = {
+    val warmDir = Profile.warmDir(sfDir)
+    val pool = Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t
+    }
+    // seconds for one materialization, or -1 if it threw or timed out
+    def materialize(name: String, dir: String): Double = {
       val group = s"bench-$name"
-      val task = new java.util.concurrent.FutureTask[Long](() =>
-        try {
-          // job group is thread-local: set it in the thread that SUBMITS
-          spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-          SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-        } catch { case _: Throwable => -1L })
-      watchdogPool.execute(task)
-      try task.get(queryTimeoutSec, java.util.concurrent.TimeUnit.SECONDS)
+      val t0 = System.nanoTime()
+      val task = new FutureTask[Unit](() => {
+        // the job group is thread-local: set it on the submitting thread
+        spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
+        queries(name)(spark, dir).queryExecution.toRdd.count(): Unit
+      })
+      pool.execute(task)
+      try { task.get(QueryTimeoutSec, TimeUnit.SECONDS); (System.nanoTime() - t0) / 1e9 }
       catch {
-        case _: java.util.concurrent.TimeoutException =>
-          Console.err.println(s"[bench] watchdog: $name exceeded ${queryTimeoutSec}s, cancelling")
+        case _: TimeoutException =>
+          Console.err.println(s"[bench] watchdog: $name exceeded ${QueryTimeoutSec}s, cancelling")
           spark.sparkContext.cancelJobGroup(group)
           task.cancel(true)
-          -1L
-        case _: Throwable => -1L
+          -1.0
+        case e: Exception =>
+          Console.err.println(s"[bench] $name failed: ${Option(e.getCause).getOrElse(e)}")
+          -1.0
       }
     }
 
-    // local-iteration filter (the Verify convention): SPARK_GRAFT_BENCH_ONLY
-    // benches a subset; the driver never sets it, so round artifacts
-    // always carry the full inventory
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val names = SparkEntry.queries.keys.toSeq
-      .filter(n => only.forall(_.contains(n))).sorted
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-
-    // CHILD-JVM NO-OP FLOOR (requiesce children only — the parent sets
-    // SPARK_GRAFT_REQUIESCE_CHILD=1; a developer's manual BENCH_ONLY
-    // subset run must not pay a ~3 s probe it doesn't need): the cold
-    // cost a fresh JVM pays on its FIRST real Spark materialization
-    // (Janino codegen, interpreter-mode Spark internals, cold page
-    // cache), measured as one UN-WARMED probe job before anything else
-    // runs. Round-13's requiesced entries for sub-3-s queries read WORSE
-    // than their warm medians because this floor dominated them; the
-    // parent now keeps a child reading only for queries whose warm
-    // median exceeds 5× this floor, and the floor itself is reported in
-    // both artifacts.
-    val noopFloor: Option[Double] = if (sys.env.get("SPARK_GRAFT_REQUIESCE_CHILD")
-        .contains("1")) Some {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 + 1)")
-        .queryExecution.toRdd.count()
-      (System.nanoTime() - t0) / 1e9
-    } else None
-
-    // one throwaway query to absorb session/VM startup
-    names.headOption.foreach(materialize(_, warmDir))
-
-    // CONTENTION CALIBRATION: a fixed single-thread integer loop (pure
-    // register work — no allocation, no I/O, immune to page cache) timed
-    // before and after the query sweep. On a quiesced box both samples sit
-    // at the loop's natural floor; a contended box (CPU-starved driver,
-    // noisy neighbors) inflates them roughly in proportion to the steal.
-    // Emitted in the STDOUT line so every BENCH_rN.json carries its own
-    // environment evidence — a total that moved together with calib is a
-    // degraded box, not a plan regression (see the round-8/9/10 notes
-    // above, where exactly this ambiguity cost a round each time).
-    def calibBody(): Long = {
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < 200000000) {
-        x = x * 6364136223846793005L + 1442695040888963407L
-        x ^= x >>> 33
-        i += 1
+    val names = queries.keys.toSeq.sorted
+    val results = try {
+      names.headOption.foreach(materialize(_, warmDir)) // session and JVM warm
+      names.map { name =>
+        materialize(name, warmDir)
+        // a failed trial ends the query: its later trials would only
+        // fail again, or each wait out the watchdog
+        val times = Iterator.fill(trials)(materialize(name, sfDir)).takeWhile(_ >= 0).toVector
+        name -> (if (times.length < trials) Vector(-1.0) else times.sorted)
       }
-      x
-    }
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      val x = calibBody()
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (x == 42L) Console.err.println("") // defeat dead-code elimination
-      dt
-    }
-    // PARALLEL calibration: the same fixed loop on `cpus` threads at once,
-    // wall-clock until ALL finish. The single-thread pair can only see
-    // DRIVER-CORE steal; a box whose aggregate throughput shifted (fewer
-    // effective cores, thermal caps, a co-tenant saturating the socket)
-    // calibrates clean single-threaded while every 32-thread Spark stage
-    // runs slower — exactly the round-15 sf1 adjudication gap, where the
-    // judge had to infer a box-throughput shift from 124 uniform query
-    // ratios because the artifact carried no multi-thread evidence. On a
-    // quiet box with ≥cpus cores this reads ≈ the single-thread time;
-    // contention inflates it in proportion to the lost throughput.
-    def calibrateParallel(): Double = {
-      val sink = new java.util.concurrent.atomic.AtomicLong
-      val ts = (0 until cpus.toInt).map(_ => new Thread(() => { sink.addAndGet(calibBody()): Unit }))
-      val t0 = System.nanoTime()
-      ts.foreach(_.start()); ts.foreach(_.join())
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (sink.get == 42L) Console.err.println("") // defeat dead-code elimination
-      dt
-    }
-    calibrate() // JIT warm
-    val calibBefore = calibrate()
-    val calibpBefore = calibrateParallel()
+    } finally pool.shutdownNow()
 
-    val trials = sys.env.get("SPARK_GRAFT_BENCH_TRIALS").map(_.toInt).getOrElse(3)
-    // Round-7 flagged m1/m2 medians jumping 4-5× on untouched single-stage
-    // column-projection plans. Round-8 measurement: both queries returned to
-    // ~0.2s and two consecutive full runs agreed within 20% — the jump did
-    // not reproduce on identical code, consistent with harness-level noise
-    // (page-cache displacement by the adjacent corpus-heavy s7/s8 runs, or
-    // a GC pause absorbing all 3 trials of a sub-second query) rather than
-    // a plan change. The per-query [min,max] spread recorded below is the
-    // attribution tool for any future such jump: a real regression moves
-    // the MIN; noise widens the spread around an unchanged floor.
-    // Round-8's driver run then showed the same syndrome on p10_range_scan
-    // (min 0.32 → 1.04 on untouched code); round-9 re-measurement of the
-    // identical commit: p10 min back at 0.22 AND the whole-inventory total
-    // at 35s vs the driver run's 61s — the driver's bench executed in a
-    // degraded environment (it runs immediately after a 10-minute sbt test
-    // of 30+ Spark sessions; page cache and CPU are not quiesced). A
-    // machine-level slowdown shows as the TOTAL moving with the outlier;
-    // a real plan regression moves one query's min while the rest hold.
-    // Round-9's driver run flagged d9/d10 floors (min 0.72→4.46, 2.18→
-    // 10.84) on the regenerated corpus. Round-10 stage-level re-measurement
-    // (quiesced machine, fresh plan per trial so shuffle-output
-    // reuse can't flatter): d10 floor 2.05s — UNCHANGED vs r8's committed
-    // 2.18 — and d9 floor 1.10s (1.5×, the corpus's chunk population grew:
-    // 19218 chunk rows / 1762 dup-mass at sf0.1). Connected components
-    // takes the driver union-find path on this corpus (15,982 symmetrized
-    // edges, 0 propagation rounds; telemetry in the "cc" key below), so
-    // label-propagation round growth is ruled out as the driver of any
-    // d6/d10/d11 movement. The r9 lift co-occurred with 1.6-2.7× drift on
-    // six untouched scalar-function queries — the machine-level syndrome
-    // above, not a plan regression.
-    val results = names.map { name =>
-      materialize(name, warmDir) // warm THIS query's codegen, then time it
-      val times = (0 until trials).map { _ =>
-        val t0 = System.nanoTime()
-        materialize(name, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      name -> times
-    }
-    // Centisecond precision keeps the line SHORT (~1.7 KB for 75+ queries):
-    // the driver parses the JSON out of a bounded ~2 KB tail of the sbt
-    // output, and full-precision doubles pushed the line past that window —
-    // the whole bench then graded as unparseable ("parsed": null). The sf
-    // field is likewise the basename, not the full path.
-    // trailing-zero trim ("0.30"→"0.3", "1.00"→"1.0") buys ~50 bytes of
-    // margin under the window now that the inventory exceeds 80 queries
-    def fmt(decimals: Int)(v: Double): String = {
-      val s = s"%.${decimals}f".formatLocal(java.util.Locale.ROOT, v)
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
-    }
-    val calibAfter = calibrate()
-    val calibpAfter = calibrateParallel()
-    val sfTag = Paths.get(sfDir).getFileName.toString
-
-    // PRIOR-ARTIFACT baseline: the last committed bench of the SAME sf —
-    // bench_out.json (full-precision file artifact, committed each round)
-    // first, then the highest BENCH_r*.json (whose wrapper embeds the
-    // stdout line with escaped quotes — unescaped before parsing). Round
-    // 15's blind spot: the degraded-run flag set was wide-spread ∪ top-5,
-    // so a query CONSISTENTLY slow on a degraded box (tight spread, not
-    // top-5) sailed into the committed artifact (d5 8.1 s vs 0.37 s clean,
-    // p12 4.0 vs 1.3, s2 2.4 vs 0.42). The in-repo prior is the reference
-    // those phantoms are visible against.
-    val priorTxt: Option[String] = {
-      val names = sys.env.get("SPARK_GRAFT_BENCH_PRIOR").toSeq ++
-        Seq("bench_out.json") ++
-        Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-          .map(_.getName).filter(_.matches("BENCH_r\\d+\\.json"))
-          // numeric round order, not lexicographic: "BENCH_r9" would
-          // outrank "BENCH_r16" under a string sort once rounds pass 9
-          // of a zero-padded era (advisor note, round 16)
-          .sortBy(n => "\\d+".r.findFirstIn(n).fold(0)(_.toInt)).reverse.toSeq ++
-        Seq("BENCH_SF1.json") // the sf1 runs' prior (sf-tag-matched below)
-      // a prior is comparable only at the same sf AND (when it records
-      // one) the same thread count: a local[32] run graded against
-      // local[4] medians would flag half the inventory as "improved" and
-      // nothing as regressed — or vice versa. Artifacts that predate the
-      // cpus key are accepted (the per-round sf conventions are stable).
-      def cpusOk(t: String): Boolean =
-        """"cpus":\s*"?(\d+)""".r.findFirstMatchIn(t).forall(_.group(1) == cpus)
-      names.iterator.flatMap { p =>
-        try {
-          val t = Files.readString(Paths.get(p)).replace("\\\"", "\"")
-          if (t.contains(s""""sf":"$sfTag"""") && cpusOk(t)) Some(t) else None
-        } catch { case _: Throwable => None }
-      }.nextOption()
-    }
-    val priorMedians: Map[String, Double] = priorTxt.flatMap { t =>
-      """"queries":\{([^}]*)\}""".r.findFirstMatchIn(t).map(_.group(1))
-    }.map { qm =>
-      """"([A-Za-z0-9_]+)":([0-9.eE+-]+)""".r.findAllMatchIn(qm)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }.getOrElse(Map.empty)
-    def priorCalibMin(key: String): Option[Double] = priorTxt.flatMap { t =>
-      ("\"" + key + "\":\\[([0-9.]+),([0-9.]+)\\]").r.findFirstMatchIn(t)
-        .map(m => math.min(m.group(1).toDouble, m.group(2).toDouble))
-    }
-
-    // IN-PROCESS SELF-CORRECTION: the child-JVM requiesce below can never
-    // fire at sf0.1 — its 5×noop-floor keep-bar (~12.5 s) sits above every
-    // sf0.1 median — so at the driver's own scale factor a contended run
-    // used to commit uncorrected (round 14: a14 6.6 s in the artifact vs
-    // 1.5 s on a quiet box; calib halves [0.64, 0.42] carried the evidence
-    // but nothing acted on it). Re-measure triggers, each a distinct
-    // degradation signature the committed artifacts have actually shown:
-    //   - the two single-thread calibration halves disagree by >1.2×
-    //     (intermittent driver-core steal);
-    //   - any query's relative trial spread exceeded 2 (burst noise);
-    //   - either calibration pair sits >1.5× ABOVE the prior committed
-    //     artifact's (consistent degradation: both halves agree because
-    //     the box was slow the WHOLE run — invisible to drift/spread);
-    //   - any query's warm median exceeds 1.5× its prior committed value
-    //     (+0.3 s absolute slack so sub-second jitter doesn't churn) —
-    //     those queries re-measure regardless of run-level evidence, so a
-    //     tight-spread phantom can never reach a committed artifact
-    //     unexamined (the round-15 d5/p12/s2 class).
-    // Flagged queries — prior-regressed ∪ (on run-level degradation:
-    // wide-spread ∪ top-5 by median) — re-measure IN-PROCESS at the end of
-    // the sweep: seconds of extra work at sf0.1, no child JVM, and the
-    // per-query keep rule is min(warm, re-measured) — the established
-    // min-is-signal doctrine (a real regression reproduces in the
-    // re-measure; contention noise collapses). Every (warm, fresh) pair
-    // lands in the FILE artifact under "corrected", and the stdout line
-    // carries "corr"/"minkept" counts so a reader of the headline total
-    // knows it contains corrected entries and how many kept the
-    // optimistic side. The child-JVM path stays for sf1, where medians
-    // clear the floor bar and a fresh process additionally resets
-    // long-lived-JVM state.
-    def medOf(v: Seq[Double]): Double = v(v.length / 2)
-    def relSpreadOf(v: Seq[Double]): Double = {
-      val m = medOf(v); if (m <= 0) 0.0 else (v.last - v.head) / m
-    }
-    val driftRatio =
-      math.max(calibBefore, calibAfter) / math.max(1e-9, math.min(calibBefore, calibAfter))
-    val preSprMax = if (results.isEmpty) 0.0 else results.map(r => relSpreadOf(r._2)).max
-    val calibElevated =
-      priorCalibMin("calib").exists(p => math.min(calibBefore, calibAfter) > 1.5 * p) ||
-      priorCalibMin("calibp").exists(p => math.min(calibpBefore, calibpAfter) > 1.5 * p)
-    val priorRegressed = results.filter { case (name, v) =>
-      priorMedians.get(name).exists(p => medOf(v) > 1.5 * p && medOf(v) - p > 0.3)
-    }.map(_._1)
-    val (resultsFinal, corrections): (Seq[(String, Seq[Double])], Seq[(String, (Double, Double))]) = {
-      val degraded = driftRatio > 1.2 || preSprMax > 2.0 || calibElevated
-      val trigger = (degraded || priorRegressed.nonEmpty) && only.isEmpty &&
-        !sys.env.get("SPARK_GRAFT_BENCH_CORRECT").contains("0")
-      if (!trigger) (results, Nil)
-      else {
-        val flagged = (priorRegressed ++ (if (!degraded) Nil
-          else results.filter(r => relSpreadOf(r._2) > 2.0).map(_._1) ++
-            results.sortBy(r => -medOf(r._2)).take(5).map(_._1))).distinct.toSet
-        Console.err.println(f"[bench] re-measure evidence (calib drift $driftRatio%.2f, " +
-          f"spr max $preSprMax%.2f, calib-elevated $calibElevated, " +
-          f"prior-regressed ${priorRegressed.size}): " +
-          f"re-measuring ${flagged.size} flagged queries in-process")
-        val pairs = scala.collection.mutable.ArrayBuffer.empty[(String, (Double, Double))]
-        val corrected = results.map { case (name, warm) =>
-          if (!flagged(name)) name -> warm
-          else {
-            materialize(name, warmDir) // re-warm: codegen may have been evicted
-            val fresh = (0 until trials).map { _ =>
-              val t0 = System.nanoTime()
-              materialize(name, sfDir)
-              (System.nanoTime() - t0) / 1e9
-            }.sorted
-            pairs += name -> ((medOf(warm), medOf(fresh)))
-            // keep the trial vector whose median is the min, so every
-            // downstream consumer (totals, stdout map, spread map) agrees
-            if (medOf(fresh) < medOf(warm)) name -> fresh else name -> warm
-          }
-        }
-        (corrected, pairs.toSeq)
-      }
-    }
-    // min over two noisy medians is biased low: an intermittent REAL
-    // regression that fails to reproduce in the single re-measure is
-    // silently dropped from the headline. The count of corrected-DOWN
-    // entries (fresh < warm, the optimistic side taken) rides the stdout
-    // line so a reader knows how many committed numbers took the min —
-    // the full (warm, fresh) audit pairs stay in the file's "corrected"
-    val corrDown = corrections.count { case (_, (w, f)) => f < w }
-
-    val total = resultsFinal.map { case (_, v) => v(v.length / 2) }.sum
-    // Compact spread aggregate for the stdout line: median and max of the
-    // per-query RELATIVE trial spread (max-min)/median. Environmental noise
-    // widens these; a clean run keeps p50 near zero. The full per-query
-    // spread map stays in the FILE artifact.
-    val relSpreads = resultsFinal.map { case (_, v) =>
-      val med = v(v.length / 2); if (med <= 0) 0.0 else (v.last - v.head) / med
-    }.sorted
-    val sprP50 = if (relSpreads.isEmpty) 0.0 else relSpreads(relSpreads.length / 2)
-    val sprMax = if (relSpreads.isEmpty) 0.0 else relSpreads.last
-    // The round-7 line parsed at 1990 bytes and the tail window measured
-    // out at ~2048 minus ~76 bytes of sbt suffix, so 1960 is the proven-
-    // safe stdout budget.
-    val budget = 1960
-    def mkLine(decimals: Int, keep: Int): String = {
-      val f = fmt(decimals) _
-      val byCost = resultsFinal.sortBy { case (_, v) => -v(v.length / 2) }.take(keep)
-      val qs = byCost.map { case (k, v) => "\"" + k + "\":" + f(v(v.length / 2)) }
-        .mkString("{", ",", "}")
-      val omitted = if (keep >= resultsFinal.length) ""
-        else s""","qomitted":${resultsFinal.length - keep}"""
-      val f2c = fmt(2) _
-      val env = s""","calib":[${f2c(calibBefore)},${f2c(calibAfter)}]""" +
-        s""","calibp":[${f2c(calibpBefore)},${f2c(calibpAfter)}]""" +
-        s""","spr":[${f2c(sprP50)},${f2c(sprMax)}]""" +
-        (if (corrections.isEmpty) ""
-         else s""","corr":${corrections.size},"mindown":$corrDown""") +
-        noopFloor.fold("")(f => s""","floor":${f2c(f)}""") // child → parent
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sfTag"$omitted$env}"""
-    }
-    // Degradation ladder for the bounded stdout window, in order of what
-    // perf attribution can best afford to lose: centiseconds, then
-    // deciseconds, then the CHEAPEST queries drop from the stdout map —
-    // largest medians stay, an explicit "qomitted" count marks the cut
-    // (never a silent truncation), and the FILE line below always carries
-    // every query at centiseconds plus the trial spread.
-    val all = resultsFinal.length
-    val line = Iterator(mkLine(2, all), mkLine(1, all))
-      .find(_.length <= budget)
-      .getOrElse {
-        val keep = Iterator.range(all - 1, 0, -1)
-          .find(k => mkLine(1, k).length <= budget).getOrElse(1)
-        mkLine(1, keep)
-      }
-    // FRESH-JVM REQUIESCE: any query whose relative trial spread exceeds 2×
-    // re-measures in a CHILD JVM running this same Bench in subset mode —
-    // identical methodology (per-query codegen warm, 3 trials, median, the
-    // watchdog) in a process with no 146-query heap/GC/position history.
-    // Round 12's t11/a4/a12 "regressions" were exactly this syndrome (wide
-    // spreads on untouched code, judge-adjudicated as position noise); the
-    // `requiesced` map in the FILE artifact makes them self-resolving: a
-    // real plan regression reproduces in the fresh JVM, noise collapses.
-    // Skipped in subset mode (that IS the child) and under
-    // SPARK_GRAFT_REQUIESCE=0.
-    val (requiesced, requiesceFloor, freshPairs): (Seq[(String, Double)], Option[Double], Seq[(String, (Double, Double))]) = {
-      val sprThreshold = // env knob: validation runs force-flag with a low bar
-        sys.env.get("SPARK_GRAFT_REQUIESCE_SPR").map(_.toDouble).getOrElse(2.0)
-      val wideSpread = resultsFinal
-        .filter { case (_, v) =>
-          val med = v(v.length / 2); med > 0.0 && (v.last - v.head) / med > sprThreshold }
-        .sortBy { case (_, v) => -(v.last - v.head) / v(v.length / 2) }
-        .take(12).map(_._1)
-      // ALSO the top-N by median (default 5; SPARK_GRAFT_REQUIESCE_TOP
-      // raises it — the sf1 artifact refresh uses 10 so the dominators
-      // all carry (warm, fresh) evidence): the headline total is
-      // dominated by its most expensive queries, and a consistently-
-      // slow-warm reading (a tight spread around an inflated floor — the
-      // round-13 s16-at-sf1 syndrome: 45 s warm vs ~9 s fresh) never
-      // trips the spread trigger. Re-measuring the dominators fresh
-      // confirms or corrects the numbers that matter most for the total.
-      val topN = sys.env.get("SPARK_GRAFT_REQUIESCE_TOP").map(_.toInt).getOrElse(5)
-      val topCost = resultsFinal
-        .sortBy { case (_, v) => -v(v.length / 2) }
-        .take(topN).map(_._1)
-      val flagged = (wideSpread ++ topCost).distinct
-      // don't spawn a multi-minute child JVM when nothing it measures
-      // could survive the 5×floor keep-filter anyway: at sf0.1 every
-      // median sits under the bar and the child would run only to be
-      // discarded. The prior is the committed floor measurement (~2.7 s,
-      // env-overridable); at sf1 the dominators clear 5× it easily, so
-      // the s16-class catches still happen.
-      val floorPrior = sys.env.get("SPARK_GRAFT_REQUIESCE_FLOOR_PRIOR")
-        .map(_.toDouble).getOrElse(2.5)
-      val medians0 = resultsFinal.toMap
-      val anyKeepable = flagged.exists(n =>
-        medians0.get(n).exists(v => v(v.length / 2) > 5.0 * floorPrior))
-      if (only.isDefined || flagged.isEmpty || !anyKeepable ||
-          sys.env.get("SPARK_GRAFT_REQUIESCE").contains("0")) (Nil, None, Nil)
-      else try {
-        import scala.jdk.CollectionConverters._
-        val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments.asScala.toSeq
-        val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++ jvmArgs ++
-          Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-        // child stdout goes to a FILE: reading the pipe before waitFor
-        // blocks until the child exits, which made the waitFor timeout
-        // dead code — a hung child (the exact pathology requiesce probes)
-        // would hang the whole bench run forever
-        val outFile = Files.createTempFile("graft-requiesce", ".out")
-        val pb = new ProcessBuilder(cmd: _*)
-          .redirectError(ProcessBuilder.Redirect.DISCARD) // Spark logs → stderr
-          .redirectOutput(outFile.toFile)
-        pb.environment().put("SPARK_GRAFT_BENCH_ONLY", flagged.mkString(","))
-        pb.environment().put("SPARK_GRAFT_INGEST_BENCH", "0")
-        pb.environment().put("SPARK_GRAFT_REQUIESCE", "0")
-        pb.environment().put("SPARK_GRAFT_REQUIESCE_CHILD", "1") // floor probe on
-        pb.environment().put("SPARK_GRAFT_BENCH_OUT", "/dev/null")
-        Console.err.println(s"[bench] requiescing ${flagged.size} wide-spread " +
-          s"queries in a fresh JVM: ${flagged.mkString(", ")}")
-        val p = pb.start()
-        // sf1 + top-10 dominators at local[4] legitimately needs ~20 min;
-        // the cap exists for HUNG children, so it scales by env instead
-        // of silently discarding a slow-but-live child's readings
-        val childCapMin = sys.env.get("SPARK_GRAFT_REQUIESCE_TIMEOUT_MIN")
-          .flatMap(_.toLongOption).getOrElse(10L)
-        if (!p.waitFor(childCapMin, java.util.concurrent.TimeUnit.MINUTES)) {
-          Console.err.println("[bench] requiesce child hung; killing it")
-          p.destroyForcibly()
-          p.waitFor(30, java.util.concurrent.TimeUnit.SECONDS)
-        }
-        val childOut = Files.readString(outFile)
-        Files.deleteIfExists(outFile)
-        val jsonLine = childOut.linesIterator.toSeq.reverse
-          .find(_.startsWith("{\"metric\"")).getOrElse("")
-        val floor = "\"floor\":([0-9.]+)".r
-          .findFirstMatchIn(jsonLine).map(_.group(1).toDouble)
-        val medians = resultsFinal.toMap
-        val childReadings = flagged.flatMap { name =>
-          val re = ("\"" + java.util.regex.Pattern.quote(name) + "\":([0-9.]+)").r
-          re.findFirstMatchIn(jsonLine).map(m => name -> m.group(1).toDouble)
-        }
-        // EVERY child reading lands in the artifact as a (warm, fresh)
-        // pair — warm-JVM-state attributions (the BENCH_SF1 d12 prose)
-        // become data, not narrative
-        val pairs = childReadings.flatMap { case (name, fresh) =>
-          medians.get(name).map(v => name -> ((v(v.length / 2), fresh)))
-        }
-        val kept = childReadings.filter { case (name, _) =>
-          // a reading the child's own cold floor dominates is noise, not
-          // a correction: keep only queries whose warm median clears 5×
-          // the measured no-op floor (the round-13 d10/d11 syndrome —
-          // child numbers for sub-3-s queries reading WORSE than warm)
-          floor.forall(f => medians.get(name)
-            .exists(v => v(v.length / 2) > 5.0 * f))
-        }
-        (kept, floor, pairs)
-      } catch { case e: Throwable =>
-        Console.err.println(s"[bench] requiesce failed: ${e.getClass.getSimpleName}")
-        (Nil, None, Nil)
-      }
-    }
-    val requiescedJson = {
-      val entries =
-        if (requiesced.isEmpty) ""
-        else requiesced.map { case (k, v) => "\"" + k + "\":" + fmt(2)(v) }
-          .mkString(""","requiesced":{""", ",", "}")
-      val pairsJson =
-        if (freshPairs.isEmpty) ""
-        else freshPairs.map { case (k, (w, fr)) =>
-          "\"" + k + "\":[" + fmt(2)(w) + "," + fmt(2)(fr) + "]"
-        }.mkString(""","fresh_pairs":{""", ",", "}")
-      entries + pairsJson +
-        requiesceFloor.fold("")(f => s""","requiesce_floor":${fmt(2)(f)}""")
-    }
-
-    // The FILE additionally carries the per-query [min,max] trial spread —
-    // one extra key on the same JSON object, so any parser of the primary
-    // fields is unaffected and the size-bounded STDOUT line stays unchanged.
-    // Regressions are then attributable post-hoc without a re-run: a plan
-    // regression lifts the min; environmental noise only widens the spread.
-    val f2 = fmt(2) _
-    val spread = resultsFinal.map { case (k, v) => "\"" + k + "\":[" + f2(v.head) + "," + f2(v.last) + "]" }
-      .mkString("{", ",", "}")
-    // In-process correction evidence (file artifact only): the
-    // (warm-median, fresh-median) pair for every query the degraded-run
-    // trigger re-measured, so a reader can audit which numbers the
-    // min-is-signal rule corrected and by how much.
-    val correctedJson =
-      if (corrections.isEmpty) ""
-      else corrections.map { case (k, (w, fr)) =>
-        "\"" + k + "\":[" + f2(w) + "," + f2(fr) + "]"
-      }.mkString(""","corrected":{""", ",", "}")
-    // The ingest-path measurement (blocks/sec through FullIngest, both
-    // catch-up and head-follow modes, plus the insert_block histogram) goes
-    // in the FILE artifact only — the stdout line's byte budget carries the
-    // query inventory. SPARK_GRAFT_INGEST_BENCH=0 skips it (fast local
-    // query-only iterations). Its keys carry their OWN calibration pair
-    // (the same single-thread loop, timed immediately before and after the
-    // ingest scenarios) — round 14's ingest readings whipsawed 9× between
-    // rounds with no way to tell steal from regression, because the query
-    // sweep's calib halves don't cover the minutes the ingest run adds.
-    // The ingest scenarios get the SAME min-is-signal re-measure the query
-    // sweep has: round 15's committed catch-up-to-tip whipsawed 19→35→113 s
-    // across rounds with IDENTICAL structural telemetry (24.5 jobs/block,
-    // 4 chunks) — infrastructure burst, and nothing acted on the calib
-    // evidence the keys carried. When this run's own evidence is degraded
-    // (its calib halves drift >1.2×, its calib floor sits >1.5× the prior
-    // artifact's, or a headline scenario reads >1.5× worse than the prior
-    // committed value) the WHOLE scenario suite re-runs once and the
-    // better pass is committed — scenarios are coherent units (the
-    // histogram belongs to one pass), so the keep rule picks the pass
-    // with the better catch-up-to-tip headline rather than mixing keys
-    // across passes; both passes' headline scalars land in
-    // "ingest_corrected" for the audit.
-    val ingest =
-      if (sys.env.get("SPARK_GRAFT_INGEST_BENCH").contains("0")) ""
-      else try {
-        def frv(txt: String, key: String): Option[Double] =
-          ("\"" + key + "\":([0-9.]+)").r.findFirstMatchIn(txt).map(_.group(1).toDouble)
-        val cb = calibrate(); val cpb = calibrateParallel()
-        val frag1 = IngestBench.run(spark)
-        val ca = calibrate(); val cpa = calibrateParallel()
-        val drift = math.max(cb, ca) / math.max(1e-9, math.min(cb, ca))
-        val elevated =
-          priorCalibMin("ingest_calib").exists(p => math.min(cb, ca) > 1.5 * p) ||
-          priorCalibMin("ingest_calibp").exists(p => math.min(cpb, cpa) > 1.5 * p)
-        // headline scenario keys and their better-direction: sec ↓, rate ↑
-        val timeKeys = Seq("ingest_catchup_to_tip_sec", "ingest_handoff_head_sec")
-        val rateKeys = Seq("ingest_blocks_per_sec", "ingest_blocks_per_sec_perblock")
-        val regressed = priorTxt.exists { pt =>
-          timeKeys.exists(k => (frv(frag1, k), frv(pt, k)) match {
-            case (Some(now), Some(p)) => now > 1.5 * p; case _ => false }) ||
-          rateKeys.exists(k => (frv(frag1, k), frv(pt, k)) match {
-            case (Some(now), Some(p)) => now < p / 1.5; case _ => false })
-        }
-        val remeasure = (drift > 1.2 || elevated || regressed) &&
-          !sys.env.get("SPARK_GRAFT_BENCH_CORRECT").contains("0")
-        val (frag, correctedJson) =
-          if (!remeasure) (frag1, "")
-          else {
-            Console.err.println(f"[bench] ingest re-measure (drift $drift%.2f, " +
-              f"calib-elevated $elevated, prior-regressed $regressed): re-running scenarios")
-            val frag2 = IngestBench.run(spark)
-            val keep = (frv(frag1, "ingest_catchup_to_tip_sec"),
-                frv(frag2, "ingest_catchup_to_tip_sec")) match {
-              case (Some(a), Some(b)) => if (b < a) frag2 else frag1
-              case _ => frag1
-            }
-            val pairs = (timeKeys ++ rateKeys).flatMap { k =>
-              (frv(frag1, k), frv(frag2, k)) match {
-                case (Some(a), Some(b)) => Some("\"" + k + "\":[" + f2(a) + "," + f2(b) + "]")
-                case _ => None
-              }
-            }
-            (keep, pairs.mkString(""""ingest_corrected":{""", ",", "},"))
-          }
-        s""","ingest_calib":[${f2(cb)},${f2(ca)}],""" +
-          s""""ingest_calibp":[${f2(cpb)},${f2(cpa)}],""" + correctedJson + frag
-      } catch { case e: Throwable => s""","ingest_error":"${e.getClass.getSimpleName}"""" }
-    // CC attribution telemetry (file artifact only): which connected-
-    // components path the clustering queries took, the symmetrized edge
-    // count, and the propagation round count — the three numbers that
-    // attribute a d6/d10/d11 floor move to data shape vs loop behavior.
-    // the MAX-edge invocation, not the last one: r11's post-gate CC runs
-    // after the d-family alphabetically and would otherwise shadow the
-    // corpus-level clustering this key exists to attribute
-    val cc = graft.operators.Dedup.maxCcStats
-    val ccJson = s""","cc":{"path":"${cc.path}","edges":${cc.edges},"rounds":${cc.rounds}}"""
-    // STREAMING-STATE SOAK (file artifact only): the 500-batch duration
-    // evidence for the state tables. The full soak costs ~2h of wall
-    // clock (≈90 Spark jobs per composed batch), so the per-round bench
-    // folds in the COMMITTED baseline fragment (SOAK_BASELINE.json —
-    // produced by `runMain graft.SoakBench`, labeled by soak_source so a
-    // reader knows its provenance); SPARK_GRAFT_SOAK_RUN=1 re-runs it
-    // in-process instead, SPARK_GRAFT_SOAK=0 drops the keys entirely.
-    val soak =
-      if (sys.env.get("SPARK_GRAFT_SOAK").contains("0")) ""
-      else if (sys.env.get("SPARK_GRAFT_SOAK_RUN").contains("1"))
-        try "," + SoakBench.run(spark)
-        catch { case e: Throwable => s""","soak_error":"${e.getClass.getSimpleName}"""" }
-      else try {
-        val txt = Files.readString(Paths.get("SOAK_BASELINE.json")).trim
-        if (txt.startsWith("{") && txt.endsWith("}"))
-          "," + txt.stripPrefix("{").stripSuffix("}")
-        else ""","soak_source":"SOAK_BASELINE.json unparseable""""
-      } catch { case _: Throwable =>
-        // absence must be VISIBLE, not silent — a reader of bench_out
-        // should see that the duration evidence is missing, not assume
-        // it was never promised
-        ""","soak_source":"missing SOAK_BASELINE.json""""
-      }
-    val fileLine = mkLine(2, all).dropRight(1) +
-      s""","cpus":$cpus,"spread":$spread$correctedJson$requiescedJson$ccJson$ingest$soak}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try Files.writeString(Paths.get(out), fileLine + "\n")
-    catch { case _: Throwable => () }
-    // Print the stdout result line LAST — after IngestBench (whose batch
-    // work logs to stderr, but any stray stdout from Spark internals must
-    // not land after this line; the driver parses a bounded stdout tail).
-    println(line)
-    spark.stop()
+    def fmt(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+    def median(v: Seq[Double]): Double = v(v.length / 2)
+    def obj(f: Seq[Double] => String): String =
+      results.map { case (k, v) => s""""$k":${f(v)}""" }.mkString("{", ",", "}")
+    val total = results.map { case (_, v) => median(v) }.filter(_ >= 0).sum
+    val sf = Paths.get(sfDir).getFileName.toString
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+      s""""queries":${obj(v => fmt(median(v)))},"sf":"$sf"}"""
+    val spread = obj(v => s"[${fmt(v.head)},${fmt(v.last)}]")
+    (line, line.dropRight(1) + s""","cpus":${spark.sparkContext.defaultParallelism},"spread":$spread}""")
   }
 }

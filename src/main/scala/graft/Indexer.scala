@@ -157,14 +157,14 @@ object Indexer {
     if (tokens.isEmpty) return
     import spark.implicits._
     val want = tokens.map(_._2).toDF("address")
-    val existing = store.readOr(BalanceIngest.RegistryTable, null)
-    val fresh = Option(existing)
+    val existing = Option(store.readOr(BalanceIngest.RegistryTable, null))
+      .map(_.select("address", "block_number", "decimals", "name"))
+    val fresh = existing
       .fold(want)(e => want.join(e.select("address"), Seq("address"), "left_anti"))
     val rows = TokenMetadata.resolve(fresh, 0L, client)
       .select(col("address"), col("block_number"), col("decimals"), col("name"))
-    if (existing == null) store.append(BalanceIngest.RegistryTable, rows)
-    else store.replace(BalanceIngest.RegistryTable,
-      existing.select("address", "block_number", "decimals", "name").unionByName(rows))
+    // one write either way: a replace of an absent table is a first write
+    store.replace(BalanceIngest.RegistryTable, existing.fold(rows)(_.unionByName(rows)))
   }
 
   /** Wire the full deployment: store, live RPC clients, WS head feed,

@@ -25,9 +25,8 @@ import graft.streaming.{BalanceIngest, BundleStream, BundleStreamProvider,
   *     the per-block latency distribution the reference records.
   *
   * Both rates are medians over `trials` full runs against fresh stores.
-  * Invoked from [[Bench]] after the query inventory; results land in the
-  * bench_out.json FILE artifact only (the size-bounded stdout line is
-  * unchanged).
+  * Run it directly (`sbt "runMain graft.IngestBench"`); it prints one
+  * JSON object on stdout.
   *
   * Reading the numbers: per-block mode pays ~50 Spark-job launches +
   * parquet commits PER BLOCK, so its rate is flat (~0.15 blocks/s at
@@ -36,14 +35,10 @@ import graft.streaming.{BalanceIngest, BundleStream, BundleStreamProvider,
   * floor that improves as the backfill deepens (40→240 blocks already
   * moves 1.9→8.7 blocks/s; a million-block backfill amortizes to chain
   * chunking alone). The default sizes hold the whole measurement near
-  * ~3.5 min so the driver's bench stays inside its window.
+  * ~3.5 min.
   */
 object IngestBench {
 
-  /** Standalone entry for iterating on the ingest measurement alone —
-    * the driver's bench path is [[Bench.main]], which embeds [[run]]'s
-    * fragment in bench_out.json.
-    */
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local("graft-ingest-bench")
     println("{" + run(spark) + "}")
@@ -172,8 +167,8 @@ object IngestBench {
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
 
-  /** Run both cases `trials` times; returns the JSON fragment for the
-    * bench file artifact. The histogram reported is head-follow's —
+  /** Run both cases `trials` times; returns the JSON members that
+    * [[main]] prints as one object. The histogram reported is head-follow's —
     * per-block insert latencies, the reference's metric shape.
     */
   def run(spark: SparkSession,

@@ -56,6 +56,14 @@ object Profile {
     finally spark.sparkContext.removeSparkListener(c)
   }
 
+  /** Where a query's codegen warms before it is timed, here and in
+    * [[Bench]]: the `sf0.001` corpus beside `sfDir`, or `sfDir` itself
+    * when there is none.
+    */
+  def warmDir(sfDir: String): String =
+    Some(java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001"))
+      .filter(java.nio.file.Files.isDirectory(_)).fold(sfDir)(_.toString)
+
   private val TopCost = Seq("r11_release_pipeline", "d12_semdedup", "d20_cluster_quality",
     "d13_containment", "d11_cluster_sizes", "d10_cluster_canonical",
     "d6_dup_components", "d3_simhash", "a16_sketch_overlap", "d2_minhash_lsh")
@@ -67,8 +75,7 @@ object Profile {
     require(mode.forall(Modes) && rest.nonEmpty,
       s"usage: graft.Profile [${Modes.mkString("|")}] <sfDir> [query ...]")
     val dir = rest.head
-    val warmDir = Some(java.nio.file.Paths.get(dir).resolveSibling("sf0.001"))
-      .filter(java.nio.file.Files.isDirectory(_)).fold(dir)(_.toString)
+    val warmOn = warmDir(dir)
     val names = if (rest.length > 1) rest.drop(1).toSeq else TopCost
     val queries = SparkEntry.queries
     val unknown = names.filterNot(queries.contains)
@@ -80,7 +87,7 @@ object Profile {
         println(s"\n========== $name ==========")
         queries(name)(spark, dir).explain("formatted")
       } else {
-        def warm(name: String): Unit = queries(name)(spark, warmDir).queryExecution.toRdd.count(): Unit
+        def warm(name: String): Unit = queries(name)(spark, warmOn).queryExecution.toRdd.count(): Unit
         warm(names.head) // session warm
         println(f"${"query"}%-26s ${"wall"}%7s ${"build"}%6s ${"jobs"}%5s ${"stg"}%4s ${"tasks"}%6s ${"taskT"}%7s ${"gc"}%5s ${"shW"}%8s")
         names.foreach { name =>

@@ -26,10 +26,11 @@ import graft.chain.TableStore
   *   - Spark jobs/batch and sec/batch (a per-batch cost that trends up
   *     with batch index means some stage scans O(state), not O(batch)).
   *
-  * Emits a `"soak_*"` JSON fragment for bench_out.json: sample arrays
-  * over the run, flat-by-inspection. Knobs: SPARK_GRAFT_SOAK_BATCHES
-  * (default 500), SPARK_GRAFT_SOAK_DOCS (per batch, default 24),
-  * SPARK_GRAFT_SOAK=0 skips.
+  * Run it directly (`sbt "runMain graft.SoakBench"`); it prints one JSON
+  * object of `"soak_*"` members on stdout: sample arrays over the run,
+  * flat-by-inspection. Knobs: SPARK_GRAFT_SOAK_BATCHES (default 500),
+  * SPARK_GRAFT_SOAK_DOCS (per batch, default 24), SPARK_GRAFT_SOAK_COMPACT
+  * (default 16, see [[run]]).
   */
 object SoakBench {
 

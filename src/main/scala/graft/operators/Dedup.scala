@@ -24,32 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Attribution telemetry from the most recent [[connectedComponents]]
-    * call on this JVM: which execution path ran (driver union-find vs
-    * distributed min-label), how many (symmetrized, distinct) edges it
-    * saw, and how many propagation rounds the distributed loop took.
-    * Exists because bench regressions on the clustering family (d6/d10/
-    * d11) are unattributable from wall-clock alone — "the corpus got
-    * denser" and "the loop stopped converging" look identical from
-    * outside. Read it right after the triggering action; a volatile
-    * single slot, not a history (the bench runs queries serially).
-    */
-  final case class CcStats(path: String, edges: Long, rounds: Int)
-  @volatile var lastCcStats: CcStats = CcStats("none", 0L, 0)
-
-  /** The LARGEST-edge invocation since JVM start — what the bench emits:
-    * the corpus-level d6/d10 clustering is the attribution target, and
-    * `lastCcStats` alone started shadowing it once r11 (whose CC runs
-    * over the much smaller post-gate survivor set) joined the sweep
-    * after the d-family in sorted order.
-    */
-  @volatile var maxCcStats: CcStats = CcStats("none", 0L, 0)
-
-  private def recordCc(s: CcStats): Unit = {
-    lastCcStats = s
-    if (s.edges >= maxCcStats.edges) maxCcStats = s
-  }
-
   /** Exact dedup: keep the lowest-id representative per normalized text.
     * Aggregation (not window) so map-side combine kicks in — at 100 TB the
     * reducer sees one row per distinct fingerprint, not per document.
@@ -575,7 +549,6 @@ object Dedup {
         undBase.as[(Long, Long)].limit(driverMaxEdges + 1).collect()
       } else Array.empty[(Long, Long)]
     if (tryDriver && probed.length <= driverMaxEdges) {
-      recordCc(CcStats("driver-union-find", probed.length.toLong, 0))
       val parent = new java.util.HashMap[java.lang.Long, java.lang.Long](probed.length * 2 + 16)
       def find(x: Long): Long = {
         var r = x
@@ -619,11 +592,6 @@ object Dedup {
       labels = next
       it += 1
     }
-    // edges = −1: counting the checkpointed edge relation would add a
-    // Spark job to every PRODUCTION call of the distributed path purely
-    // for telemetry; the round count is the attribution signal here (the
-    // driver path reports its exact edge count for free).
-    recordCc(CcStats("min-label", -1L, it))
     labels
   }
 

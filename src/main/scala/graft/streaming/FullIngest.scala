@@ -181,10 +181,8 @@ object FullIngest {
     metrics.foreach { m =>
       m.insertBlock.observe((System.nanoTime() - t0) / 1e9)
       RangeTables.foreach { case (t, _) => m.tableFiles.put(t, store.fileCounts(t).values.sum) }
-      // stderr, not stdout: Bench's contract is that the one JSON result
-      // line is the last thing on stdout, and a per-batch metrics line
-      // here would flood past it (the driver's parser reads a bounded
-      // stdout tail).
+      // stderr, not stdout: the mains that drive ingest print their JSON
+      // result on stdout, and a line per batch would bury it
       Console.err.println(m.logLine)
     }
   }

@@ -186,18 +186,6 @@ object StreamingText {
   val HashesSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL("h STRING, batch_id BIGINT")
 
-  /** The [[processChunkBatch]] processor wired as a streaming query. */
-  def chunkDedupStream(docs: Dataset[Doc], store: graft.chain.TableStore,
-                       chunkTokens: Int, checkpointDir: String) = {
-    docs.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        processChunkBatch(store, chunkTokens)(batch, bid): Unit
-      }
-      .start()
-  }
-
   /** Watermarked per-window arrival counts + mean quality features: the
     * standard event-time aggregation (append mode emits a window once the
     * watermark passes; stragglers later than `lateness` are dropped, which

@@ -219,6 +219,23 @@ class IndexerSpec extends SparkSpec {
     } finally rpc.stop()
   }
 
+  test("subscribing a grown token set keeps registered tokens and adds the new one pending") {
+    val store = TableStore(spark, Files.createTempDirectory("graft-indexer-registry").toString)
+    val (a, b) = (addr20(201), addr20(202))
+    val client = FixtureMetadataClient(Seq.empty)
+    Indexer.subscribeErc20Tokens(spark, store, Seq("a" -> a), client)
+    // the balance pipeline admits a at block 7
+    val admitted = store.readOr(BalanceIngest.RegistryTable, null)
+      .withColumn("block_number", org.apache.spark.sql.functions.lit(7L))
+    store.replace(BalanceIngest.RegistryTable, admitted)
+
+    Indexer.subscribeErc20Tokens(spark, store, Seq("a" -> a, "b" -> b), client)
+    val reg = store.readOr(BalanceIngest.RegistryTable, null).collect()
+      .map(r => r.getAs[Array[Byte]]("address").toSeq -> r.getAs[Long]("block_number"))
+    assert(reg.length == 2, "a must appear once")
+    assert(reg.toMap == Map(a.toSeq -> 7L, b.toSeq -> 0L))
+  }
+
   private def hashAt(store: TableStore, n: Long): Array[Byte] =
     store.readRange(ChainIngest.HeadersTable, "number", n, n, null)
       .select("hash").head().getAs[Array[Byte]](0)
