@@ -112,7 +112,7 @@ object PipelineRunner {
     */
   private val StateTables: Map[String, Seq[String]] = Map(
     "chunkDedup" -> Seq("chunk_hashes"),
-    "lshDedup"   -> Seq(StreamingDedup.SigsTable, StreamingDedup.PostingsTable),
+    "lshDedup"   -> Seq(StreamingDedup.PostingsTable),
     "ivfIndex"   -> Seq("ivf_postings"))
 
   final case class Config(
@@ -135,7 +135,6 @@ object PipelineRunner {
       quantileGroupCol: String = "lang",
       quantileValueCol: String = "n_chars",
       quantileIdCol: String = "doc_id",
-      compactFiles: Int = 64,
       dedupRetentionBatches: Option[Long] = None,
       eventsDir: Option[String] = None,
       eventsSchema: Option[String] = None,
@@ -178,7 +177,7 @@ object PipelineRunner {
       "metricsPort", "master", "triggerSeconds", "chunkTokens", "shingleSize",
       "numHashes", "bands", "simThreshold", "hllM", "hllGroupCol",
       "hllValueCol", "quantileK", "quantileGroupCol", "quantileValueCol",
-      "quantileIdCol", "compactFiles", "dedupRetentionBatches",
+      "quantileIdCol", "dedupRetentionBatches",
       "eventsDir", "eventsSchema", "sessionGap", "sessionWatermark",
       "sessionUserCol", "sessionTsCol", "embeddingsDir", "embeddingsSchema",
       "centroidsPath", "ivfIdCol", "ivfVecCol", "retrainThreshold",
@@ -234,7 +233,6 @@ object PipelineRunner {
       quantileGroupCol = opt("quantileGroupCol", identity, base.quantileGroupCol),
       quantileValueCol = opt("quantileValueCol", identity, base.quantileValueCol),
       quantileIdCol    = opt("quantileIdCol", identity, base.quantileIdCol),
-      compactFiles     = opt("compactFiles", _.toInt, base.compactFiles),
       dedupRetentionBatches = m.get("dedupRetentionBatches")
         .map(v => String.valueOf(v).toLong),
       eventsDir        = m.get("eventsDir").map(String.valueOf),
@@ -389,8 +387,7 @@ object PipelineRunner {
           cfg.dedupRetentionBatches)(b, bid))
       case f @ "lshDedup" => timed(f)(
         StreamingDedup.processLshBatch(store, cfg.shingleSize, cfg.numHashes,
-          cfg.bands, cfg.simThreshold, compactFiles = cfg.compactFiles,
-          retentionBatches = cfg.dedupRetentionBatches)(b, bid))
+          cfg.bands, cfg.simThreshold, retentionBatches = cfg.dedupRetentionBatches)(b, bid))
       case f @ "hllSketch" => timed(f)(
         StreamingSketch.processSketchBatch(store, cfg.hllGroupCol,
           cfg.hllValueCol, cfg.hllM)(b, bid))

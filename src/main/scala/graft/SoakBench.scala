@@ -12,9 +12,7 @@ import graft.chain.TableStore
   * micro-batches and chart, at fixed checkpoints,
   *   - the state tables' DATA-FILE counts (compaction must hold them
   *     flat — an append-only face would grow one file set per batch and
-  *     every later probe would pay per-file listing/footer costs), and the
-  *     most files any one `lsh_sigs` key holds (threshold compaction must
-  *     cap it),
+  *     every later probe would pay per-file listing/footer costs),
   *   - the live DIR counts of the per-batch range tables, the dedup state
   *     tables `chunk_hashes` and `lsh_postings` among them (tiered
   *     compaction must hold them near 64 + 8 per level), and the cost of
@@ -29,8 +27,7 @@ import graft.chain.TableStore
   * Run it directly (`sbt "runMain graft.SoakBench"`); it prints one JSON
   * object of `"soak_*"` members on stdout: sample arrays over the run,
   * flat-by-inspection. Knobs: SPARK_GRAFT_SOAK_BATCHES (default 500),
-  * SPARK_GRAFT_SOAK_DOCS (per batch, default 24), SPARK_GRAFT_SOAK_COMPACT
-  * (default 16, see [[run]]).
+  * SPARK_GRAFT_SOAK_DOCS (per batch, default 24).
   */
 object SoakBench {
 
@@ -82,22 +79,14 @@ object SoakBench {
     val batches = sys.env.get("SPARK_GRAFT_SOAK_BATCHES").map(_.toInt).getOrElse(500)
     val docsPer = sys.env.get("SPARK_GRAFT_SOAK_DOCS").map(_.toInt).getOrElse(24)
     val store = TableStore(spark, Files.createTempDirectory("graft-soak").toString)
-    // compactFiles is LOW here on purpose: the soak's job is to show the
-    // lsh_sigs per-key file curve SATURATING inside the run — at the
-    // production default (64) a key's touch rate (~1/15 batches at this
-    // doc mix) would not cross the threshold within 500 batches and the
-    // curve would read as unbounded growth when it is actually just a
-    // far-off ceiling (256 keys × threshold)
-    val compact = sys.env.get("SPARK_GRAFT_SOAK_COMPACT").map(_.toInt).getOrElse(16)
     val cfg = PipelineRunner.Config(
       inputDir = "", dataDir = store.root, checkpointDir = "",
-      quantileK = 32, hllM = 256, compactFiles = compact)
-    val tables = Seq("chunk_hashes", "lsh_postings", "lsh_sigs",
-      "hll_regs", "bk_sample")
+      quantileK = 32, hllM = 256)
+    val tables = Seq("chunk_hashes", "lsh_postings", "hll_regs", "bk_sample")
     val rangeTables = Seq("chunk_dedup", "near_dups", "hll_cardinality", "bk_quantiles",
       "chunk_hashes", "lsh_postings")
     val samplePoints = math.max(1, batches / 10)
-    type Sample = (Int, Map[String, (Long, Long)], Double, Double, Map[String, Int], Long)
+    type Sample = (Int, Map[String, (Long, Long)], Double, Double, Map[String, Int])
     val samples = scala.collection.mutable.ArrayBuffer.empty[Sample]
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
     Profile.measure(spark) { counter =>
@@ -120,8 +109,7 @@ object SoakBench {
           val secPerBatch  = (now - windowT0) / 1e9 / samplePoints
           windowJobs0 = jobs; windowT0 = now
           samples += ((b + 1, stats, jobsPerBatch, secPerBatch,
-            rangeTables.map(t => t -> store.rangeDirs(t).size).toMap,
-            store.fileCounts("lsh_sigs").values.maxOption.getOrElse(0L)))
+            rangeTables.map(t => t -> store.rangeDirs(t).size).toMap))
           Console.err.println(f"[soak] batch ${b + 1}%4d  jobs/batch $jobsPerBatch%.1f  " +
             f"sec/batch $secPerBatch%.2f  files ${stats.map { case (t, v) => s"$t=${v._1}" }.mkString(" ")}")
         }
@@ -137,7 +125,6 @@ object SoakBench {
           s""""soak_rows_$t":${arr(_._2(t)._2.toString)}"""
       }.mkString(",") + "," +
       rangeTables.map(t => s""""soak_dirs_$t":${arr(_._5(t).toString)},""").mkString +
-      s""""soak_max_key_files_lsh_sigs":${arr(_._6.toString)},""" +
       mergeCost("soak", perBatch.toSeq) + "," +
       s""""soak_jobs_per_batch":${arr(s => f2(s._3))},""" +
       s""""soak_sec_per_batch":${arr(s => f2(s._4))}"""

@@ -52,8 +52,11 @@ object Par {
     if (thunks.lengthCompare(1) <= 0) thunks.foreach(_.apply())
     else {
       implicit val ec: ExecutionContext = pool
+      // each thunk's jobs carry the caller's job group and batch id, so a
+      // stopped query cancels them and not another query's
+      val carry = org.apache.spark.GraftLocalProperties.capture()
       val settled = Future.sequence(
-        thunks.map(t => Future(t()).map(scala.util.Success(_): scala.util.Try[Unit])
+        thunks.map(t => Future(carry(t)).map(scala.util.Success(_): scala.util.Try[Unit])
           .recover { case e => scala.util.Failure(e) }))
       Await.result(settled, Duration.Inf).collectFirst { case scala.util.Failure(e) => e }
         .foreach(throw _)

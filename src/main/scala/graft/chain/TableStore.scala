@@ -79,9 +79,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *     (see [[appendRange]]).
   * Category-partitioned tables keep one `<col>=<v>` key per value, and
   * reads rebuild the column as a partition value, so an `isin` predicate
-  * on it prunes to the probed keys' dirs before any file opens. Their
-  * dirs may carry range bounds too (a batch id), and then retract and
-  * read by range exactly as a range table's do.
+  * on it prunes to the probed keys' dirs before any file opens.
   *
   * A full production deployment may still prefer a Delta/Iceberg table
   * here — their logs add snapshot isolation for CONCURRENT writers,
@@ -719,32 +717,25 @@ final case class TableStore(spark: SparkSession, root: String,
     }
   }
 
-  /** Append into a layout partitioned by a discrete CATEGORY column (doc
-    * prefix, centroid id) rather than a block-number range: each distinct
+  /** Append into a layout partitioned by a discrete CATEGORY column (a
+    * centroid id) rather than a range: each distinct
     * value is its own manifest key, so a read carrying an `isin`
     * predicate on `partCol` prunes to exactly the probed partitions before
     * any file opens. Unlike a range table's dirs, whose bounds live in
     * the manifest, the column survives the read — it IS data. The write
     * is spread over every core by [[byKey]], one file per key per append.
-    * A `range` (rangeCol, lo, hi) bounds every new dir as [[appendRange]]
-    * does. Returns the partition values written, for [[compactPartitions]].
     */
-  def appendPartitioned(table: String, df: DataFrame, partCol: String,
-                        range: Option[(String, Long, Long)] = None): Seq[String] = {
-    val rel = stagePhys(table,
-      byKey(range.fold(df) { case (c, lo, hi) => inSpan(table, df, c, lo, hi) }, partCol),
-      partitionBy = Some(partCol))
+  def appendPartitioned(table: String, df: DataFrame, partCol: String): Unit = {
+    val rel = stagePhys(table, byKey(df, partCol), partitionBy = Some(partCol))
     rememberSchema(table, df.schema)
     val subs = stagedKeys(table, rel)
     if (subs.nonEmpty) {
-      val bounds = range.fold(Dir(""))(r => Dir("", r._2, r._3))
       val m = manEntries(table)
       commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) =>
-        acc.updated(k, acc.getOrElse(k, Seq.empty) :+ bounds.copy(rel = d))
+        acc.updated(k, acc.getOrElse(k, Seq.empty) :+ Dir(d))
       })
     }
     invalidate(table) // after the mutation — see append
-    subs.keys.map(_.stripPrefix(partCol + "=")).toSeq
   }
 
   /** `df` hash-partitioned on `partCol` into the session's shuffle
@@ -766,9 +757,8 @@ final case class TableStore(spark: SparkSession, root: String,
     * from the manifests' dir bounds: a dir inside the range drops out, a
     * disjoint dir stays, and only a dir straddling it (an unranged dir
     * always does) is rewritten, filtered, with narrowed bounds, or
-    * dropped when no row survives (a category key's column stays in the
-    * key). A straddler with no row in the range (the footers' row counts
-    * match) keeps its dir, with narrowed bounds.
+    * dropped when no row survives. A straddler with no row in the range
+    * (the footers' row counts match) keeps its dir, with narrowed bounds.
     * The ingest bracket's happy path (all dirs disjoint) and a reorg of
     * per-block dirs (all inside) run no Spark job (the reference: ONE DB
     * transaction per chunk, store/store.go:129-147). One commit per
@@ -782,7 +772,7 @@ final case class TableStore(spark: SparkSession, root: String,
         else if (from <= d.lo && d.hi <= to) None
         else {
           val rest = open(t, Map(k -> Seq(d))).filter(!col(rc).between(from, to))
-          val rel = stagePhys(t, rest.drop(k.takeWhile(_ != '=')))
+          val rel = stagePhys(t, rest)
           val kept = footerRows(seed(new Path(dir(t), rel)))
           val narrowed = d.copy(lo = if (from <= d.lo) to + 1 else d.lo,
                                 hi = if (d.hi <= to) from - 1 else d.hi)
@@ -876,7 +866,7 @@ final case class TableStore(spark: SparkSession, root: String,
     rowCache.put(table, Some(df.collect()))
 
   /** Threshold-triggered compaction for CATEGORY-partitioned tables (the
-    * streaming index tables `lsh_sigs` and `ivf_postings`). Each
+    * streaming index `ivf_postings`). Each
     * micro-batch's [[appendPartitioned]] lands one file-set per touched
     * partition, so after 10⁴ batches a partition-pruned probe would open
     * 10⁴ small files: every partition in `parts` (default: all) whose
@@ -884,12 +874,10 @@ final case class TableStore(spark: SparkSession, root: String,
     * them in ONE partitioned staged write ([[byKey]]: one job spread over
     * every core, however many keys cross the threshold together — and a
     * batch that touches every key makes them all cross together) swapped
-    * in by one manifest commit. Rows (including their batch_id replay
-    * tags) are byte-identical and each merged dir keeps [min lo, max hi]
-    * of the dirs it replaces, so every replay and probe invariant is
-    * untouched. File counts come from the seeded status cache, so the
-    * threshold check lists nothing. Returns the number of partitions
-    * rewritten.
+    * in by one manifest commit. Rows are byte-identical, so every probe
+    * invariant is untouched. File counts come from the seeded status
+    * cache, so the threshold check lists nothing. Returns the number of
+    * partitions rewritten.
     */
   def compactPartitions(table: String, partCol: String,
                         parts: Option[Seq[Any]] = None,
@@ -912,7 +900,7 @@ final case class TableStore(spark: SparkSession, root: String,
           s"staged keys ${subs.keySet.diff(fat.toSet).take(3).mkString(", ")} outside them " +
           s"or missed ${fat.toSet.diff(subs.keySet).take(3).mkString(", ")}; nothing committed")
       commitManifest(table, subs.foldLeft(m) { case (acc, (k, d)) =>
-        acc.updated(k, Seq(Dir(d, m(k).map(_.lo).min, m(k).map(_.hi).max)))
+        acc.updated(k, Seq(Dir(d)))
       })
       invalidate(table)
     }

@@ -15,19 +15,19 @@ import graft.operators.Dedup
   * formulation can't express it: the index is a TABLE probed by band
   * keys, and the verdict re-aggregates by doc).
   *
-  * Index layout — CANONICAL DOCS ONLY, two tables:
-  *   - `lsh_postings` (band, band_hash, doc_id, batch_id), a range table
-  *     on `batch_id`: each batch appends one dir bounded [bid, bid], and
-  *     the store's tiered compaction bounds the live dir count. The
-  *     candidate probe reads every dir below `bid`. A 256-way band-hash
-  *     prefix layout barely pruned it: a batch of B documents carries 16·B
-  *     band hashes and so touches 1 − e^(−16B/256) of the prefixes (98 %
-  *     at B = 64), so it pruned only for batches under about 16 documents,
-  *     and every batch wrote one file per touched prefix.
-  *   - `lsh_sigs` (doc_id, sig, batch_id), partitioned by the doc-id
-  *     prefix `sp`, each dir bounded by its batch ids: signatures are
-  *     fetched ONLY for the candidate set (bounded by the bucket valve),
-  *     whose prefixes are a strict subset, so this layout does prune.
+  * Index layout — CANONICAL DOCS ONLY, one table: `lsh_postings` (band,
+  * band_hash, doc_id, batch_id, sig), a range table on `batch_id`. Each
+  * batch appends one dir bounded [bid, bid], and the store's tiered
+  * compaction bounds the live dir count. A canonical's MinHash `sig`
+  * rides on its band-0 row and is null on its other rows, so its
+  * signature and its postings land in one dir and one commit. The
+  * candidate probe reads every dir below `bid` without the `sig` column
+  * (parquet prunes it); the candidates' signatures come from the band-0
+  * rows of the same dirs. A 256-way band-hash prefix layout barely
+  * pruned the probe: a batch of B documents carries 16·B band hashes
+  * and so touches 1 − e^(−16B/256) of the prefixes (98 % at B = 64), so
+  * it pruned only for batches under about 16 documents, and every batch
+  * wrote one file per touched prefix.
   * Keeping only canonicals in the index is what production frontiers do:
   * dups never accumulate as index mass, and a chain of near-dups all
   * resolves against the one kept representative.
@@ -41,30 +41,24 @@ import graft.operators.Dedup
   * (batch-bounded) so chains keep exactly their min-id member. A doc
   * whose batch-canonical matched an older doc resolves to THAT older doc.
   *
-  * Replay idempotency: postings/sigs rows are tagged with batch_id; the
+  * Replay idempotency: postings rows are tagged with batch_id; the
   * "earlier corpus" is `batch_id < bid`, so a replayed batch never
   * matches its own half-landed rows and recomputes the identical
   * verdict. Every table it writes then goes through the delete-then-
   * append bracket on `[bid, bid]`, which drops whatever a crashed
   * attempt landed; on the happy path no live dir's bounds meet `bid`, so
   * the delete runs no Spark job. Each bracket is replay-safe alone, so
-  * the three run concurrently.
+  * the two run concurrently.
   */
 object StreamingDedup {
 
   val PostingsTable = "lsh_postings"
-  val SigsTable     = "lsh_sigs"
   val VerdictTable  = "near_dups"
 
   val postingsSchema: StructType = StructType(Seq(
     StructField("band", IntegerType), StructField("band_hash", LongType),
-    StructField("doc_id", LongType), StructField("batch_id", LongType)))
-
-  val sigsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("sig", ArrayType(LongType)),
-    StructField("batch_id", LongType), StructField("sp", IntegerType)))
-
-  private def docPrefix(id: org.apache.spark.sql.Column) = pmod(id, lit(256L)).cast("int")
+    StructField("doc_id", LongType), StructField("batch_id", LongType),
+    StructField("sig", ArrayType(LongType))))
 
   /** Estimated Jaccard: fraction of equal MinHash components. The equal-
     * component count is the native codegen kernel
@@ -79,12 +73,13 @@ object StreamingDedup {
   /** foreachBatch body. `maxBucket` is the usual hot-bucket valve on both
     * the index probe and the within-batch candidate stage.
     *
-    * State growth pricing: `lsh_sigs` holds one row per CANONICAL doc
-    * (numHashes longs + doc_id ≈ 8·numHashes B/row) and `lsh_postings`
-    * `bands` rows per canonical — both linear in distinct-canonical mass
-    * forever, inherent to dedup-against-everything-kept. `retentionBatches`
-    * trades that for SLIDING-WINDOW near-dup semantics: once per window
-    * both index tables drop every batch older than the last N (a range
+    * State growth pricing: `lsh_postings` holds `bands` rows per CANONICAL
+    * doc, one of them carrying its signature (numHashes longs ≈
+    * 8·numHashes B) — linear in distinct-canonical mass forever, inherent
+    * to dedup-against-everything-kept. The signature fetch reads the `sig`
+    * column of every dir below `bid`, as the probe reads its own columns.
+    * `retentionBatches` trades that for SLIDING-WINDOW near-dup semantics:
+    * once per window the index drops every batch older than the last N (a range
     * delete: whole dirs drop from the manifest, and only a compacted dir
     * straddling the cut is rewritten), after which a near-dup
     * of a canonical older than the window reads as NEW — the documented
@@ -94,13 +89,11 @@ object StreamingDedup {
                       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
                       simThreshold: Double = 0.7,
                       maxBucket: Int = Dedup.DefaultMaxBucket,
-                      compactFiles: Int = 64,
                       retentionBatches: Option[Long] = None)
                      (batch: DataFrame, bid: Long): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-
-    Seq(SigsTable, PostingsTable).foreach(store.requireRanged)
+    store.requireRanged(PostingsTable)
+    if (store.exists(LegacySigsTable))
+      legacy(store, LegacySigsTable, "a separate signature table")
 
     // 1. one signature pass per doc; band rows derived from it
     val sigs = Dedup.minHashSignatureArray(batch, "doc_id", "text", shingleSize, numHashes)
@@ -117,6 +110,8 @@ object StreamingDedup {
     //    bands provide recall, the maxBucket discipline throughout Dedup.
     val oldPostings = store.readRange(PostingsTable, "batch_id", Long.MinValue, bid - 1,
       postingsSchema)
+    if (!oldPostings.columns.contains("sig"))
+      legacy(store, PostingsTable, "postings without a sig column")
     val coldBuckets = oldPostings.groupBy("band", "band_hash")
       .agg(count(lit(1)).as("__cnt"))
       .filter(col("__cnt") <= maxBucket).select("band", "band_hash")
@@ -127,15 +122,10 @@ object StreamingDedup {
       .select(col("doc_id"), col("old_id")).distinct()
       .localCheckpoint(true)
 
-    // 3. signatures for the candidate OLD docs — partition-pruned by the
-    //    candidates' doc prefixes (bounded: candidate set ≤ batch × valve)
-    val oldSps = oldPairs.select(docPrefix(col("old_id")).as("sp")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val oldSigs =
-      if (oldSps.isEmpty) spark.emptyDataset[(Long, Array[Long])].toDF("old_id", "old_sig")
-      else store.readRange(SigsTable, "batch_id", Long.MinValue, bid - 1, sigsSchema)
-        .filter(col("sp").isin(oldSps: _*))
-        .select(col("doc_id").as("old_id"), col("sig").as("old_sig"))
+    // 3. signatures for the candidate OLD docs: the band-0 rows of the
+    //    dirs the probe opened
+    val oldSigs = oldPostings.filter(col("band") === 0)
+      .select(col("doc_id").as("old_id"), col("sig").as("old_sig"))
     val oldMatches = oldPairs
       .join(sigs, "doc_id")
       .join(oldSigs, "old_id")
@@ -204,8 +194,8 @@ object StreamingDedup {
 
     // 6. verdict and index growth (canonicals only), each table through
     //    its own delete-then-append bracket on [bid, bid]: the verdict
-    //    above read only batch_id < bid, so no bracket depends on another,
-    //    and a crash between any two leaves each one to its replay.
+    //    above read only batch_id < bid, so neither bracket depends on the
+    //    other, and a crash between them leaves each one to its replay.
     val kept = verdicts.filter(col("is_new") === 1).select(col("doc_id"), col("sig"))
     graft.chain.Par.run(Seq(
       () => {
@@ -215,19 +205,11 @@ object StreamingDedup {
           "batch_id", bid, bid)
       },
       () => {
-        store.deleteRange(SigsTable, "batch_id", bid, bid)
-        val touched = store.appendPartitioned(SigsTable,
-          kept.select(col("doc_id"), col("sig"), lit(bid).as("batch_id"),
-            docPrefix(col("doc_id")).as("sp")), "sp", Some(("batch_id", bid, bid)))
-        // bounded file counts: threshold-compact exactly the keys this
-        // batch touched; merged dirs keep their batch bounds
-        store.compactPartitions(SigsTable, "sp", Some(touched), compactFiles): Unit
-      },
-      () => {
         store.deleteRange(PostingsTable, "batch_id", bid, bid)
         store.appendRange(PostingsTable,
-          bandRows.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-            .select(col("band"), col("band_hash"), col("doc_id"), lit(bid).as("batch_id")),
+          bandRows.join(kept, "doc_id")
+            .select(col("band"), col("band_hash"), col("doc_id"), lit(bid).as("batch_id"),
+              when(col("band") === 0, col("sig")).as("sig")),
           "batch_id", bid, bid)
       }))
 
@@ -235,21 +217,17 @@ object StreamingDedup {
     // window — idempotent under replay (the same cut drops the same rows)
     retentionBatches.foreach { r =>
       if (r > 0 && bid > 0 && bid % r == 0)
-        Seq(SigsTable, PostingsTable).foreach(
-          store.deleteRange(_, "batch_id", Long.MinValue, bid - r - 1))
+        store.deleteRange(PostingsTable, "batch_id", Long.MinValue, bid - r - 1)
     }
   }
 
-  /** The processor wired as a streaming query. */
-  def lshDedupStream(docs: org.apache.spark.sql.Dataset[StreamingText.Doc],
-                     store: TableStore, checkpointDir: String,
-                     shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-                     simThreshold: Double = 0.7) =
-    docs.toDF().writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        processLshBatch(store, shingleSize, numHashes, bands, simThreshold)(batch, bid): Unit
-      }
-      .start()
+  /** The signature table of stores from before the signatures moved onto
+    * `lsh_postings`' band-0 rows.
+    */
+  private val LegacySigsTable = "lsh_sigs"
+
+  private def legacy(store: TableStore, table: String, what: String): Nothing =
+    throw new IllegalStateException(s"table '$table' under ${store.root} holds $what, " +
+      "a layout from before the signatures moved onto lsh_postings' band-0 rows, which " +
+      "this store does not read; re-ingest into a fresh dataDir")
 }

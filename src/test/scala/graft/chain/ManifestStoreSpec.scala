@@ -283,29 +283,6 @@ class ManifestStoreSpec extends SparkSpec {
     }
   }
 
-  test("retainFrom prunes a category-partitioned state table atomically, garbage GC'd") {
-    val store = fresh()
-    (0L to 4L).foreach { b =>
-      store.appendPartitioned("s",
-        Seq((b, (b % 2).toInt, b * 10)).toDF("batch_id", "sp", "v"), "sp",
-        Some(("batch_id", b, b)))
-    }
-    val before = ls(store, "s").filter(_.startsWith(".d-")).toSet
-    store.deleteRange("s", "batch_id", Long.MinValue, 2L)
-    val after = store.readOr("s", null)
-    assert(after.select("batch_id").collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L),
-      "rows below the cut must be pruned")
-    // the partition column survives as data; the dirs below the cut left
-    // the manifest whole (no rewrite) and were GC'd with it
-    assert(after.schema.fieldNames.contains("sp"))
-    val dataDirs = ls(store, "s").filter(_.startsWith(".d-")).toSet
-    assert(dataDirs.size == 2 && dataDirs.subsetOf(before),
-      s"the dropped batches' dirs must be GC'd, nothing rewritten, saw: $dataDirs")
-    // idempotent: a replayed prune drops nothing more
-    store.deleteRange("s", "batch_id", Long.MinValue, 2L)
-    assert(store.readOr("s", null).count() == 2L)
-  }
-
   test("no rename is ever issued: physical dirs are immutable once committed") {
     val store = fresh()
     store.appendRange("t", (0L until 30L).toDF("n"), "n", 0L, 29L)

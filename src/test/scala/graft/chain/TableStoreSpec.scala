@@ -125,42 +125,6 @@ class TableStoreSpec extends SparkSpec {
     }
   }
 
-  test("bounded partitioned appends retract job-free and keep their bounds through compaction") {
-    val store = fresh()
-    // 100 batches over 4 keys, each dir bounded [b, b]
-    (0L until 100L).foreach(b => store.appendPartitioned("p",
-      (0 until 4).map(k => (b, k)).toDF("b", "k"), "k", Some(("b", b, b))))
-    def gen() = Files.readString(Paths.get(store.root, "p", ".gen"))
-    // the next batch's bracket: no live dir meets 100
-    val g0 = gen()
-    val (_, happy) = graft.Profile.measure(spark)(_ => store.deleteRange("p", "b", 100L, 100L))
-    assert(happy.jobs.get == 0L, s"the bracket ran ${happy.jobs.get} jobs")
-    assert(gen() == g0, "the bracket committed")
-    // a row outside the declared span fails the append and commits nothing
-    intercept[Exception](store.appendPartitioned("p", Seq((7L, 0)).toDF("b", "k"), "k",
-      Some(("b", 100L, 100L))))
-    assert(gen() == g0)
-    // compaction merges each key's 100 dirs into one bounded [min lo, max hi]
-    assert(store.compactPartitions("p", "k", maxFiles = 1) == 4)
-    def bounds(): Map[String, Seq[(Long, Long)]] = {
-      val tdir = Paths.get(store.root, "p")
-      val v = gen().trim.split("\\s+")(0)
-      Files.readString(tdir.resolve(s".manifest.$v")).linesIterator.map(_.split('\t'))
-        .collect { case Array(k, _, lo, hi) => k -> ((lo.toLong, hi.toLong)) }.toSeq
-        .groupMap(_._1)(_._2)
-    }
-    assert(bounds() == (0 until 4).map(k => s"k=$k" -> Seq((0L, 99L))).toMap)
-    val g1 = gen()
-    val (_, after) = graft.Profile.measure(spark)(_ => store.deleteRange("p", "b", 100L, 100L))
-    assert(after.jobs.get == 0L && gen() == g1, "the bracket over merged dirs ran or committed")
-    // a cut through the merged dirs rewrites them with narrowed bounds,
-    // the key's column still coming from the key
-    store.deleteRange("p", "b", Long.MinValue, 49L)
-    assert(bounds() == (0 until 4).map(k => s"k=$k" -> Seq((50L, 99L))).toMap)
-    val got = store.readOr("p", null).select("b", "k").collect().map(r => (r.getLong(0), r.getInt(1)))
-    assert(got.sorted.toSeq == (50L until 100L).flatMap(b => (0 until 4).map(k => (b, k))))
-  }
-
   /** Appends one row per value of each span in `appends` to a fresh
     * table, checking after every append that at most `maxDirs` dirs are
     * live and that the newest 64 are appended ones, never merged. Returns

@@ -149,9 +149,14 @@ class PipelineRunnerSpec extends SparkSpec {
       // has rows and no self-verdicts)
       val nd = store.readOr("near_dups", null)
       assert(nd.filter(col("dup_of") === col("doc_id")).count() == 0L)
-      // second drop lands incrementally under the SAME query
-      docsDf(40L until 60L).write.mode("append").parquet(in)
+      // second drop lands incrementally under the SAME query; its last
+      // document is a copy of first-drop document 1, so it must resolve
+      // against the index the first batch built
+      docsDf(40L until 59L).union(docsDf(Seq(1L)).withColumn("doc_id", lit(59L)))
+        .write.mode("append").parquet(in)
       w.query.processAllAvailable()
+      assert(store.readOr("near_dups", null).filter(col("doc_id") === 59L)
+        .select("dup_of").collect().map(_.getLong(0)).toSeq == Seq(1L))
       assert(store.readOr("chunk_dedup", null).select("doc_id").distinct().count() == 60L)
       assert(w.metrics.batches.get() >= 2L && w.metrics.docs.get() == 60L)
       // the metrics endpoint serves the pipeline counters
@@ -172,7 +177,7 @@ class PipelineRunnerSpec extends SparkSpec {
       assert(body.linesIterator.count(_.startsWith("graft_pipeline_face_seconds_count")) ==
         cfg.faces.size)
       // and every document face's category state tables' live file counts
-      Seq("chunk_hashes", "lsh_sigs", "lsh_postings").foreach { t =>
+      Seq("chunk_hashes", "lsh_postings").foreach { t =>
         val files = store.fileCounts(t).values.sum
         assert(files > 0L)
         assert(body.linesIterator.contains(s"""graft_pipeline_state_files{table="$t"} $files"""),

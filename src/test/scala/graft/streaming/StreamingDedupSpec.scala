@@ -1,7 +1,12 @@
 package graft.streaming
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import graft.SparkSpec
 import graft.chain.TableStore
 
@@ -30,6 +35,10 @@ class StreamingDedupSpec extends SparkSpec {
         ((r.getAs[Int]("is_new"),
           Option(r.getAs[java.lang.Long]("dup_of")).map(_.toLong))))
       .toMap
+
+  /** The index's signature rows: each canonical's band-0 posting. */
+  private def sigRows(store: TableStore) =
+    store.readOr(StreamingDedup.PostingsTable, null).filter(col("band") === 0)
 
   /** The current manifest's bounded dirs of `table`: rel dir → [lo, hi]. */
   private def manifestBounds(store: TableStore, table: String): Map[String, (Long, Long)] = {
@@ -65,10 +74,16 @@ class StreamingDedupSpec extends SparkSpec {
     assert(v0(2L)._1 == 0 && v0(2L)._2.contains(1L), s"B must dup A in-batch: $v0")
     assert(v0(3L) == ((1, None)))
 
-    // index holds ONLY canonicals (A, C) — the dropped dup adds no mass
-    val indexed = store.readOr(StreamingDedup.SigsTable, null)
+    // index holds ONLY canonicals (A, C) — the dropped dup adds no mass —
+    // and each one's signature rides on its band-0 row alone
+    val indexed = sigRows(store).filter(col("sig").isNotNull)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(indexed == Set(1L, 3L))
+    val postings0 = store.readOr(StreamingDedup.PostingsTable, null)
+    assert(postings0.filter(col("sig").isNotNull =!= (col("band") === 0)).isEmpty,
+      "sig must be set on band 0 and null on every other band")
+    assert(postings0.filter(col("sig").isNotNull).select(size(col("sig"))).distinct()
+      .collect().map(_.getInt(0)).toSeq == Seq(64))
 
     // batch 1: D ≈ A → cross-batch dup of the CANONICAL 1; E kept
     proc(1L, Seq(
@@ -78,7 +93,7 @@ class StreamingDedupSpec extends SparkSpec {
     assert(v1(10L)._1 == 0 && v1(10L)._2.contains(1L),
       s"batch-2 near-dup must resolve to the batch-1 canonical: $v1")
     assert(v1(11L) == ((1, None)))
-    val afterB1 = store.readOr(StreamingDedup.SigsTable, null)
+    val afterB1 = sigRows(store)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(afterB1 == Set(1L, 3L, 11L))
 
@@ -88,7 +103,7 @@ class StreamingDedupSpec extends SparkSpec {
       11L -> baseE))
     assert(verdicts(store, 1L) == v1, "replay must recompute the identical verdict")
     val postings = store.readOr(StreamingDedup.PostingsTable, null)
-    assert(store.readOr(StreamingDedup.SigsTable, null).count() == 3L,
+    assert(sigRows(store).count() == 3L,
       "replayed sigs must not re-append")
     assert(postings.groupBy("doc_id", "band").count().filter(col("count") > 1).isEmpty,
       "replayed postings must not duplicate any (doc, band) row")
@@ -102,7 +117,7 @@ class StreamingDedupSpec extends SparkSpec {
     proc(0L, Seq(1L -> baseA))
     proc(1L, Seq(2L -> baseC))
     proc(2L, Seq(3L -> baseE)) // prune at keepFrom = 0: nothing drops
-    assert(store.readOr(StreamingDedup.SigsTable, null).count() == 3L)
+    assert(sigRows(store).count() == 3L)
     // NB "epsilon15" matches exactly one word ("epsilon5" would also hit
     // epsilon50..epsilon59 and sink the similarity below the threshold)
     proc(3L, Seq(4L -> baseE.replace("epsilon15", "edited"))) // dups 3 (in window)
@@ -110,11 +125,9 @@ class StreamingDedupSpec extends SparkSpec {
     // bid 4 prunes to keepFrom = 2: batch-0/1 canonicals leave the index —
     // bounded state, the priced trade
     proc(4L, Seq(5L -> baseC.replace("gamma7", "shifted")))
-    val sigs = store.readOr(StreamingDedup.SigsTable, null)
-    assert(sigs.filter(col("batch_id") < 2L).count() == 0L,
-      "index rows older than the window must be pruned")
     assert(store.readOr(StreamingDedup.PostingsTable, null)
-      .filter(col("batch_id") < 2L).count() == 0L)
+      .filter(col("batch_id") < 2L).count() == 0L,
+      "index rows older than the window must be pruned")
     // the SEMANTIC trade, pinned: a near-dup of the batch-0 canonical now
     // reads as NEW (outside the window); one of the batch-2 canonical
     // still dedups (inside it)
@@ -193,33 +206,30 @@ class StreamingDedupSpec extends SparkSpec {
     assert(est35.isEmpty, "docs 3 and 5 must NOT be near-dups of each other")
   }
 
-  test("a crash between the sigs and postings appends replays to a complete index") {
+  test("a replay over a half-landed postings dir lands one signature row and 16 bands") {
     val store = mkStore()
     def proc(bid: Long, docs: Seq[(Long, String)]): Unit =
       StreamingDedup.processLshBatch(store)(docs.toDF("doc_id", "text"), bid)
     proc(0L, Seq(1L -> baseA, 3L -> baseC))
 
-    // simulate batch 1 crashing AFTER the lsh_sigs append and BEFORE the
-    // lsh_postings append: land exactly the sigs rows the real batch
-    // writes for the new canonical (doc 11), bounded [1, 1] as its
-    // append bounds them, nothing else
+    // a crashed attempt of batch 1 left a [1, 1] postings dir holding only
+    // bands 0..7 of the new canonical (doc 11), its signature on band 0
     val sigs11 = graft.operators.Dedup.minHashSignatureArray(
-        Seq(11L -> baseE).toDF("doc_id", "text"), "doc_id", "text", 3, 64)
-      .select(col("doc_id"), col("sig"), lit(1L).as("batch_id"),
-        pmod(col("doc_id"), lit(256L)).cast("int").as("sp"))
-    store.appendPartitioned(StreamingDedup.SigsTable, sigs11, "sp", Some(("batch_id", 1L, 1L)))
+      Seq(11L -> baseE).toDF("doc_id", "text"), "doc_id", "text", 3, 64)
+    val half = graft.operators.Dedup.lshBands(sigs11, "doc_id", 64, 16)
+      .filter(col("band") < 8).join(sigs11, "doc_id")
+      .select(col("band"), col("band_hash"), col("doc_id"), lit(1L).as("batch_id"),
+        when(col("band") === 0, col("sig")).as("sig"))
+    store.appendRange(StreamingDedup.PostingsTable, half, "batch_id", 1L, 1L)
 
-    // replay the whole batch: each table's own bracket must redo it —
-    // the sigs bracket replaces the landed rows, and the postings one
-    // lands what the crashed attempt lost
+    // replay the whole batch: its bracket drops the half-landed dir and
+    // lands the complete one
     proc(1L, Seq(11L -> baseE))
-    val sigCount = store.readOr(StreamingDedup.SigsTable, null)
-      .filter(col("doc_id") === 11L).count()
-    assert(sigCount == 1L, "replay must not duplicate the landed sigs row")
-    val postingBands = store.readOr(StreamingDedup.PostingsTable, null)
-      .filter(col("doc_id") === 11L).select("band").distinct().count()
-    assert(postingBands == 16L,
-      "replay must land the postings the crashed attempt lost")
+    val doc11 = store.readOr(StreamingDedup.PostingsTable, null).filter(col("doc_id") === 11L)
+    assert(doc11.filter(col("sig").isNotNull).select("band").collect().map(_.getInt(0))
+      .toSeq == Seq(0), "replay must leave exactly one signature row, on band 0")
+    assert(doc11.select("band").distinct().count() == 16L && doc11.count() == 16L,
+      "replay must land all 16 bands once")
 
     // and the recovered index actually serves recall: a later near-dup of
     // doc 11 resolves against it
@@ -229,7 +239,7 @@ class StreamingDedupSpec extends SparkSpec {
       s"doc 20 must resolve to the crash-recovered canonical 11: $v2")
   }
 
-  test("the index probe prunes to the batch's band-hash prefix partitions") {
+  test("the index probe reads only the dirs bounded below the batch") {
     val store = mkStore()
     // two fresh canonicals per batch: every batch lands postings
     (0L to 2L).foreach(b => StreamingDedup.processLshBatch(store)(
@@ -249,6 +259,36 @@ class StreamingDedupSpec extends SparkSpec {
       .filter(col("batch_id") < bid).count())
   }
 
+  test("the probe's lsh_postings scans read no sig column; the signature fetch does") {
+    val store = mkStore()
+    StreamingDedup.processLshBatch(store)(Seq(1L -> baseA, 3L -> baseC).toDF("doc_id", "text"), 0L)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.sparkPlan): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // ReadSchema of every lsh_postings scan the batch planned
+    def readSchemas(): Seq[Set[String]] = plans.asScala.toSeq.flatMap(_.collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains("/lsh_postings/")) =>
+        s.requiredSchema.fieldNames.toSet
+    })
+    spark.listenerManager.register(listener)
+    try {
+      StreamingDedup.processLshBatch(store)(
+        Seq(10L -> baseA.replace("alpha50", "changed")).toDF("doc_id", "text"), 1L)
+      // the listener bus is asynchronous; the fetch runs after the probe
+      eventually(timeout(Span(30, Seconds))) {
+        assert(readSchemas().exists(_.contains("sig")))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    assert(verdicts(store, 1L)(10L) == ((0, Some(1L))))
+    val (fetch, probe) = readSchemas().partition(_.contains("sig"))
+    assert(probe.nonEmpty && probe.forall(_.contains("band_hash")),
+      s"the probe must read band_hash without sig: $probe")
+    assert(fetch.forall(!_.contains("band_hash")), s"the fetch reads signatures only: $fetch")
+  }
+
   test("an lsh_postings table in the band-prefix layout fails the first batch loudly") {
     val store = mkStore()
     store.appendPartitioned(StreamingDedup.PostingsTable,
@@ -258,24 +298,29 @@ class StreamingDedupSpec extends SparkSpec {
     assert(ex.getMessage.contains("'lsh_postings'") && ex.getMessage.contains("bp="), ex.getMessage)
   }
 
-  test("an lsh_sigs dir without batch bounds fails the first batch loudly") {
-    val store = mkStore()
-    store.appendPartitioned(StreamingDedup.SigsTable,
-      Seq((1L, Array(1L), 0L, 1)).toDF("doc_id", "sig", "batch_id", "sp"), "sp")
-    val ex = intercept[IllegalStateException](StreamingDedup.processLshBatch(store)(
+  test("a separate lsh_sigs table or postings without sig fail the first batch loudly") {
+    val sigsStore = mkStore()
+    sigsStore.appendRange("lsh_sigs",
+      Seq((1L, Array(1L), 0L)).toDF("doc_id", "sig", "batch_id"), "batch_id", 0L, 0L)
+    val sigsEx = intercept[IllegalStateException](StreamingDedup.processLshBatch(sigsStore)(
       Seq(2L -> baseA).toDF("doc_id", "text"), 1L))
-    assert(ex.getMessage.contains("'lsh_sigs'") && ex.getMessage.contains("bounds"), ex.getMessage)
+    assert(sigsEx.getMessage.contains("'lsh_sigs'"), sigsEx.getMessage)
+    // the batch-ranged postings of stores whose signatures lived apart
+    val postingsStore = mkStore()
+    postingsStore.appendRange(StreamingDedup.PostingsTable,
+      Seq((0, 5L, 1L, 0L)).toDF("band", "band_hash", "doc_id", "batch_id"), "batch_id", 0L, 0L)
+    val postingsEx = intercept[IllegalStateException](StreamingDedup.processLshBatch(
+      postingsStore)(Seq(2L -> baseA).toDF("doc_id", "text"), 1L))
+    assert(postingsEx.getMessage.contains("'lsh_postings'") &&
+      postingsEx.getMessage.contains("sig"), postingsEx.getMessage)
   }
 
-  test("50 batches keep bounded file counts per partition; verdicts stay correct",
+  test("50 batches keep bounded posting dirs; verdicts stay correct",
       graft.Slow) {
-    import scala.jdk.CollectionConverters._
     val store = mkStore()
-    val threshold = 6
-    // every batch: one FRESH doc (kept, id ≡ 0 mod 256 so all sigs land in
-    // the SAME sp=0 partition — worst case for file growth) and one
-    // near-dup of the batch-0 canonical (cross-batch probe must keep
-    // resolving through arbitrarily many interleaved compactions)
+    // every batch: one FRESH doc (kept) and one near-dup of the batch-0
+    // canonical (cross-batch probe must keep resolving through
+    // arbitrarily many interleaved compactions)
     val canonId = 256L
     (0 until 50).foreach { b =>
       val fresh = (0 until 60).map(i => s"w${b}_$i").mkString(" ")
@@ -290,8 +335,7 @@ class StreamingDedupSpec extends SparkSpec {
         else Seq(
           (512L * b + 256) -> fresh,
           (512L * b + 257) -> nearDup)
-      StreamingDedup.processLshBatch(store, compactFiles = threshold)(
-        docs.toDF("doc_id", "text"), b.toLong)
+      StreamingDedup.processLshBatch(store)(docs.toDF("doc_id", "text"), b.toLong)
       if (b > 0) {
         val v = verdicts(store, b.toLong)
         assert(v(512L * b + 256) == ((1, None)), s"batch $b fresh doc must keep: $v")
@@ -300,13 +344,9 @@ class StreamingDedupSpec extends SparkSpec {
       }
     }
     // the index still holds exactly the canonicals (one per batch)
-    assert(store.readOr(StreamingDedup.SigsTable, null).count() == 50L)
-    // bounded: every lsh_sigs key holds at most threshold+2 live data
-    // files (grows ~1/batch, compacts back to 1 whenever the post-append
-    // count exceeds the threshold), and lsh_postings holds at most
-    // 64 + 8 dirs per compaction level (three levels below 8^3 batches)
-    val (key, worst) = store.fileCounts(StreamingDedup.SigsTable).maxBy(_._2)
-    assert(worst <= threshold + 2, s"lsh_sigs partition $key grew to $worst files")
+    assert(sigRows(store).count() == 50L)
+    // bounded: lsh_postings holds at most 64 + 8 dirs per compaction
+    // level (three levels below 8^3 batches)
     val postingDirs = store.rangeDirs(StreamingDedup.PostingsTable).size
     assert(postingDirs <= 64 + 8 * 3, s"lsh_postings grew to $postingDirs dirs")
     def audit(table: String): Unit = {
@@ -317,9 +357,9 @@ class StreamingDedupSpec extends SparkSpec {
       // current generation + ≤ manifestRetain stale ones (reader grace)
       assert(manifests.size <= 1 + store.manifestRetain,
         s"$table superseded manifests not GC'd: $manifests")
-      // every physical dir is referenced by SOME retained manifest (rel
-      // paths look like ".d-x/sp=3"); anything else is an orphan that
-      // would accumulate one per append forever
+      // every physical dir is referenced by SOME retained manifest;
+      // anything else is an orphan that would accumulate one per append
+      // forever
       val referenced = manifests.flatMap(m =>
         Files.readString(root.resolve(m)).linesIterator
           .filter(l => l.nonEmpty && l != "#end" && l.contains('\t'))
@@ -328,24 +368,6 @@ class StreamingDedupSpec extends SparkSpec {
       assert(physical == referenced,
         s"$table orphan dirs survive GC: ${physical -- referenced}")
     }
-    audit(StreamingDedup.SigsTable)
     audit(StreamingDedup.PostingsTable)
-  }
-
-  test("the wired streaming query maintains the index end-to-end") {
-    val store = mkStore()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[StreamingText.Doc]
-    val q = StreamingDedup.lshDedupStream(src.toDS(), store,
-      Files.createTempDirectory("graft-lsh-ckpt").toString)
-    try {
-      src.addData(StreamingText.Doc(1L, baseA), StreamingText.Doc(2L, baseC))
-      q.processAllAvailable()
-      src.addData(StreamingText.Doc(3L, baseA.replace("alpha20", "swapped")))
-      q.processAllAvailable()
-      val all = store.readOr(StreamingDedup.VerdictTable, null).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Int]("is_new")).toMap
-      assert(all == Map(1L -> 1, 2L -> 1, 3L -> 0))
-    } finally q.stop()
   }
 }
