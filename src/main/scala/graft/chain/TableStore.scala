@@ -502,8 +502,8 @@ final case class TableStore(spark: SparkSession, root: String,
     * empty. Listings go through the store's own seeded [[statusCache]]:
     * every dir this store commits was listed once at commit and seeded
     * there, so an open lists nothing it wrote (a category table holds one
-    * dir per key per append until compaction — 256 keys would otherwise
-    * be a listing job per open), and a dir committed before this store
+    * dir per key per append until compaction — hundreds of keys would
+    * otherwise be a listing job per open), and a dir committed before this store
     * was built is listed once, at its first open. A committed dir never
     * changes, so nothing re-lists an opened relation (no
     * `refreshByPath`): a plan over generation N stays a plan over N, and
